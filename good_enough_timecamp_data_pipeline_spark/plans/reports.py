@@ -60,7 +60,11 @@ crumb AS (
         FROM walk w JOIN _tasks t ON w.cursor_id = t.task_id
         WHERE w.d < 8
     )
-    SELECT task_id, path AS task_breadcrumb FROM walk WHERE cursor_id IS NULL
+    -- a walk ends at a root or at a parent id no task has (an orphan's
+    -- crumb stops at the last task found, like the Spark report)
+    SELECT task_id, path AS task_breadcrumb FROM walk w
+    WHERE cursor_id IS NULL
+       OR NOT EXISTS (SELECT 1 FROM _tasks t WHERE t.task_id = w.cursor_id)
 )
 """.strip()
 
@@ -158,7 +162,8 @@ def task_budget_report(
         .select(
             dim["task_id"],
             dim["name"],
-            F.col("task_breadcrumb"),
+            # the recomputed crumb; landed tasks already carry their own
+            crumbs["task_breadcrumb"],
             dim["budgeted"].alias("budgeted_seconds"),
             F.coalesce(F.col("cumulative_seconds"), F.lit(0).cast("long")).alias(
                 "cumulative_seconds"
@@ -172,11 +177,13 @@ def task_budget_report(
     )
 
 
-def oracle_task_budget_sql() -> str:
+def oracle_task_budget_sql(tasks_sql: str = TASKS_SQL, entries_sql: str = ENTRIES_SQL) -> str:
+    """``tasks_sql``/``entries_sql``: SELECTs of (task_id, parent_id, name,
+    budgeted) and (task_id, duration); default to the testdata tables."""
     return f"""
 WITH RECURSIVE
-{closure_sql(TASKS_SQL)},
-_entries AS ({ENTRIES_SQL}),
+{closure_sql(tasks_sql)},
+_entries AS ({entries_sql}),
 {_CRUMB_CTE},
 tracked AS (
     SELECT th.ancestor_id, CAST(SUM(e.duration) AS BIGINT) AS cumulative_seconds

@@ -128,6 +128,7 @@ def _entry_row(r: dict) -> tuple:
         tags_json = json.dumps(
             [{str(k): str(v) for k, v in t.items()} for t in tags],
             separators=(",", ":"),
+            ensure_ascii=False,
         )
     else:
         tags_json = None

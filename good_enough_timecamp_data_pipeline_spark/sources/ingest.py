@@ -11,7 +11,12 @@ enrichment of the reference is re-expressed relationally:
   order, i.e. unspecified; we pin it
 - per-row formatting (F4–F7)  → native Column expressions
 
-The fetch itself stays driver-side (payloads here are metadata-sized);
+The fetch itself stays driver-side (payloads here are metadata-sized), and
+each coerced payload lands as an Arrow-backed local relation (``_rows_df``,
+a ``LocalTableScan``). A row-list ``createDataFrame`` would build a
+``parallelize`` RDD that PySpark wraps in a Python ``map``, so every job
+re-reading it starts a Python-worker pass — and the recursive breadcrumb
+walk re-reads its source on every level.
 `parallel_fetch` gives the ``mapInPandas`` pattern for fan-out fetches that
 must scale with a date × user grid (S4 at 100 TB: the grid is a DataFrame,
 each partition holds its own HTTP session, failures yield zero rows exactly
@@ -25,9 +30,11 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.formatting import string_fallback
 from ..functions.ids import strip_prefix
@@ -64,11 +71,12 @@ CATEGORY_NAMES: dict[str, str] = {
 
 
 def _rows_df(spark: SparkSession, rows: list[dict[str, Any]], schema: T.StructType) -> DataFrame:
-    """Raw dict rows → typed DataFrame, tolerating missing/stringly fields."""
+    """Raw dict rows → typed DataFrame, tolerating missing/stringly fields,
+    over an Arrow-backed local relation (see the module docstring)."""
     projected = [
         {f.name: _coerce(r.get(f.name), f.dataType) for f in schema.fields} for r in rows
     ]
-    return spark.createDataFrame(projected, schema)
+    return spark.createDataFrame(pa.Table.from_pylist(projected, schema=to_arrow_schema(schema)))
 
 
 def _coerce(v: Any, dt: T.DataType) -> Any:
@@ -232,17 +240,17 @@ def build_entries(
             T.StructField("rate", T.DoubleType()),
         ]
     )
-    rows = []
-    for r in raw:
-        r = dict(r)
-        tags = r.get("tags")
-        r["tags"] = (
-            [{str(k): str(v) for k, v in t.items()} for t in tags]
-            if isinstance(tags, list)
-            else None
-        )
-        rows.append({f.name: r.get(f.name) if f.name == "tags" else _coerce(r.get(f.name), f.dataType) for f in schema.fields})
-    df = spark.createDataFrame(rows, schema)
+    # tags: each map stringified; a non-list is NULL (_coerce passes arrays)
+    rows = [
+        {
+            **r,
+            "tags": [{str(k): str(v) for k, v in t.items()} for t in r["tags"]]
+            if isinstance(r.get("tags"), list)
+            else None,
+        }
+        for r in raw
+    ]
+    df = _rows_df(spark, rows, schema)
     # F7: list → JSON text (or NULL) exactly like json.dumps at :494-499
     return df.withColumn("tags", tags_to_json("tags")).select(
         [f.name for f in schemas.ENTRIES.fields]
@@ -297,11 +305,7 @@ def build_application_names(
             T.StructField("icon_url", T.StringType()),
         ]
     )
-    rows = [
-        {f.name: _coerce(d.get(f.name), f.dataType) for f in raw_schema.fields}
-        for d in details.values()
-    ]
-    df = _rows_df(spark, rows, raw_schema)
+    df = _rows_df(spark, list(details.values()), raw_schema)
     # P2 projection+rename; F4 fallback chain; J3 category lookup
     return df.select(
         id_string("application_id").alias("application_id"),

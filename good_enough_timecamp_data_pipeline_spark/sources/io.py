@@ -51,12 +51,14 @@ def write_table(
     pk: str | None = None,
     partition_by: list[str] | None = None,
     compression: str | None = None,
+    dedup: bool = True,
 ) -> str:
+    """``dedup=False`` when the caller already deduplicated ``df`` by pk."""
     if fmt not in FORMATS:
         raise ValueError(f"unsupported format {fmt!r}; pick one of {sorted(FORMATS)}")
     if pk is None:
         pk = schemas.PRIMARY_KEYS.get(table)
-    out = dedup_by_pk(df, pk)
+    out = dedup_by_pk(df, pk) if dedup else df
     path = table_path(base_dir, table)
     writer = out.write.mode(mode)
     if partition_by:

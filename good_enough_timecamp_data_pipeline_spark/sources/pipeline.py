@@ -95,6 +95,8 @@ def run_pipeline(
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
+        # the one dedup of the landed table: before the Observation, so
+        # row_counts counts landed rows; write_table is told not to repeat it
         df = io.dedup_by_pk(df, io.schemas.PRIMARY_KEYS.get(name))
         res.tables[name] = df
         # A6 row-count logging rides the WRITE job via the Observation
@@ -102,7 +104,7 @@ def run_pipeline(
         # pipeline a second time per dataset just to fill the ledger
         obs = Observation()
         observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        res.paths[name] = io.write_table(observed, out_dir, name, fmt=fmt)
+        res.paths[name] = io.write_table(observed, out_dir, name, fmt=fmt, dedup=False)
         rows = int(obs.get["rows"])
         res.row_counts[name] = rows
         ledger[step_key(name)] = {"rows": rows}
@@ -124,10 +126,10 @@ def run_pipeline(
         if n in datasets and not done(n)
     ]
     if acts_needed:
-        # shared-scan elimination: one activities fetch feeds both outputs
-        # (the reference preloads for the same reason, :447-454)
+        # one activities fetch feeds both outputs (the reference preloads
+        # for the same reason, :447-454); the payload is a local relation,
+        # so the second read needs no cache
         acts = ingest.build_computer_activities(spark, client, dates or [])
-        acts = acts.persist()
     if "computer_activities" in datasets:
         if done("computer_activities"):
             recall("computer_activities")

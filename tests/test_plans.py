@@ -365,9 +365,19 @@ def test_aqe_splits_skewed_join_partitions(spark):
     from pyspark.sql import functions as F
 
     conf = spark.conf
-    old_bc = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # the test's own premises: earlier tests can leave a lowered shuffle
+    # partition count in the shared session (with 2 partitions the hot
+    # partition is never 2x the median), or AQE off
+    premises = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",  # force SMJ
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    old = {k: conf.get(k) for k in premises}
     try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
+        for k, v in premises.items():
+            conf.set(k, v)
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
         conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
         conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
@@ -386,7 +396,8 @@ def test_aqe_splits_skewed_join_partitions(spark):
         plan = plan_of(j)
         assert "SortMergeJoin(skew=true)" in plan, plan
     finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
+        for k, v in old.items():
+            conf.set(k, v)
         for k in (
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",

@@ -269,3 +269,28 @@ ORDER BY COALESCE(tc.cumulative_seconds, 0) DESC
     assert set(ours) == set(ref_rows) == set(golden)
     for name in golden:
         assert ours[name] == ref_rows[name] == golden[name], (name, ours[name])
+
+
+def test_task_report_on_landed_tables_matches_duckdb(spark, tmp_path):
+    """Landed ``tasks`` already carry a ``task_breadcrumb`` column; the
+    report must use its own recomputed one (no AMBIGUOUS_REFERENCE) and
+    equal its DuckDB oracle over the same landed parquet."""
+    import duckdb
+
+    from good_enough_timecamp_data_pipeline_spark.sources import fixtures, io
+    from good_enough_timecamp_data_pipeline_spark.sources.pipeline import run_pipeline
+
+    out = str(tmp_path)
+    run_pipeline(spark, fixtures.demo_transport(), out, "2025-01-01", "2026-02-01",
+                 datasets=("tasks", "entries"))
+    ours = reports.task_budget_report(
+        io.read_table(spark, out, "tasks"), io.read_table(spark, out, "entries")
+    ).collect()
+
+    sql = reports.oracle_task_budget_sql(
+        f"SELECT task_id, parent_id, name, budgeted FROM read_parquet('{out}/tasks/*.parquet')",
+        f"SELECT task_id, duration FROM read_parquet('{out}/entries/*.parquet')",
+    )
+    want = duckdb.sql(sql).fetchall()
+    assert [tuple(r) for r in ours] == want
+    assert {r.task_breadcrumb for r in ours} >= {"Acme / Platform / Ingest", "Orphan"}

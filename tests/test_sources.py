@@ -215,6 +215,54 @@ def test_run_pipeline_roundtrip(spark, tmp_path, demo_client):
         {f.name for f in res.tables["tasks"].schema.fields}
 
 
+def test_landed_write_plans_dedup_once(spark, tmp_path, monkeypatch):
+    """run_pipeline deduplicates each landed table once: one partial+final
+    ``first()`` aggregate pair keyed on the pk, none without a pk; the
+    Observation still counts the landed (post-dedup) rows."""
+    import re
+
+    from good_enough_timecamp_data_pipeline_spark.sources.pipeline import DATASETS
+
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    written = []
+    write = frame_cls.write
+    monkeypatch.setattr(
+        frame_cls, "write", property(lambda df: (written.append(df), write.fget(df))[1])
+    )
+    res = run_pipeline(spark, demo_transport(), str(tmp_path), "2025-01-01",
+                       "2026-02-01", dates=["2026-01-05", "2026-01-06"])
+    monkeypatch.undo()
+    assert len(written) == len(DATASETS)
+    for name, df in zip(DATASETS, written):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        dedups = re.findall(r"Aggregate\(keys?=\[(\w+)#\d+\], functions=\[(?:partial_)?first\(", plan)
+        pk = io.schemas.PRIMARY_KEYS[name]
+        assert dedups == ([pk, pk] if pk else []), (name, plan)
+    assert res.row_counts["entries"] == 4  # duplicate id 9004 dropped once
+
+
+def test_run_pipeline_leaves_nothing_persisted(spark, tmp_path):
+    """No cached blocks outlive run_pipeline, and the one activities
+    fetch still feeds both activity-derived tables."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    inner = demo_transport()
+    urls: list[str] = []
+
+    def send(method, url, params):
+        urls.append(url.rstrip("/"))
+        return inner(method, url, params)
+
+    res = run_pipeline(spark, send, str(tmp_path), "2025-01-01", "2026-02-01",
+                       dates=["2026-01-05", "2026-01-06"])
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    assert not any(df.is_cached for df in res.tables.values())
+    assert sum(u.endswith("/computer_activities") for u in urls) == 1
+    assert sum(u.endswith("/application") for u in urls) == 1
+    assert res.row_counts["computer_activities"] == 4
+    assert res.row_counts["application_names"] == 2
+
+
 # ---------------------------------------------------------------------------
 # tier 2: incremental layer
 # ---------------------------------------------------------------------------
