@@ -60,11 +60,7 @@ crumb AS (
         FROM walk w JOIN _tasks t ON w.cursor_id = t.task_id
         WHERE w.d < 8
     )
-    -- a walk ends at a root or at a parent id no task has (an orphan's
-    -- crumb stops at the last task found, like the Spark report)
-    SELECT task_id, path AS task_breadcrumb FROM walk w
-    WHERE cursor_id IS NULL
-       OR NOT EXISTS (SELECT 1 FROM _tasks t WHERE t.task_id = w.cursor_id)
+    SELECT task_id, path AS task_breadcrumb FROM walk WHERE cursor_id IS NULL
 )
 """.strip()
 

@@ -12,11 +12,13 @@ enrichment of the reference is re-expressed relationally:
 - per-row formatting (F4–F7)  → native Column expressions
 
 The fetch itself stays driver-side (payloads here are metadata-sized), and
-each coerced payload lands as an Arrow-backed local relation (``_rows_df``,
-a ``LocalTableScan``). A row-list ``createDataFrame`` would build a
-``parallelize`` RDD that PySpark wraps in a Python ``map``, so every job
-re-reading it starts a Python-worker pass — and the recursive breadcrumb
-walk re-reads its source on every level.
+each coerced payload becomes an Arrow-backed frame (``_rows_df``): a local
+relation (``LocalTableScan``) up to
+``spark.sql.execution.arrow.localRelationThreshold``, a JVM scan of Arrow
+batches above it. Neither starts a Python worker on a re-read. A row-list ``createDataFrame`` would
+build a ``parallelize`` RDD that PySpark wraps in a Python ``map``, so every
+job re-reading it starts a Python-worker pass — and the recursive
+breadcrumb walk re-reads its source on every level.
 `parallel_fetch` gives the ``mapInPandas`` pattern for fan-out fetches that
 must scale with a date × user grid (S4 at 100 TB: the grid is a DataFrame,
 each partition holds its own HTTP session, failures yield zero rows exactly
@@ -72,7 +74,7 @@ CATEGORY_NAMES: dict[str, str] = {
 
 def _rows_df(spark: SparkSession, rows: list[dict[str, Any]], schema: T.StructType) -> DataFrame:
     """Raw dict rows → typed DataFrame, tolerating missing/stringly fields,
-    over an Arrow-backed local relation (see the module docstring)."""
+    over an Arrow-backed relation (see the module docstring)."""
     projected = [
         {f.name: _coerce(r.get(f.name), f.dataType) for f in schema.fields} for r in rows
     ]

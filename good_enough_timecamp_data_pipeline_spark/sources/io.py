@@ -4,8 +4,9 @@ Layout parity with the reference's dlt filesystem destination — one
 directory per table under a base dir (``/root/reference/
 dlt_fetch_timecamp.py:685-698`` uses ``{table_name}.{file_id}.{ext}``; a
 dir-per-table is the Spark-native equivalent of that namespace), formats
-csv / jsonl / parquet (``:36``), full-refresh overwrite (``:458`` etc.),
-dedup-by-primary-key before landing (A5).
+csv / jsonl / parquet (``:36``), full-refresh overwrite (``:458`` etc.).
+``dedup_by_pk`` is the A5 dedup; ``pipeline.run_pipeline`` applies it once
+before landing, and ``write_table`` writes its frame as given.
 
 S9 (object stores) needs no code here: every writer takes a path, and an
 ``s3a://bucket/prefix`` path works as-is once ``spark.hadoop.fs.s3a.*``
@@ -48,19 +49,13 @@ def write_table(
     table: str,
     fmt: str = "parquet",
     mode: str = "overwrite",
-    pk: str | None = None,
     partition_by: list[str] | None = None,
     compression: str | None = None,
-    dedup: bool = True,
 ) -> str:
-    """``dedup=False`` when the caller already deduplicated ``df`` by pk."""
     if fmt not in FORMATS:
         raise ValueError(f"unsupported format {fmt!r}; pick one of {sorted(FORMATS)}")
-    if pk is None:
-        pk = schemas.PRIMARY_KEYS.get(table)
-    out = dedup_by_pk(df, pk) if dedup else df
     path = table_path(base_dir, table)
-    writer = out.write.mode(mode)
+    writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if compression:

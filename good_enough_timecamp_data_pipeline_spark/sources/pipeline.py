@@ -95,8 +95,8 @@ def run_pipeline(
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        # the one dedup of the landed table: before the Observation, so
-        # row_counts counts landed rows; write_table is told not to repeat it
+        # A5 dedup-by-primary-key before landing, the one dedup of the
+        # table: ahead of the Observation, so row_counts counts landed rows
         df = io.dedup_by_pk(df, io.schemas.PRIMARY_KEYS.get(name))
         res.tables[name] = df
         # A6 row-count logging rides the WRITE job via the Observation
@@ -104,7 +104,7 @@ def run_pipeline(
         # pipeline a second time per dataset just to fill the ledger
         obs = Observation()
         observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        res.paths[name] = io.write_table(observed, out_dir, name, fmt=fmt, dedup=False)
+        res.paths[name] = io.write_table(observed, out_dir, name, fmt=fmt)
         rows = int(obs.get["rows"])
         res.row_counts[name] = rows
         ledger[step_key(name)] = {"rows": rows}

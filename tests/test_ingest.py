@@ -1,7 +1,7 @@
 """Driver-side payload frames: the Arrow-backed local relations of
 ``sources.ingest`` keep the rows and schema of the row-list
-``createDataFrame`` path on degenerate payloads, and plan as a
-``LocalTableScan`` that no re-read runs through a Python worker."""
+``createDataFrame`` path on degenerate payloads, and no re-read of them
+runs through a Python worker."""
 
 from __future__ import annotations
 
@@ -131,14 +131,24 @@ def test_multi_key_tag_keeps_api_key_order(spark):
     assert row.tags == datasource._entry_row(raw)[6]
 
 
-def test_builder_frames_read_local_relations(spark):
-    """Each builder's physical plan reads an in-JVM LocalTableScan: no
-    parallelize RDD (``ExistingRDD``) and no Python node."""
-    client = TimeCampClient(demo_transport(), sleeper=lambda s: None)
-    for name, df in _builds(spark, client).items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "LocalTableScan" in plan, (name, plan)
-        assert "ExistingRDD" not in plan, (name, plan)
-        for node in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF",
-                     "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas"):
-            assert node not in plan, (name, node, plan)
+@pytest.mark.parametrize("threshold", [None, "0"], ids=["local-relation", "arrow-rdd"])
+def test_builder_frames_start_no_python_worker(spark, threshold):
+    """Each builder's plan has no Python node and its RDD lineage no
+    ``PythonRDD`` (the row-list path's ``parallelize`` source carries one),
+    both for a ``LocalTableScan`` and, above
+    ``arrow.localRelationThreshold``, for the JVM scan of Arrow batches."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    prev = spark.conf.get(key)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        client = TimeCampClient(demo_transport(), sleeper=lambda s: None)
+        for name, df in _builds(spark, client).items():
+            qe = df._jdf.queryExecution()
+            plan = qe.executedPlan().toString()
+            for node in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF",
+                         "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas"):
+                assert node not in plan, (name, node, plan)
+            assert "PythonRDD" not in qe.toRdd().toDebugString(), name
+    finally:
+        spark.conf.set(key, prev)
