@@ -150,5 +150,7 @@ def test_builder_frames_start_no_python_worker(spark, threshold):
                          "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas"):
                 assert node not in plan, (name, node, plan)
             assert "PythonRDD" not in qe.toRdd().toDebugString(), name
+            if threshold is None:  # demo payloads sit below the threshold
+                assert "LocalTableScan" in plan, (name, plan)
     finally:
         spark.conf.set(key, prev)
