@@ -19,6 +19,11 @@ def strip_prefix(col: Column | str, prefix: str) -> Column:
     return F.when(c.startswith(prefix), c.substr(F.lit(len(prefix) + 1), F.length(c))).otherwise(c)
 
 
+def strip_prefix_value(v: str | None, prefix: str) -> str | None:
+    """`strip_prefix` for a Python value the driver holds: ``'g12'`` → ``'12'``."""
+    return v[len(prefix):] if v is not None and v.startswith(prefix) else v
+
+
 def add_prefix(col: Column | str, prefix: str) -> Column:
     c = _c(col).cast("string")
     return F.when(c.startswith(prefix), c).otherwise(F.concat(F.lit(prefix), c))

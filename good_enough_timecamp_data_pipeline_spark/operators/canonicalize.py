@@ -20,6 +20,11 @@ def null_canonical(col: Column | str) -> Column:
     )
 
 
+def null_canonical_value(v: str | None) -> str | None:
+    """`null_canonical` for a Python value the driver holds (P8)."""
+    return None if v in (None, "", "0") else v
+
+
 def id_string(col: Column | str) -> Column:
     """Defensive id-to-string cast (P9; ``CAST(task_id AS VARCHAR)``)."""
     c = F.col(col) if isinstance(col, str) else col

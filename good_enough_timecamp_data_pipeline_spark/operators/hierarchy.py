@@ -24,16 +24,17 @@ broadcast self-joins:
   (node → parent) edge list: zero shuffles, and the unroll runs
   ``max_depth`` (reference caps at 8) rounds.
 - The unroll is fully lazy: no ``localCheckpoint``/``isEmpty`` inside the
-  loop, so building the closure schedules ZERO jobs — the whole consumer
-  query (closure + fact join + agg) runs as ONE Spark job. Eager
-  per-iteration checkpointing cost ~2 blocking jobs × max_depth on a
-  3-level tree (~3-4 s of pure scheduling at sf0.1); the lazy plan is a
-  linear chain of broadcast joins whose edge-side broadcast exchange is
-  built once and reused (ReuseExchange). For *unbounded* hierarchies pass
+  loop, so building the closure schedules ZERO jobs and the whole consumer
+  query (closure + fact join + agg) plans as one query. Native
+  ``WITH RECURSIVE`` is not one job: Spark plans and runs every level as
+  separate queries (a repartition, a count, a collect into a local
+  relation once few rows remain). For *unbounded* hierarchies pass
   ``checkpoint_every`` to cut lineage periodically.
 - Cycle safety: the walk carries a ``_visited`` id array and stops a branch
   when the next ancestor is already in it — same semantics as the
   reference's ``visited`` set — plus the hard depth bound.
+- Rows the driver already holds (ingest's API payloads) skip Spark:
+  `breadcrumb_rows` walks them as dicts with the rules of `breadcrumbs`.
 
 The closure output is small ⇒ callers should ``F.broadcast`` it when joining
 facts against it (done in plans/reports.py).
@@ -103,7 +104,8 @@ def transitive_closure(
     - ``recursive_cte`` (default on Spark ≥ 4): native ``WITH RECURSIVE``
       — the engine iterates a working table and *stops when the frontier
       empties*, so a 3-level tree costs 3 rounds regardless of
-      ``max_depth``, in one job. The recursive member carries a BROADCAST
+      ``max_depth``; each round is planned and run as its own queries
+      (see the module docstring). The recursive member carries a BROADCAST
       hint on the dimension side: CTE rounds don't AQE-coalesce, so the
       default sort-merge join would pay a full spark.sql.shuffle.partitions
       exchange of a near-empty frontier EVERY round (measured 3× the whole
@@ -210,7 +212,6 @@ def breadcrumbs(
     n_levels: int = 8,
     sep: str = " / ",
     prefix: str = "task",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Denormalized breadcrumb columns for every node of a hierarchy.
 
@@ -219,61 +220,11 @@ def breadcrumbs(
     Missing parents end the walk (reference yields the partial path);
     a repeated ancestor id ends it too (cycle guard).
 
-    Strategies as in `transitive_closure`: native ``WITH RECURSIVE`` walk
-    (rounds = actual depth) on Spark ≥ 4, else a lazy linear chain of
-    ``max_depth`` broadcast left joins where a finished row (NULL cursor)
-    passes through the remaining joins unchanged.
+    A lazy linear chain of ``max_depth`` broadcast left joins where a
+    finished row (NULL cursor) passes through the remaining joins
+    unchanged. Payloads already held on the driver walk with
+    `breadcrumb_rows` instead.
     """
-    if strategy not in ("auto", "recursive_cte", "unroll"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy in ("auto", "recursive_cte") and _native_recursive_cte(tasks):
-        v = _as_view(
-            tasks.select(
-                F.col(id_col).alias("_node"),
-                F.col(parent_col).alias("_parent"),
-                F.col(name_col).alias("_name"),
-            ),
-            "crumb",
-        )
-        # walk upward; a branch retires by taking _cursor NULL (root reached
-        # or cycle detected), which simply stops matching the recursive join
-        walk_sql = tasks.sparkSession.sql(
-            f"""
-            WITH RECURSIVE __walk(_id, _path, _visited, _cursor, _d) AS (
-                SELECT _node, array(_name), array(_node), _parent, 0 FROM {v}
-                UNION ALL
-                SELECT /*+ BROADCAST(p) */ w._id,
-                       array_prepend(w._path, p._name),
-                       array_append(w._visited, p._node),
-                       CASE WHEN p._parent IS NULL
-                              OR array_contains(w._visited, p._parent)
-                            THEN CAST(NULL AS STRING) ELSE p._parent END,
-                       w._d + 1
-                FROM __walk w JOIN {v} p ON w._cursor = p._node
-                WHERE w._d < {int(max_depth)}
-            )
-            SELECT _id, _path
-            FROM (
-                SELECT _id, _path,
-                       ROW_NUMBER() OVER (PARTITION BY _id ORDER BY _d DESC) AS _rn
-                FROM __walk
-            ) WHERE _rn = 1
-            """
-        )
-        crumbs = walk_sql.select(
-            F.col("_id"),
-            F.concat_ws(sep, F.col("_path")).alias(f"{prefix}_breadcrumb"),
-            *[
-                F.coalesce(F.try_element_at(F.col("_path"), F.lit(i)), F.lit("")).alias(
-                    f"{prefix}_level_{i}"
-                )
-                for i in range(1, n_levels + 1)
-            ],
-        )
-        return tasks.join(
-            F.broadcast(crumbs), tasks[id_col] == crumbs["_id"], "left"
-        ).drop("_id")
-
     dim = tasks.select(
         F.col(id_col).alias("_node"),
         F.col(parent_col).alias("_parent"),
@@ -319,3 +270,40 @@ def breadcrumbs(
         ],
     )
     return tasks.join(crumbs, tasks[id_col] == crumbs["_id"], "left").drop("_id")
+
+
+def breadcrumb_rows(rows: list[dict], n_levels: int, prefix: str) -> list[dict]:
+    """`breadcrumbs` over dict rows the driver already holds: one parent
+    walk per row (the reference's form, H2), rows × depth work, no Spark.
+
+    Rows carry ``{prefix}_id``, a canonical ``parent_id`` (root = None)
+    and ``name``. Same rules as `breadcrumbs`: a missing parent ends the
+    walk with the partial path; the next parent is checked against the ids
+    visited before the step (x↔y gives ``Y / X``); at most
+    `DEFAULT_MAX_DEPTH` steps; NULL names are skipped in the breadcrumb
+    and '' as levels; a None id gets None crumbs (no walk joins back to
+    it). One new dict per input row: a duplicated id is walked through its
+    last row, where the join repeats the row once per match.
+    """
+    id_key = f"{prefix}_id"
+    by_id = {r[id_key]: r for r in rows if r[id_key] is not None}
+    keys = [f"{prefix}_breadcrumb", *(f"{prefix}_level_{i}" for i in range(1, n_levels + 1))]
+    out = []
+    for r in rows:
+        path, visited, cursor = [r["name"]], [r[id_key]], r["parent_id"]
+        for _ in range(DEFAULT_MAX_DEPTH):
+            p = by_id.get(cursor)
+            if p is None:
+                break
+            path.append(p["name"])
+            nxt = p["parent_id"]
+            cursor = None if nxt is None or nxt in visited else nxt
+            visited.append(p[id_key])
+        path.reverse()
+        crumbs = [" / ".join(n for n in path if n is not None)] + [
+            path[i] if i < len(path) and path[i] is not None else "" for i in range(n_levels)
+        ]
+        if r[id_key] is None:  # no walk joins back to a NULL id
+            crumbs = [None] * len(keys)
+        out.append({**r, **dict(zip(keys, crumbs))})
+    return out

@@ -406,9 +406,7 @@ def h_breadcrumb_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the lazy unroll (max_depth=4 = n_levels) inlines into the consumer
     job — measured 0.84 s vs 1.5 s for the driver-paced recursive CTE at
     sf0.1; h_closure_pairs keeps exercising the native-CTE strategy."""
-    crumbs = breadcrumbs(
-        tasks_df(spark, sf_dir), n_levels=4, strategy="unroll", max_depth=4
-    )
+    crumbs = breadcrumbs(tasks_df(spark, sf_dir), n_levels=4, max_depth=4)
     return crumbs.select(
         "task_id",
         "task_breadcrumb",

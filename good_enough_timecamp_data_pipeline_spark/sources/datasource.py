@@ -24,9 +24,11 @@ Scope: this source serves the RAW extract tier —
   tags→JSON-text rule; parity is pinned by a test).
 - ``dataset=tasks`` / ``dataset=users``: the raw dimension payloads
   (single partition — dimension endpoints return the whole set).
-  Hierarchy breadcrumbs / group enrichment are DataFrame transformations
-  and stay downstream (`ingest.build_tasks` etc.), exactly like any
-  file-based source feeding a transform layer.
+  Hierarchy breadcrumbs / group enrichment stay downstream: `ingest`
+  walks the payloads it holds on the driver with
+  `hierarchy.breadcrumb_rows`, and a tasks frame read from this source
+  gets its crumbs from the DataFrame operator `hierarchy.breadcrumbs`,
+  like any file-based source feeding a transform layer.
 
 Transports are constructed PER EXECUTOR from options (never pickled):
 ``mode=offline-demo`` builds the deterministic fixture workspace,

@@ -5,7 +5,8 @@ becomes a ``build_<table>(spark, ...) -> DataFrame``. The per-row Python
 enrichment of the reference is re-expressed relationally:
 
 - dict lookup joins (J1–J4)   → broadcast left joins
-- breadcrumb parent-walks (H2/H3) → operators.hierarchy.breadcrumbs
+- breadcrumb parent-walks (H2/H3) → operators.hierarchy.breadcrumb_rows
+  over the payload the driver holds: the crumbs land with the row
 - "first group per user" (W1) → row_number over a *documented* deterministic
   order (min numeric group id) — the reference's choice is dict insertion
   order, i.e. unspecified; we pin it
@@ -17,8 +18,8 @@ relation (``LocalTableScan``) up to
 ``spark.sql.execution.arrow.localRelationThreshold``, a JVM scan of Arrow
 batches above it. Neither starts a Python worker on a re-read. A row-list ``createDataFrame`` would
 build a ``parallelize`` RDD that PySpark wraps in a Python ``map``, so every
-job re-reading it starts a Python-worker pass — and the recursive
-breadcrumb walk re-reads its source on every level.
+job re-reading it starts a Python-worker pass. The ids the tree walks and
+the users lookups key on are canonicalized in that projection, once.
 `parallel_fetch` gives the ``mapInPandas`` pattern for fan-out fetches that
 must scale with a date × user grid (S4 at 100 TB: the grid is a DataFrame,
 each partition holds its own HTTP session, failures yield zero rows exactly
@@ -39,10 +40,10 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.formatting import string_fallback
-from ..functions.ids import strip_prefix
 from ..functions.json_utils import map_lookup, tags_to_json
-from ..operators.canonicalize import id_string, measure_long, null_canonical
-from ..operators.hierarchy import breadcrumbs
+from ..functions.ids import strip_prefix_value
+from ..operators.canonicalize import id_string, measure_long, null_canonical_value
+from ..operators.hierarchy import breadcrumb_rows
 from . import schemas
 from .client import TimeCampClient
 
@@ -72,13 +73,15 @@ CATEGORY_NAMES: dict[str, str] = {
 }
 
 
+def _project(rows: list[dict[str, Any]], schema: T.StructType) -> list[dict[str, Any]]:
+    """Raw dict rows → the schema's fields, tolerating missing/stringly values."""
+    return [{f.name: _coerce(r.get(f.name), f.dataType) for f in schema.fields} for r in rows]
+
+
 def _rows_df(spark: SparkSession, rows: list[dict[str, Any]], schema: T.StructType) -> DataFrame:
-    """Raw dict rows → typed DataFrame, tolerating missing/stringly fields,
-    over an Arrow-backed relation (see the module docstring)."""
-    projected = [
-        {f.name: _coerce(r.get(f.name), f.dataType) for f in schema.fields} for r in rows
-    ]
-    return spark.createDataFrame(pa.Table.from_pylist(projected, schema=to_arrow_schema(schema)))
+    """Projected rows → typed DataFrame over an Arrow-backed relation (see
+    the module docstring)."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)))
 
 
 def _coerce(v: Any, dt: T.DataType) -> Any:
@@ -127,20 +130,33 @@ def build_tasks(spark: SparkSession, client: TimeCampClient) -> DataFrame:
         ]
     )
     # P1: `users`/`perms` never reach the DataFrame (dropped at :551-552)
-    df = _rows_df(spark, raw, base_schema)
-    df = (
-        df.withColumn("task_id", id_string("task_id"))
-        .withColumn("parent_id", null_canonical("parent_id"))
-        .withColumn("budgeted", measure_long("budgeted"))
-    )
+    rows = _project(raw, base_schema)
+    for r in rows:
+        r["parent_id"] = null_canonical_value(r["parent_id"])
     # H2/H3: breadcrumb + 8 fixed level columns
-    df = breadcrumbs(df, "task_id", "parent_id", "name", n_levels=8, prefix="task")
-    return df.select([f.name for f in schemas.TASKS.fields])
+    rows = breadcrumb_rows(rows, n_levels=8, prefix="task")
+    return _rows_df(spark, rows, schemas.TASKS).withColumn("budgeted", measure_long("budgeted"))
 
 
 # ---------------------------------------------------------------------------
 # users + group enrichment (dlt_fetch_timecamp.py:305-406, :573-603)
 # ---------------------------------------------------------------------------
+
+def group_rows(groups: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    """people_picker groups → canonical adjacency rows with their
+    breadcrumb and 5 level columns; ids may arrive 'g'-prefixed (F6)."""
+    rows = [
+        {
+            "group_id": strip_prefix_value(str(g.get("group_id", "")), "g"),
+            "name": str(g.get("name", "")),
+            "parent_id": null_canonical_value(
+                strip_prefix_value(str(g.get("parent_id") or ""), "g")
+            ),
+        }
+        for g in groups
+    ]
+    return breadcrumb_rows(rows, n_levels=5, prefix="group")
+
 
 def build_users(
     spark: SparkSession, client: TimeCampClient, include_disabled: bool = False
@@ -157,28 +173,21 @@ def build_users(
             T.StructField("is_enabled", T.BooleanType()),
         ]
     )
-    udf_ = _rows_df(spark, raw_users, users_schema).withColumn(
-        "user_id", id_string("user_id")
-    )
+    udf_ = _rows_df(spark, _project(raw_users, users_schema), users_schema)
 
-    # group adjacency; ids may arrive 'g'-prefixed (normalized, F6)
-    grp_rows = [
-        {
-            "group_id": str(g.get("group_id", "")),
-            "name": str(g.get("name", "")),
-            "parent_id": str(g.get("parent_id") or ""),
-        }
-        for g in groups
+    # group_id, name + USERS' group_breadcrumb, group_level_1..5
+    crumbs = [
+        f for f in schemas.USERS.fields if f.name.startswith(("group_breadcrumb", "group_level_"))
     ]
-    gdf = _rows_df(spark, grp_rows, schemas.GROUPS)
-    gdf = gdf.withColumn("group_id", strip_prefix("group_id", "g")).withColumn(
-        "parent_id", null_canonical(strip_prefix("parent_id", "g"))
-    )
-    gdf = breadcrumbs(gdf, "group_id", "parent_id", "name", n_levels=5, prefix="group")
+    gdf_schema = T.StructType([schemas.GROUPS["group_id"], schemas.GROUPS["name"], *crumbs])
+    gdf = _rows_df(spark, group_rows(groups), gdf_schema)
 
     # membership pairs from the nested users maps ('u'-prefixed ids)
     mem_rows = [
-        {"user_id": str(uid), "group_id": str(g.get("group_id", ""))}
+        {
+            "user_id": strip_prefix_value(str(uid), "u"),
+            "group_id": strip_prefix_value(str(g.get("group_id", "")), "g"),
+        }
         for g in groups
         for uid in (g.get("users") or {})
     ]
@@ -186,9 +195,6 @@ def build_users(
         [T.StructField("user_id", T.StringType()), T.StructField("group_id", T.StringType())]
     )
     mem = _rows_df(spark, mem_rows, mem_schema)
-    mem = mem.withColumn("user_id", strip_prefix("user_id", "u")).withColumn(
-        "group_id", strip_prefix("group_id", "g")
-    )
 
     # W1: deterministic "primary group" = smallest numeric group id
     w = Window.partitionBy("user_id").orderBy(F.col("group_id").cast("long").asc())
@@ -200,7 +206,7 @@ def build_users(
 
     enriched = (
         udf_.join(F.broadcast(primary), "user_id", "left")
-        .join(F.broadcast(gdf.drop("parent_id")), "group_id", "left")
+        .join(F.broadcast(gdf), "group_id", "left")
         .withColumn("group_name", F.coalesce(F.col("name"), F.lit("")))
         .withColumn("group_breadcrumb", F.coalesce(F.col("group_breadcrumb"), F.lit("")))
         .drop("name")
@@ -252,7 +258,7 @@ def build_entries(
         }
         for r in raw
     ]
-    df = _rows_df(spark, rows, schema)
+    df = _rows_df(spark, _project(rows, schema), schema)
     # F7: list → JSON text (or NULL) exactly like json.dumps at :494-499
     return df.withColumn("tags", tags_to_json("tags")).select(
         [f.name for f in schemas.ENTRIES.fields]
@@ -272,7 +278,7 @@ def build_computer_activities(
     raw = client.get_computer_activities(
         dates, include="application,window_title", user_ids=user_ids
     )
-    df = _rows_df(spark, raw, schemas.COMPUTER_ACTIVITIES)
+    df = _rows_df(spark, _project(raw, schemas.COMPUTER_ACTIVITIES), schemas.COMPUTER_ACTIVITIES)
     return df.withColumn("user_id", id_string("user_id")).withColumn(
         "application_id", id_string("application_id")
     )
@@ -307,7 +313,7 @@ def build_application_names(
             T.StructField("icon_url", T.StringType()),
         ]
     )
-    df = _rows_df(spark, list(details.values()), raw_schema)
+    df = _rows_df(spark, _project(list(details.values()), raw_schema), raw_schema)
     # P2 projection+rename; F4 fallback chain; J3 category lookup
     return df.select(
         id_string("application_id").alias("application_id"),

@@ -83,19 +83,15 @@ def read_table(
     path = table_path(base_dir, table)
     if schema is None:
         schema = schemas.TABLE_SCHEMAS.get(table)
+    r = spark.read.schema(schema) if schema else spark.read
     if fmt == "parquet":
-        return spark.read.parquet(path)
+        return r.parquet(path)
     if fmt == "orc":
-        return spark.read.orc(path)
+        return r.orc(path)
     if fmt == "jsonl":
-        r = spark.read
-        return (r.schema(schema) if schema else r).json(path)
-    r = spark.read.option("header", True)
-    if schema:
-        r = r.schema(schema)
-    else:
-        r = r.option("inferSchema", True)
-    return r.csv(path)
+        return r.json(path)
+    r = r.option("header", True)
+    return (r if schema else r.option("inferSchema", True)).csv(path)
 
 
 def to_s3a_path(path: str) -> str:

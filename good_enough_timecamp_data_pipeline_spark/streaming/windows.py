@@ -15,9 +15,13 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..plans.testdata import (
     ensure_events_read_conf,
@@ -49,6 +53,50 @@ def stream_shards() -> str:
     from ..session import tiny_partitions
 
     return os.environ.get("SPARK_GRAFT_STREAM_SHARDS", str(tiny_partitions()))
+
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_SHARDS_LOCK = threading.Lock()
+_SHARDS_HELD: dict[int, tuple[int, str]] = {}  # id(session) → (entries, prior value)
+
+
+@contextmanager
+def stream_shuffle_partitions(spark: SparkSession) -> Iterator[None]:
+    """Lower ``spark.sql.shuffle.partitions`` to `stream_shards` while a
+    finite stream runs: each micro-batch pays a per-state-store-shard
+    cost, which dwarfs the work at local scale.
+
+    Streams on threads share one session's conf, so entries are counted
+    under a lock: the first entrant saves the prior value and the last one
+    out restores it (a save/restore pair per stream, interleaved, would
+    leave the stream value behind)."""
+    key = id(spark)
+    with _SHARDS_LOCK:
+        entries, prior = _SHARDS_HELD.get(key, (0, ""))
+        if not entries:
+            prior = spark.conf.get(_SHUFFLE_PARTITIONS)
+            spark.conf.set(_SHUFFLE_PARTITIONS, stream_shards())
+        _SHARDS_HELD[key] = (entries + 1, prior)
+    try:
+        yield
+    finally:
+        with _SHARDS_LOCK:
+            entries, prior = _SHARDS_HELD.pop(key)
+            if entries > 1:
+                _SHARDS_HELD[key] = (entries - 1, prior)
+            else:
+                spark.conf.set(_SHUFFLE_PARTITIONS, prior)
+
+
+def _drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Run a finite stream to completion under `stream_shuffle_partitions`,
+    with a throwaway checkpoint."""
+    with stream_shuffle_partitions(spark), tempfile.TemporaryDirectory() as ckpt:
+        q = writer.option("checkpointLocation", ckpt).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
 
 def events_stream_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
@@ -167,11 +215,10 @@ def run_finite_stream(
     DataFrame; every harness consumes eagerly, so only the latest
     call's dir is live at any time).
 
-    Shuffle partitions are temporarily lowered: each micro-batch pays a
-    per-state-store-shard cost, which dwarfs the work at local scale (on
-    a cluster, shard count is sized to key cardinality instead).
+    Shuffle partitions are lowered while the stream runs
+    (`stream_shuffle_partitions`; on a cluster, shard count is sized to
+    key cardinality instead).
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     out_dir = None
     if sink == "parquet":
         if not _FILE_SINK_DIRS:
@@ -185,26 +232,17 @@ def run_finite_stream(
             shutil.rmtree(prev, ignore_errors=True)
         out_dir = tempfile.mkdtemp(prefix=f"{name}_sink_")
         _FILE_SINK_DIRS[name] = out_dir
-    with tempfile.TemporaryDirectory() as ckpt:
-        spark.conf.set("spark.sql.shuffle.partitions", stream_shards())
-        try:
-            w = df.writeStream.outputMode(output_mode).option(
-                "checkpointLocation", ckpt
-            )
-            if sink == "parquet":
-                q = w.format("parquet").option("path", out_dir).start()
-            else:
-                q = w.format("memory").queryName(name).start()
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            if cleanup_dir:
-                import shutil
+    try:
+        w = df.writeStream.outputMode(output_mode)
+        if sink == "parquet":
+            _drain(spark, w.format("parquet").option("path", out_dir))
+        else:
+            _drain(spark, w.format("memory").queryName(name))
+    finally:
+        if cleanup_dir:
+            import shutil
 
-                shutil.rmtree(cleanup_dir, ignore_errors=True)
+            shutil.rmtree(cleanup_dir, ignore_errors=True)
     if sink == "parquet":
         # explicit schema: the file-sink metadata log lists zero files
         # when the (finite) stream emitted nothing, and schema inference
@@ -377,22 +415,10 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
             pass  # first batch: target doesn't exist yet
         b.write.mode("append").parquet(target_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as ckpt:
-        spark.conf.set("spark.sql.shuffle.partitions", stream_shards())
-        try:
-            q = (
-                stream.writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            shutil.rmtree(stream_dir, ignore_errors=True)
+    try:
+        _drain(spark, stream.writeStream.foreachBatch(upsert))
+    finally:
+        shutil.rmtree(stream_dir, ignore_errors=True)
     return (
         spark.read.parquet(target_dir)
         .groupBy("event_type")
@@ -606,21 +632,7 @@ def streaming_incremental_dedup(
             batch, index=index, n=5, num_hashes=64, bands=32, threshold=0.5
         ).write.mode("append").parquet(out_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as ckpt:
-        spark.conf.set("spark.sql.shuffle.partitions", stream_shards())
-        try:
-            q = (
-                stream.writeStream.foreachBatch(probe)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _drain(spark, stream.writeStream.foreachBatch(probe))
 
     pairs = spark.read.parquet(out_dir)
     result = (
@@ -757,22 +769,8 @@ def streaming_deadletter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             "reasons", F.array_join("reasons", ",")
         ).write.mode("append").parquet(dlq_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as ckpt:
-        spark.conf.set("spark.sql.shuffle.partitions", stream_shards())
-        try:
-            q = (
-                stream.writeStream.foreachBatch(route)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            # stream_dir is the SESSION-SHARED feed — never delete it here
+    _drain(spark, stream.writeStream.foreachBatch(route))
+    # stream_dir is the SESSION-SHARED feed — never delete it here
 
     main = (
         spark.read.parquet(main_dir)

@@ -12,6 +12,7 @@ from good_enough_timecamp_data_pipeline_spark.operators.canonicalize import (
     canonicalize_hierarchy,
 )
 from good_enough_timecamp_data_pipeline_spark.operators.hierarchy import (
+    breadcrumb_rows,
     breadcrumbs,
     transitive_closure,
 )
@@ -79,11 +80,21 @@ def test_closure_missing_parent_keeps_edge(tree):
     assert got == {("f", "f"), ("f", "zz")}
 
 
-@pytest.mark.parametrize("strategy", ["recursive_cte", "unroll"])
-def test_breadcrumbs(tree, strategy):
+# the two breadcrumb walks: `breadcrumbs`' Spark unroll of broadcast joins,
+# and `breadcrumb_rows` over the dict rows the driver already holds
+CRUMB_WALKS = {
+    "unroll": lambda df: [r.asDict() for r in breadcrumbs(df).collect()],
+    "driver": lambda df: breadcrumb_rows([r.asDict() for r in df.collect()], 8, "task"),
+}
+
+
+@pytest.mark.parametrize("walk", list(CRUMB_WALKS))
+def test_breadcrumbs(tree, walk):
     out = {
-        r.task_id: (r.task_breadcrumb, r.task_level_1, r.task_level_2, r.task_level_3)
-        for r in breadcrumbs(tree, strategy=strategy).collect()
+        r["task_id"]: (
+            r["task_breadcrumb"], r["task_level_1"], r["task_level_2"], r["task_level_3"]
+        )
+        for r in CRUMB_WALKS[walk](tree)
     }
     assert out["c"] == ("A / B / C", "A", "B", "C")
     assert out["b"] == ("A / B", "A", "B", "")
@@ -106,3 +117,43 @@ def test_depth_cap(spark):
     crumbs = breadcrumbs(df, max_depth=8)
     deepest = crumbs.filter(F.col("task_id") == "11").first()
     assert deepest.task_breadcrumb.count(" / ") == 8  # 9 names = self + 8 walked
+
+
+# self-parent and its child, NULL and unicode names, duplicate ids with equal rows, a row
+# without an id, and a 12-deep chain past the 8-step cap
+EDGE_ROWS = [
+    ("s", "s", "S"),
+    ("k", "s", "K"),
+    ("n", "a", None),
+    ("m", "n", "M"),
+    ("u1", None, "Ünïcødé 🚀"),
+    ("u2", "u1", "مهمة"),
+    ("dup", "b", "Dup"),
+    ("dup", "b", "Dup"),
+    ("kid", "dup", "Kid"),
+    (None, "a", "NoId"),
+    *[(f"c{i}", f"c{i - 1}" if i else None, f"N{i}") for i in range(12)],
+]
+
+
+def test_driver_walk_matches_breadcrumbs(spark, tree):
+    """`breadcrumb_rows` over dict rows gives the rows of the Spark
+    `breadcrumbs` walk (distinct: the join repeats a duplicated id's
+    row once per match, the driver walk keeps one per input row)."""
+    edges = spark.createDataFrame(EDGE_ROWS, "task_id string, parent_id string, name string")
+    df = tree.unionByName(edges)
+    rows = [r.asDict() for r in df.collect()]
+    want = {tuple(r) for r in breadcrumbs(df).collect()}
+    got = breadcrumb_rows(rows, 8, "task")
+    assert len(got) == len(rows)
+    assert {tuple(r.values()) for r in got} == want
+    by_id = {r["task_id"]: r for r in got}
+    assert by_id["s"]["task_breadcrumb"] == "S / S"
+    # s is checked against the ids visited before its step ({k}), so the
+    # walk takes s's self-edge once more
+    assert by_id["k"]["task_breadcrumb"] == "S / S / K"
+    assert by_id["m"]["task_breadcrumb"] == "A / M"  # NULL name skipped...
+    assert by_id["m"]["task_level_2"] == ""  # ...and '' as a level
+    assert by_id["u2"]["task_breadcrumb"] == "Ünïcødé 🚀 / مهمة"
+    assert by_id[None]["task_breadcrumb"] is None
+    assert by_id["c11"]["task_breadcrumb"].count(" / ") == 8  # self + 8 walked

@@ -5,9 +5,19 @@ runs through a Python worker."""
 
 from __future__ import annotations
 
-import pytest
+import re
 
-from good_enough_timecamp_data_pipeline_spark.sources import ingest
+import pytest
+from pyspark.sql import types as T
+
+from good_enough_timecamp_data_pipeline_spark.functions.ids import strip_prefix
+from good_enough_timecamp_data_pipeline_spark.operators.canonicalize import (
+    canonicalize_hierarchy,
+    measure_long,
+    null_canonical,
+)
+from good_enough_timecamp_data_pipeline_spark.operators.hierarchy import breadcrumbs
+from good_enough_timecamp_data_pipeline_spark.sources import ingest, schemas
 from good_enough_timecamp_data_pipeline_spark.sources.client import TimeCampClient
 from good_enough_timecamp_data_pipeline_spark.sources.fixtures import (
     DictTransport,
@@ -154,3 +164,70 @@ def test_builder_frames_start_no_python_worker(spark, threshold):
                 assert "LocalTableScan" in plan, (name, plan)
     finally:
         spark.conf.set(key, prev)
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_crumb_builders_plan_no_recursion_or_join(spark):
+    """The trees are walked on the driver: `build_tasks` plans no recursive
+    loop (``UnionLoop``) and no join, and `build_users` no loop and no
+    join beyond its two lookups (primary group, group row)."""
+    client = TimeCampClient(demo_transport(), sleeper=lambda s: None)
+    tasks = _optimized(ingest.build_tasks(spark, client))
+    assert "UnionLoop" not in tasks and "Join" not in tasks, tasks
+    users = _optimized(ingest.build_users(spark, client))
+    assert "UnionLoop" not in users, users
+    assert len(re.findall(r"\bJoin \w+", users)) == 2, users
+
+
+def _spark_tasks(spark, raw):
+    """`build_tasks` with its ids canonicalized by Column expressions and
+    the tree walked by `hierarchy.breadcrumbs`."""
+    base = T.StructType(schemas.TASKS.fields[:6])
+    df = spark.createDataFrame(ingest._project(raw, base), base)
+    df = canonicalize_hierarchy(df).withColumn("budgeted", measure_long("budgeted"))
+    return breadcrumbs(df, n_levels=8)
+
+
+@pytest.mark.parametrize("payloads", [DEGENERATE, "demo"], ids=["degenerate", "demo"])
+def test_build_tasks_matches_spark_walk(spark, payloads):
+    client = (TimeCampClient(demo_transport(), sleeper=lambda s: None)
+              if payloads == "demo" else _client(payloads))
+    got = ingest.build_tasks(spark, client)
+    want = _spark_tasks(spark, client.get_tasks())
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
+def test_group_rows_match_spark_walk(spark):
+    """'g'-prefixed ids and parents, a 'g0' and a '' parent (roots), a
+    missing parent, a 2-cycle and a NULL id: the driver projection and
+    walk give the rows of strip_prefix/null_canonical Columns and
+    `hierarchy.breadcrumbs`."""
+    groups = [
+        {"group_id": "g1", "name": "Everyone", "parent_id": "g0"},
+        {"group_id": "g2", "name": "Eng", "parent_id": "g1"},
+        {"group_id": "3", "name": "Платформа", "parent_id": "2"},
+        {"group_id": "g4", "name": None, "parent_id": "g3"},
+        {"group_id": "g5", "name": "Lost", "parent_id": "g99"},
+        {"group_id": "g6", "name": "X", "parent_id": "g7"},
+        {"group_id": "g7", "name": "Y", "parent_id": "g6"},
+        {"group_id": "g8", "name": "Top", "parent_id": ""},
+        {"group_id": None, "name": "NoId", "parent_id": "g1"},
+    ]
+    raw = spark.createDataFrame(
+        [(str(g.get("group_id", "")), str(g.get("name", "")), str(g.get("parent_id") or ""))
+         for g in groups],
+        schemas.GROUPS,
+    )
+    canon = raw.withColumn("group_id", strip_prefix("group_id", "g")).withColumn(
+        "parent_id", null_canonical(strip_prefix("parent_id", "g"))
+    )
+    want = breadcrumbs(canon, "group_id", "parent_id", "name", n_levels=5, prefix="group")
+    got = ingest.group_rows(groups)
+    assert [tuple(r) for r in got] == [tuple(want.columns)] * len(got)
+    assert sorted(tuple(r.values()) for r in got) == sorted(tuple(r) for r in want.collect())
+    by_id = {r["group_id"]: r for r in got}
+    assert by_id["6"]["group_breadcrumb"] == "Y / X"

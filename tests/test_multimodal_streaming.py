@@ -1,5 +1,7 @@
 """Multimodal plumbing + streaming surface tests."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -710,3 +712,62 @@ def test_run_finite_stream_rerun_bounds_sink_dirs(spark, sf_dir, tmp_path):
     assert (
         sum(1 for n in W._FILE_SINK_DIRS if n == "sink_dir_bound_test") == 1
     )
+
+
+def test_concurrent_stream_entries_restore_shuffle_partitions(spark, monkeypatch):
+    """Two streams entered on threads, the first leaving first (the order
+    in which per-stream save/restore pairs leave the stream value behind),
+    then more threads than cores entering and leaving at random with a
+    short switch interval: every stream runs at the stream value, and the
+    conf ends at its prior value."""
+    import random
+    import sys
+    import threading
+
+    from good_enough_timecamp_data_pipeline_spark.streaming import windows as W
+
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHARDS", "3")
+    spark.conf.set(key, "7")
+    entered = [threading.Event(), threading.Event()]
+    leave = [threading.Event(), threading.Event()]
+    seen = []
+
+    def ordered(i):
+        with W.stream_shuffle_partitions(spark):
+            entered[i].set()
+            leave[i].wait(30)
+            seen.append(spark.conf.get(key))
+
+    def stress(seed):
+        rng = random.Random(seed)
+        for _ in range(5):
+            with W.stream_shuffle_partitions(spark):
+                seen.append(spark.conf.get(key))
+                time.sleep(rng.random() / 100)
+
+    switch = sys.getswitchinterval()
+    try:
+        threads = [threading.Thread(target=ordered, args=(i,)) for i in (0, 1)]
+        threads[0].start()
+        assert entered[0].wait(30)
+        threads[1].start()
+        assert entered[1].wait(30)
+        for i in (0, 1):
+            leave[i].set()
+            threads[i].join(30)
+        assert not any(t.is_alive() for t in threads)
+        assert seen == ["3", "3"] and spark.conf.get(key) == "7"
+
+        sys.setswitchinterval(1e-6)
+        threads = [threading.Thread(target=stress, args=(i,)) for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+        assert seen == ["3"] * (2 + 12 * 5) and spark.conf.get(key) == "7"
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.set(key, prior)

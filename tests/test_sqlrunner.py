@@ -50,3 +50,25 @@ def test_sql_events_normalized(spark, sf_dir):
         sf_dir,
     )
     assert df.collect()[0].days == 30
+
+
+def test_registering_landed_dir_starts_no_job(spark, tmp_path):
+    """Landed tables are read with their pinned schemas, so registering
+    the views infers nothing (a parquet schema inference is one job per
+    table). A trailing sentinel job in the same group proves the status
+    tracker has seen every earlier job of the group."""
+    out = str(tmp_path / "landed")
+    run_pipeline(spark, demo_transport(), out, "2025-01-01", "2026-02-01",
+                 dates=["2026-01-05"])
+    sc = spark.sparkContext
+    group = "register-landed-views"
+    sc.setJobGroup(group, "register")
+    try:
+        names = sqlrunner.register_data_views(spark, out)
+        spark.range(1).collect()  # one job, no exchange
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(names) == {"tasks", "users", "entries", "computer_activities",
+                          "application_names"}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
