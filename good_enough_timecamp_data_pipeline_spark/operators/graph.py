@@ -184,7 +184,6 @@ def pagerank(
     dst: str = "dst",
     num_iter: int = 10,
     damping: float = 0.85,
-    loop_scalar: str = "literal",
 ) -> DataFrame:
     """Directed PageRank with dangling-mass redistribution: (node, rank),
     ranks summing to 1 (up to float addition order).
@@ -206,33 +205,6 @@ def pagerank(
     Dangling nodes (no out-edges) leak rank mass; it is re-spread
     uniformly — skipping this makes ranks drift low and is the classic
     PageRank-at-scale bug.
-
-    ``loop_scalar`` controls how the per-round dangling-mass scalar
-    enters the rank-update plan (r15 VERDICT item 7 prescribed this
-    A/B: "measure, don't assume"):
-
-    - ``"literal"`` (default — the A/B winner): the scalar embeds as
-      ``F.lit(base)``, making every round's plan novel (fresh
-      expression-codegen per round, and a small-SF shape warm-up cannot
-      pre-compile the at-scale loop classes).
-    - ``"broadcast"``: literal-free loop body — the scalar rides a
-      1-row DataFrame cross-joined with an explicit broadcast hint, so
-      every round generates the identical expression tree. Measured
-      LOSER at sf0.1 (r16 A/B, one loud-window session, interleaved):
-      steady-state min 4.68 (literal) vs 6.00 (broadcast); first
-      execution in a fresh warmed session 5.94 vs 8.53, and simulating
-      SHAPE_WARMUP membership did not rescue it (literal+warm 5.77,
-      broadcast+warm 10.69). PySpark's ``createDataFrame`` builds an
-      RDD-backed frame (not a LocalRelation), so the broadcast build
-      costs one extra Spark job per iteration (+8 jobs measured, 21→29)
-      — more than the per-round compile it saves; and literal vs
-      literal+warm shows the compile is not the dominant first-run cost
-      anyway. Kept as the documented reference so the decision stays
-      re-measurable.
-
-    Both modes compute ``base`` on the driver with the same float ops,
-    and the update applies the same IEEE adds, so ranks are
-    bit-identical between them (test-asserted).
     """
     nodes = (
         edges.select(F.col(src).alias("node"))
@@ -265,7 +237,6 @@ def pagerank(
     # reads — so no separate count() job. Block freeing is deferred one
     # round: freeing round k-1 only after the collect that materialized
     # round k means at most two label copies are ever live.
-    spark = edges.sparkSession
     freeable: DataFrame | None = None
     for _ in range(num_iter):
         dangling = (
@@ -280,25 +251,12 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("contrib"))
         )
-        if loop_scalar == "broadcast":
-            # scalar as broadcast DATA, not a literal: identical plan
-            # source every round/dataset (see docstring); the 1-row
-            # LocalRelation broadcast costs no job
-            base_col = F.col("__base")
-            scalar_join = F.broadcast(
-                spark.createDataFrame([(float(base),)], "__base double")
-            )
-        else:
-            base_col = F.lit(base)
-            scalar_join = None
         freeable = ranks
         updated = ranks.select("node", "out_deg").join(contribs, "node", "left")
-        if scalar_join is not None:
-            updated = updated.crossJoin(scalar_join)
         ranks = updated.select(
             "node",
             "out_deg",
-            (base_col + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias(
+            (F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias(
                 "rank"
             ),
         ).localCheckpoint(eager=False)

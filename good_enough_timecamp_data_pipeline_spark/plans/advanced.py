@@ -28,7 +28,7 @@ from pyspark.storagelevel import StorageLevel
 from ..operators import text
 from ..operators.graph import cluster_sizes, connected_components
 from .northstar import DOCS_NEAR_DUP_SQL, TOKS_SQL, _docs_near_dup
-from .shared import shared_checkpoint
+from . import shared
 from .testdata import load_table
 
 
@@ -58,6 +58,7 @@ def d_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared.artifact("cc_fingerprint_labels")
 def _fingerprint_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CC labels (node, cluster_id) over the two-fingerprint doc graph —
     shared by `d_cc_clusters` and `d_dedup_survivors` as a session
@@ -65,34 +66,31 @@ def _fingerprint_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative stage (actions per round), so both consumers read ONE
     materialized fixpoint instead of each re-running it."""
 
-    def build() -> DataFrame:
-        docs = _docs_near_dup(spark, sf_dir).withColumn(
-            "toks", text.tokenize(F.col("text"))
-        )
-        n = F.size("toks")
-        fp = docs.select(
-            "doc_id",
-            F.when(n >= 20, F.md5(F.concat_ws(" ", F.slice("toks", 1, 20)))).alias("pre"),
-            F.when(n >= 30, F.md5(F.concat_ws(" ", F.slice("toks", 11, 20)))).alias("mid"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    docs = _docs_near_dup(spark, sf_dir).withColumn(
+        "toks", text.tokenize(F.col("text"))
+    )
+    n = F.size("toks")
+    fp = docs.select(
+        "doc_id",
+        F.when(n >= 20, F.md5(F.concat_ws(" ", F.slice("toks", 1, 20)))).alias("pre"),
+        F.when(n >= 30, F.md5(F.concat_ws(" ", F.slice("toks", 11, 20)))).alias("mid"),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
-        def pairs(col: str) -> DataFrame:
-            a, b = fp.alias("a"), fp.alias("b")
-            return a.join(
-                b,
-                (F.col(f"a.{col}") == F.col(f"b.{col}"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
+    def pairs(col: str) -> DataFrame:
+        a, b = fp.alias("a"), fp.alias("b")
+        return a.join(
+            b,
+            (F.col(f"a.{col}") == F.col(f"b.{col}"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        ).select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
 
-        edges = pairs("pre").unionByName(pairs("mid")).distinct()
-        labels = connected_components(edges)
-        # connected_components runs its propagation actions eagerly and
-        # returns checkpoint-backed labels, so the pinned fingerprints
-        # are already consumed — release them before returning
-        fp.unpersist()
-        return labels
-
-    return shared_checkpoint(spark, sf_dir, "cc_fingerprint_labels", build)
+    edges = pairs("pre").unionByName(pairs("mid")).distinct()
+    labels = connected_components(edges)
+    # connected_components runs its propagation actions eagerly and
+    # returns checkpoint-backed labels, so the pinned fingerprints
+    # are already consumed — release them before returning
+    fp.unpersist()
+    return labels
 
 
 def d_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import shared
 from .testdata import load_table
 
 
@@ -392,6 +393,7 @@ LEFT JOIN dim d
 # global token frequencies
 # ---------------------------------------------------------------------------
 
+@shared.artifact("tf_doc_tok_ws")
 def tf_doc_tok_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, tok, tf) term-frequency table over the whitespace-token
     stream of ``documents``, as a SESSION-shared checkpoint
@@ -401,17 +403,13 @@ def tf_doc_tok_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting table a production corpus materializes once."""
     from ..operators.layout import fan_out_scan
     from ..operators.text import tokenize
-    from .shared import shared_checkpoint
 
-    def build() -> DataFrame:
-        docs = fan_out_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-        return (
-            docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("tok"))
-            .groupBy("doc_id", "tok")
-            .agg(F.count("*").alias("tf"))
-        )
-
-    return shared_checkpoint(spark, sf_dir, "tf_doc_tok_ws", build)
+    docs = fan_out_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    return (
+        docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("tok"))
+        .groupBy("doc_id", "tok")
+        .agg(F.count("*").alias("tf"))
+    )
 
 
 def t_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -478,121 +478,15 @@ def warmup(spark: SparkSession, sf_dir: str, shapes: bool = True) -> None:
             spark.catalog.clearCache()
 
 
-# Accessors for every cross-entry shared materialization (plans/shared.py
-# tags). The bench/baseline harnesses build these BEFORE the timed loop and
-# report per-tag build seconds (shared.build_times) next to the per-query
-# numbers — the ``lsh_index_build_sec`` discipline extended to every
-# shared_checkpoint tag, so no first consumer's timing silently carries a
-# corpus-wide artifact build (round-8 VERDICT item 3). In production each
-# tag is a materialized view / persisted table whose build is a separate,
-# amortized job — exactly how the timing now reports it.
-def _shared_artifact_accessors():
-    from . import round5 as _r5
-    from . import round5d as _r5d
-    from . import round5f as _r5f
-
-    return (
-        northstar._near_dup_shingles,
-        northstar._near_dup_band_buckets,
-        northstar._near_dup_candidates,
-        northstar._near_dup_truth_pairs,
-        _r5d.docs_hash_scored,
-        extensions.docs_alpha_toks_shared,
-        extensions.bigram_counts_shared,
-        analytics.tf_doc_tok_shared,
-        advanced._fingerprint_labels,
-        _r5f._docs_shingles_shared,
-        _r5.part_supplier_edges,
-        _r5._dsir_doc_sb,
-        _r5d._inc_containment_corpus_sh,
-        reports.task_closure_shared,
-    )
-
-
 def prewarm_shared(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Materialize every shared artifact at ``sf_dir``; returns per-tag
-    build seconds (tags already built this session cost ~0 and keep
-    their recorded time). A failed build must not kill the harness, but
-    it must not be INVISIBLE either — silence would revert the build
-    cost to the first consumer's per-query time, the exact
-    mis-attribution this function exists to eliminate — so failures go
-    to stderr and into the returned dict under ``failed::<fn>``."""
-    import sys as _sys
-
+    """Build every shared artifact at ``sf_dir`` before a timed loop and
+    return per-tag build seconds (``shared.prewarm``): the harnesses
+    report each one-time build next to the per-query numbers, so no
+    first consumer's time silently carries a corpus-wide build. Every
+    plan module is imported above, so every artifact is registered."""
     from . import shared
 
-    times = {}
-    for fn in _shared_artifact_accessors():
-        try:
-            fn(spark, sf_dir)
-        except Exception as exc:  # a broken artifact must not kill the harness
-            name = getattr(fn, "__name__", repr(fn))
-            print(f"prewarm_shared: {name} failed: {exc!r}", file=_sys.stderr)
-            times[f"failed::{name}"] = -1.0
-    times.update(shared.build_times(sf_dir))
-    # the streaming entries' session-shared chunk staging (a path, not a
-    # shared_checkpoint tag) gets the same treatment: built here, its
-    # one-time cost reported per-tag instead of landing on whichever
-    # chunk-replay stream runs first (r12)
-    try:
-        import time as _time
-
-        from ..streaming.stateful import _chunked_events_dir
-
-        t0 = _time.time()
-        _chunked_events_dir(spark, sf_dir)
-        times["stream_chunk_staging"] = round(_time.time() - t0, 3)
-    except Exception as exc:
-        print(f"prewarm_shared: stream_chunk_staging failed: {exc!r}", file=_sys.stderr)
-        times["failed::stream_chunk_staging"] = -1.0
-    # the dead-letter feed (events + corrupted copy, two mtime-spaced
-    # files) is the same kind of session-shared staging (r16): built
-    # here and priced per-tag instead of landing on the entry's first
-    # invocation
-    try:
-        import time as _time
-
-        from ..streaming.windows import _deadletter_feed_dir
-
-        t0 = _time.time()
-        _deadletter_feed_dir(spark, sf_dir)
-        times["deadletter_feed_staging"] = round(_time.time() - t0, 3)
-    except Exception as exc:
-        print(
-            f"prewarm_shared: deadletter_feed_staging failed: {exc!r}",
-            file=_sys.stderr,
-        )
-        times["failed::deadletter_feed_staging"] = -1.0
-    # likewise the incremental-dedup near-dup feed (r16)
-    try:
-        import time as _time
-
-        from ..streaming.windows import _lsh_feed_dir
-
-        t0 = _time.time()
-        _lsh_feed_dir(spark, sf_dir)
-        times["lsh_feed_staging"] = round(_time.time() - t0, 3)
-    except Exception as exc:
-        print(f"prewarm_shared: lsh_feed_staging failed: {exc!r}", file=_sys.stderr)
-        times["failed::lsh_feed_staging"] = -1.0
-    # the PQ (codes, codebook) pair is session-shared between
-    # s_pq_recall and s_pq_rerank (a tuple memo, not a shared_checkpoint
-    # tag — see round5g._pq_8x16), so its k-means training cost landed
-    # on whichever audit ran first: measured 3.83 s first-run vs 0.91 s
-    # with the memo warm at sf0.1 (round 15). Same treatment as the
-    # chunk staging: built here, priced per-tag.
-    try:
-        import time as _time
-
-        from . import round5g as _r5g
-
-        t0 = _time.time()
-        _r5g._pq_8x16(spark, sf_dir)
-        times["pq_8x16_train"] = round(_time.time() - t0, 3)
-    except Exception as exc:
-        print(f"prewarm_shared: pq_8x16_train failed: {exc!r}", file=_sys.stderr)
-        times["failed::pq_8x16_train"] = -1.0
-    return times
+    return shared.prewarm(spark, sf_dir)
 
 
 # Registration order is deliberate: the driver's correctness gate checks the

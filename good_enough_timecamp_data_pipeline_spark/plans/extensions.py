@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .shared import shared_checkpoint
+from . import shared
 from .testdata import load_table
 
 
@@ -294,6 +294,7 @@ GROUP BY l_returnflag
 ALPHA_TOKS = "lowercase, split on [^a-z]+, drop empties"
 
 
+@shared.artifact("docs_alpha_toks")
 def docs_alpha_toks_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, lang, t) — the lowercase-alpha tokenized corpus
     (``ALPHA_TOKS``) as a SESSION-shared checkpoint: the regex tokenize
@@ -305,20 +306,16 @@ def docs_alpha_toks_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; consumers read partitioned checkpoint blocks."""
     from ..operators.layout import fan_out_scan
 
-    from .shared import shared_checkpoint
     from .testdata import load_table
 
-    def build() -> DataFrame:
-        docs = fan_out_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-        toks = F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z]+"), lambda x: x != F.lit("")
-        )
-        # fixture corpora (tests) may carry only (doc_id, text); the
-        # metadata columns ride along when present
-        meta = [c for c in ("source", "lang") if c in docs.columns]
-        return docs.select("doc_id", *meta, toks.alias("t"))
-
-    return shared_checkpoint(spark, sf_dir, "docs_alpha_toks", build)
+    docs = fan_out_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    toks = F.filter(
+        F.split(F.lower(F.col("text")), "[^a-z]+"), lambda x: x != F.lit("")
+    )
+    # fixture corpora (tests) may carry only (doc_id, text); the
+    # metadata columns ride along when present
+    meta = [c for c in ("source", "lang") if c in docs.columns]
+    return docs.select("doc_id", *meta, toks.alias("t"))
 
 
 def bigram_rows_from_toks(tdf: DataFrame, extra_cols: tuple = ()) -> DataFrame:
@@ -667,6 +664,7 @@ GROUP BY l_returnflag
 # t_lm_perplexity — bigram-LM document scoring (CCNet-style quality signal)
 # ---------------------------------------------------------------------------
 
+@shared.artifact("bigram_counts")
 def bigram_counts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-sized (w1, w2, c12) bigram count table over the plain
     document bigram stream, materialized once per session as a shared
@@ -675,13 +673,10 @@ def bigram_counts_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer — ``t_lm_perplexity``, ``t_ccnet_buckets`` (whose pair
     stream also carries lang), ``t_bigram_lm`` — reads the same
     materialization instead of re-running tokenize→explode→agg each."""
-    return shared_checkpoint(
-        spark,
-        sf_dir,
-        "bigram_counts",
-        lambda: bigram_rows_from_toks(docs_alpha_toks_shared(spark, sf_dir))
+    return (
+        bigram_rows_from_toks(docs_alpha_toks_shared(spark, sf_dir))
         .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12")),
+        .agg(F.count("*").alias("c12"))
     )
 
 

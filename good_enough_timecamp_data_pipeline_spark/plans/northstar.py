@@ -28,7 +28,9 @@ from ..streaming.windows import (
     streaming_sliding_counts,
     streaming_tumbling_counts,
 )
-from .testdata import load_table, session_memo
+from . import shared
+from .shared import session_memo
+from .testdata import load_table
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB side)
@@ -377,6 +379,7 @@ WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= {threshold}
 """.strip()
 
 
+@shared.artifact("neardup_shingles_n5")
 def _near_dup_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc, sh) 5-gram shingle rows over the near-dup corpus as a
     SESSION-shared checkpoint (plans/shared.py): tokenize+shingle is the
@@ -385,54 +388,36 @@ def _near_dup_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical table — one materialization serves the family (in
     production this is the persisted shingle half of the LSH index,
     dedup.build_lsh_index_cached)."""
-    from .shared import shared_checkpoint
-
-    return shared_checkpoint(
-        spark,
-        sf_dir,
-        "neardup_shingles_n5",
-        lambda: dedup.shingle_rows(_docs_near_dup(spark, sf_dir), n=5),
-    )
+    return dedup.shingle_rows(_docs_near_dup(spark, sf_dir), n=5)
 
 
+@shared.artifact("neardup_truth_n5_t0.5")
 def _near_dup_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-Jaccard ≥ 0.5 pair set over the shared shingles, shared-
     checkpointed: it is simultaneously d_ngram_jaccard's RESULT and
     d_lsh_quality's ground truth (the truth-reuse pattern — the audit
     measures recall against exactly this definition)."""
-    from .shared import shared_checkpoint
-
-    return shared_checkpoint(
-        spark,
-        sf_dir,
-        "neardup_truth_n5_t0.5",
-        lambda: dedup.shingle_pairs_jaccard(
-            _docs_near_dup(spark, sf_dir),
-            n=5,
-            threshold=0.5,
-            max_shingle_df=None,
-            shingles=_near_dup_shingles(spark, sf_dir),
-        ),
+    return dedup.shingle_pairs_jaccard(
+        _docs_near_dup(spark, sf_dir),
+        n=5,
+        threshold=0.5,
+        max_shingle_df=None,
+        shingles=_near_dup_shingles(spark, sf_dir),
     )
 
 
+@shared.artifact("neardup_bb_64x32")
 def _near_dup_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc, band, bucket) LSH rows (64 hashes × 32 bands) over the
     shared shingles, shared-checkpointed — the signature+banding agg is
     identical between d_minhash_lsh and the d_lsh_quality audit (in
     production: the bucket half of the persisted LSH index)."""
-    from .shared import shared_checkpoint
-
-    return shared_checkpoint(
-        spark,
-        sf_dir,
-        "neardup_bb_64x32",
-        lambda: dedup.minhash_band_buckets(
-            _near_dup_shingles(spark, sf_dir), num_hashes=64, bands=32
-        ),
+    return dedup.minhash_band_buckets(
+        _near_dup_shingles(spark, sf_dir), num_hashes=64, bands=32
     )
 
 
+@shared.artifact("neardup_cand_64x32")
 def _near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct LSH candidate pairs from the shared band buckets,
     shared-checkpointed: the bucket self-join is the costly half of both
@@ -440,14 +425,7 @@ def _near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     `d_lsh_quality` (which measures them against ground truth) — one
     pass serves both, the same artifact-reuse discipline as the shingle
     and bucket tables."""
-    from .shared import shared_checkpoint
-
-    return shared_checkpoint(
-        spark,
-        sf_dir,
-        "neardup_cand_64x32",
-        lambda: dedup.band_bucket_candidates(_near_dup_band_buckets(spark, sf_dir)),
-    )
+    return dedup.band_bucket_candidates(_near_dup_band_buckets(spark, sf_dir))
 
 
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

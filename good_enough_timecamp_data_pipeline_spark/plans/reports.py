@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.formatting import format_duration, format_duration_signed, format_hours
 from ..operators.hierarchy import closure_sql, transitive_closure
+from . import shared
 from .testdata import ENTRIES_SQL, TASKS_SQL, entries_df, tasks_df
 
 
@@ -60,7 +61,10 @@ crumb AS (
         FROM walk w JOIN _tasks t ON w.cursor_id = t.task_id
         WHERE w.d < 8
     )
-    SELECT task_id, path AS task_breadcrumb FROM walk WHERE cursor_id IS NULL
+    -- the walk ends at a root or, for an orphan, at its missing parent
+    SELECT w.task_id, w.path AS task_breadcrumb FROM walk w
+    WHERE w.cursor_id IS NULL
+       OR NOT EXISTS (SELECT 1 FROM _tasks t WHERE t.task_id = w.cursor_id)
 )
 """.strip()
 
@@ -69,6 +73,7 @@ crumb AS (
 # Report 1 — Budget vs Tracked Time (task level)
 # ---------------------------------------------------------------------------
 
+@shared.artifact("task_closure_unroll_d3")
 def task_closure_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tasks tree's transitive closure as a SESSION-shared checkpoint
     (plans/shared.py): the closure is a dimension-sized derived table
@@ -78,16 +83,7 @@ def task_closure_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/testdata.py) is exactly 3 levels, so the unroll strategy
     applies; h_closure_pairs keeps exercising the native recursive-CTE
     strategy for unbounded-depth parity."""
-    from .shared import shared_checkpoint
-
-    return shared_checkpoint(
-        spark,
-        sf_dir,
-        "task_closure_unroll_d3",
-        lambda: transitive_closure(
-            tasks_df(spark, sf_dir), strategy="unroll", max_depth=3
-        ),
-    )
+    return transitive_closure(tasks_df(spark, sf_dir), strategy="unroll", max_depth=3)
 
 
 def report_task_budget(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.graph import pagerank
-from .shared import shared_checkpoint
+from . import shared
 from .testdata import load_table
 
 US_PER_DAY = 86_400_000_000
@@ -383,22 +383,18 @@ FROM pairs
 # g_pagerank — iterative PageRank over the part↔supplier supply graph
 # ---------------------------------------------------------------------------
 
+@shared.artifact("part_supplier_edges")
 def part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distinct part→supplier edge set from lineitem (suppliers
     offset by 10M) — the graph both ``g_pagerank`` and ``g_kcore``
     analyze. The distinct is a full fact-table shuffle, so the edge set
     is a session-shared checkpoint (plans/shared.py) rather than a
     per-entry recompute."""
-    from .shared import shared_checkpoint
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        return li.select(
-            F.col("l_partkey").alias("src"),
-            (F.col("l_suppkey") + 10_000_000).alias("dst"),
-        ).distinct()
-
-    return shared_checkpoint(spark, sf_dir, "part_supplier_edges", build)
+    li = load_table(spark, sf_dir, "lineitem")
+    return li.select(
+        F.col("l_partkey").alias("src"),
+        (F.col("l_suppkey") + 10_000_000).alias("dst"),
+    ).distinct()
 
 
 def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,6 +732,7 @@ def t_semdedup(
 # t_dsir_weights — DSIR importance weights (hashed-bigram log-ratio)
 # ---------------------------------------------------------------------------
 
+@shared.prewarmed
 def _dsir_doc_sb(
     spark: SparkSession, sf_dir: str, n_buckets: int = 512
 ) -> DataFrame:
@@ -755,7 +752,7 @@ def _dsir_doc_sb(
             % n_buckets
         ).alias("bucket"),
     )
-    return shared_checkpoint(
+    return shared.shared_checkpoint(
         spark,
         sf_dir,
         f"dsir_doc_sb_{n_buckets}",

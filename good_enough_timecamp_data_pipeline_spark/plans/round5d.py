@@ -42,6 +42,7 @@ from ..operators.order import global_cumsum_multi, pin_with_range_bucket
 from ..operators.text import tokenize
 from .northstar import TOKS_SQL, _shingles_sql
 from .round5 import MAX_SESSION_US, _session_bounds
+from . import shared
 from .testdata import load_table
 
 # ---------------------------------------------------------------------------
@@ -104,6 +105,7 @@ def _weight_expr(tok) -> F.Column:
     return F.element_at(_weight_array_col(), b.cast("int") + 1)
 
 
+@shared.artifact("docs_hash_scored")
 def docs_hash_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, content_h, n_tokens, score_raw, quality, lang_pred) —
     ONE pass of the per-doc narrow compute over the corpus as a
@@ -124,33 +126,29 @@ def docs_hash_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     still re-derives everything from raw text inside its own SQL."""
     from ..operators.layout import fan_out_scan
     from ..operators.text import lang_id, quality_score
-    from .shared import shared_checkpoint
 
-    def build() -> DataFrame:
-        # fan the one-file local scan out before the per-token md5 fold;
-        # no-op on many-file inputs
-        docs = fan_out_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-        d = docs.withColumn("__toks", tokenize(F.col("text")))
-        # single fused fold: transform(...)+aggregate would allocate an
-        # intermediate per-token weight ARRAY per document before
-        # summing it — folding the weight lookup into the aggregate
-        # lambda skips that allocation (HOFs are interpreted, so the
-        # optimizer never fuses it for us; measured ~30% on this scan)
-        score_raw = F.aggregate(
-            F.col("__toks"),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + _weight_expr(t),
-        )
-        return d.select(
-            "doc_id",
-            F.md5("text").alias("content_h"),
-            F.size("__toks").cast("int").alias("n_tokens"),
-            score_raw.alias("score_raw"),
-            quality_score(F.col("text"), toks=F.col("__toks")).alias("quality"),
-            lang_id(F.col("text"), toks=F.col("__toks")).alias("lang_pred"),
-        )
-
-    return shared_checkpoint(spark, sf_dir, "docs_hash_scored", build)
+    # fan the one-file local scan out before the per-token md5 fold;
+    # no-op on many-file inputs
+    docs = fan_out_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = docs.withColumn("__toks", tokenize(F.col("text")))
+    # single fused fold: transform(...)+aggregate would allocate an
+    # intermediate per-token weight ARRAY per document before
+    # summing it — folding the weight lookup into the aggregate
+    # lambda skips that allocation (HOFs are interpreted, so the
+    # optimizer never fuses it for us; measured ~30% on this scan)
+    score_raw = F.aggregate(
+        F.col("__toks"),
+        F.lit(0).cast("long"),
+        lambda acc, t: acc + _weight_expr(t),
+    )
+    return d.select(
+        "doc_id",
+        F.md5("text").alias("content_h"),
+        F.size("__toks").cast("int").alias("n_tokens"),
+        score_raw.alias("score_raw"),
+        quality_score(F.col("text"), toks=F.col("__toks")).alias("quality"),
+        lang_id(F.col("text"), toks=F.col("__toks")).alias("lang_pred"),
+    )
 
 
 def t_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,6 +296,7 @@ def d_incremental_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared.prewarmed
 def _inc_containment_corpus_sh(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -305,7 +304,6 @@ def _inc_containment_corpus_sh(
     per-doc shingle-array table) for the cross-set probe
     (shared-artifact accessor; prewarmed by catalog.prewarm_shared)."""
     from ..operators.dedup import build_containment_index
-    from .shared import shared_checkpoint
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     holder: dict = {}
@@ -328,16 +326,16 @@ def _inc_containment_corpus_sh(
 
         return build
 
-    full = shared_checkpoint(
+    full = shared.shared_checkpoint(
         spark, sf_dir, "inc_containment_corpus_sh", derived("full")
     )
-    df_tbl = shared_checkpoint(
+    df_tbl = shared.shared_checkpoint(
         spark, sf_dir, "inc_containment_corpus_df", derived("df")
     )
-    prefix = shared_checkpoint(
+    prefix = shared.shared_checkpoint(
         spark, sf_dir, "inc_containment_corpus_prefix_t09", derived("prefix")
     )
-    arr = shared_checkpoint(
+    arr = shared.shared_checkpoint(
         spark, sf_dir, "inc_containment_corpus_arr", derived("arr")
     )
     return full, df_tbl, prefix, arr

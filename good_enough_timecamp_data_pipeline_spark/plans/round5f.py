@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import shingle_pairs_jaccard, shingle_rows
 from .northstar import TOKS_SQL, _shingles_sql
+from . import shared
 from .testdata import load_table
 
 # ---------------------------------------------------------------------------
@@ -108,19 +109,13 @@ FROM g
 CURVE_FLOOR = 0.5  # compute pairs once at the loosest threshold under study
 
 
+@shared.artifact("docs_shingles_n5")
 def _docs_shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc, sh) 5-gram shingle rows over the PLAIN documents table as a
     session-shared checkpoint (plans/shared.py) — d_threshold_curve and
     t_ngram_novelty consume the identical table (distinct from the
     near-dup-injected corpus northstar._near_dup_shingles covers)."""
-    from .shared import shared_checkpoint
-
-    return shared_checkpoint(
-        spark,
-        sf_dir,
-        "docs_shingles_n5",
-        lambda: shingle_rows(load_table(spark, sf_dir, "documents"), n=5),
-    )
+    return shingle_rows(load_table(spark, sf_dir, "documents"), n=5)
 
 
 def d_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:

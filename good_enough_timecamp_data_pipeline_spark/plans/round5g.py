@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import shared
 from .testdata import load_table
 
 GEO_RADIUS = 5.0  # meters; also the grid cell size
@@ -448,36 +449,22 @@ def s_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # s_pq_recall — ranking damage of PQ compression, measured
 # ---------------------------------------------------------------------------
 
-_PQ_CACHE: dict = {}
-
-
+@shared.artifact("pq_8x16_train")
 def _pq_8x16(spark: SparkSession, sf_dir: str):
     """The trained 8×16 PQ (codes, codebook) pair, once per session.
 
     ``s_pq_recall`` and ``s_pq_rerank`` audit the SAME quantizer — the
     expensive part is the per-subspace k-means training, identical in
-    both — so the pair is memoized per (session, sf_dir) and eagerly
-    checkpointed (the plans/shared.py discipline; a tuple of DataFrames,
-    hence a local memo instead of shared_checkpoint)."""
-    import weakref
-
-    key = (id(spark), sf_dir)
-    hit = _PQ_CACHE.get(key)
-    if hit is not None:
-        ref, pair = hit
-        if ref() is spark:
-            return pair
-        del _PQ_CACHE[key]
+    both — so the pair is a shared artifact (plans/shared.py), each frame
+    eagerly checkpointed."""
     from ..operators.clustering import product_quantize
 
     emb = load_table(spark, sf_dir, "embeddings")
     codes, codebook = product_quantize(emb, n_subspaces=8, n_centroids=16, n_iter=5)
-    pair = (
+    return (
         codes.localCheckpoint(eager=True),
         codebook.localCheckpoint(eager=True),
     )
-    _PQ_CACHE[key] = (weakref.ref(spark), pair)
-    return pair
 
 
 def s_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import shared
+from .shared import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -92,90 +95,40 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # 100 TB inputs the scan fans out by itself.
 
 
-# DataFrame plans are immutable, so one read per (session, sf_dir, table)
-# serves every query in the session. Without this, each catalog build pays
-# a parquet footer read + schema inference per table it touches (~50–100 ms
-# of the per-query constant, × several tables × 170 queries per bench run).
-# The weakref guard rejects a hit whose session object is gone or was
-# replaced (id() can be recycled after GC) — a fresh read, never a stale
-# plan against a dead session.
-_TABLE_CACHE: dict = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import weakref
+    """The table's plan, read once per (session, sf_dir): a re-read pays a
+    parquet footer read per table per catalog build."""
 
-    key = (id(spark), sf_dir, name)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        ref, cached = hit
-        if ref() is spark:
-            return cached
-        del _TABLE_CACHE[key]
-    if name == "events":
+    def read() -> DataFrame:
+        if name != "events":
+            return spark.read.parquet(f"{sf_dir}/{name}.parquet")
         # Set the nanos conf HERE, not only in our own get_spark() builder:
         # the driver verifies queries() under its own SparkSession where the
         # conf would otherwise be unset and a nanos-vintage events read dies
-        # with PARQUET_TYPE_ILLEGAL (round-1 ADVICE item 1).
+        # with PARQUET_TYPE_ILLEGAL.
         ensure_events_read_conf(spark)
-        df = normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_CACHE[key] = (weakref.ref(spark), df)
-    return df
+        return normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+
+    return shared.memo(spark, sf_dir, ("table", name), read)
 
 
-def session_memo(fn):
-    """Memoize a pure ``(spark, sf_dir) -> DataFrame`` plan builder per
-    session (same weakref guard as the table cache). Only the
-    no-extra-arguments call is cached; parameterized calls pass through.
-    For derived fixtures (tasks tree, near-dup corpus) that a dozen
-    catalog queries each rebuild expression-by-expression over Py4J."""
-    import functools
-    import weakref
-
-    cache: dict = {}
-
-    @functools.wraps(fn)
-    def wrapped(spark, sf_dir, *args, **kwargs):
-        if args or kwargs:
-            return fn(spark, sf_dir, *args, **kwargs)
-        key = (id(spark), sf_dir)
-        hit = cache.get(key)
-        if hit is not None:
-            ref, df = hit
-            if ref() is spark:
-                return df
-            del cache[key]
-        df = fn(spark, sf_dir)
-        cache[key] = (weakref.ref(spark), df)
-        return df
-
-    return wrapped
-
-
-_VIEWS_REGISTERED: dict = {}
+# store key of the per-session marker: the sf_dir whose views are registered
+VIEWS_KEY = "testdata.views"
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view (for spark.sql paths).
 
-    Memoized per (session, sf_dir): dozens of catalog queries call this on
-    entry, and each re-registration is 10 Py4J round-trips (~50-100 ms of
-    pure per-query constant). A different sf_dir for the same session
-    re-registers (the views must point at the new data)."""
-    import weakref
-
-    key = id(spark)
-    hit = _VIEWS_REGISTERED.get(key)
-    if hit is not None:
-        ref, registered_dir = hit
-        if ref() is spark and registered_dir == sf_dir:
-            return
-        del _VIEWS_REGISTERED[key]
+    Memoized per session on the LAST registered sf_dir: dozens of catalog
+    queries call this on entry, and each re-registration is 10 Py4J
+    round-trips. A different sf_dir re-registers (the views must point at
+    the new data), and so does A after B after A; ``sqlrunner`` forgets
+    the marker when it shadows these views."""
+    if shared.lookup(spark, None, VIEWS_KEY) == sf_dir:
+        return
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _VIEWS_REGISTERED[key] = (weakref.ref(spark), sf_dir)
+    shared.store(spark, None, VIEWS_KEY, sf_dir)
 
 
 # ---------------------------------------------------------------------------

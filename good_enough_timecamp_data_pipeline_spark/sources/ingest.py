@@ -144,11 +144,17 @@ def build_tasks(spark: SparkSession, client: TimeCampClient) -> DataFrame:
 
 def group_rows(groups: list[dict[str, Any]]) -> list[dict[str, Any]]:
     """people_picker groups → canonical adjacency rows with their
-    breadcrumb and 5 level columns; ids may arrive 'g'-prefixed (F6)."""
+    breadcrumb and 5 level columns; ids may arrive 'g'-prefixed (F6). A
+    NULL name or id stays NULL: the walk skips a NULL name, and a NULL id
+    gets NULL crumbs."""
+
+    def text(v: Any) -> str | None:
+        return None if v is None else str(v)
+
     rows = [
         {
-            "group_id": strip_prefix_value(str(g.get("group_id", "")), "g"),
-            "name": str(g.get("name", "")),
+            "group_id": strip_prefix_value(text(g.get("group_id", "")), "g"),
+            "name": text(g.get("name", "")),
             "parent_id": null_canonical_value(
                 strip_prefix_value(str(g.get("parent_id") or ""), "g")
             ),

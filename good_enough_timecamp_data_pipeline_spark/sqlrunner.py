@@ -78,9 +78,9 @@ def register_data_views(spark: SparkSession, data_dir: str, fmt: str = "parquet"
     # these may shadow testdata's table-named views; drop the memo so a
     # later plans.testdata.register_views() re-registers instead of
     # assuming its views are still in place
-    from .plans.testdata import _VIEWS_REGISTERED
+    from .plans import shared, testdata
 
-    _VIEWS_REGISTERED.pop(id(spark), None)
+    shared.forget(spark, testdata.VIEWS_KEY)
     return names
 
 

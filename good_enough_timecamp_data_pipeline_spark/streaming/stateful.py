@@ -24,7 +24,6 @@ big batch would make stateful processing trivially correct.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -32,11 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.testdata import (
-    ensure_events_read_conf,
-    normalize_events_ts,
-    session_memo,
-)
+from ..plans import shared
+from ..plans.testdata import ensure_events_read_conf, normalize_events_ts
 from pyspark.sql import types as T
 
 from .windows import run_finite_stream
@@ -148,10 +144,8 @@ def _sessionize_user(
 SHARED_CHUNKS = 3
 
 
-@session_memo
-def _chunked_events_dir(
-    spark: SparkSession, sf_dir: str, n_chunks: int = SHARED_CHUNKS
-) -> str:
+@shared.artifact("stream_chunk_staging")
+def _chunked_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Land events as time-ordered parquet chunks for multi-batch streaming.
 
     FileStreamSource replays files in *modification-time* order, and a
@@ -160,19 +154,18 @@ def _chunked_events_dir(
     batches. So chunks are written one at a time and their mtimes spaced
     explicitly; chunk i covers the i-th quantile range of ``ts``.
 
-    SESSION-MEMOIZED at the default chunk count (r12): three streaming
-    entries (pandas-state sessionize, pandas-state EWMA, native
-    session_window) replay the identical chunk layout, and each
-    previously paid its own full events scan + range shuffle + write
-    (~0.7-1 s) as entry-private staging. The default-args call shares
-    one staging dir for the session (callers must NOT delete it);
-    parameterized calls still build a private dir the caller owns.
+    A shared artifact (plans/shared.py), priced as
+    ``stream_chunk_staging``: three streaming entries (pandas-state
+    sessionize, pandas-state EWMA, native session_window) replay the
+    identical chunk layout, so one events scan + range shuffle + write
+    serves the session. The registry owns the dir and deletes it with
+    ``shared.invalidate(spark)`` or at process exit.
     """
     import glob
     import time as _time
 
     ensure_events_read_conf(spark)
-    out = tempfile.mkdtemp(prefix="events_chunks_")
+    out = shared.temp_dir("events_chunks_", spark)
     # normalize ts at chunk-write time so the chunks carry ONE canonical
     # type (timestamp) no matter which testdata vintage the source file is
     events = normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
@@ -180,7 +173,7 @@ def _chunked_events_dir(
     # ranges to ascending partition ids, so part-file NAME order is already
     # time order — only the mtimes need explicit spacing afterwards.
     (
-        events.repartitionByRange(n_chunks, F.col("ts"))
+        events.repartitionByRange(SHARED_CHUNKS, F.col("ts"))
         .sortWithinPartitions("ts")
         .write.mode("overwrite")
         .parquet(out)
@@ -191,17 +184,10 @@ def _chunked_events_dir(
     return out
 
 
-def streaming_sessionize(
-    spark: SparkSession, sf_dir: str, n_chunks: int = SHARED_CHUNKS
-) -> DataFrame:
+def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run stateful sessionization over events as a multi-batch stream;
     returns the closed sessions as a batch DataFrame."""
-    shared = n_chunks == SHARED_CHUNKS  # default-args call hits the session memo
-    src = (
-        _chunked_events_dir(spark, sf_dir)
-        if shared
-        else _chunked_events_dir(spark, sf_dir, n_chunks)
-    )
+    src = _chunked_events_dir(spark, sf_dir)
     stream = (
         # schema from a batch read of the chunks we just wrote (they carry
         # the normalized timestamp ts — see _chunked_events_dir)
@@ -223,13 +209,7 @@ def streaming_sessionize(
     # parquet sink: closed sessions are event-scale output (10^5 rows at
     # sf0.1) — land them executor-side instead of collecting every
     # micro-batch's rows into the driver (see run_finite_stream)
-    return run_finite_stream(
-        spark,
-        sessions,
-        "stream_sessions_out",
-        sink="parquet",
-        cleanup_dir=None if shared else src,
-    )
+    return run_finite_stream(spark, sessions, "stream_sessions_out", sink="parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -355,18 +335,11 @@ def _ewma_user(
     )
 
 
-def streaming_ewma(
-    spark: SparkSession, sf_dir: str, n_chunks: int = SHARED_CHUNKS
-) -> DataFrame:
+def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event EWMA scores over events as a multi-batch stream; the
     state handoff between micro-batches is the point (one big batch
     would make the carry trivially correct)."""
-    shared = n_chunks == SHARED_CHUNKS  # default-args call hits the session memo
-    src = (
-        _chunked_events_dir(spark, sf_dir)
-        if shared
-        else _chunked_events_dir(spark, sf_dir, n_chunks)
-    )
+    src = _chunked_events_dir(spark, sf_dir)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
@@ -391,13 +364,7 @@ def streaming_ewma(
     # executor→driver collect was this entry's dominant cost after the
     # fold went numpy — land batches executor-side and let the caller's
     # per-user rollup scan parquet distributed
-    return run_finite_stream(
-        spark,
-        scored,
-        "stream_ewma_out",
-        sink="parquet",
-        cleanup_dir=None if shared else src,
-    )
+    return run_finite_stream(spark, scored, "stream_ewma_out", sink="parquet")
 
 
 def s_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,11 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..plans.testdata import (
-    ensure_events_read_conf,
-    normalize_events_ts,
-    session_memo,
-)
+from ..plans import shared
+from ..plans.testdata import ensure_events_read_conf, normalize_events_ts
 from pyspark.sql import types as T
 
 # State-store shard count for the finite driven-to-completion streams
@@ -169,21 +166,23 @@ def streaming_sliding_counts(
     return _run_to_completion(spark, agg, "stream_sliding_out", cleanup_dir=stream_dir)
 
 
-# name -> that entry's LATEST sink dir. Keyed (round-14 ADVICE item 1):
-# a long bench/pytest session re-runs the same streaming entries (shape
-# warm-up + timed run + movers re-probes), and an append-only list
-# accumulated one event-scale parquet dir per call in /tmp. A re-run of
-# the same name now removes the previous call's dir first — safe because
-# every harness consumes the returned (lazily file-backed) DataFrame
-# before re-invoking the same entry; process exit sweeps the rest.
+# name -> that entry's LATEST sink dir. A long bench/pytest session
+# re-runs the same streaming entries (shape warm-up + timed run + movers
+# re-probes), and one event-scale parquet dir per call would pile up in
+# the temp dir. A re-run of the same name removes the previous call's dir
+# first — safe because every harness consumes the returned (lazily
+# file-backed) DataFrame before re-invoking the same entry; the registry's
+# exit sweep (plans/shared.py) deletes the rest.
 _FILE_SINK_DIRS: dict[str, str] = {}
 
 
-def _cleanup_file_sink_dirs() -> None:
-    import shutil
-
-    for d in _FILE_SINK_DIRS.values():
-        shutil.rmtree(d, ignore_errors=True)
+def _sink_dir(name: str, prefix: str) -> str:
+    """A fresh sink dir for ``name``, replacing (and deleting) its last one."""
+    prev = _FILE_SINK_DIRS.pop(name, None)
+    if prev is not None:
+        shared.remove_dir(prev)
+    _FILE_SINK_DIRS[name] = shared.temp_dir(prefix)
+    return _FILE_SINK_DIRS[name]
 
 
 def run_finite_stream(
@@ -219,19 +218,7 @@ def run_finite_stream(
     (`stream_shuffle_partitions`; on a cluster, shard count is sized to
     key cardinality instead).
     """
-    out_dir = None
-    if sink == "parquet":
-        if not _FILE_SINK_DIRS:
-            import atexit
-
-            atexit.register(_cleanup_file_sink_dirs)
-        prev = _FILE_SINK_DIRS.pop(name, None)
-        if prev is not None:
-            import shutil
-
-            shutil.rmtree(prev, ignore_errors=True)
-        out_dir = tempfile.mkdtemp(prefix=f"{name}_sink_")
-        _FILE_SINK_DIRS[name] = out_dir
+    out_dir = _sink_dir(name, f"{name}_sink_") if sink == "parquet" else None
     try:
         w = df.writeStream.outputMode(output_mode)
         if sink == "parquet":
@@ -391,7 +378,8 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 
     ensure_events_read_conf(spark)
     stream_dir = tempfile.mkdtemp(prefix="events_febatch_")
-    target_dir = tempfile.mkdtemp(prefix="febatch_target_") + "/t"
+    # the returned frame reads the target lazily: a per-name sink dir
+    target_dir = _sink_dir("stream_upsert_out", "febatch_target_") + "/t"
     src = f"{sf_dir}/events.parquet"
     base = __import__("time").time() - 3600
     for i, name in enumerate(("a.parquet", "b.parquet")):
@@ -465,38 +453,24 @@ def batch_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_window_agg(events)
 
 
-def streaming_session_windows(
-    spark: SparkSession, sf_dir: str, n_chunks: int | None = None
-) -> DataFrame:
+def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window over a multi-batch stream (complete mode, so
     still-open sessions surface too — unlike the append-mode pandas-state
     operator, which emits only closed sessions). Sessions spanning
     micro-batches are merged by the state store; equality with the batch
-    plan is asserted in tests. Default chunk count matches the
-    session-memoized shared staging (see _chunked_events_dir) so the
-    three chunk-replay entries share one events scan."""
-    from .stateful import SHARED_CHUNKS, _chunked_events_dir
+    plan is asserted in tests. The chunks are the session-shared staging
+    (see _chunked_events_dir), so the three chunk-replay entries share
+    one events scan."""
+    from .stateful import _chunked_events_dir
 
-    if n_chunks is None:
-        n_chunks = SHARED_CHUNKS
-    shared = n_chunks == SHARED_CHUNKS
-    src = (
-        _chunked_events_dir(spark, sf_dir)
-        if shared
-        else _chunked_events_dir(spark, sf_dir, n_chunks)
-    )
+    src = _chunked_events_dir(spark, sf_dir)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     agg = session_window_agg(stream)
-    return _run_to_completion(
-        spark,
-        agg,
-        "stream_session_window_out",
-        cleanup_dir=None if shared else src,
-    )
+    return _run_to_completion(spark, agg, "stream_session_window_out")
 
 
 def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,30 +505,25 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_completion(spark, agg, "stream_static_out", cleanup_dir=stream_dir)
 
 
-@session_memo
-def _lsh_feed_dir(
-    spark: SparkSession, sf_dir: str, n_batches: int = 2, batch_every: int = 25
-) -> str:
-    """Land the incremental-dedup feed (every ``batch_every``-th corpus
-    doc, id-shifted + token-appended — a near-dup of a known source) as
-    ``n_batches`` mtime-spaced parquet files for micro-batch replay.
+@shared.artifact("lsh_feed_staging")
+def _lsh_feed_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Land the incremental-dedup feed (every 25th corpus doc,
+    id-shifted + token-appended — a near-dup of a known source) as two
+    mtime-spaced parquet files for micro-batch replay.
 
-    SESSION-MEMOIZED at the default args (r16, same policy as the chunk
-    staging and the dead-letter feed): the feed is a pure function of
-    ``sf_dir``, and each call previously re-paid ``n_batches`` filtered
-    ``coalesce(1)`` writes. Priced as ``lsh_feed_staging`` in
-    ``catalog.prewarm_shared``. Callers must NOT delete the returned
-    dir; parameterized calls build a private dir the caller owns (but
-    note the default-args call's dir is shared either way — only
-    non-default args pass through the memo)."""
+    A shared artifact (plans/shared.py), priced as ``lsh_feed_staging``:
+    the feed is a pure function of ``sf_dir``, so its filtered
+    ``coalesce(1)`` writes run once per session. The registry owns the
+    dir and deletes it with ``shared.invalidate(spark)`` or at process
+    exit."""
     import glob as _glob
     import shutil
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    stream_dir = tempfile.mkdtemp(prefix="stream_lsh_feed_")
+    stream_dir = shared.temp_dir("stream_lsh_feed_", spark)
     base_ts = __import__("time").time() - 3600
-    for k in range(n_batches):
-        batch = docs.filter(F.col("doc_id") % batch_every == k).select(
+    for k in range(2):
+        batch = docs.filter(F.col("doc_id") % 25 == k).select(
             (F.col("doc_id") + F.lit((k + 1) * 100_000_000)).alias("doc_id"),
             F.concat(F.col("text"), F.lit(f" zz{k}")).alias("text"),
         )
@@ -569,12 +538,7 @@ def _lsh_feed_dir(
     return stream_dir
 
 
-def streaming_incremental_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    n_batches: int = 2,
-    batch_every: int = 25,
-) -> DataFrame:
+def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup detection: arriving document micro-batches are
     probed against the corpus' persisted LSH index via ``foreachBatch``.
 
@@ -593,7 +557,7 @@ def streaming_incremental_dedup(
     once; it now reuses the cached artifact, the same fix r11 applied to
     the containment-mode stream.)
 
-    The synthetic feed takes every ``batch_every``-th corpus doc, shifts
+    The synthetic feed takes every 25th corpus doc, shifts
     its id and appends a token — a near-dup of a known source doc — so
     every arriving doc should be matched to its origin (asserted in
     tests against the batch `incremental_lsh_pairs` on the same rows).
@@ -609,10 +573,7 @@ def streaming_incremental_dedup(
     # prewarmed it
     _corpus_lsh_index(spark, sf_dir)
 
-    if (n_batches, batch_every) == (2, 25):
-        stream_dir = _lsh_feed_dir(spark, sf_dir)  # session-shared default
-    else:
-        stream_dir = _lsh_feed_dir(spark, sf_dir, n_batches, batch_every)
+    stream_dir = _lsh_feed_dir(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="stream_lsh_out_")
     out_dir = f"{work}/pairs"
 
@@ -646,10 +607,6 @@ def streaming_incremental_dedup(
     # temp dirs deleted below.
     rows = result.collect()
     shutil.rmtree(work, ignore_errors=True)
-    if (n_batches, batch_every) != (2, 25):
-        # parameterized calls own their private feed dir; the shared
-        # default-args dir lives for the session (see _lsh_feed_dir)
-        shutil.rmtree(stream_dir, ignore_errors=True)
     return spark.createDataFrame(rows, result.schema)
 
 
@@ -677,24 +634,22 @@ def validation_reasons() -> "F.Column":
     )
 
 
-@session_memo
+@shared.artifact("deadletter_feed_staging")
 def _deadletter_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     """Land the dead-letter feed (the events file plus a corrupted copy:
     negative values / unknown types / nulled ts, ids shifted) as two
     mtime-spaced parquet files for 2-micro-batch replay.
 
-    SESSION-MEMOIZED (r16): the feed is a pure function of ``sf_dir``,
-    yet every call re-paid two full-table ``coalesce(1)`` writes — the
-    same per-call staging waste the r12 chunk-staging memo removed for
-    the chunk-replay entries. Built in ``catalog.prewarm_shared`` and
-    priced as ``deadletter_feed_staging`` so the one-time cost doesn't
-    land on whichever harness invocation runs the entry first. Callers
-    must NOT delete the returned dir."""
+    A shared artifact (plans/shared.py), priced as
+    ``deadletter_feed_staging``: the feed is a pure function of
+    ``sf_dir``, so its two full-table ``coalesce(1)`` writes run once per
+    session. The registry owns the dir and deletes it with
+    ``shared.invalidate(spark)`` or at process exit."""
     import glob as _glob
     import shutil
 
     ensure_events_read_conf(spark)
-    stream_dir = tempfile.mkdtemp(prefix="deadletter_feed_")
+    stream_dir = shared.temp_dir("deadletter_feed_", spark)
     events = normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     # corrupted copy: rotate each row through one of three corruption modes
     m = F.col("event_id") % 3
@@ -736,21 +691,11 @@ def streaming_deadletter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns per-(route, reason) counts; valid rows carry reason 'ok'.
     Batch-equality + exact-partition invariants in tests/test_curation.py.
     """
-    import shutil
-
     ensure_events_read_conf(spark)
     stream_dir = _deadletter_feed_dir(spark, sf_dir)
     # sink dirs: bounded per-name like run_finite_stream's file sinks —
     # a re-run of the entry removes the previous call's outputs first
-    if not _FILE_SINK_DIRS:
-        import atexit
-
-        atexit.register(_cleanup_file_sink_dirs)
-    prev = _FILE_SINK_DIRS.pop("stream_deadletter_out", None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix="deadletter_out_")
-    _FILE_SINK_DIRS["stream_deadletter_out"] = work
+    work = _sink_dir("stream_deadletter_out", "deadletter_out_")
     main_dir = f"{work}/main"
     dlq_dir = f"{work}/quarantine"
 

@@ -19,3 +19,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def spare_jvm_memory():
+    """For a test that starts another JVM: by then the suite's session JVM
+    (16g max heap) can hold most of the host's memory, and a second JVM on
+    top of it thrashes. A full GC lets G1 give back the heap it does not
+    use."""
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active._jvm.java.lang.System.gc()

@@ -217,8 +217,11 @@ def test_group_rows_match_spark_walk(spark):
         {"group_id": "g8", "name": "Top", "parent_id": ""},
         {"group_id": None, "name": "NoId", "parent_id": "g1"},
     ]
+    def text(v):
+        return None if v is None else str(v)
+
     raw = spark.createDataFrame(
-        [(str(g.get("group_id", "")), str(g.get("name", "")), str(g.get("parent_id") or ""))
+        [(text(g.get("group_id", "")), text(g.get("name", "")), str(g.get("parent_id") or ""))
          for g in groups],
         schemas.GROUPS,
     )
@@ -228,6 +231,10 @@ def test_group_rows_match_spark_walk(spark):
     want = breadcrumbs(canon, "group_id", "parent_id", "name", n_levels=5, prefix="group")
     got = ingest.group_rows(groups)
     assert [tuple(r) for r in got] == [tuple(want.columns)] * len(got)
-    assert sorted(tuple(r.values()) for r in got) == sorted(tuple(r) for r in want.collect())
+    assert sorted((tuple(r.values()) for r in got), key=repr) == sorted(
+        (tuple(r) for r in want.collect()), key=repr
+    )
     by_id = {r["group_id"]: r for r in got}
     assert by_id["6"]["group_breadcrumb"] == "Y / X"
+    assert by_id["4"]["name"] is None
+    assert by_id["4"]["group_breadcrumb"] == "Everyone / Eng / Платформа"

@@ -274,28 +274,16 @@ ORDER BY COALESCE(tc.cumulative_seconds, 0) DESC
 def test_task_report_on_landed_tables_matches_duckdb(spark, tmp_path):
     """Landed ``tasks`` already carry a ``task_breadcrumb`` column; the
     report must use its own recomputed one (no AMBIGUOUS_REFERENCE) and
-    equal its DuckDB oracle over the same landed parquet. The demo
-    workspace's orphan task (parent id 999) is left out of the payload:
-    the oracle's crumb walk ends only at a root."""
-    import json
-
+    equal its DuckDB oracle over the same landed parquet, the demo
+    workspace's orphan task (parent id 999) included: both walks end at
+    the missing parent with the partial path."""
     import duckdb
 
     from good_enough_timecamp_data_pipeline_spark.sources import fixtures, io
     from good_enough_timecamp_data_pipeline_spark.sources.pipeline import run_pipeline
 
-    demo = fixtures.demo_transport()
-
-    def no_orphan(method, url, params):
-        status, headers, body = demo(method, url, params)
-        if url.rstrip("/").endswith("/tasks"):
-            tasks = json.loads(body)
-            del tasks["6"]
-            body = json.dumps(tasks)
-        return status, headers, body
-
     out = str(tmp_path)
-    run_pipeline(spark, no_orphan, out, "2025-01-01", "2026-02-01",
+    run_pipeline(spark, fixtures.demo_transport(), out, "2025-01-01", "2026-02-01",
                  datasets=("tasks", "entries"))
     ours = reports.task_budget_report(
         io.read_table(spark, out, "tasks"), io.read_table(spark, out, "entries")
@@ -307,4 +295,6 @@ def test_task_report_on_landed_tables_matches_duckdb(spark, tmp_path):
     )
     want = duckdb.sql(sql).fetchall()
     assert [tuple(r) for r in ours] == want
-    assert [r.task_breadcrumb for r in ours] == ["Acme / Platform", "Acme / Platform / Ingest"]
+    assert [r.task_breadcrumb for r in ours] == [
+        "Acme / Platform", "Acme / Platform / Ingest", "Orphan"
+    ]

@@ -169,21 +169,6 @@ def test_pagerank_matches_numpy_reference(spark):
     assert sum(got.values()) == pytest.approx(1.0, rel=1e-9)
 
 
-def test_pagerank_scalar_modes_bit_identical(spark):
-    """The literal-free loop body (dangling-mass base as a broadcast
-    1-row relation, r16) must produce BIT-identical ranks to the
-    literal-embedding reference: base is computed on the driver with the
-    same float ops in both modes and the update applies the same IEEE
-    adds, so no tolerance is needed."""
-    edge_list = [(1, 2), (3, 2), (2, 4), (5, 1), (5, 3), (4, 6), (6, 1)]
-    edges = spark.createDataFrame(edge_list, ["src", "dst"])
-    bc = {r["node"]: r["rank"] for r in
-          pagerank(edges, num_iter=6, loop_scalar="broadcast").collect()}
-    lit = {r["node"]: r["rank"] for r in
-           pagerank(edges, num_iter=6, loop_scalar="literal").collect()}
-    assert bc == lit  # exact float equality, not approx
-
-
 def test_pagerank_mass_conserved_on_lineitem_graph(spark, sf_dir):
     li = testdata.load_table(spark, sf_dir, "lineitem")
     edges = li.select(

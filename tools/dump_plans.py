@@ -15,13 +15,23 @@ bench scale, so tier switches (cost-switched entries) match the plans the
 bench actually executes. Queries that build driver-side state (shared
 artifacts, probes) run those builds as usual; only the plan text is
 written.
+
+Two dumps of the same entries give the same files apart from temp-dir
+paths, whatever ``PYTHONHASHSEED`` is: each dump runs under a private temp
+root that it deletes, so the on-disk artifact caches under the temp dir
+(the write-once LSH index of ``dedup.build_lsh_index_cached``) start cold
+every time. A process that found the index warm ran fewer Spark jobs than
+one that built it, which shifted the JVM's expression and RDD ids of every
+later entry, and with them the order of ``Expand`` projections.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -40,7 +50,14 @@ def plan_text(df) -> str:
 
 
 def main() -> int:
-    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    tempfile.tempdir = tempfile.mkdtemp(prefix="dump_plans_")
+    try:
+        return dump(sys.argv[1], sys.argv[2], sys.argv[3:])
+    finally:
+        shutil.rmtree(tempfile.tempdir, ignore_errors=True)
+
+
+def dump(out_dir: str, suffix: str, names: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from good_enough_timecamp_data_pipeline_spark.plans import catalog
