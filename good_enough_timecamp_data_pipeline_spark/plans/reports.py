@@ -54,16 +54,22 @@ def _fmt_hours_sql(expr: str) -> str:
 
 _CRUMB_CTE = """
 crumb AS (
-    WITH RECURSIVE walk(task_id, cursor_id, path, d) AS (
-        SELECT task_id, parent_id, name, 0 FROM _tasks
+    -- task_budget_report's crumb: the names up the closure's walk, root
+    -- first, NULL names skipped; the walk ends at a root, a missing
+    -- parent, an id it already visited, or the depth cap
+    WITH RECURSIVE walk(task_id, cursor_id, path, visited, d) AS (
+        SELECT task_id, parent_id, name, [task_id], 0 FROM _tasks
         UNION ALL
-        SELECT w.task_id, t.parent_id, t.name || ' / ' || w.path, w.d + 1
+        SELECT w.task_id, t.parent_id,
+               COALESCE(t.name || ' / ' || w.path, t.name, w.path),
+               list_append(w.visited, t.task_id), w.d + 1
         FROM walk w JOIN _tasks t ON w.cursor_id = t.task_id
-        WHERE w.d < 8
+        WHERE w.d < 8 AND NOT list_contains(w.visited, t.task_id)
     )
-    -- the walk ends at a root or, for an orphan, at its missing parent
-    SELECT w.task_id, w.path AS task_breadcrumb FROM walk w
+    SELECT w.task_id, COALESCE(w.path, '') AS task_breadcrumb FROM walk w
     WHERE w.cursor_id IS NULL
+       OR w.d = 8
+       OR list_contains(w.visited, w.cursor_id)
        OR NOT EXISTS (SELECT 1 FROM _tasks t WHERE t.task_id = w.cursor_id)
 )
 """.strip()

@@ -28,6 +28,10 @@ writer wins), holding the lock through a Spark job is not. Its callers:
 **Timing.** An artifact records its build seconds per (sf_dir, tag)
 (``build_times``), so a harness reports each one-time build next to the
 per-query numbers instead of charging it to whichever entry ran first.
+The seconds are self time: an artifact built inside another's build
+(the near-dup candidates build the LSH buckets, which build the
+shingles) counts in its own tag only, so the tags sum to no more than
+the wall time of the builds.
 ``prewarm`` builds every registered artifact and returns those times;
 an artifact registers itself where it is defined (``artifact``,
 ``prewarmed``).
@@ -58,8 +62,9 @@ from pyspark.sql import DataFrame, SparkSession
 _LOCK = threading.Lock()
 # (id(spark), sf_dir, key) -> (weakref to spark, value)
 _STORE: dict[tuple, tuple] = {}
-# (sf_dir, tag) -> seconds of the tag's last build
+# (sf_dir, tag) -> self seconds of the tag's last build
 _BUILD_SEC: dict[tuple[str, str], float] = {}
+_OPEN = threading.local()
 # path -> id() of the owning session, or None for a dir that lives until exit
 _DIRS: dict[str, int | None] = {}
 # name -> accessor(spark, sf_dir), in registration order
@@ -99,17 +104,30 @@ def memo(
     timed: bool = False,
 ) -> Any:
     """``build()`` once per (session, sf_dir, key); ``timed`` records its
-    seconds under ``key`` for ``build_times``."""
+    self seconds under ``key`` for ``build_times``: the build's time less
+    that of the timed builds nested in it on the same thread."""
     hit = lookup(spark, sf_dir, key)
     if hit is not None:
         return hit
+    if not timed:
+        value = build()
+        store(spark, sf_dir, key, value)
+        return value
+    # one slot per timed build open on this thread: the seconds of the
+    # timed builds nested in it, which its own time leaves out
+    open_builds = _OPEN.__dict__.setdefault("builds", [])
+    open_builds.append(0.0)
     t0 = time.perf_counter()
-    value = build()
-    sec = round(time.perf_counter() - t0, 3)
+    try:
+        value = build()
+    finally:
+        total = time.perf_counter() - t0
+        nested = open_builds.pop()
+        if open_builds:
+            open_builds[-1] += total
     store(spark, sf_dir, key, value)
-    if timed:
-        with _LOCK:
-            _BUILD_SEC[(sf_dir, key)] = sec
+    with _LOCK:
+        _BUILD_SEC[(sf_dir, key)] = total - nested
     return value
 
 
@@ -162,8 +180,8 @@ def artifact(tag: str):
 
 
 def build_times(sf_dir: str | None = None) -> dict[str, float]:
-    """Per-tag build seconds of the artifacts built so far (for the given
-    ``sf_dir``, or all)."""
+    """Per-tag build self seconds of the artifacts built so far (for the
+    given ``sf_dir``, or all)."""
     with _LOCK:
         return {
             tag: sec

@@ -22,8 +22,14 @@ DuckDB rounds, so an explicit floor is the only portable semantics.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import shared
 from .shared import session_memo
@@ -95,19 +101,41 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # 100 TB inputs the scan fans out by itself.
 
 
+def footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema of a single parquet file, from its footer read on
+    the driver: ``spark.read.parquet`` without a schema starts a Spark job
+    to infer it. Timestamps without a zone map to TIMESTAMP_NTZ and
+    nanosecond timestamps to bigint, as Spark infers them under
+    ``nanosAsLong``. None (infer) for a directory of part files or a type
+    Spark cannot take from Arrow."""
+    if not os.path.isfile(path):
+        return None
+    schema = pq.read_schema(path)
+    for i, field in enumerate(schema):
+        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
+            schema = schema.set(i, field.with_type(pa.int64()))
+    try:
+        return from_arrow_schema(schema, prefer_timestamp_ntz=True)
+    except TypeError:  # e.g. unsigned ints
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The table's plan, read once per (session, sf_dir): a re-read pays a
     parquet footer read per table per catalog build."""
 
     def read() -> DataFrame:
+        path = f"{sf_dir}/{name}.parquet"
+        schema = footer_schema(path)
+        reader = spark.read.schema(schema) if schema is not None else spark.read
         if name != "events":
-            return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            return reader.parquet(path)
         # Set the nanos conf HERE, not only in our own get_spark() builder:
         # the driver verifies queries() under its own SparkSession where the
         # conf would otherwise be unset and a nanos-vintage events read dies
         # with PARQUET_TYPE_ILLEGAL.
         ensure_events_read_conf(spark)
-        return normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        return normalize_events_ts(reader.parquet(path))
 
     return shared.memo(spark, sf_dir, ("table", name), read)
 

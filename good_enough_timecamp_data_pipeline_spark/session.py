@@ -12,6 +12,31 @@ tests, bench) agrees on the configs that matter for correctness and scale:
   less critical).
 - Arrow enabled — every pandas_udf / createDataFrame(pandas) transfer is
   Arrow-batched.
+- ``spark.driver.memory`` is min(16g, half of physical memory) unless
+  ``$SPARK_GRAFT_DRIVER_MEM`` says otherwise.
+
+**Cold-start JVM profile.** Every product entry point (the CLI sync,
+``curate``, ``sqlrunner``) starts a cold local session, runs once and
+exits. Such a run is bound by compiling and planning, not by executor
+work: in the ``elt`` benchmark JIT was 22 of 48 CPU-seconds and task CPU
+3.9. So a local session's driver JVM starts with ``LOCAL_JVM_PROFILE``,
+set as ``spark.driver.defaultJavaOptions``, which Spark puts before the
+caller's ``spark.driver.extraJavaOptions``: a caller's own flags come
+later and win. The profile keeps tiered compilation but runs two
+compiler threads, one C1 and one C2 (on 4 cores the default is three,
+two of them C2), and raises the tier-4 (C2) thresholds fourfold, so a
+method reaches C2 only once it is truly hot. A cluster driver
+(``$SPARK_MASTER`` set) keeps the JVM defaults.
+
+The trade, measured with ``perfbench`` on 4 cores with only the flags
+differing between the sides (CHANGES.md has every run): C1 only
+(``-XX:TieredStopAtLevel=1``) halves CPU per pass on both workloads, but
+its hot loops stay at C1 speed: ``curate`` ran 4-8 s (50-86%) slower in
+3 of 4 catalog pairs, and warm ``g_pagerank`` at sf0.1 took 11.0 s
+instead of 6.7 s. This profile cuts catalog CPU per pass by a quarter
+(median 122 → 92 s, 4/4 pairs) with pass time and ``curate`` flat, and
+the warm times of the heaviest catalog entries do not move
+(ARCHITECTURE.md §Local-bench cost model).
 """
 
 from __future__ import annotations
@@ -21,6 +46,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# HotSpot flags of a local session's driver JVM (module docstring):
+# one C1 and one C2 thread, tier-4 thresholds x4 (JDK 17 defaults 5000, 600,
+# 15000, 40000).
+LOCAL_JVM_PROFILE = " ".join((
+    "-XX:CICompilerCount=2",
+    "-XX:Tier4InvocationThreshold=20000",
+    "-XX:Tier4MinInvocationThreshold=2400",
+    "-XX:Tier4CompileThreshold=60000",
+    "-XX:Tier4BackEdgeThreshold=160000",
+))
 
 
 def tiny_partitions(cpus: int | None = None) -> int:
@@ -117,23 +153,23 @@ def apply_tuned_conf(spark: SparkSession, sf_dir: str) -> None:
         spark.conf.set(k, v)
 
 
-def get_spark(
-    app_name: str = "good_enough_timecamp_data_pipeline_spark",
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``$SPARK_GRAFT_DRIVER_MEM`` is unset:
+    16g, or half of the host's physical memory if that is less. A 16g
+    heap on a 15 GB host grew until the host ran short of memory."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
+def session_conf(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) the shared SparkSession.
-
-    On a real cluster, ``master`` comes from spark-submit and the builder
-    leaves it alone; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
-    """
-    builder = SparkSession.builder.appName(app_name)
-    if master is not None:
-        builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{DEFAULT_CPUS}]")
-
+) -> tuple[str | None, dict[str, str]]:
+    """The master (None: leave it to spark-submit) and the builder conf
+    that ``get_spark`` starts a session with."""
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{DEFAULT_CPUS}]"
     n_shuffle = shuffle_partitions or DEFAULT_CPUS
     conf = {
         "spark.sql.session.timeZone": "UTC",
@@ -143,15 +179,40 @@ def get_spark(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.driver.memory": (
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
+        ),
         "spark.ui.enabled": "false",
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         # testdata events.parquet carries TIMESTAMP(NANOS) which the parquet
         # reader rejects by default; read as long and convert (plans/testdata)
         "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
+    if master is not None and master.startswith("local"):
+        # Spark puts these before the caller's extraJavaOptions, whose
+        # flags therefore win
+        conf["spark.driver.defaultJavaOptions"] = LOCAL_JVM_PROFILE
     if extra_conf:
         conf.update(extra_conf)
+    return master, conf
+
+
+def get_spark(
+    app_name: str = "good_enough_timecamp_data_pipeline_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) the shared SparkSession.
+
+    On a real cluster, ``master`` comes from spark-submit and the builder
+    leaves it alone; locally we default to ``local[$SPARK_GRAFT_CPUS]``
+    and start the JVM with ``LOCAL_JVM_PROFILE``.
+    """
+    master, conf = session_conf(master, shuffle_partitions, extra_conf)
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -24,9 +24,9 @@ def sf_dir():
 @pytest.fixture
 def spare_jvm_memory():
     """For a test that starts another JVM: by then the suite's session JVM
-    (16g max heap) can hold most of the host's memory, and a second JVM on
-    top of it thrashes. A full GC lets G1 give back the heap it does not
-    use."""
+    (a max heap of up to half the host's memory) can hold most of that
+    heap, and a second JVM on top of it competes for the rest. A full GC
+    lets G1 give back the heap it does not use."""
     from pyspark.sql import SparkSession
 
     active = SparkSession.getActiveSession()

@@ -81,7 +81,7 @@ def test_load_table_handles_nanos_vintage(spark, sf_dir, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from good_enough_timecamp_data_pipeline_spark.plans.testdata import load_table
+    from good_enough_timecamp_data_pipeline_spark.plans.testdata import footer_schema, load_table
 
     cur = load_table(spark, sf_dir, "events").orderBy("event_id").limit(50)
     rows = cur.collect()
@@ -102,6 +102,8 @@ def test_load_table_handles_nanos_vintage(spark, sf_dir, tmp_path):
     pq.write_table(tbl, str(vintage_dir / "events.parquet"), version="2.6",
                    coerce_timestamps=None)
 
+    pinned = footer_schema(str(vintage_dir / "events.parquet"))
+    assert pinned["ts"].dataType.simpleString() == "bigint"
     back = load_table(spark, str(vintage_dir), "events").orderBy("event_id")
     assert dict(back.dtypes)["ts"] == "timestamp"
     got = back.collect()

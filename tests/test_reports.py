@@ -298,3 +298,46 @@ def test_task_report_on_landed_tables_matches_duckdb(spark, tmp_path):
     assert [r.task_breadcrumb for r in ours] == [
         "Acme / Platform", "Acme / Platform / Ingest", "Orphan"
     ]
+
+
+def test_oracle_crumb_matches_spark_on_null_names_cycles_and_deep_chains(spark):
+    """Both engines give the same crumbs for a NULL task name (skipped), a
+    parent cycle X↔Y (each walk stops at the id it already visited) and a
+    12-deep chain (the walk stops at the 8-step cap with the partial
+    path)."""
+    import duckdb
+
+    tasks = [
+        ("root", None, "Root"),
+        ("mid", "root", None),
+        ("leaf", "mid", "Leaf"),
+        ("x", "y", "X"),
+        ("y", "x", "Y"),
+    ] + [(f"k{i}", f"k{i - 1}" if i else None, f"K{i}") for i in range(13)]
+    entries = [("leaf", 60), ("k12", 3600), ("k4", 7)]
+    ours = reports.task_budget_report(
+        spark.createDataFrame(
+            [(t, p, n, 1) for t, p, n in tasks],
+            "task_id string, parent_id string, name string, budgeted long",
+        ),
+        spark.createDataFrame(entries, "task_id string, duration long"),
+    ).collect()
+
+    def values(rows):
+        return ", ".join(
+            "(" + ", ".join("NULL" if v is None else repr(v) for v in row) + ")"
+            for row in rows
+        )
+
+    want = duckdb.sql(reports.oracle_task_budget_sql(
+        "SELECT task_id, parent_id, name, CAST(budgeted AS BIGINT) AS budgeted FROM (VALUES "
+        + values((*t, 1) for t in tasks) + ") v(task_id, parent_id, name, budgeted)",
+        "SELECT task_id, CAST(duration AS BIGINT) AS duration FROM (VALUES "
+        + values(entries) + ") v(task_id, duration)",
+    )).fetchall()
+    assert [tuple(r) for r in ours] == want
+    crumbs = {r.task_id: r.task_breadcrumb for r in ours}
+    assert crumbs["leaf"] == "Root / Leaf"
+    assert crumbs["mid"] == "Root"
+    assert (crumbs["x"], crumbs["y"]) == ("Y / X", "X / Y")
+    assert crumbs["k12"] == " / ".join(f"K{i}" for i in range(4, 13))

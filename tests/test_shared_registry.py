@@ -6,6 +6,7 @@ import os
 import subprocess
 import sys
 import threading
+import time
 
 import pytest
 
@@ -139,3 +140,20 @@ def test_store_and_dirs_under_thread_contention():
     shared.invalidate(session)
     assert not any(os.path.exists(d) for d in dirs)
     assert all(shared.lookup(session, "sf", f"k{j}") is None for j in range(4))
+
+
+def test_nested_builds_record_self_time(spark, sf_dir, tmp_path):
+    """The near-dup candidates build the LSH buckets, which build the
+    shingles: each tag records its own time only, so the three add up to
+    no more than the cold build's wall time."""
+    from good_enough_timecamp_data_pipeline_spark.plans.northstar import _near_dup_candidates
+
+    cold = tmp_path / "sf"
+    cold.symlink_to(sf_dir)
+    t0 = time.perf_counter()
+    _near_dup_candidates(spark, str(cold))
+    wall = time.perf_counter() - t0
+    times = shared.build_times(str(cold))
+    tags = ("neardup_cand_64x32", "neardup_bb_64x32", "neardup_shingles_n5")
+    assert set(tags) <= set(times)
+    assert sum(times[t] for t in tags) <= wall
