@@ -175,7 +175,7 @@ def main() -> None:
     # number. Time one 15-iteration train over a 4-file copy of the
     # distant-supervision frame (temp dir, removed after). Not part of
     # catalog_total (t_train_classifier already times the declared
-    # entry); tools/trainer_p_probe.py is the min-of-3 + parity harness.
+    # entry).
     trainer_p4_sec = None
     try:
         import shutil

@@ -139,11 +139,11 @@ class _StageCounter:
 
 def _classifier_score() -> F.Column:
     """Mean hashed-bucket token weight in [-1, 1] (t_hashed_classifier)."""
-    from .plans.round5d import _weight_expr
+    from .operators.classifier import weight_expr
 
     toks = text.tokenize(F.col("text"))
     raw = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + _weight_expr(t)
+        toks, F.lit(0).cast("long"), lambda acc, t: acc + weight_expr(t)
     )
     n = F.size(toks)
     return F.when(

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .graph import _unpersist_checkpoint_blocks
+from .graph import unpersist_checkpoint_blocks
 
 
 def _adjacent_pairs(sym: Column) -> Column:
@@ -125,7 +125,7 @@ def bpe_train(
                 .collect()  # ONE dimension-sized row per round
             )
             if freeable is not None:
-                _unpersist_checkpoint_blocks(freeable)
+                unpersist_checkpoint_blocks(freeable)
                 freeable = None
             if not top or top[0]["weight"] is None:
                 break
@@ -138,8 +138,8 @@ def bpe_train(
             cur = nxt
     finally:
         if freeable is not None:
-            _unpersist_checkpoint_blocks(freeable)
-        _unpersist_checkpoint_blocks(cur)
+            unpersist_checkpoint_blocks(freeable)
+        unpersist_checkpoint_blocks(cur)
 
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, pair_weight long"

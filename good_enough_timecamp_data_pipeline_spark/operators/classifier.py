@@ -2,7 +2,7 @@
 
 The TRAIN half of the model-based quality-filter tier: the engine already
 *scores* documents with a hashed linear model as a pure codegen scan
-(`plans/round5d.py::t_hashed_classifier` — the fasttext/DCLM shape); this
+(`plans/curation.py::t_hashed_classifier` — the fasttext/DCLM shape); this
 module learns those weights from labeled documents, distributed:
 
 - **featurize once**: tokenize → hash into V buckets → per-doc sparse
@@ -333,3 +333,72 @@ def score_with_model(
         lambda acc, i: acc + F.element_at(weights, i.cast("int") + 1),
     ) + F.lit(float(model.bias))
     return df.withColumn("p_keep", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
+
+
+# ---------------------------------------------------------------------------
+# scoring weights of the hashed linear model (t_hashed_classifier, curate)
+# ---------------------------------------------------------------------------
+
+HASH_BUCKETS = 1024  # V: feature-hash vocabulary size
+WEIGHT_MOD = 2001  # weights are integers in [-1000, 1000] (milli-units)
+
+
+def _bucket_expr(tok) -> F.Column:
+    """Feature hash: first 8 hex digits of md5(token) mod V — identical
+    arithmetic in both engines (the t_balanced_sample hash contract)."""
+    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long") % HASH_BUCKETS
+
+
+def _weight_table() -> list[int]:
+    """The V=1024 bucket weights md5('w' || bucket) defines, computed
+    once on the driver (hashlib.md5 hex == Spark's F.md5 — the repo-wide
+    hash contract). The per-token expression then does ONE md5 (the
+    feature hash) + a constant-folded array lookup instead of chaining a
+    second md5 + hex-conv per token inside the interpreted HOF lambda —
+    measured ~2× on the classifier/calibration scans, and exactly what
+    "swap for trained weights" already promised the plan shape allows."""
+    import hashlib
+
+    return [
+        int(hashlib.md5(f"w{b}".encode()).hexdigest()[:8], 16) % WEIGHT_MOD - 1000
+        for b in range(HASH_BUCKETS)
+    ]
+
+
+_WEIGHTS = _weight_table()
+
+
+# The V=1024 literal array Column is built ONCE per process: each
+# F.lit() is a Py4J round-trip, so constructing it inside every
+# weight_expr call put ~1-2 s of pure driver chatter into every fresh
+# classifier plan. A Column is a reusable expression wrapper — safe to
+# share across plans and sessions in one process.
+_WEIGHT_ARRAY_COL: list = []
+
+
+def _weight_array_col() -> F.Column:
+    if not _WEIGHT_ARRAY_COL:
+        _WEIGHT_ARRAY_COL.append(
+            F.array(*[F.lit(w).cast("long") for w in _WEIGHTS])
+        )
+    return _WEIGHT_ARRAY_COL[0]
+
+
+def weight_expr(tok) -> F.Column:
+    """Deterministic per-bucket weight in [-1000, 1000]: md5('w' || bucket),
+    materialized as a literal V-vector (see `_weight_table`) and indexed
+    by the feature hash. INTEGER so per-document sums are exact
+    regardless of token order (float weights would make the sum depend on
+    Spark's partition-local accumulation order and break the oracle)."""
+    b = _bucket_expr(tok)
+    # CreateArray of literals constant-folds to one Literal array; 1-based
+    return F.element_at(_weight_array_col(), b.cast("int") + 1)
+
+
+_BUCKET_SQL = "(CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 1024)"
+
+WEIGHT_SQL = (
+    "((CAST(('0x' || substr(md5('w' || CAST("
+    + _BUCKET_SQL
+    + " AS VARCHAR)), 1, 8)) AS BIGINT) % 2001) - 1000)"
+)

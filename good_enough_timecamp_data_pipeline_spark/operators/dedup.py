@@ -52,7 +52,7 @@ def _required_overlap(threshold: float, n_sh):
     return F.ceil(F.lit(float(threshold)) * n_sh - F.lit(_T_EPS))
 
 
-def _pin(df: DataFrame) -> DataFrame:
+def pin(df: DataFrame) -> DataFrame:
     """Persist a DataFrame that the surrounding plan consumes several times.
 
     Spark's ReuseExchange only kicks in for bit-identical physical subplans
@@ -165,13 +165,13 @@ def _shingle_pair_counts(
     prefix-filter move — skew-safe, but it CHANGES the pair set, so
     oracle-twinned callers pass None). ``sh_rows`` is the MEASURED
     shingle-table row count (see _BROADCAST_SAFE_SHINGLE_ROWS)."""
-    sh = shingles if shingles is not None else _pin(shingle_rows(df, text_col, id_col, n))
+    sh = shingles if shingles is not None else pin(shingle_rows(df, text_col, id_col, n))
     if max_shingle_df is not None:
         # no broadcast hint: the hot-shingle set is bounded by
         # shingle_rows / max_shingle_df — small in practice but O(corpus)
         # in the worst case; AQE broadcasts it when it measures small.
         hot = sh.groupBy("sh").count().filter(F.col("count") > max_shingle_df).select("sh")
-        sh = _pin(sh.join(hot, "sh", "left_anti"))
+        sh = pin(sh.join(hot, "sh", "left_anti"))
     small = sh_rows is not None and sh_rows <= _BROADCAST_SAFE_SHINGLE_ROWS
 
     def shj(frame: DataFrame) -> DataFrame:
@@ -227,7 +227,7 @@ def jaccard_prefix_candidates(
         .withColumn("__rk", F.row_number().over(w_doc.orderBy("__df", "sh")))
         .withColumn("n_sh", F.count("*").over(w_doc))
     )
-    prefix = _pin(
+    prefix = pin(
         ranked.filter(
             F.col("__rk")
             <= F.col("n_sh") - _required_overlap(threshold, F.col("n_sh")) + 1
@@ -279,11 +279,11 @@ def shingle_pairs_jaccard(
     sh = (
         shingles
         if shingles is not None
-        else _pin(shingle_rows(df, text_col, id_col, n))
+        else pin(shingle_rows(df, text_col, id_col, n))
     )
     sh_rows = None  # unmeasured unless the exact-mode probe runs
     if max_shingle_df is None:
-        df_tbl = _pin(sh.groupBy("sh").agg(F.count("*").alias("__df")))
+        df_tbl = pin(sh.groupBy("sh").agg(F.count("*").alias("__df")))
         stats = df_tbl.agg(
             F.sum(F.col("__df").cast("double") * F.col("__df")).alias("s"),
             F.sum("__df").alias("rows"),
@@ -335,10 +335,10 @@ def containment_pairs(
     candidate join is prefix(smaller) × FULL index(larger), ordered by
     (n_sh, doc). A df=k stop-shingle then contributes k rows times the
     few SMALL docs whose prefix retains it, not k²."""
-    sh = _pin(shingle_rows(df, text_col, id_col, n))
+    sh = pin(shingle_rows(df, text_col, id_col, n))
     sh_rows = None  # unmeasured unless the exact-mode probe runs
     if max_shingle_df is None:
-        df_tbl = _pin(sh.groupBy("sh").agg(F.count("*").alias("__df")))
+        df_tbl = pin(sh.groupBy("sh").agg(F.count("*").alias("__df")))
         stats = df_tbl.agg(
             F.sum(F.col("__df").cast("double") * F.col("__df")).alias("s"),
             F.sum("__df").alias("rows"),
@@ -373,7 +373,7 @@ def containment_prefix_candidates(
     if df_tbl is None:
         df_tbl = sh.groupBy("sh").agg(F.count("*").alias("__df"))
     w_doc = Window.partitionBy("doc")
-    ranked = _pin(
+    ranked = pin(
         sh.join(df_tbl, "sh")
         .withColumn("__rk", F.row_number().over(w_doc.orderBy("__df", "sh")))
         .withColumn("n_sh", F.count("*").over(w_doc))
@@ -414,7 +414,7 @@ def _verify_containment(
         .unionByName(candidates.select(F.col("id_b").alias("doc")))
         .distinct()
     )
-    sh_cand = _pin(sh.join(cand_ids, "doc", "left_semi"))
+    sh_cand = pin(sh.join(cand_ids, "doc", "left_semi"))
     sizes = sh_cand.groupBy("doc").agg(F.count("*").alias("n_sh"))
     inter = (
         candidates.join(sh_cand.alias("a"), F.col("id_a") == F.col("a.doc"))
@@ -464,7 +464,7 @@ def build_containment_index(
     cor_sh = (
         corpus_shingles
         if corpus_shingles is not None
-        else _pin(shingle_rows(corpus_df, text_col, id_col, n))
+        else pin(shingle_rows(corpus_df, text_col, id_col, n))
     )
     ranked, df_tbl = _ranked_containment_rows(cor_sh)
     return _containment_index_at(ranked, df_tbl, threshold)
@@ -585,7 +585,7 @@ def incremental_containment_pairs(
     # size estimates), so each join pins its build side explicitly:
     # shuffle_hash on the bounded/smaller side, never a broadcast of a
     # corpus-sized artifact (round-10 plan lint)
-    new_sh = _pin(
+    new_sh = pin(
         shingle_rows(new_df, text_col, id_col, n)
         .join(df_tbl.hint("shuffle_hash"), "sh", "left")
         .withColumn("__df", F.coalesce(F.col("__df"), F.lit(0)))
@@ -615,7 +615,7 @@ def incremental_containment_pairs(
         # legacy 3-tuple index: restrict the corpus shingles to candidate
         # docs (one semi-join — the old verify's corpus cost) and fold to
         # per-doc arrays in-probe. cand gains a second consumer → pin.
-        cand = _pin(cand)
+        cand = pin(cand)
         dup_ids = cand.select(F.col("dup_of").alias("doc")).distinct()
         cor_arr = (
             cor_sh.join(dup_ids.hint("shuffle_hash"), "doc", "left_semi")
@@ -745,8 +745,8 @@ def verify_candidate_pairs(
     mandatory broadcast OOMs exactly at scale. The semi-join shuffles on
     doc (a key the shingle set already hashes well on) and AQE still
     picks a broadcast when the measured candidate set is actually small.
-    (`tools/scale_probe.py` times this stage in isolation on a dup-heavy
-    corpus; curve recorded in ARCHITECTURE.md.)
+    (ARCHITECTURE.md §Measured scaling records this stage's curve on a
+    dup-heavy corpus.)
     """
     cand_ids = (
         candidates.select(F.col("id_a").alias("doc"))
@@ -768,7 +768,7 @@ def verify_candidate_pairs(
     # largest doc's shingle set — the same bound the row shape's
     # per-pair join output already carried. Array order is
     # nondeterministic and irrelevant: only the intersect SIZE is read.
-    arr = _pin(
+    arr = pin(
         sh.join(cand_ids, "doc", "left_semi")
         .groupBy("doc")
         .agg(F.collect_list("sh").alias("shs"), F.count("*").alias("n_sh"))
@@ -819,9 +819,9 @@ def minhash_lsh_pairs(
     d_lsh_quality audit runs this and the exact enumeration over the
     same corpus and would otherwise shingle it twice. Must match ``n``.
     """
-    sh = shingles if shingles is not None else _pin(shingle_rows(df, text_col, id_col, n))
-    buckets = _pin(minhash_band_buckets(sh, num_hashes, bands))
-    candidates = _pin(band_bucket_candidates(buckets))
+    sh = shingles if shingles is not None else pin(shingle_rows(df, text_col, id_col, n))
+    buckets = pin(minhash_band_buckets(sh, num_hashes, bands))
+    candidates = pin(band_bucket_candidates(buckets))
     return verify_candidate_pairs(sh, candidates, threshold)
 
 
@@ -1145,17 +1145,17 @@ def incremental_lsh_pairs(
     """
     if (index is None) == (index_df is None):
         raise ValueError("pass exactly one of index_df or index")
-    sh_new = _pin(shingle_rows(new_df, text_col, id_col, n))
+    sh_new = pin(shingle_rows(new_df, text_col, id_col, n))
     if index is not None:
         sh_idx, b_idx = index
-        sh_idx = _pin(sh_idx)
+        sh_idx = pin(sh_idx)
     else:
         # pin shingles FIRST so the signature agg reads the pinned set
-        sh_idx = _pin(shingle_rows(index_df, text_col, id_col, n))
+        sh_idx = pin(shingle_rows(index_df, text_col, id_col, n))
         b_idx = minhash_band_buckets(sh_idx, num_hashes, bands)
     b_new = minhash_band_buckets(sh_new, num_hashes, bands)
 
-    candidates = _pin(
+    candidates = pin(
         b_new.alias("x")
         .join(
             b_idx.alias("y"),

@@ -37,7 +37,7 @@ from pyspark.storagelevel import StorageLevel
 
 from .text import tokenize
 
-KS_ALPHA_C = 1.358  # c(α) for α = 0.05, as in plans.round5d
+KS_ALPHA_C = 1.358  # c(α) for α = 0.05, as in plans.warehouse
 DEFAULT_BINS = 256
 DEFAULT_BUCKETS = 256
 DEFAULT_KL_THRESHOLD = 0.25

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
-def _unpersist_checkpoint_blocks(df: DataFrame) -> None:
+def unpersist_checkpoint_blocks(df: DataFrame) -> None:
     """Free the executor blocks behind a ``localCheckpoint``-ed DataFrame.
 
     ``df.unpersist()`` only talks to the SQL cache manager and is a no-op
@@ -155,7 +155,7 @@ def connected_components(
         # the collect above materialized the NEW checkpoint, so the previous
         # round's blocks are dead weight from here — free them now instead
         # of holding up to max_iter label copies in block storage.
-        _unpersist_checkpoint_blocks(prev_labels)
+        unpersist_checkpoint_blocks(prev_labels)
         if new_sum == prev_sum:
             converged = True
             break
@@ -243,7 +243,7 @@ def pagerank(
             ranks.filter(F.col("out_deg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
         )
         if freeable is not None:
-            _unpersist_checkpoint_blocks(freeable)
+            unpersist_checkpoint_blocks(freeable)
         base = (1.0 - damping) / n + damping * dangling / n
         contribs = (
             e.join(ranks, e["u"] == ranks["node"])
@@ -267,7 +267,7 @@ def pagerank(
     # scans only its own checkpoint blocks.
     ranks.count()
     if freeable is not None:
-        _unpersist_checkpoint_blocks(freeable)
+        unpersist_checkpoint_blocks(freeable)
     nodes.unpersist()
     e_pinned.unpersist()
     return ranks.select("node", "rank")
@@ -329,7 +329,7 @@ def label_propagation(
     for _ in range(max_iter):
         labels.count()  # materialize this round's checkpoint
         if freeable is not None:
-            _unpersist_checkpoint_blocks(freeable)
+            unpersist_checkpoint_blocks(freeable)
         neigh = (
             e.join(labels, e["u"] == labels["node"])
             .select(F.col("v").alias("node"), "community")
@@ -349,7 +349,7 @@ def label_propagation(
         )
     labels.count()
     if freeable is not None:
-        _unpersist_checkpoint_blocks(freeable)
+        unpersist_checkpoint_blocks(freeable)
     und.unpersist()
     return labels
 
@@ -411,7 +411,7 @@ def kcore(
             )
             n_next = nxt.count()  # materializes the checkpoint AND decides the loop
             if freeable is not None:
-                _unpersist_checkpoint_blocks(freeable)
+                unpersist_checkpoint_blocks(freeable)
             freeable = cur
             cur = nxt
             converged = n_next == n_prev
@@ -426,8 +426,8 @@ def kcore(
         # artifact so the non-convergence path doesn't leak storage in a
         # long-lived session
         if freeable is not None:
-            _unpersist_checkpoint_blocks(freeable)
-        _unpersist_checkpoint_blocks(cur)
+            unpersist_checkpoint_blocks(freeable)
+        unpersist_checkpoint_blocks(cur)
         und_pinned.unpersist()
         raise
     out = cur.groupBy(F.col("u").alias("node")).agg(
@@ -436,6 +436,6 @@ def kcore(
     # the final degree agg still reads `cur`; leave its blocks to the final
     # consumer and free only the superseded round + the pinned input
     if freeable is not None:
-        _unpersist_checkpoint_blocks(freeable)
+        unpersist_checkpoint_blocks(freeable)
     und_pinned.unpersist()
     return out

@@ -28,8 +28,7 @@ broadcast self-joins:
   query (closure + fact join + agg) plans as one query. Native
   ``WITH RECURSIVE`` is not one job: Spark plans and runs every level as
   separate queries (a repartition, a count, a collect into a local
-  relation once few rows remain). For *unbounded* hierarchies pass
-  ``checkpoint_every`` to cut lineage periodically.
+  relation once few rows remain).
 - Cycle safety: the walk carries a ``_visited`` id array and stops a branch
   when the next ancestor is already in it — same semantics as the
   reference's ``visited`` set — plus the hard depth bound.
@@ -88,8 +87,6 @@ def transitive_closure(
     id_col: str = "task_id",
     parent_col: str = "parent_id",
     max_depth: int = DEFAULT_MAX_DEPTH,
-    include_self: bool = True,
-    checkpoint_every: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
     """Ancestor/descendant closure of an adjacency-list hierarchy.
@@ -114,7 +111,6 @@ def transitive_closure(
     - ``unroll``: a lazy chain of ``max_depth`` broadcast self-joins —
       portable to any Spark, and the broadcast edge exchange is reused
       across rounds; costs O(max_depth) plan nodes even for shallow trees.
-      Set ``checkpoint_every=k`` to cut lineage on deep hierarchies.
     """
     if strategy not in ("auto", "recursive_cte", "unroll"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -125,7 +121,7 @@ def transitive_closure(
             ),
             "closure",
         )
-        out = tasks.sparkSession.sql(
+        return tasks.sparkSession.sql(
             f"""
             WITH RECURSIVE __closure(descendant_id, ancestor_id, depth, _visited) AS (
                 SELECT _node, _node, 0, array(_node) FROM {v}
@@ -140,9 +136,6 @@ def transitive_closure(
             SELECT descendant_id, ancestor_id, depth FROM __closure
             """
         )
-        if not include_self:
-            out = out.filter(F.col("depth") > 0)
-        return out
 
     edges = tasks.select(
         F.col(id_col).alias("_node"),
@@ -172,14 +165,9 @@ def transitive_closure(
                 F.array_append(F.col("f._visited"), F.col("e._parent")).alias("_visited"),
             )
         )
-        if checkpoint_every and d % checkpoint_every == 0:
-            frontier = frontier.localCheckpoint(eager=False)
         levels.append(frontier)
 
-    out = reduce(DataFrame.unionByName, levels).drop("_visited")
-    if not include_self:
-        out = out.filter(F.col("depth") > 0)
-    return out
+    return reduce(DataFrame.unionByName, levels).drop("_visited")
 
 
 def closure_sql(tasks_cte: str, max_depth: int = DEFAULT_MAX_DEPTH) -> str:
@@ -188,17 +176,25 @@ def closure_sql(tasks_cte: str, max_depth: int = DEFAULT_MAX_DEPTH) -> str:
 
     ``tasks_cte`` is a SELECT producing (task_id, parent_id). The returned
     text is a full CTE chain ending in ``task_hierarchy``; embed it as
-    ``WITH RECURSIVE {closure_sql(...)} SELECT ... FROM task_hierarchy``.
+    ``WITH RECURSIVE {closure_sql(...)} SELECT ... FROM task_hierarchy``
+    and select its columns by name (it also carries ``visited``).
+
+    A walk stops at an id it already visited, so a parent cycle gives each
+    member its cycle-mates once, as `transitive_closure` does. The ids are
+    visited as strings: ``split`` on a character no id holds is the one
+    single-element array constructor both engines share.
     """
     return f"""
 _tasks AS ({tasks_cte}),
-task_hierarchy(descendant_id, ancestor_id, depth) AS (
-    SELECT task_id, task_id, 0 FROM _tasks
+task_hierarchy(descendant_id, ancestor_id, depth, visited) AS (
+    SELECT task_id, task_id, 0, split(CAST(task_id AS STRING), chr(0)) FROM _tasks
     UNION ALL
-    SELECT th.descendant_id, t.parent_id, th.depth + 1
+    SELECT th.descendant_id, t.parent_id, th.depth + 1,
+           array_append(th.visited, CAST(t.parent_id AS STRING))
     FROM task_hierarchy th
     JOIN _tasks t ON th.ancestor_id = t.task_id
     WHERE t.parent_id IS NOT NULL AND th.depth < {max_depth}
+      AND NOT array_contains(th.visited, CAST(t.parent_id AS STRING))
 )
 """.strip()
 

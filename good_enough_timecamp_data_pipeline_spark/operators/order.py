@@ -55,10 +55,10 @@ def long_range_bucket(df: DataFrame, key: Column, n_buckets: int = 256) -> Colum
     ``md5_prefix_bucket`` over ``F.md5(key)`` for arbitrary key types.
     """
     row = df.select(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
-    return _range_bucket_col(row["lo"], row["hi"], key, n_buckets)
+    return range_bucket_col(row["lo"], row["hi"], key, n_buckets)
 
 
-def _range_bucket_col(lo, hi, key: Column, n_buckets: int) -> Column:
+def range_bucket_col(lo, hi, key: Column, n_buckets: int) -> Column:
     if lo is None:  # empty (or all-null-key) input
         return F.lit(0).cast("int")
     if isinstance(lo, bool) or not isinstance(lo, (int, float)):
@@ -87,7 +87,7 @@ def pin_with_range_bucket(
     caller breaks that contract."""
     d = df.persist(StorageLevel.MEMORY_AND_DISK)
     row = d.select(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
-    return d, _range_bucket_col(row["lo"], row["hi"], key, n_buckets)
+    return d, range_bucket_col(row["lo"], row["hi"], key, n_buckets)
 
 
 def global_cumsum_multi(

@@ -1,5 +1,17 @@
-"""Scale-pattern queries (round 2): dedup clustering, range join, gap-fill,
-outlier detection, merge/upsert, histogram, approximate sketches.
+"""Scale-pattern queries. Families:
+
+- near-dup cluster assembly: ``d_cc_clusters``, ``d_dedup_survivors``;
+- range, interval and spatial joins: ``x_range_join``,
+  ``x_range_join_bucketed``, ``x_geo_grid_join``, ``x_geo_knn``;
+- interval sweeps and time-series repair: ``e_peak_concurrency``,
+  ``e_interval_coverage``, ``e_gapfill``;
+- outliers and smoothing: ``a_zscore_outliers``, ``e_ewma_anomaly``;
+- merge and change data: ``j_merge_upsert``, ``c_snapshot_diff``,
+  ``c_cdc_apply``;
+- distribution summaries: ``a_histogram``, ``a_grouping_sets``,
+  ``a_partial_agg_merge``, ``a_approx_sketches``;
+- text features and tokenizers: ``t_tfidf``, ``t_winnow``,
+  ``t_bpe_tokens``, ``t_bpe_train``.
 
 These extend the reference surface (which stops at per-row cache diffs and
 flat rollups — ``/root/reference/common/api.py:362-425``,
@@ -27,7 +39,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..operators import text
 from ..operators.graph import cluster_sizes, connected_components
-from .northstar import DOCS_NEAR_DUP_SQL, TOKS_SQL, _docs_near_dup
+from .common import DOCS_NEAR_DUP_SQL, TOKS_SQL, docs_near_dup
 from . import shared
 from .testdata import load_table
 
@@ -66,7 +78,7 @@ def _fingerprint_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative stage (actions per round), so both consumers read ONE
     materialized fixpoint instead of each re-running it."""
 
-    docs = _docs_near_dup(spark, sf_dir).withColumn(
+    docs = docs_near_dup(spark, sf_dir).withColumn(
         "toks", text.tokenize(F.col("text"))
     )
     n = F.size("toks")
@@ -106,7 +118,7 @@ def d_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     `filter(keep = 1)` consumes, so the full corpus is scanned exactly
     once end-to-end."""
     labels = _fingerprint_labels(spark, sf_dir)
-    all_docs = _docs_near_dup(spark, sf_dir).select(
+    all_docs = docs_near_dup(spark, sf_dir).select(
         "doc_id", F.size(text.tokenize(F.col("text"))).cast("long").alias("n_toks")
     )
     labeled = (
@@ -940,3 +952,766 @@ SELECT o_custkey,
 FROM orders
 GROUP BY o_custkey
 """.strip()
+
+
+US_PER_DAY = 86_400_000_000
+
+# a session is [ts, ts + value minutes) clamped to 7 days: without a cap a
+# single absurd `value` row would explode the day/bucket sequence (or hit
+# Spark's array-length limit) — and the SQL twins carry the same LEAST()
+MAX_SESSION_US = 7 * US_PER_DAY
+
+
+def _session_bounds() -> tuple:
+    """(start_us, end_us) expressions of an event's session — THE
+    cross-engine arithmetic contract every interval twin shares: FLOOR
+    before the double→long cast (Spark truncates, DuckDB rounds), minimum
+    1 µs (half-open, never empty), duration clamped to ``MAX_SESSION_US``.
+    Any change here must land in every `*_SQL` twin that inlines it."""
+    start = F.unix_micros(F.col("ts"))
+    dur = F.least(
+        F.greatest(
+            F.floor(F.col("value") * 60_000_000).cast("long"), F.lit(1).cast("long")
+        ),
+        F.lit(MAX_SESSION_US).cast("long"),
+    )
+    return start, start + dur
+
+
+# ---------------------------------------------------------------------------
+# e_peak_concurrency — sweep-line interval overlap (peak concurrent sessions)
+# ---------------------------------------------------------------------------
+
+def e_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Peak number of concurrently-open sessions per (event_type, day).
+
+    Each event opens a session [ts, ts + value minutes) — half-open, so a
+    session ending exactly when another starts does not overlap it. The
+    sweep: every session slice contributes a +1 at its (clipped) start
+    and a -1 at its (clipped) end; the running sum ordered by
+    (t, delta) *is* the concurrency, and its max is the answer. Ordering
+    deltas before starts at the same instant implements the half-open
+    semantics identically in Spark and DuckDB (both use RANGE-to-current
+    default frames, so tied rows peer-aggregate the same way).
+
+    Sessions are minutes long, so the day-sequence explode is a bounded
+    ≤2× fan-out; all arithmetic stays in epoch µs with FLOOR so Spark's
+    truncating double→long cast can't diverge from DuckDB's rounding one.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    start_us, end_us = _session_bounds()
+    s = ev.select(
+        "event_type", start_us.alias("start_us"), end_us.alias("end_us")
+    )
+    sliced = (
+        s.withColumn(
+            "day",
+            F.explode(
+                F.sequence(
+                    F.floor(F.col("start_us") / US_PER_DAY).cast("long"),
+                    F.floor((F.col("end_us") - 1) / US_PER_DAY).cast("long"),
+                )
+            ),
+        )
+        .select(
+            "event_type",
+            "day",
+            F.greatest("start_us", F.col("day") * US_PER_DAY).alias("s_us"),
+            F.least("end_us", (F.col("day") + 1) * US_PER_DAY).alias("e_us"),
+        )
+    )
+    deltas = sliced.select(
+        "event_type",
+        "day",
+        F.explode(
+            F.array(
+                F.struct(F.col("s_us").alias("t"), F.lit(1).alias("delta")),
+                F.struct(F.col("e_us").alias("t"), F.lit(-1).alias("delta")),
+            )
+        ).alias("x"),
+    ).select("event_type", "day", "x.t", "x.delta")
+    # Pre-aggregate coincident deltas BEFORE the sweep window: the
+    # window partitions by (event_type, day) — a FIXED group count —
+    # so its per-partition sort input otherwise grows linearly with
+    # the events table and the whole query degrades superlinearly
+    # (measured 0.95 s at sf1 → 21.5 s at sf10, where replicated
+    # timestamps made every group 100× deeper). The RANGE frame
+    # peer-aggregates tied (t, delta) rows anyway, so running the sum
+    # over per-(t, delta) totals is value-identical while bounding the
+    # window input by DISTINCT sweep points per group — one extra
+    # map-side-combinable hash-agg buys an input collapse at exactly
+    # the cardinality ratio coincident events create (21.5 → 1.8 s
+    # warm at sf10).
+    agg = deltas.groupBy("event_type", "day", "t", "delta").agg(
+        F.sum("delta").alias("d")
+    )
+    w = Window.partitionBy("event_type", "day").orderBy("t", "delta")
+    return (
+        agg.withColumn("conc", F.sum("d").over(w))
+        .groupBy("event_type", "day")
+        .agg(F.max("conc").alias("peak_concurrency"))
+        .select(
+            "event_type",
+            F.date_add(F.lit("1970-01-01").cast("date"), F.col("day").cast("int")).alias(
+                "day"
+            ),
+            "peak_concurrency",
+        )
+    )
+
+
+E_PEAK_CONCURRENCY_SQL = """
+WITH s AS (
+    SELECT event_type,
+           epoch_us(ts) AS start_us,
+           epoch_us(ts)
+             + LEAST(GREATEST(CAST(FLOOR(value * 60000000) AS BIGINT), 1),
+                     604800000000) AS end_us
+    FROM events
+), sliced AS (
+    SELECT event_type,
+           g.day,
+           GREATEST(start_us, g.day * 86400000000) AS s_us,
+           LEAST(end_us, (g.day + 1) * 86400000000) AS e_us
+    FROM s
+    CROSS JOIN LATERAL (
+        SELECT unnest(generate_series(
+            CAST(FLOOR(start_us / 86400000000) AS BIGINT),
+            CAST(FLOOR((end_us - 1) / 86400000000) AS BIGINT))) AS day
+    ) g
+), deltas AS (
+    SELECT event_type, day, s_us AS t, 1 AS delta FROM sliced
+    UNION ALL
+    SELECT event_type, day, e_us AS t, -1 AS delta FROM sliced
+), swept AS (
+    SELECT event_type, day,
+           SUM(delta) OVER (PARTITION BY event_type, day ORDER BY t, delta) AS conc
+    FROM deltas
+)
+SELECT event_type,
+       DATE '1970-01-01' + CAST(day AS INT) AS day,
+       CAST(MAX(conc) AS BIGINT) AS peak_concurrency
+FROM swept
+GROUP BY event_type, day
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# x_range_join_bucketed — both-sides-big range join via time-bucket explode
+# ---------------------------------------------------------------------------
+
+US_PER_HOUR = 3_600_000_000
+
+
+def x_range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events contained in other events' sessions — the BOTH-SIDES-BIG
+    range join (`x_range_join` handles the broadcastable-hot-side case).
+
+    Each event opens a session [ts, ts + value minutes); count, per
+    session, the same user's OTHER events falling inside it. The naive
+    plan is a per-user time-range self-join — quadratic in the hot user.
+    The scale plan turns the range predicate into an equi-join:
+
+    - intervals explode to the 1 h time buckets they cover (sessions are
+      minutes long — a bounded ≤2× fan-out);
+    - points map to exactly ONE bucket, so a contained point meets its
+      interval in precisely one (user_id, bucket) cell — no post-join
+      dedup;
+    - the join is a plain shuffle equi-join on (user_id, bucket) with
+      the [s, e) containment as a residual filter. Shuffle keys grow
+      with users × hours, so parallelism scales with data — no
+      broadcast, no cross product, skew amortized over buckets.
+
+    All µs arithmetic matches `e_peak_concurrency` (FLOOR before the
+    long cast — Spark truncates, DuckDB rounds).
+    """
+    ev = load_table(spark, sf_dir, "events")
+    start_us, end_us = _session_bounds()
+    base = ev.select(
+        "user_id", "event_id", start_us.alias("t_us"), end_us.alias("e_us")
+    )
+    intervals = base.withColumn(
+        "bucket",
+        F.explode(
+            F.sequence(
+                F.floor(F.col("t_us") / US_PER_HOUR).cast("long"),
+                F.floor((F.col("e_us") - 1) / US_PER_HOUR).cast("long"),
+            )
+        ),
+    ).select("user_id", F.col("event_id").alias("anchor_id"), "t_us", "e_us", "bucket")
+    points = base.select(
+        "user_id",
+        F.col("event_id").alias("point_id"),
+        F.col("t_us").alias("p_us"),
+        F.floor(F.col("t_us") / US_PER_HOUR).cast("long").alias("bucket"),
+    )
+    return (
+        intervals.join(points, ["user_id", "bucket"])
+        .filter(
+            (F.col("p_us") >= F.col("t_us"))
+            & (F.col("p_us") < F.col("e_us"))
+            & (F.col("point_id") != F.col("anchor_id"))
+        )
+        .groupBy("anchor_id")
+        .agg(F.count("*").alias("n_within"))
+    )
+
+
+X_RANGE_JOIN_BUCKETED_SQL = """
+WITH base AS (
+    SELECT user_id, event_id, epoch_us(ts) AS t_us,
+           epoch_us(ts)
+             + LEAST(GREATEST(CAST(FLOOR(value * 60000000) AS BIGINT), 1),
+                     604800000000) AS e_us
+    FROM events
+)
+SELECT a.event_id AS anchor_id, COUNT(*) AS n_within
+FROM base a
+JOIN base b
+  ON a.user_id = b.user_id
+ AND b.t_us >= a.t_us
+ AND b.t_us < a.e_us
+ AND b.event_id <> a.event_id
+GROUP BY a.event_id
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# c_cdc_apply — CDC change-log application (latest wins, deletes honored)
+# ---------------------------------------------------------------------------
+
+def c_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Apply a Debezium-style change log to produce current state: the
+    newest change per key wins, and keys whose newest change is a DELETE
+    vanish. The events table plays the log: key = event_id mod 1000
+    (many versions per key), change order = (ts, event_id) — a total
+    order, so reruns agree — and 'error' events are deletes.
+
+    The scale plan is ONE map-side-combinable aggregation:
+    ``max_by(struct(payload), struct(ts, event_id))`` — partial max_by in
+    the scan stage, merge in the reduce — instead of the
+    row_number-over-window formulation (which adds a per-partition SORT
+    of the whole log). The oracle states the same semantics with
+    ROW_NUMBER, which is exactly the point: same answer, different
+    physics. Deletes filter AFTER the agg: dropping delete rows first
+    would resurrect the previous version of a deleted key.
+
+    The companion `o_latest_per_key` is compaction without delete
+    semantics; this is the full CDC apply.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    log = ev.select(
+        F.pmod(F.col("event_id"), F.lit(1000)).alias("key"),
+        F.when(F.col("event_type") == "error", F.lit("D")).otherwise(F.lit("U")).alias(
+            "op"
+        ),
+        "ts",
+        "event_id",
+        "value",
+    )
+    latest = log.groupBy("key").agg(
+        F.max_by(
+            F.struct("op", F.col("value").alias("v"), F.col("event_id").alias("eid")),
+            F.struct("ts", "event_id"),
+        ).alias("last"),
+        F.count("*").alias("n_changes"),
+    )
+    return latest.filter(F.col("last.op") != "D").select(
+        "key",
+        F.col("last.v").alias("value"),
+        F.col("last.eid").alias("last_event_id"),
+        "n_changes",
+    )
+
+
+C_CDC_APPLY_SQL = """
+WITH log AS (
+    SELECT event_id % 1000 AS key,
+           CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
+           ts, event_id, value
+    FROM events
+), ranked AS (
+    SELECT key, op, value, event_id,
+           ROW_NUMBER() OVER (PARTITION BY key ORDER BY ts DESC, event_id DESC) AS rn,
+           COUNT(*) OVER (PARTITION BY key) AS n_changes
+    FROM log
+)
+SELECT key, value, event_id AS last_event_id, CAST(n_changes AS BIGINT) AS n_changes
+FROM ranked
+WHERE rn = 1 AND op <> 'D'
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# e_interval_coverage — merged-interval billable time (gaps-and-islands)
+# ---------------------------------------------------------------------------
+
+
+def e_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user TRUE tracked time: total coverage of the union of the
+    user's session intervals — overlapping timers counted once (the
+    time-tracking engine's billable-hours invariant; naive SUM(duration)
+    double-bills every overlap).
+
+    Sweep over PRE-AGGREGATED boundary points: every session contributes
+    a start and an end marker; markers first collapse to one row per
+    DISTINCT (user, t) carrying (n_starts, n_ends) — a map-side-
+    combinable hash-agg — and only then does the per-user window run.
+    The window partitions by user_id, a FIXED group count, so without
+    the collapse its per-partition sort input grows linearly with the
+    fact and the query degrades superlinearly (the e_peak_concurrency
+    lesson: 21.5 → 1.8 s at sf10); with it, the window input is bounded
+    by distinct timestamps per user. At each point, running coverage
+    count = cumsum(n_starts − n_ends); half-open [s, e) means ends
+    process BEFORE starts at the same instant, so a new island opens
+    iff (running_before − n_ends) == 0 with n_starts > 0 — exactly the
+    gaps-and-islands "s ≥ max previous end" flag — and a point
+    contributes (next_t − t) to coverage iff running_after > 0. One
+    shuffle on user_id for the window, one for the collapse; all
+    integer µs, fully deterministic (no tie-order dependence — ties
+    collapsed away).
+    """
+    ev = load_table(spark, sf_dir, "events")
+    start_us, end_us = _session_bounds()
+    s = ev.select(F.col("user_id"), start_us.alias("s_us"), end_us.alias("e_us"))
+    marks = s.select(
+        "user_id",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("s_us").alias("t"),
+                    F.lit(1).alias("ns"),
+                    F.lit(0).alias("ne"),
+                ),
+                F.struct(
+                    F.col("e_us").alias("t"),
+                    F.lit(0).alias("ns"),
+                    F.lit(1).alias("ne"),
+                ),
+            )
+        ).alias("m"),
+    ).select("user_id", "m.t", "m.ns", "m.ne")
+    # MAP-SIDE-COMBINED collapse first, then the (small) window shuffle:
+    # the alternative — repartition(user_id) once and let the groupBy +
+    # window reuse it — shuffles every RAW mark (2 rows per event),
+    # while this shape's first exchange carries only the per-(user, t)
+    # combined rows (100× fewer when timestamps replicate — measured
+    # 1.9 vs 1.1 s at sf10) and the second moves the same compressed
+    # table once more. Shuffle volume bounded by distinct boundary
+    # points at any corpus size.
+    pts = marks.groupBy("user_id", "t").agg(
+        F.sum("ns").alias("ns"), F.sum("ne").alias("ne")
+    )
+    w_cum = (
+        Window.partitionBy("user_id")
+        .orderBy("t")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_lead = Window.partitionBy("user_id").orderBy("t")
+    run_after = F.sum(F.col("ns") - F.col("ne")).over(w_cum)
+    swept = pts.select(
+        "user_id",
+        "ns",
+        run_after.alias("run_after"),
+        # new island: nothing open once this instant's ends retire
+        # (run_before − ne == run_after − ns + ne − ne) and ≥1 start here
+        F.when(
+            ((run_after - F.col("ns")) == 0) & (F.col("ns") > 0), 1
+        )
+        .otherwise(0)
+        .alias("new_isl"),
+        (F.lead("t", 1).over(w_lead) - F.col("t")).alias("seg_us"),
+    )
+    return swept.groupBy("user_id").agg(
+        F.sum("ns").cast("long").alias("n_sessions"),
+        F.sum("new_isl").cast("long").alias("n_islands"),
+        F.sum(F.when(F.col("run_after") > 0, F.col("seg_us")).otherwise(0))
+        .cast("long")
+        .alias("covered_us"),
+    )
+
+
+E_INTERVAL_COVERAGE_SQL = f"""
+WITH s AS (
+    SELECT user_id,
+           epoch_us(ts) AS s_us,
+           epoch_us(ts)
+             + LEAST(GREATEST(CAST(FLOOR(value * 60000000) AS BIGINT), 1),
+                     {MAX_SESSION_US}) AS e_us
+    FROM events
+),
+flagged AS (
+    SELECT user_id, s_us, e_us,
+           CASE WHEN MAX(e_us) OVER (
+                    PARTITION BY user_id ORDER BY s_us, e_us
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                ) IS NULL
+                OR s_us >= MAX(e_us) OVER (
+                    PARTITION BY user_id ORDER BY s_us, e_us
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                )
+           THEN 1 ELSE 0 END AS new_isl
+    FROM s
+),
+isl AS (
+    SELECT user_id, s_us, e_us,
+           SUM(new_isl) OVER (
+               PARTITION BY user_id ORDER BY s_us, e_us
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS island
+    FROM flagged
+),
+per_isl AS (
+    SELECT user_id, island,
+           MAX(e_us) - MIN(s_us) AS cov_us,
+           COUNT(*) AS n_sessions
+    FROM isl GROUP BY user_id, island
+)
+SELECT user_id,
+       CAST(SUM(n_sessions) AS BIGINT) AS n_sessions,
+       CAST(COUNT(*) AS BIGINT) AS n_islands,
+       CAST(SUM(cov_us) AS BIGINT) AS covered_us
+FROM per_isl GROUP BY user_id
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# e_ewma_anomaly — EWMA (λ = ½) of daily volume as an exact closed-form cumsum
+# ---------------------------------------------------------------------------
+
+EWMA_MAX_STEPS = 100  # 2^101 · Σcount must fit DECIMAL(38); see docstring
+
+
+def e_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily event volume with its λ=½ EWMA and a ratio anomaly flag
+    (today's count more than doubles, or falls below half of, the
+    smoothed history).
+
+    The recurrence s_t = ½x_t + ½s_{t−1} (s_0 = x_0) is evaluated
+    NON-iteratively via the exact closed form
+    s_t = (2x_0 + Σ_{k=1..t} x_k·2^k) / 2^{t+1}: the weights are exact
+    integer powers of two, the cumulative sum runs in DECIMAL(38,0),
+    and the single division by 2^{t+1} is an exact double scaling —
+    both engines produce bit-identical doubles, and no sequential UDF
+    ever runs. 2^t is materialized as 2^⌊t/2⌋ · 2^(t−⌊t/2⌋): each half
+    is ≤ 2^50 and shifts safely inside BIGINT (a single ``shiftleft``
+    would silently wrap at t ≥ 63 — Spark reduces the shift distance
+    mod 64), and the product is exact in DECIMAL(38,0). Valid while
+    2^{t+1}·Σx stays inside DECIMAL(38) — EWMA_MAX_STEPS = 100 daily
+    steps with headroom for ~1e7 total events; an in-plan
+    ``raise_error`` fires LOUDLY past the cap rather than letting
+    decimal overflow degrade to NULLs. Longer horizons re-base the
+    exponent per ~quarter chunk and carry the chunk boundary s_t as the
+    next chunk's x_0 (the recurrence is associative in that sense).
+
+    The window orders CALENDAR DAYS (one row per day — dimension-sized,
+    bounded by the horizon), never raw events; the fact-table touch is
+    the one daily hash-agg.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    daily = (
+        ev.groupBy(F.to_date("ts").alias("d"))
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+    w = Window.orderBy("d")
+    t = (F.row_number().over(w) - 1).alias("t")
+    stepped = daily.select("d", "cnt", t)
+    # shiftleft with a COLUMN shift count only exists at the SQL-function
+    # layer (the python F.shiftleft wrapper pins numBits to a literal);
+    # split the exponent so neither shift can reach the BIGINT wrap at 63
+    two_t = (
+        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(floor(t / 2) AS INT))").cast(
+            "decimal(38,0)"
+        )
+        * F.expr(
+            "shiftleft(CAST(1 AS BIGINT), t - CAST(floor(t / 2) AS INT))"
+        ).cast("decimal(38,0)")
+    )
+    overflow_msg = F.concat(
+        F.lit(
+            "e_ewma_anomaly: horizon step t="
+        ),
+        F.col("t").cast("string"),
+        F.lit(
+            f" exceeds EWMA_MAX_STEPS={EWMA_MAX_STEPS}; re-base the exponent"
+            " per chunk for longer horizons"
+        ),
+    )
+    y = (
+        F.when(F.col("t") > EWMA_MAX_STEPS, F.raise_error(overflow_msg).cast("decimal(38,0)"))
+        .when(F.col("t") == 0, F.col("cnt").cast("decimal(38,0)") * 2)
+        .otherwise(F.col("cnt").cast("decimal(38,0)") * two_t)
+    )
+    cum = stepped.withColumn(
+        "s", F.sum(y).over(Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0))
+    ).withColumn(
+        "ewma",
+        F.col("s").cast("double") / F.pow(F.lit(2.0), (F.col("t") + 1).cast("double")),
+    )
+    prev = F.lag("ewma").over(Window.orderBy("d"))
+    return cum.select(
+        "d",
+        "cnt",
+        "ewma",
+        F.when(
+            prev.isNull(), F.lit(False)
+        )
+        .otherwise(
+            (F.col("cnt").cast("double") > 2.0 * prev)
+            | (F.col("cnt").cast("double") * 2.0 < prev)
+        )
+        .alias("anomaly"),
+    )
+
+
+E_EWMA_ANOMALY_SQL = """
+WITH daily AS (
+    SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
+           CAST(COUNT(*) AS BIGINT) AS cnt
+    FROM events GROUP BY 1
+),
+stepped AS (
+    SELECT d, cnt,
+           CAST(ROW_NUMBER() OVER (ORDER BY d) - 1 AS INTEGER) AS t
+    FROM daily
+),
+cum AS (
+    SELECT d, cnt, t,
+           SUM(CASE WHEN t > 100 THEN CAST(error('e_ewma_anomaly: horizon exceeds EWMA_MAX_STEPS=100') AS DECIMAL(38,0))
+                    WHEN t = 0 THEN CAST(cnt AS DECIMAL(38,0)) * 2
+                    ELSE CAST(cnt AS DECIMAL(38,0))
+                         * (CAST((CAST(1 AS BIGINT) << CAST(floor(t / 2) AS INTEGER)) AS DECIMAL(38,0))
+                            * CAST((CAST(1 AS BIGINT) << (t - CAST(floor(t / 2) AS INTEGER))) AS DECIMAL(38,0))) END)
+             OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS s
+    FROM stepped
+),
+e AS (
+    SELECT d, cnt,
+           CAST(s AS DOUBLE) / power(2.0, CAST(t + 1 AS DOUBLE)) AS ewma
+    FROM cum
+)
+SELECT d, cnt, ewma,
+       CASE WHEN LAG(ewma) OVER (ORDER BY d) IS NULL THEN FALSE
+            ELSE (CAST(cnt AS DOUBLE) > 2.0 * LAG(ewma) OVER (ORDER BY d))
+                 OR (CAST(cnt AS DOUBLE) * 2.0 < LAG(ewma) OVER (ORDER BY d))
+       END AS anomaly
+FROM e
+""".strip()
+
+
+GEO_RADIUS = 5.0  # meters; also the grid cell size
+
+GEO_SPAN_MM = 1_000_000  # points live in [0, 1000) m, millimeter grid
+
+
+def _coord(key: F.Column, salt: str) -> F.Column:
+    """Deterministic coordinate in [0, 1000) m with mm resolution:
+    md5 → first 8 hex digits → mod 10^6 mm → ÷1000. Exact: the integer
+    is exact, 10^3 division is one correctly-rounded double op."""
+    h = F.conv(F.substring(F.md5(F.concat(key.cast("string"), F.lit(salt))), 1, 8), 16, 10)
+    return (h.cast("long") % GEO_SPAN_MM).cast("double") / 1000.0
+
+
+def geo_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = load_table(spark, sf_dir, "customer")
+    return cust.select(
+        F.col("c_custkey").alias("id"),
+        _coord(F.col("c_custkey"), "x").alias("x"),
+        _coord(F.col("c_custkey"), "y").alias("y"),
+    )
+
+
+def x_geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point pairs within ``GEO_RADIUS`` meters (id_a < id_b, squared
+    distance), via 3×3 grid-neighborhood equi-join + exact residual.
+
+    Cell side == radius guarantees every qualifying pair shares a
+    (home, neighbor) cell combination exactly once: the left row is
+    exploded to the 9 cells around its home, the right row sits at its
+    home cell — a pair is found iff b's home is in a's neighborhood
+    (always true at dist ≤ r√2 ≥ r), and found ONCE because b has one
+    home. Shuffle key = cell id — parallelism grows with the occupied
+    area, hot cells bounded by density × r²."""
+    pts = geo_points(spark, sf_dir)
+    cell_x = F.floor(F.col("x") / GEO_RADIUS).cast("long")
+    cell_y = F.floor(F.col("y") / GEO_RADIUS).cast("long")
+    homed = pts.select("id", "x", "y", cell_x.alias("cx"), cell_y.alias("cy"))
+    probe = (
+        homed.select(
+            "id", "x", "y",
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx"),
+            "cx", "cy",
+        )
+        .select(
+            "id", "x", "y",
+            (F.col("cx") + F.col("dx")).alias("cx"),
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy"),
+            "cy",
+        )
+        .select("id", "x", "y", "cx", (F.col("cy") + F.col("dy")).alias("cy"))
+    )
+    a, b = probe.alias("a"), homed.alias("b")
+    # explicit multiplies, not **2: pow() routes through Math.pow and is
+    # not guaranteed bit-equal to x*x, while * is IEEE-exact both sides
+    ddx = F.col("a.x") - F.col("b.x")
+    ddy = F.col("a.y") - F.col("b.y")
+    dist2 = ddx * ddx + ddy * ddy
+    return (
+        a.join(
+            b,
+            (F.col("a.cx") == F.col("b.cx"))
+            & (F.col("a.cy") == F.col("b.cy"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            dist2.alias("dist2"),
+        )
+        .filter(F.col("dist2") <= F.lit(GEO_RADIUS * GEO_RADIUS))
+        .orderBy("id_a", "id_b")
+    )
+
+
+X_GEO_GRID_JOIN_SQL = f"""
+WITH pts AS (
+    SELECT c_custkey AS id,
+           CAST(CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || 'x'), 1, 8))
+                AS BIGINT) % {GEO_SPAN_MM} AS DOUBLE) / 1000.0 AS x,
+           CAST(CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || 'y'), 1, 8))
+                AS BIGINT) % {GEO_SPAN_MM} AS DOUBLE) / 1000.0 AS y
+    FROM customer
+),
+homed AS (
+    SELECT id, x, y,
+           CAST(FLOOR(x / {GEO_RADIUS}) AS BIGINT) AS cx,
+           CAST(FLOOR(y / {GEO_RADIUS}) AS BIGINT) AS cy
+    FROM pts
+),
+probe AS (
+    SELECT id, x, y, cx + dx.g AS cx, cy + dy.g AS cy
+    FROM homed,
+         (SELECT unnest(generate_series(-1, 1)) AS g) dx,
+         (SELECT unnest(generate_series(-1, 1)) AS g) dy
+)
+SELECT a.id AS id_a, b.id AS id_b,
+       (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
+FROM probe a
+JOIN homed b ON a.cx = b.cx AND a.cy = b.cy AND a.id < b.id
+WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+      <= {GEO_RADIUS * GEO_RADIUS}
+ORDER BY id_a, id_b
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# x_geo_knn — bounded-radius k-nearest-neighbors over the grid
+# ---------------------------------------------------------------------------
+
+KNN_K = 3
+
+
+def x_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each point's K nearest neighbors AMONG candidates in its 3×3 cell
+    ring — bounded-radius kNN, the form spatial kNN takes at scale
+    (unbounded exact kNN needs expanding-ring search; bounding the
+    radius at one cell ring keeps it a single equi-join and is the
+    standard "neighbors within max distance" contract). Ranking is a
+    window PARTITIONED BY the query point — candidate lists are
+    ring-occupancy-bounded, so no hot partition. Deterministic ties:
+    (dist2, neighbor id)."""
+    from pyspark.sql import Window
+
+    pts = geo_points(spark, sf_dir)
+    cell_x = F.floor(F.col("x") / GEO_RADIUS).cast("long")
+    cell_y = F.floor(F.col("y") / GEO_RADIUS).cast("long")
+    homed = pts.select("id", "x", "y", cell_x.alias("cx"), cell_y.alias("cy"))
+    probe = (
+        homed.select(
+            "id", "x", "y",
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dx"),
+            "cx", "cy",
+        )
+        .select(
+            "id", "x", "y",
+            (F.col("cx") + F.col("dx")).alias("cx"),
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("dy"),
+            "cy",
+        )
+        .select("id", "x", "y", "cx", (F.col("cy") + F.col("dy")).alias("cy"))
+    )
+    a, b = probe.alias("a"), homed.alias("b")
+    ddx = F.col("a.x") - F.col("b.x")
+    ddy = F.col("a.y") - F.col("b.y")
+    cands = a.join(
+        b,
+        (F.col("a.cx") == F.col("b.cx"))
+        & (F.col("a.cy") == F.col("b.cy"))
+        & (F.col("a.id") != F.col("b.id")),
+    ).select(
+        F.col("a.id").alias("id"),
+        F.col("b.id").alias("neighbor_id"),
+        (ddx * ddx + ddy * ddy).alias("dist2"),
+    )
+    w = Window.partitionBy("id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
+    return (
+        cands.withColumn("rk", F.row_number().over(w).cast("int"))
+        .filter(F.col("rk") <= KNN_K)
+        .orderBy("id", "rk")
+    )
+
+
+X_GEO_KNN_SQL = f"""
+WITH pts AS (
+    SELECT c_custkey AS id,
+           CAST(CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || 'x'), 1, 8))
+                AS BIGINT) % {GEO_SPAN_MM} AS DOUBLE) / 1000.0 AS x,
+           CAST(CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || 'y'), 1, 8))
+                AS BIGINT) % {GEO_SPAN_MM} AS DOUBLE) / 1000.0 AS y
+    FROM customer
+),
+homed AS (
+    SELECT id, x, y,
+           CAST(FLOOR(x / {GEO_RADIUS}) AS BIGINT) AS cx,
+           CAST(FLOOR(y / {GEO_RADIUS}) AS BIGINT) AS cy
+    FROM pts
+),
+probe AS (
+    SELECT id, x, y, cx + dx.g AS cx, cy + dy.g AS cy
+    FROM homed,
+         (SELECT unnest(generate_series(-1, 1)) AS g) dx,
+         (SELECT unnest(generate_series(-1, 1)) AS g) dy
+),
+cands AS (
+    SELECT a.id AS id, b.id AS neighbor_id,
+           (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
+    FROM probe a
+    JOIN homed b ON a.cx = b.cx AND a.cy = b.cy AND a.id <> b.id
+),
+ranked AS (
+    SELECT id, neighbor_id, dist2,
+           CAST(ROW_NUMBER() OVER (
+               PARTITION BY id ORDER BY dist2 ASC, neighbor_id ASC
+           ) AS INTEGER) AS rk
+    FROM cands
+)
+SELECT id, neighbor_id, dist2, rk
+FROM ranked WHERE rk <= {KNN_K}
+ORDER BY id, rk
+""".strip()
+
+
+def t_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Learn 6 BPE merges from a deterministic 1-in-11 document sample
+    (operators/bpe.py) — tokenizer TRAINING, the step upstream of every
+    token-count/seq-pack entry in the catalog. Tokenizer trainers sample
+    at scale (merge statistics converge long before the corpus ends), so
+    the sample IS the production shape, not a shortcut. rows-only:
+    the merge loop is iterative (argmax per round) — not one SQL
+    statement; exactness is pinned by a pure-Python reference fold in
+    tests/test_bpe.py."""
+    from ..operators.bpe import bpe_train
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 0)
+    return bpe_train(docs, n_merges=6)

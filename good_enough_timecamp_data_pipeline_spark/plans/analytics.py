@@ -1,9 +1,10 @@
-"""Warehouse-analytics + pipeline-hygiene queries (round 2 additions).
+"""Event-analytics and pipeline-hygiene queries.
 
 Families on top of the reference surface (SURVEY §2.4/§2.6 free extras and
 the §2.11 training-data north star): cohort retention, funnel conversion,
-rolling event-time windows (RANGE frames), SCD2 dimension build, global
-token frequencies, data-quality expectation checks, PII scrubbing, grouped
+ordered event paths, rolling event-time windows (RANGE frames) and rank
+distributions, SCD2 dimension build and lookup, global token
+frequencies, data-quality expectation checks, PII scrubbing, grouped
 collect, and NTILE bucketing. Every query has a DuckDB oracle twin and
 keeps arithmetic exact (bigint cents, IEEE-exact single divisions,
 deterministic tie-breaks) so the driver's value-hash matches.
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import shared
+from .advanced import US_PER_DAY
 from .testdata import load_table
 
 
@@ -731,4 +733,64 @@ SELECT m // 6 AS batch_id,
        MIN(o_orderdate) AS first_order,
        MAX(o_orderdate) AS last_order
 FROM m GROUP BY m // 6
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# x_ordered_paths — ordered event-path aggregation (top user journeys)
+# ---------------------------------------------------------------------------
+
+PATHS_TOP_K = 20
+
+
+def x_ordered_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Most-common per-(user, day) event-type journeys.
+
+    Ordered aggregation without a UDF: ``collect_list`` of
+    (t, event_id, type) structs per group, ``array_sort`` (struct order =
+    field order, and event_id makes the order total — reruns and the
+    oracle agree byte-for-byte), then project + join into the path
+    string. The per-group list is bounded by a user's daily activity —
+    this is NOT a global sort; the final top-k is a distributed
+    TakeOrdered with a deterministic (count desc, path asc) tie-break.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    paths = (
+        ev.select(
+            "user_id",
+            F.floor(F.unix_micros("ts") / US_PER_DAY).cast("long").alias("day"),
+            F.struct(
+                F.unix_micros("ts").alias("t"),
+                F.col("event_id").alias("eid"),
+                F.col("event_type").alias("et"),
+            ).alias("s"),
+        )
+        .groupBy("user_id", "day")
+        .agg(
+            F.array_join(
+                F.transform(F.array_sort(F.collect_list("s")), lambda x: x["et"]), ">"
+            ).alias("path")
+        )
+    )
+    return (
+        paths.groupBy("path")
+        .agg(F.count("*").alias("n_journeys"))
+        .orderBy(F.desc("n_journeys"), F.asc("path"))
+        .limit(PATHS_TOP_K)
+    )
+
+
+X_ORDERED_PATHS_SQL = f"""
+WITH paths AS (
+    SELECT user_id,
+           CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+           string_agg(event_type, '>' ORDER BY epoch_us(ts), event_id) AS path
+    FROM events
+    GROUP BY user_id, day
+)
+SELECT path, COUNT(*) AS n_journeys
+FROM paths
+GROUP BY path
+ORDER BY n_journeys DESC, path ASC
+LIMIT {PATHS_TOP_K}
 """.strip()

@@ -1,5 +1,10 @@
 """North-star LLM-data-pipeline queries (SURVEY §2.11) over documents/
-embeddings, with DuckDB oracle twins where SQL-expressible.
+embeddings, with DuckDB oracle twins where SQL-expressible. Families:
+corpus text analysis (``t_token_stats`` … ``t_ngram_novelty``), lexical
+near-dup detection, containment and their audits (``d_``), embedding
+search and semantic dedup (``s_cosine_*``, ``s_ann_*``, ``s_kmeans``,
+``t_semdedup``), multimodal features, and the streaming entries
+(``s_stream_*``).
 
 Duplicate/near-duplicate inputs are *injected* deterministically (the
 driver's documents table has fully distinct texts): exact copies under
@@ -21,7 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import dedup, multimodal, similarity, text
+from ..operators.dedup import containment_pairs, shingle_pairs_jaccard, shingle_rows
 from ..operators.layout import fan_out_scan
+from ..operators.text import tokenize
 from ..streaming.stateful import streaming_sessionize
 from ..streaming.windows import (
     streaming_dedup,
@@ -29,21 +36,16 @@ from ..streaming.windows import (
     streaming_tumbling_counts,
 )
 from . import shared
+from .common import (
+    DOCS_NEAR_DUP_SQL,
+    TOKS_SQL,
+    corpus_lsh_index,
+    docs_near_dup,
+    shingles_sql,
+    stop_ratio_sql,
+)
 from .shared import session_memo
 from .testdata import load_table
-
-# ---------------------------------------------------------------------------
-# shared SQL fragments (DuckDB side)
-# ---------------------------------------------------------------------------
-
-TOKS_SQL = r"list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')"
-
-
-def _shingles_sql(toks: str, n: int = 5) -> str:
-    return (
-        f"list_distinct(list_transform(range(1, greatest(len({toks}) - {n - 1}, 0) + 1), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' ')))"
-    )
 
 
 DOCS_EXACT_DUP_SQL = """
@@ -52,27 +54,11 @@ UNION ALL
 SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
 """.strip()
 
-DOCS_NEAR_DUP_SQL = """
-SELECT doc_id, text FROM documents
-UNION ALL
-SELECT doc_id + 1000000, text || ' qq zz vv ww yy' FROM documents WHERE doc_id % 19 = 0
-""".strip()
-
 
 def _docs_exact_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     dups = docs.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    return docs.unionByName(dups)
-
-
-@session_memo
-def _docs_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = docs.filter(F.col("doc_id") % 19 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" qq zz vv ww yy")).alias("text"),
     )
     return docs.unionByName(dups)
 
@@ -122,24 +108,11 @@ def t_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stop_hits_sql(toks: str, words: tuple[str, ...]) -> str:
-    inlist = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter({toks}, x -> x IN ({inlist})))"
-
-
-def _stop_ratio_sql(toks: str, words: tuple[str, ...]) -> str:
-    return (
-        f"CASE WHEN len({toks}) > 0 "
-        f"THEN CAST({_stop_hits_sql(toks, words)} AS DOUBLE) / len({toks}) "
-        f"ELSE 0.0 END"
-    )
-
-
 T_QUALITY_SQL = f"""
 WITH t AS (SELECT doc_id, text, {TOKS_SQL} AS toks FROM documents),
 m AS (
     SELECT doc_id,
-           {_stop_ratio_sql('toks', text.STOPWORDS['en'])} AS en_stop_ratio,
+           {stop_ratio_sql('toks', text.STOPWORDS['en'])} AS en_stop_ratio,
            CASE WHEN len(toks) >= 20 AND len(toks) <= 1000 THEN 1.0
                 WHEN len(toks) > 0 THEN 0.5 ELSE 0.0 END AS len_band,
            CASE WHEN length(text) > 0
@@ -164,9 +137,9 @@ T_LANGID_SQL = f"""
 WITH t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
 r AS (
     SELECT doc_id,
-           {_stop_ratio_sql('toks', text.STOPWORDS['de'])} AS r_de,
-           {_stop_ratio_sql('toks', text.STOPWORDS['en'])} AS r_en,
-           {_stop_ratio_sql('toks', text.STOPWORDS['es'])} AS r_es
+           {stop_ratio_sql('toks', text.STOPWORDS['de'])} AS r_de,
+           {stop_ratio_sql('toks', text.STOPWORDS['en'])} AS r_en,
+           {stop_ratio_sql('toks', text.STOPWORDS['es'])} AS r_es
     FROM t
 )
 SELECT doc_id,
@@ -234,9 +207,9 @@ def t_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-injected docs → exact-dedup (keep min-id winner) → quality
     gate (≥ 0.5) → language ID + token stats for the surviving docs.
 
-    The composition is the point — and (round 11) every per-doc narrow
+    The composition is the point — and every per-doc narrow
     compute reads the SESSION-SHARED scored corpus
-    (`round5d.docs_hash_scored`: doc_id, content_h, n_tokens, quality,
+    (`curation.docs_hash_scored`: doc_id, content_h, n_tokens, quality,
     lang_pred — built once, reported under shared_build_sec) instead of
     re-tokenizing per query. The duplicate-injected twins share their
     source's TEXT by construction, so they inherit its artifact row with
@@ -249,7 +222,7 @@ def t_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized view. Output identical; every derived column's oracle
     twin still recomputes from raw text in SQL.
     """
-    from .round5d import docs_hash_scored
+    from .curation import docs_hash_scored
 
     stats = docs_hash_scored(spark, sf_dir)
     injected = stats.filter(F.col("doc_id") % 7 == 0).withColumn(
@@ -286,9 +259,9 @@ m AS (
                 THEN CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE)
                      / length(text)
                 ELSE 0.0 END AS alpha_ratio,
-           {_stop_ratio_sql('toks', text.STOPWORDS['en'])} AS r_en,
-           {_stop_ratio_sql('toks', text.STOPWORDS['es'])} AS r_es,
-           {_stop_ratio_sql('toks', text.STOPWORDS['de'])} AS r_de,
+           {stop_ratio_sql('toks', text.STOPWORDS['en'])} AS r_en,
+           {stop_ratio_sql('toks', text.STOPWORDS['es'])} AS r_es,
+           {stop_ratio_sql('toks', text.STOPWORDS['de'])} AS r_de,
            len(toks) AS n_tokens
     FROM t
 ),
@@ -388,7 +361,7 @@ def _near_dup_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical table — one materialization serves the family (in
     production this is the persisted shingle half of the LSH index,
     dedup.build_lsh_index_cached)."""
-    return dedup.shingle_rows(_docs_near_dup(spark, sf_dir), n=5)
+    return dedup.shingle_rows(docs_near_dup(spark, sf_dir), n=5)
 
 
 @shared.artifact("neardup_truth_n5_t0.5")
@@ -398,7 +371,7 @@ def _near_dup_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_lsh_quality's ground truth (the truth-reuse pattern — the audit
     measures recall against exactly this definition)."""
     return dedup.shingle_pairs_jaccard(
-        _docs_near_dup(spark, sf_dir),
+        docs_near_dup(spark, sf_dir),
         n=5,
         threshold=0.5,
         max_shingle_df=None,
@@ -435,7 +408,7 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 D_NGRAM_JACCARD_SQL = f"""
 WITH d AS ({DOCS_NEAR_DUP_SQL}),
 t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM d),
-sh AS (SELECT doc_id, unnest({_shingles_sql('toks', 5)}) AS sh FROM t),
+sh AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM t),
 {_jaccard_tail_sql(0.5)}
 """.strip()
 
@@ -529,36 +502,13 @@ FROM documents WHERE doc_id % 17 = 0
 """.strip()
 
 
-@session_memo
-def _corpus_lsh_index(spark: SparkSession, sf_dir: str):
-    """The documents corpus' write-once LSH index (shingles, buckets),
-    cache-keyed by the parquet file's identity so prewarm and probe can
-    never diverge on the artifact they address. Session-memoized: the
-    artifact is immutable once landed, so the two `spark.read.parquet`
-    schema probes (~0.4 s of pure plan-build) need not repeat per probe
-    call — a corpus swap mid-session changes sf_dir and misses the memo."""
-    import os
-
-    index = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    doc_file = f"{sf_dir}/documents.parquet"
-    st = os.stat(doc_file)
-    return dedup.build_lsh_index_cached(
-        spark,
-        index,
-        cache_key=f"{os.path.abspath(doc_file)}:{st.st_size}:{st.st_mtime_ns}",
-        n=5,
-        num_hashes=64,
-        bands=32,
-    )
-
-
 def prewarm_lsh_index(spark: SparkSession, sf_dir: str) -> None:
     """Land (or just verify) the write-once LSH index artifact that
     `d_incremental_dedup` probes. Harnesses call this during warm-up so
     the per-query bench number times the operator's actual steady-state
     claim — the O(batch) probe — while the one-time corpus build cost is
     reported once, separately (round-6 VERDICT item 4)."""
-    _corpus_lsh_index(spark, sf_dir)
+    corpus_lsh_index(spark, sf_dir)
 
 
 def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,7 +522,7 @@ def d_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     8: the per-run rebuild was 5.6 s at sf0.1). Oracle = exact cross-set
     Jaccard (32×2 banding misses a θ=0.5 pair w.p. ~1e-4, same argument
     as `d_minhash_lsh`)."""
-    idx = _corpus_lsh_index(spark, sf_dir)
+    idx = corpus_lsh_index(spark, sf_dir)
     return dedup.incremental_lsh_pairs(
         _docs_new_batch(spark, sf_dir), index=idx, n=5, num_hashes=64, bands=32,
         threshold=0.5,
@@ -583,8 +533,8 @@ D_INCREMENTAL_DEDUP_SQL = f"""
 WITH newb AS ({DOCS_NEW_BATCH_SQL}),
 tn AS (SELECT doc_id, {TOKS_SQL} AS toks FROM newb),
 ti AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
-shn AS (SELECT doc_id, unnest({_shingles_sql('toks', 5)}) AS sh FROM tn),
-shi AS (SELECT doc_id, unnest({_shingles_sql('toks', 5)}) AS sh FROM ti),
+shn AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM tn),
+shi AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM ti),
 szn AS (SELECT doc_id, COUNT(*) AS n_new FROM shn GROUP BY doc_id),
 szi AS (SELECT doc_id, COUNT(*) AS n_idx FROM shi GROUP BY doc_id),
 inter AS (
@@ -613,7 +563,7 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero false negatives, and the exact hamming filter removes false
     positives. That is why the plain pairwise-SQL oracle matches exactly.
     """
-    docs = fan_out_scan(_docs_near_dup(spark, sf_dir), "doc_id")
+    docs = fan_out_scan(docs_near_dup(spark, sf_dir), "doc_id")
     # tf-weighted signature build — same rewrite as t_simhash (§2.3):
     # SUM(cnt × ±1) over distinct (doc, tok) ≡ SUM(±1) over instances
     tok_counts = (
@@ -893,3 +843,438 @@ def s_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import streaming_deadletter_split
 
     return streaming_deadletter_split(spark, sf_dir)
+
+
+# ---------------------------------------------------------------------------
+# t_semdedup — semantic dedup: cluster embeddings, near-dedup within clusters
+# ---------------------------------------------------------------------------
+
+SEMDEDUP_CLUSTERS = 8
+
+
+def t_semdedup(
+    spark: SparkSession, sf_dir: str, threshold: float = 0.40
+) -> DataFrame:
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means the
+    embedding space, then cosine near-dedup WITHIN each cluster — the
+    all-pairs O(n²) becomes a sum of per-cluster squares, and the cluster
+    count is the recall/cost knob. This is the semantic complement of the
+    lexical MinHash path: paraphrases share no shingles but do share an
+    embedding neighborhood.
+
+    Pure composition of existing scale operators: `clustering.kmeans`
+    (deterministic first-k init, mapInPandas partial sums) feeds its
+    cluster ids as the blocking column of
+    `similarity.neardup_pairs_blocked` (tiled-GEMM candidates + exact
+    sequential-fold refine). rows-only: the float centroid means make
+    cluster BOUNDARIES engine-specific even though the run itself is
+    deterministic; the duplicate-recall property is pinned in tests by
+    injecting known duplicates.
+
+    Returns per-cluster (n_vectors, n_dup_pairs) — the dedup-rate map a
+    curator reads before pulling the trigger.
+    """
+    from pyspark.storagelevel import StorageLevel
+
+    from ..operators.clustering import kmeans
+    from ..operators.similarity import neardup_pairs_blocked
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    assign, _ = kmeans(emb, k=SEMDEDUP_CLUSTERS, max_iter=3)
+    # pinned: consumed by the pair GEMM, the sizes agg, and the dup-count
+    # join — without it each consumer re-runs the assignment scan + join
+    labeled = emb.join(assign.select("vec_id", "cluster"), "vec_id").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    pairs = neardup_pairs_blocked(labeled, block_col="cluster", threshold=threshold)
+    sizes = labeled.groupBy("cluster").agg(F.count("*").alias("n_vectors"))
+    dup_counts = (
+        pairs.join(
+            labeled.select(F.col("vec_id").alias("id_a"), "cluster"), "id_a"
+        )
+        .groupBy("cluster")
+        .agg(F.count("*").alias("n_dup_pairs"))
+    )
+    return (
+        sizes.join(dup_counts, "cluster", "left")
+        .select(
+            "cluster",
+            "n_vectors",
+            F.coalesce("n_dup_pairs", F.lit(0)).alias("n_dup_pairs"),
+        )
+        .orderBy("cluster")
+    )
+
+
+# ---------------------------------------------------------------------------
+# d_containment — asymmetric subset-duplication pairs
+# ---------------------------------------------------------------------------
+
+EXCERPT_MOD = 23  # 1-in-23 docs get an excerpt twin injected
+
+EXCERPT_ID_OFFSET = 2_000_000
+
+
+def _docs_with_excerpts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus + injected EXCERPT twins: a 40%-prefix slice of every 23rd
+    document (min 5 tokens, so each excerpt has ≥ 1 5-gram shingle).
+    Prefix slices make containment exactly 1.0 against the source while
+    jaccard sits near 0.4 — the case the symmetric measure misses.
+    Integer arithmetic ((2·len) div 5) so both engines cut identically."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    toks = tokenize(F.col("text"))
+    k = F.greatest(F.floor((F.size(toks) * 2) / F.lit(5)).cast("int"), F.lit(5))
+    exc = docs.filter(F.col("doc_id") % EXCERPT_MOD == 0).select(
+        (F.col("doc_id") + EXCERPT_ID_OFFSET).alias("doc_id"),
+        F.concat_ws(" ", F.slice(toks, F.lit(1), k)).alias("text"),
+    )
+    return docs.unionByName(exc)
+
+
+DOCS_WITH_EXCERPTS_SQL = f"""
+SELECT doc_id, text FROM documents
+UNION ALL
+SELECT doc_id + {EXCERPT_ID_OFFSET} AS doc_id,
+       array_to_string(list_slice(toks, 1, GREATEST((len(toks) * 2) // 5, 5)), ' ') AS text
+FROM (SELECT doc_id, {TOKS_SQL} AS toks FROM documents WHERE doc_id % {EXCERPT_MOD} = 0)
+""".strip()
+
+
+def d_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Containment ≥ 0.9 pairs over the excerpt-injected corpus.
+
+    max_shingle_df=None because the oracle enumerates the exact pair
+    set; production passes the default cap (the stop-shingle
+    prefix-filter) — same plan, bounded join width."""
+    return containment_pairs(
+        _docs_with_excerpts(spark, sf_dir), n=5, threshold=0.9, max_shingle_df=None
+    )
+
+
+D_CONTAINMENT_SQL = f"""
+WITH d AS ({DOCS_WITH_EXCERPTS_SQL}),
+t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM d),
+sh AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM t),
+sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+inter AS (
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+    FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+)
+SELECT id_a, id_b, n_inter,
+       sa.n_sh AS n_a, sb.n_sh AS n_b,
+       CAST(n_inter AS DOUBLE) / LEAST(sa.n_sh, sb.n_sh) AS containment
+FROM inter
+JOIN sizes sa ON sa.doc_id = id_a
+JOIN sizes sb ON sb.doc_id = id_b
+WHERE CAST(n_inter AS DOUBLE) / LEAST(sa.n_sh, sb.n_sh) >= 0.9
+""".strip()
+
+
+def d_incremental_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-set containment probe: the injected excerpts
+    play an ARRIVING batch, the raw documents table plays the fixed
+    corpus — exactly the excerpt-contamination check `curate.py`'s
+    incremental mode runs with ``--near-dup containment``. Exact pairs
+    via the asymmetric prefix filter applied cross-set
+    (`operators/dedup.py::incremental_containment_pairs`): O(batch)
+    per arrival against write-once corpus artifacts."""
+    from ..operators.dedup import incremental_containment_pairs
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    toks = tokenize(F.col("text"))
+    k = F.greatest(F.floor((F.size(toks) * 2) / F.lit(5)).cast("int"), F.lit(5))
+    batch = docs.filter(F.col("doc_id") % EXCERPT_MOD == 0).select(
+        (F.col("doc_id") + EXCERPT_ID_OFFSET).alias("doc_id"),
+        F.concat_ws(" ", F.slice(toks, F.lit(1), k)).alias("text"),
+    )
+    # the corpus index (shingles + df order + prefix) is the op's
+    # write-once per-generation artifact — model that lifetime with
+    # shared checkpoints so the per-arrival number times the PROBE,
+    # with the build labeled under shared_build_sec
+    return incremental_containment_pairs(
+        batch, index=_inc_containment_corpus_sh(spark, sf_dir), n=5, threshold=0.9
+    )
+
+
+@shared.prewarmed
+def _inc_containment_corpus_sh(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Write-once corpus containment index (shingles, df table, prefix,
+    per-doc shingle-array table) for the cross-set probe
+    (shared-artifact accessor; prewarmed by catalog.prewarm_shared)."""
+    from ..operators.dedup import build_containment_index
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    holder: dict = {}
+
+    def derived(which: str):
+        def build() -> DataFrame:
+            if not holder:
+                full, df_tbl, prefix, arr = build_containment_index(
+                    corpus_df=docs, threshold=0.9
+                )
+                holder.update(full=full, df=df_tbl, prefix=prefix, arr=arr)
+            # checkpoint PARTITIONED BY the probe's join key: localCheckpoint
+            # preserves outputPartitioning, so every per-arrival join
+            # against these artifacts shuffles only the O(batch) side —
+            # the in-session analog of the production index's
+            # bucketBy(sh) parquet layout. The arr table's probe key is
+            # the DOC id (the verify joins candidate pairs by dup_of).
+            key = "doc" if which == "arr" else "sh"
+            return holder[which].repartition(F.col(key))
+
+        return build
+
+    full = shared.shared_checkpoint(
+        spark, sf_dir, "inc_containment_corpus_sh", derived("full")
+    )
+    df_tbl = shared.shared_checkpoint(
+        spark, sf_dir, "inc_containment_corpus_df", derived("df")
+    )
+    prefix = shared.shared_checkpoint(
+        spark, sf_dir, "inc_containment_corpus_prefix_t09", derived("prefix")
+    )
+    arr = shared.shared_checkpoint(
+        spark, sf_dir, "inc_containment_corpus_arr", derived("arr")
+    )
+    return full, df_tbl, prefix, arr
+
+
+D_INCREMENTAL_CONTAINMENT_SQL = f"""
+WITH t0 AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
+batch AS (
+    SELECT doc_id + {EXCERPT_ID_OFFSET} AS doc_id,
+           array_to_string(list_slice(toks, 1, GREATEST((len(toks) * 2) // 5, 5)), ' ') AS text
+    FROM t0 WHERE doc_id % {EXCERPT_MOD} = 0
+),
+bt AS (SELECT doc_id, {TOKS_SQL} AS toks FROM batch),
+bsh AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM bt),
+csh AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM t0),
+bsz AS (SELECT doc_id, COUNT(*) AS n_new FROM bsh GROUP BY doc_id),
+csz AS (SELECT doc_id, COUNT(*) AS n_idx FROM csh GROUP BY doc_id),
+inter AS (
+    SELECT b.doc_id AS id_new, c.doc_id AS dup_of, COUNT(*) AS n_inter
+    FROM bsh b JOIN csh c ON b.sh = c.sh
+    GROUP BY b.doc_id, c.doc_id
+)
+SELECT id_new, dup_of, n_inter, bsz.n_new, csz.n_idx,
+       CAST(n_inter AS DOUBLE) / LEAST(bsz.n_new, csz.n_idx) AS containment
+FROM inter
+JOIN bsz ON bsz.doc_id = id_new
+JOIN csz ON csz.doc_id = dup_of
+WHERE CAST(n_inter AS DOUBLE) / LEAST(bsz.n_new, csz.n_idx) >= 0.9
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# d_threshold_curve — dedup-threshold calibration sweep
+# ---------------------------------------------------------------------------
+
+CURVE_FLOOR = 0.5  # compute pairs once at the loosest threshold under study
+
+
+@shared.artifact("docs_shingles_n5")
+def _docs_shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc, sh) 5-gram shingle rows over the PLAIN documents table as a
+    session-shared checkpoint (plans/shared.py) — d_threshold_curve and
+    t_ngram_novelty consume the identical table (distinct from the
+    near-dup-injected corpus northstar._near_dup_shingles covers)."""
+    return shingle_rows(load_table(spark, sf_dir, "documents"), n=5)
+
+
+def d_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pair counts bucketed by Jaccard decile (0.5 … 1.0):
+    the calibration sweep behind "which threshold do we dedup at".
+    The pair set is computed ONCE at the loosest threshold; each row is
+    (bucket, n_pairs) where bucket = floor(jaccard·10)/10.
+
+    Oracle-twinned with ``max_shingle_df=None`` (exact pair set);
+    production passes the stop-shingle cap for skew safety — the sweep
+    logic is unchanged."""
+    pairs = shingle_pairs_jaccard(
+        load_table(spark, sf_dir, "documents"),
+        threshold=CURVE_FLOOR,
+        max_shingle_df=None,
+        shingles=_docs_shingles_shared(spark, sf_dir),
+    )
+    return (
+        pairs.withColumn("bucket", F.floor(F.col("jaccard") * 10) / 10.0)
+        .groupBy("bucket")
+        .agg(F.count("*").cast("long").alias("n_pairs"))
+        .orderBy("bucket")
+    )
+
+
+D_THRESHOLD_CURVE_SQL = f"""
+WITH t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
+sh AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM t),
+sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+inter AS (
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+    FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+),
+pairs AS (
+    SELECT CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
+    FROM inter
+    JOIN sizes sa ON sa.doc_id = id_a
+    JOIN sizes sb ON sb.doc_id = id_b
+    WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= {CURVE_FLOOR}
+)
+SELECT FLOOR(jaccard * 10) / 10.0 AS bucket,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs
+FROM pairs GROUP BY 1 ORDER BY 1
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# d_lsh_quality — recall/precision audit of banded LSH vs exact ground truth
+# ---------------------------------------------------------------------------
+
+
+LSH_AUDIT_SEED = 7
+
+
+def d_lsh_quality(
+    spark: SparkSession, sf_dir: str, sample_fraction: float | None = None
+) -> DataFrame:
+    """Candidate-generation QUALITY audit: run the exact shingle-Jaccard
+    pair enumeration AND the banded MinHash-LSH pipeline over the same
+    near-dup corpus (the `d_ngram_jaccard`/`d_minhash_lsh` pair, same
+    parameters: n=5, 64 hashes, 32 bands, τ=0.5) and report
+    recall / precision of the LSH pair set against ground truth — the
+    measurement a dedup rollout runs before trusting banding at scale.
+
+    The oracle encodes the CONTRACT, not a re-derivation: at 32×2
+    banding a τ=0.5 pair is missed with prob ≈1e-4, and the fixed hash
+    seeds make the outcome deterministic — so expected recall is exactly
+    1.0 (and precision is 1.0 by construction: candidates are
+    exact-verified). A banding regression (fewer bands, broken hash
+    family, dropped candidate) surfaces as recall < 1.0 → hash mismatch
+    at the driver gate. Both pair sets are already computed by their own
+    catalog entries; this query full-outer-joins them (pair-keyed
+    shuffle) and folds ONE summary row.
+
+    100 TB contract — SAMPLE, then audit: the exact ground truth is an
+    uncapped all-pairs shingle self-join, quadratic in duplicate-cluster
+    size — an audit tool, NOT a pipeline stage, and a scale-killer on a
+    full corpus. A production invocation passes ``sample_fraction`` so
+    the audited corpus is a deterministic doc sample (pair Jaccard is a
+    two-document property, so the sample's exact pair set is a strict
+    subset of the full corpus's — recall/precision measured on it are
+    unbiased estimates). The catalog/oracle twin runs the local exact
+    mode (``sample_fraction`` None).
+    """
+    from ..operators.dedup import band_bucket_candidates, minhash_band_buckets, pin
+    if sample_fraction is None:
+        # the exact truth and the LSH candidate pair set are the
+        # session-shared materializations d_ngram_jaccard /
+        # d_minhash_lsh already computed over the identical corpus with
+        # identical parameters — an audit should read the artifacts it
+        # audits, not re-derive both sides from the raw text
+        exact = _near_dup_truth_pairs(spark, sf_dir).select(
+            "id_a", "id_b", F.lit(1).alias("in_exact")
+        )
+        candidates = _near_dup_candidates(spark, sf_dir)
+    else:
+        docs = docs_near_dup(spark, sf_dir).sample(
+            fraction=sample_fraction, seed=LSH_AUDIT_SEED
+        )
+        # ONE pinned tokenize+shingle pass feeds both pipelines — the
+        # exact and LSH sides each used to shingle the corpus
+        # independently
+        sh = pin(shingle_rows(docs, n=5))
+        exact = pin(
+            shingle_pairs_jaccard(
+                docs, n=5, threshold=0.5, max_shingle_df=None, shingles=sh
+            ).select("id_a", "id_b", F.lit(1).alias("in_exact"))
+        )
+        candidates = band_bucket_candidates(minhash_band_buckets(sh, 64, 32))
+    # The LSH side's VERIFIED pair set is, by definition, its candidate
+    # set intersected with {pairs at jaccard ≥ τ} — exactly the ground
+    # truth this audit computes anyway (any candidate pair at ≥ τ shares
+    # shingles, so it is in `exact`). Joining candidates against the
+    # pinned truth therefore yields the identical verified set without
+    # re-running the 3-join exact-verify stage a standalone
+    # `minhash_lsh_pairs` needs.
+    lsh = candidates.join(exact.select("id_a", "id_b"), ["id_a", "id_b"]).select(
+        "id_a", "id_b", F.lit(1).alias("in_lsh")
+    )
+    both = exact.join(lsh, ["id_a", "id_b"], "full_outer")
+    return both.agg(
+        F.sum(F.coalesce("in_exact", F.lit(0))).cast("long").alias("n_exact"),
+        F.sum(F.coalesce("in_lsh", F.lit(0))).cast("long").alias("n_lsh"),
+        F.sum(
+            F.when(F.col("in_exact").isNotNull() & F.col("in_lsh").isNotNull(), 1).otherwise(0)
+        )
+        .cast("long")
+        .alias("n_common"),
+    ).select(
+        "n_exact",
+        "n_lsh",
+        "n_common",
+        (F.col("n_common").cast("double") / F.col("n_exact").cast("double")).alias(
+            "recall"
+        ),
+        (F.col("n_common").cast("double") / F.col("n_lsh").cast("double")).alias(
+            "precision"
+        ),
+    )
+
+
+D_LSH_QUALITY_SQL = f"""
+WITH truth AS ({D_NGRAM_JACCARD_SQL})
+SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
+       CAST(COUNT(*) AS BIGINT) AS n_lsh,
+       CAST(COUNT(*) AS BIGINT) AS n_common,
+       1.0 AS recall,
+       1.0 AS precision
+FROM truth
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# t_ngram_novelty — first-occurrence shingle scoring (no pair enumeration)
+# ---------------------------------------------------------------------------
+
+
+def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document novelty: share of the doc's distinct 5-gram shingles
+    whose FIRST occurrence (min doc_id) is this document. A late
+    near-copy scores near 0, original content near 1 — duplication
+    signal without any pairwise join: one shingle hash-agg (first-seen)
+    plus one join back to the doc's shingles. Docs with fewer than 5
+    tokens have no shingles and no row (consistent with the twin)."""
+    sh = _docs_shingles_shared(spark, sf_dir)
+    first = sh.groupBy("sh").agg(F.min("doc").alias("first_doc"))
+    return (
+        sh.join(first, "sh")
+        .groupBy(F.col("doc").alias("doc_id"))
+        .agg(
+            F.count("*").cast("long").alias("n_sh"),
+            F.sum(F.when(F.col("first_doc") == F.col("doc"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_novel"),
+        )
+        .withColumn(
+            "novelty",
+            F.col("n_novel").cast("double") / F.col("n_sh").cast("double"),
+        )
+    )
+
+
+T_NGRAM_NOVELTY_SQL = f"""
+WITH t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
+sh AS (SELECT doc_id, unnest({shingles_sql('toks', 5)}) AS sh FROM t),
+first_ AS (SELECT sh, MIN(doc_id) AS first_doc FROM sh GROUP BY sh)
+SELECT sh.doc_id,
+       CAST(COUNT(*) AS BIGINT) AS n_sh,
+       CAST(SUM(CASE WHEN first_doc = sh.doc_id THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_novel,
+       CAST(SUM(CASE WHEN first_doc = sh.doc_id THEN 1 ELSE 0 END) AS DOUBLE)
+         / CAST(COUNT(*) AS DOUBLE) AS novelty
+FROM sh JOIN first_ USING (sh)
+GROUP BY sh.doc_id
+""".strip()

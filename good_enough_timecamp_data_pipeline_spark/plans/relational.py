@@ -1,4 +1,9 @@
 """Operator-inventory queries (SURVEY.md §2) over the driver testdata.
+Families: predicates and coercion (``p_``), joins incl. salted skew and
+fuzzy (``j_``), basic aggregates (``a_``), hierarchy (``h_``), scalar,
+date, JSON and VARIANT functions (``f_``), ordering and set operations
+(``o_``), windows (``w_``), reshaping and top-k incl. LATERAL
+(``x_``), and as-of joins in all three directions (``x_asof_*``).
 
 Each function is a ``(spark, sf_dir) -> DataFrame`` catalog entry; each
 ``*_SQL`` constant is the ANSI twin DuckDB replays as the oracle. Aliases
@@ -32,7 +37,7 @@ from ..functions.formatting import (
 from ..functions.ids import add_prefix, strip_prefix
 from ..operators.canonicalize import null_canonical
 from ..operators.hierarchy import breadcrumbs, closure_sql, transitive_closure
-from .testdata import TASKS_SQL, entries_df, load_table, tasks_df
+from .testdata import TASKS_SQL, entries_df, load_table, register_views, tasks_df
 
 # ---------------------------------------------------------------------------
 # P — projections / filters / predicates
@@ -457,7 +462,7 @@ def f_formatting_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _f_formatting_wide_sql() -> str:
-    from .reports import _fmt_duration_signed_sql, _fmt_duration_sql
+    from .common import fmt_duration_signed_sql, fmt_duration_sql
     from .testdata import ENTRIES_SQL
 
     return f"""
@@ -465,8 +470,8 @@ WITH _entries AS ({ENTRIES_SQL}),
 base AS (SELECT entry_id, duration, duration - 150000 AS delta FROM _entries)
 SELECT entry_id,
        duration,
-       {_fmt_duration_sql('duration')} AS duration_fmt,
-       {_fmt_duration_signed_sql('delta')} AS delta_fmt,
+       {fmt_duration_sql('duration')} AS duration_fmt,
+       {fmt_duration_signed_sql('delta')} AS delta_fmt,
        printf('%.4f', (duration) / 3600.0) AS hours_fmt,
        ABS(delta) AS abs_delta
 FROM base
@@ -1127,3 +1132,310 @@ SELECT event_type,
        quantile_cont(CAST(FLOOR(value * 100) AS BIGINT), 0.9)  AS p90
 FROM events GROUP BY event_type
 """.strip()
+
+
+# ---------------------------------------------------------------------------
+# j_salted_skew_join — hand-salted skew join (replicate build, salt probe)
+# ---------------------------------------------------------------------------
+
+N_SALTS = 8
+
+
+def j_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user anomalous-event counts via an explicitly SALTED join.
+
+    The portable answer to join skew when the build side is too big to
+    broadcast and AQE's skew split isn't available (pre-3.x clusters,
+    non-AQE engines, deterministic-partitioning requirements): replicate
+    the build side ``N_SALTS``× with a salt column, give every probe row
+    one deterministic salt (hash of its unique id — never ``rand()``,
+    reruns must agree), and equi-join on (key, salt). A key carrying 50%
+    of the fact now spreads over ``N_SALTS`` partitions instead of
+    melting one. Cost: build side ×``N_SALTS`` — cheap when the build is
+    per-key aggregates (one row per key), which is exactly the skew-join
+    case that hurts most.
+
+    The result is identical to the unsalted join (the oracle runs that
+    plain join), so correctness is engine-checkable while the plan shape
+    is the scale pattern. The companion aggregation-side pattern is
+    `a_salted_skew_sum`. The anomaly predicate compares exact integer
+    cents (``v·n > 2·Σv`` instead of ``v > 2·avg``) — a float AVG is
+    addition-order-sensitive, and a row near the boundary could flip
+    between engines.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    cents = F.floor(F.col("value") * 100).cast("long")
+    profile = ev.groupBy("user_id").agg(
+        F.count("*").alias("n_events"), F.sum(cents).alias("sum_cents")
+    )
+    build = profile.withColumn(
+        "salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1)))
+    )
+    probe = ev.withColumn("salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALTS)))
+    return (
+        probe.join(build, ["user_id", "salt"])
+        .filter(cents * F.col("n_events") > 2 * F.col("sum_cents"))
+        .groupBy("user_id", "n_events")
+        .agg(F.count("*").alias("n_anomalous"))
+    )
+
+
+J_SALTED_SKEW_JOIN_SQL = """
+WITH profile AS (
+    SELECT user_id,
+           COUNT(*) AS n_events,
+           SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS sum_cents
+    FROM events GROUP BY user_id
+)
+SELECT e.user_id, p.n_events, COUNT(*) AS n_anomalous
+FROM events e
+JOIN profile p USING (user_id)
+WHERE CAST(FLOOR(e.value * 100) AS BIGINT) * p.n_events > 2 * p.sum_cents
+GROUP BY e.user_id, p.n_events
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# x_asof_forward / x_asof_nearest — the remaining as-of directions
+# ---------------------------------------------------------------------------
+
+
+def _asof_inputs(spark: SparkSession, sf_dir: str):
+    ev = load_table(spark, sf_dir, "events")
+    cents = F.floor(F.col("value") * 100).cast("long")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts", cents.alias("purchase_cents")
+    )
+    views = (
+        ev.filter(F.col("event_type") == "view")
+        .groupBy("user_id", "ts")
+        .agg(F.max(cents).alias("view_cents"))
+    )
+    return purchases, views
+
+
+def x_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each purchase enriched with the user's NEXT (>=) view — the
+    forward direction of the as-of operator (`x_asof_join` pins
+    backward): the same carry window over the reversed order, one keyed
+    shuffle; DuckDB's native ASOF JOIN with `<=` is the oracle."""
+    from ..operators.asof import asof_join
+
+    purchases, views = _asof_inputs(spark, sf_dir)
+    return asof_join(
+        purchases, views, on="ts", by="user_id",
+        value_cols=["view_cents"], direction="forward",
+    )
+
+
+X_ASOF_FORWARD_SQL = """
+WITH purchases AS (
+    SELECT event_id, user_id, ts, CAST(FLOOR(value * 100) AS BIGINT) AS purchase_cents
+    FROM events WHERE event_type = 'purchase'
+),
+views AS (
+    SELECT user_id, ts, MAX(CAST(FLOOR(value * 100) AS BIGINT)) AS view_cents
+    FROM events WHERE event_type = 'view'
+    GROUP BY user_id, ts
+)
+SELECT l.event_id, l.user_id, l.ts, l.purchase_cents,
+       r.ts AS ts_asof, r.view_cents AS view_cents_asof
+FROM purchases l
+ASOF LEFT JOIN views r ON l.user_id = r.user_id AND l.ts <= r.ts
+""".strip()
+
+
+def x_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each purchase enriched with the temporally CLOSEST view on either
+    side (ties resolve backward — never read the future on a coin
+    flip). Composition of both carry passes + an exact integer-µs
+    distance pick; the oracle composes DuckDB's two native ASOF
+    directions with the same tie rule."""
+    from ..operators.asof import asof_join_nearest
+
+    purchases, views = _asof_inputs(spark, sf_dir)
+    return asof_join_nearest(
+        purchases, views, on="ts", by="user_id", value_cols=["view_cents"]
+    )
+
+
+X_ASOF_NEAREST_SQL = """
+WITH purchases AS (
+    SELECT event_id, user_id, ts, CAST(FLOOR(value * 100) AS BIGINT) AS purchase_cents
+    FROM events WHERE event_type = 'purchase'
+),
+views AS (
+    SELECT user_id, ts, MAX(CAST(FLOOR(value * 100) AS BIGINT)) AS view_cents
+    FROM events WHERE event_type = 'view'
+    GROUP BY user_id, ts
+),
+bwd AS (
+    SELECT l.event_id, r.ts AS ts_b, r.view_cents AS vc_b
+    FROM purchases l
+    ASOF LEFT JOIN views r ON l.user_id = r.user_id AND l.ts >= r.ts
+),
+fwd AS (
+    SELECT l.event_id, r.ts AS ts_f, r.view_cents AS vc_f
+    FROM purchases l
+    ASOF LEFT JOIN views r ON l.user_id = r.user_id AND l.ts <= r.ts
+)
+SELECT p.event_id, p.user_id, p.ts, p.purchase_cents,
+       CASE WHEN ts_b IS NOT NULL AND (ts_f IS NULL
+                 OR ABS(epoch_us(ts_b) - epoch_us(p.ts))
+                    <= ABS(epoch_us(ts_f) - epoch_us(p.ts)))
+            THEN ts_b ELSE ts_f END AS ts_asof,
+       CASE WHEN ts_b IS NOT NULL AND (ts_f IS NULL
+                 OR ABS(epoch_us(ts_b) - epoch_us(p.ts))
+                    <= ABS(epoch_us(ts_f) - epoch_us(p.ts)))
+            THEN vc_b ELSE vc_f END AS view_cents_asof
+FROM purchases p
+JOIN bwd USING (event_id)
+JOIN fwd USING (event_id)
+""".strip()
+
+
+def f_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type rollup of a field shredded out of a VARIANT
+    payload: parse the JSON props column once into VARIANT, extract
+    ``$.k`` as BIGINT (``try_variant_get`` — NULL, never a throw, on
+    path/type misses), and aggregate. One scan + one hash agg.
+
+    Fixture contract (pinned by tests/test_round6.py): ``$.k`` in the
+    testdata props is always an integer or absent. On non-integer
+    payloads the engines would diverge — try_variant_get(...,'bigint')
+    truncates 1.5 → 1 and casts booleans, while DuckDB's
+    TRY_CAST(->>'k' AS BIGINT) yields NULL — so the twin holds only
+    under that contract."""
+    events = load_table(spark, sf_dir, "events")
+    shredded = events.select(
+        "event_type",
+        F.expr("try_variant_get(parse_json(props), '$.k', 'bigint')").alias("k"),
+    )
+    return (
+        shredded.groupBy("event_type")
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.count("k").cast("long").alias("n_with_k"),
+            F.sum("k").cast("long").alias("sum_k"),
+            F.round(F.avg("k"), 6).alias("avg_k"),
+            F.min("k").cast("long").alias("min_k"),
+            F.max("k").cast("long").alias("max_k"),
+        )
+    )
+
+
+F_VARIANT_SHRED_SQL = """
+WITH shredded AS (
+    SELECT event_type,
+           TRY_CAST(props::JSON ->> 'k' AS BIGINT) AS k
+    FROM events
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(COUNT(k) AS BIGINT) AS n_with_k,
+       CAST(SUM(k) AS BIGINT) AS sum_k,
+       ROUND(AVG(k), 6) AS avg_k,
+       CAST(MIN(k) AS BIGINT) AS min_k,
+       CAST(MAX(k) AS BIGINT) AS max_k
+FROM shredded
+GROUP BY event_type
+""".strip()
+
+
+LATERAL_TOP_N = 3
+
+
+def x_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``LATERAL_TOP_N`` customers by account balance per nation,
+    written as a correlated LATERAL subquery (ORDER BY + LIMIT in the
+    body) — the
+    SQL-standard spelling of top-k-per-group. Catalyst decorrelates the
+    correlated LIMIT into a per-key ranked window, so the executed plan
+    is ONE shuffle on the correlation key, not a per-nation re-scan
+    (plan shape pinned in tests/test_plans.py)."""
+    register_views(spark, sf_dir)
+    return spark.sql(
+        f"""
+        SELECT n.n_name AS nation, c.c_name AS customer, c.c_acctbal AS acctbal
+        FROM nation n,
+        LATERAL (
+            SELECT c_name, c_acctbal
+            FROM customer
+            WHERE c_nationkey = n.n_nationkey
+            ORDER BY c_acctbal DESC, c_name
+            LIMIT {LATERAL_TOP_N}
+        ) c
+        """
+    )
+
+
+X_LATERAL_TOPN_SQL = f"""
+SELECT n.n_name AS nation, c.c_name AS customer, c.c_acctbal AS acctbal
+FROM nation n,
+LATERAL (
+    SELECT c_name, c_acctbal
+    FROM customer
+    WHERE c_nationkey = n.n_nationkey
+    ORDER BY c_acctbal DESC, c_name
+    LIMIT {LATERAL_TOP_N}
+) c
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# f_variant_write_shred (rows-only)
+# ---------------------------------------------------------------------------
+
+
+def f_variant_write_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write events props as SHREDDED VARIANT parquet, read the artifact
+    back, extract the shredded field, aggregate. Covers the write half
+    of the VARIANT story; tests/test_round7.py asserts the scan of the
+    artifact prunes to the single typed subfield.
+
+    The shredding schema is forced via
+    ``spark.sql.variant.forceShreddingSchemaForTest`` — the only switch
+    OSS Spark 4.1 exposes to produce spec-compliant shredded files (the
+    production surface is a writer/table property once SPARK-45891's
+    shredding API stabilizes); the files themselves are real shredded
+    variant parquet, not a test fake. Conf is set/restored around the
+    write so nothing leaks into the session."""
+    import os
+
+    from ..localfs import private_run_dir
+
+    events = load_table(spark, sf_dir, "events")
+    v = events.select(
+        "event_id", "event_type", F.parse_json(F.col("props")).alias("v")
+    )
+    # fresh mkdtemp under the lstat-verified per-user root: a fixed
+    # per-sf path would be pre-plantable by another local user and race
+    # between concurrent runs on the same sf basename
+    out_dir = os.path.join(
+        private_run_dir(
+            "spark_graft_variant_shred",
+            prefix=os.path.basename(os.path.normpath(sf_dir)) + "-",
+        ),
+        "data",
+    )
+    key = "spark.sql.variant.forceShreddingSchemaForTest"
+    prev = spark.conf.get(key, "")
+    spark.conf.set(key, "k bigint")
+    try:
+        v.write.mode("overwrite").parquet(out_dir)
+    finally:
+        spark.conf.set(key, prev)
+    back = spark.read.parquet(out_dir)
+    return (
+        back.select(
+            "event_type",
+            F.expr("try_variant_get(v, '$.k', 'bigint')").alias("k"),
+        )
+        .groupBy("event_type")
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.count("k").cast("long").alias("n_with_k"),
+            F.sum("k").cast("long").alias("sum_k"),
+        )
+        .orderBy("event_type")
+    )

@@ -9,8 +9,9 @@ Reference parity:
   projects, two grouped SUMs over the closure, '%.4f' hour formatting).
 
 Both run over the task tree synthesized from testdata (plans/testdata.py).
-Each ``report_*`` function has an ``oracle_*_sql`` twin producing the exact
-ANSI-SQL equivalent for DuckDB.
+Each ``report_*`` entry has a ``REPORT_*_SQL`` twin, the exact ANSI-SQL
+equivalent for DuckDB (``oracle_task_budget_sql`` builds the task one over
+any tasks/entries SELECTs).
 
 Scale design (100 TB): the entries fact is the only big input. The closure
 and task dim are broadcast (`F.broadcast`), so the only shuffle in either
@@ -26,27 +27,13 @@ from pyspark.sql import functions as F
 from ..functions.formatting import format_duration, format_duration_signed, format_hours
 from ..operators.hierarchy import closure_sql, transitive_closure
 from . import shared
+from .common import fmt_duration_signed_sql, fmt_duration_sql
 from .testdata import ENTRIES_SQL, TASKS_SQL, entries_df, tasks_df
 
 
 # ---------------------------------------------------------------------------
 # SQL fragments for the oracle side (DuckDB) — must mirror functions/formatting
 # ---------------------------------------------------------------------------
-
-def _fmt_duration_sql(expr: str) -> str:
-    """Inline "Xh YYm" — assumes ``expr`` >= 0 (pmod == % there)."""
-    return (
-        f"CAST(CAST(FLOOR(({expr}) / 3600) AS BIGINT) AS VARCHAR) || 'h ' || "
-        f"LPAD(CAST(CAST(FLOOR((({expr}) % 3600) / 60) AS BIGINT) AS VARCHAR), 2, '0') || 'm'"
-    )
-
-
-def _fmt_duration_signed_sql(expr: str) -> str:
-    return (
-        f"CASE WHEN ({expr}) < 0 THEN '-' || {_fmt_duration_sql(f'ABS({expr})')} "
-        f"ELSE {_fmt_duration_sql(expr)} END"
-    )
-
 
 def _fmt_hours_sql(expr: str) -> str:
     return f"printf('%.4f', ({expr}) / 3600.0)"
@@ -195,15 +182,18 @@ SELECT t.task_id,
        t.budgeted                                    AS budgeted_seconds,
        COALESCE(tr.cumulative_seconds, 0)            AS cumulative_seconds,
        t.budgeted - COALESCE(tr.cumulative_seconds, 0) AS left_seconds,
-       {_fmt_duration_sql('COALESCE(tr.cumulative_seconds, 0)')} AS cumulative_fmt,
-       {_fmt_duration_signed_sql('t.budgeted - COALESCE(tr.cumulative_seconds, 0)')} AS left_fmt,
-       {_fmt_duration_sql('t.budgeted')}             AS budgeted_fmt
+       {fmt_duration_sql('COALESCE(tr.cumulative_seconds, 0)')} AS cumulative_fmt,
+       {fmt_duration_signed_sql('t.budgeted - COALESCE(tr.cumulative_seconds, 0)')} AS left_fmt,
+       {fmt_duration_sql('t.budgeted')}             AS budgeted_fmt
 FROM _tasks t
 LEFT JOIN tracked tr ON t.task_id = tr.ancestor_id
 LEFT JOIN crumb c   ON t.task_id = c.task_id
 WHERE t.budgeted > 0
 ORDER BY cumulative_seconds DESC, t.task_id ASC
 """.strip()
+
+
+REPORT_TASK_BUDGET_SQL = oracle_task_budget_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -277,8 +267,7 @@ def project_budget_report(
     )
 
 
-def oracle_project_budget_sql() -> str:
-    return f"""
+REPORT_PROJECT_BUDGET_SQL = f"""
 WITH RECURSIVE
 {closure_sql(TASKS_SQL)},
 _entries AS ({ENTRIES_SQL}),

@@ -1,5 +1,10 @@
-"""Training-data curation queries (round 2, batch 2): the operations that
-sit between "corpus cleaned" and "tokens on the training cluster".
+"""Training-data preparation queries: the operations that sit between
+"corpus cleaned" and "tokens on the training cluster". Families:
+decontamination and repetition, packing, sharding and chunking, mixture
+and source balancing (``t_mixture_weights``, ``t_temperature_mix``,
+``t_source_caps``), data selection (``t_dsir_weights``,
+``t_dsir_resample``), token drift (``t_token_kl_drift``) and
+quantization.
 
 The reference stops at fetch→normalize→report (its whole data surface is
 ``/root/reference/dlt_fetch_timecamp.py`` + two DuckDB report docs); none
@@ -41,7 +46,9 @@ from pyspark.sql import functions as F
 from ..operators import text
 from ..operators.dedup import shingle_rows
 from ..operators.order import global_cumsum, global_row_number, md5_prefix_bucket
-from .northstar import TOKS_SQL, _shingles_sql
+from ..operators.text import tokenize
+from . import shared
+from .common import TOKS_SQL, shingles_sql
 from .testdata import load_table
 
 # ---------------------------------------------------------------------------
@@ -81,10 +88,10 @@ def t_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 T_DECONTAM_SQL = f"""
 WITH t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
 ev AS (
-    SELECT DISTINCT unnest({_shingles_sql('toks')}) AS sh
+    SELECT DISTINCT unnest({shingles_sql('toks')}) AS sh
     FROM t WHERE doc_id % {_EVAL_MOD} = 0
 ),
-tr AS (SELECT doc_id, unnest({_shingles_sql('toks')}) AS sh FROM t)
+tr AS (SELECT doc_id, unnest({shingles_sql('toks')}) AS sh FROM t)
 SELECT tr.doc_id, CAST(COUNT(*) AS BIGINT) AS eval_gram_hits
 FROM tr JOIN ev USING (sh)
 GROUP BY tr.doc_id
@@ -300,13 +307,13 @@ def t_shard_assign(
     caching (the operators/order.py contract)."""
     from pyspark.storagelevel import StorageLevel
 
-    from .round5d import _file_size_row_bound
+    from .common import file_size_row_bound
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     key = F.md5(F.col("doc_id").cast("string"))
     keyed = docs.withColumn("__k", key)
     bucket = md5_prefix_bucket(F.col("__k"))
-    bound = _file_size_row_bound(sf_dir, "documents")
+    bound = file_size_row_bound(sf_dir, "documents")
     if bound is not None and bound <= max_pin_rows:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # SESSION-LIFETIME pin, deliberately never unpersisted here
@@ -469,4 +476,445 @@ SELECT doc_id,
        CAST(least({_CHUNK}, n - s + 1) AS BIGINT) AS n_chunk_toks,
        md5(array_to_string(list_slice(toks, s, s + {_CHUNK} - 1), ' ')) AS chunk_md5
 FROM c
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# t_dsir_weights — DSIR importance weights (hashed-bigram log-ratio)
+# ---------------------------------------------------------------------------
+
+DSIR_BUCKETS = 512  # B: hashed-bigram buckets
+DSIR_SAMPLE = 100  # documents t_dsir_resample draws
+
+
+@shared.prewarmed
+def _dsir_doc_sb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared (doc, source, bucket) hashed-bigram count table — the one
+    corpus pass both DSIR entries reduce over (see t_dsir_weights)."""
+    from .extensions import bigram_rows_from_toks, docs_alpha_toks_shared
+
+    pairs = bigram_rows_from_toks(
+        docs_alpha_toks_shared(spark, sf_dir), extra_cols=("source",)
+    ).select(
+        "doc_id",
+        "source",
+        (
+            F.conv(
+                F.substring(F.md5(F.concat_ws(" ", "w1", "w2")), 1, 8), 16, 10
+            ).cast("long")
+            % DSIR_BUCKETS
+        ).alias("bucket"),
+    )
+    return shared.shared_checkpoint(
+        spark,
+        sf_dir,
+        f"dsir_doc_sb_{DSIR_BUCKETS}",
+        lambda: pairs.groupBy("doc_id", "source", "bucket").agg(
+            F.count("*").alias("n")
+        ),
+    )
+
+
+def t_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Data Selection via Importance Resampling (Xie et al. 2023,
+    arXiv:2302.03169): weight every document by how much more likely its
+    hashed-bigram profile is under a TARGET distribution than under the
+    raw corpus — log w(d) = Σ_b n_b(d)·(ln p̂_target(b) − ln p̂_corpus(b)),
+    Laplace-smoothed. High-weight docs are the ones resampling keeps when
+    curating toward the target domain (here: source='src0' plays the
+    target; the full corpus is the proposal).
+
+    Scale shape: bigrams hash into ``DSIR_BUCKETS`` md5-derived buckets
+    (bit-identical across engines — the t_split recipe), so BOTH
+    distribution estimates are B-row tables however big the corpus; the
+    per-doc scoring join meets a B-row dimension (AQE broadcasts it) and
+    the two totals are driver scalars from bounded aggregates. ln() gets
+    identical double inputs in both engines; the per-doc sum is rounded
+    4dp to absorb summation-order ulps (the t_lm_perplexity contract).
+    """
+    # ONE corpus pass: the (doc, source, bucket) count table is the
+    # common reduction of everything downstream (per-doc counts, both
+    # distribution estimates, both totals), and it is materialized as a
+    # shared checkpoint so the md5-per-bigram pipeline — the expensive
+    # narrow stage — runs once per SESSION, not once per consumer branch
+    # or per catalog entry (t_dsir_resample builds on these weights;
+    # see plans/shared.py). Source is functionally dependent on doc_id,
+    # so adding it to the keys does not grow the table.
+    doc_sb = _dsir_doc_sb(spark, sf_dir)
+    doc_b = doc_sb.select("doc_id", "bucket", "n")
+    bucket_counts = doc_sb.groupBy("bucket").agg(
+        F.sum("n").alias("c_c"),
+        F.sum(
+            F.when(F.col("source") == "src0", F.col("n")).otherwise(F.lit(0))
+        ).alias("c_t"),
+    )
+    tot = bucket_counts.agg(
+        F.sum("c_c").cast("double").alias("t_c"),
+        F.sum("c_t").cast("double").alias("t_t"),
+    )
+    lr = bucket_counts.crossJoin(tot).select(  # 1-row stats side
+        "bucket",
+        (
+            F.log((F.col("c_t") + 1.0) / (F.col("t_t") + DSIR_BUCKETS))
+            - F.log((F.col("c_c") + 1.0) / (F.col("t_c") + DSIR_BUCKETS))
+        ).alias("lr"),
+    )
+    # EXPLICIT broadcast of the B-row likelihood-ratio dimension: lr is
+    # ≤ DSIR_BUCKETS rows BY CONSTRUCTION, doc_b is corpus-sized. Leaving
+    # the build-side choice to size estimates is a scale bug — doc_b
+    # reads from a localCheckpoint whose LogicalRDD estimate does not
+    # track the real data volume, and at the synthesized sf10 Catalyst
+    # picked BuildLeft (broadcast the 25M-row doc_b) and died in the
+    # broadcast build. The bounded side is knowable statically; say so.
+    return (
+        doc_b.join(F.broadcast(lr), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n").alias("n_bigrams"),
+            F.round(F.sum(F.col("n") * F.col("lr")), 4).alias("dsir_logw"),
+        )
+    )
+
+
+T_DSIR_WEIGHTS_SQL = f"""
+WITH t AS (
+    SELECT doc_id, source,
+           list_filter(string_split_regex(lower(text), '[^a-z]+'),
+                       x -> x <> '') AS toks
+    FROM documents
+),
+pairs AS (
+    SELECT doc_id, source,
+           CAST(('0x' || substr(md5(w1 || ' ' || w2), 1, 8)) AS BIGINT) % {DSIR_BUCKETS} AS bucket
+    FROM (
+        SELECT doc_id, source,
+               unnest(list_slice(toks, 1, len(toks) - 1)) AS w1,
+               unnest(list_slice(toks, 2, len(toks))) AS w2
+        FROM t WHERE len(toks) >= 2
+    )
+),
+doc_b AS (
+    SELECT doc_id, bucket, COUNT(*) AS n FROM pairs GROUP BY doc_id, bucket
+),
+tgt_b AS (
+    SELECT bucket, COUNT(*) AS c_t FROM pairs WHERE source = 'src0' GROUP BY bucket
+),
+cor_b AS (
+    SELECT bucket, COUNT(*) AS c_c FROM pairs GROUP BY bucket
+),
+tot AS (
+    SELECT CAST(COUNT(*) AS DOUBLE) AS t_c,
+           CAST(count_if(source = 'src0') AS DOUBLE) AS t_t
+    FROM pairs
+),
+lr AS (
+    SELECT c.bucket,
+           ln((COALESCE(g.c_t, 0) + 1.0) / (tot.t_t + {DSIR_BUCKETS}))
+             - ln((c.c_c + 1.0) / (tot.t_c + {DSIR_BUCKETS})) AS lr
+    FROM cor_b c LEFT JOIN tgt_b g USING (bucket) CROSS JOIN tot
+)
+SELECT d.doc_id,
+       CAST(SUM(d.n) AS BIGINT) AS n_bigrams,
+       ROUND(SUM(d.n * lr.lr), 4) AS dsir_logw
+FROM doc_b d JOIN lr USING (bucket)
+GROUP BY d.doc_id
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# t_dsir_resample — Gumbel-top-k weighted sampling over DSIR weights
+# ---------------------------------------------------------------------------
+
+def t_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The resampling half of DSIR: draw ``DSIR_SAMPLE`` documents WITHOUT
+    replacement with probability ∝ exp(dsir_logw), distributed, in one
+    pass — the Gumbel-top-k identity (top-k of logw + Gumbel noise IS a
+    weighted sample without replacement). No sequential draws, no
+    rejection loop: per-row noise + a distributed TakeOrdered.
+
+    Determinism is the whole design: the Gumbel uniform comes from an
+    md5 of the doc id (never ``rand()`` — reruns and the oracle must
+    agree), and the noise is rounded 4dp before the sum so the double
+    ``ln`` calls' last-ulp wobble cannot flip a rank (the
+    t_lm_perplexity contract); ties at 4dp resolution break by doc_id.
+    """
+    w = t_dsir_weights(spark, sf_dir)
+    u = (
+        F.conv(
+            F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("_g"))), 1, 8),
+            16,
+            10,
+        ).cast("double")
+        + 0.5
+    ) / 4294967296.0
+    gumbel = F.round(-F.log(-F.log(u)), 4)
+    return (
+        w.withColumn("score", F.col("dsir_logw") + gumbel)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(DSIR_SAMPLE)
+        .select("doc_id", "dsir_logw", "score")
+    )
+
+
+T_DSIR_RESAMPLE_SQL = f"""
+WITH t AS (
+    SELECT doc_id, source,
+           list_filter(string_split_regex(lower(text), '[^a-z]+'),
+                       x -> x <> '') AS toks
+    FROM documents
+),
+pairs AS (
+    SELECT doc_id, source,
+           CAST(('0x' || substr(md5(w1 || ' ' || w2), 1, 8)) AS BIGINT) % {DSIR_BUCKETS} AS bucket
+    FROM (
+        SELECT doc_id, source,
+               unnest(list_slice(toks, 1, len(toks) - 1)) AS w1,
+               unnest(list_slice(toks, 2, len(toks))) AS w2
+        FROM t WHERE len(toks) >= 2
+    )
+),
+doc_b AS (
+    SELECT doc_id, bucket, COUNT(*) AS n FROM pairs GROUP BY doc_id, bucket
+),
+bucket_counts AS (
+    SELECT bucket, COUNT(*) AS c_c, count_if(source = 'src0') AS c_t
+    FROM pairs GROUP BY bucket
+),
+tot AS (
+    SELECT CAST(SUM(c_c) AS DOUBLE) AS t_c, CAST(SUM(c_t) AS DOUBLE) AS t_t
+    FROM bucket_counts
+),
+lr AS (
+    SELECT bucket,
+           ln((c_t + 1.0) / (tot.t_t + {DSIR_BUCKETS})) - ln((c_c + 1.0) / (tot.t_c + {DSIR_BUCKETS})) AS lr
+    FROM bucket_counts CROSS JOIN tot
+),
+w AS (
+    SELECT d.doc_id, ROUND(SUM(d.n * lr.lr), 4) AS dsir_logw
+    FROM doc_b d JOIN lr USING (bucket)
+    GROUP BY d.doc_id
+)
+SELECT doc_id, dsir_logw,
+       dsir_logw + ROUND(-ln(-ln(
+           (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_g'), 1, 8)) AS BIGINT)
+              + 0.5) / 4294967296.0)), 4) AS score
+FROM w
+ORDER BY score DESC, doc_id ASC
+LIMIT {DSIR_SAMPLE}
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# t_token_kl_drift — per-source KL divergence vs the corpus distribution
+# ---------------------------------------------------------------------------
+
+KL_BUCKETS = 256  # B: hashed unigram buckets
+
+
+def t_token_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KL(source ‖ corpus) over hashed unigram buckets — the drift monitor
+    a curation pipeline watches per ingest source: a source whose token
+    distribution diverges from the corpus mix is changing under you
+    (scraper drift, spam influx, language shift).
+
+    Same physics as `t_dsir_weights`: md5-hashed token buckets make every
+    per-source distribution a B-row table regardless of corpus size, so
+    the whole query is two hash aggs + a join against a B-row dimension;
+    totals ride along as grouped sums (no driver scalars at all).
+    Laplace smoothing keeps every term finite; the sum runs over the
+    buckets the source actually observed (absent-bucket terms are
+    O(1/t_s) and identical in the twin); ln gets identical double inputs
+    in both engines and the per-source sum rounds 4dp.
+    """
+    from .extensions import docs_alpha_toks_shared
+
+    rows = docs_alpha_toks_shared(spark, sf_dir).select(
+        "source", F.explode("t").alias("tok")
+    ).select(
+        "source",
+        (
+            F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long") % KL_BUCKETS
+        ).alias("bucket"),
+    )
+    # ONE corpus pass: (source, bucket) is the common reduction — the
+    # corpus-marginal and totals all derive from it, and the eager
+    # checkpoint (sources × B rows, tiny) stops the tokenize+explode
+    # pipeline re-running once per derived lineage.
+    src_b = (
+        rows.groupBy("source", "bucket")
+        .agg(F.count("*").alias("c_s"))
+        .localCheckpoint(eager=True)
+    )
+    # the corpus marginal, per-source totals and grand total are WINDOW
+    # sums over the checkpointed (sources × B)-row table instead of
+    # three join branches: same values, but a single linear plan — an
+    # agg+join shape schedules an AQE stage cascade per join (11 Spark
+    # jobs for a 2 500-row reduction). The global window is bounded by
+    # sources × B by construction, never by the data.
+    w_b = Window.partitionBy("bucket")
+    w_s = Window.partitionBy("source")
+    w_all = Window.partitionBy()
+    enriched = (
+        src_b.withColumn("c_c", F.sum("c_s").over(w_b))
+        .withColumn("t_s", F.sum("c_s").over(w_s).cast("double"))
+        .withColumn("t_c", F.sum("c_s").over(w_all).cast("double"))
+    )
+    p_s = (F.col("c_s") + 1.0) / (F.col("t_s") + KL_BUCKETS)
+    p_c = (F.col("c_c") + 1.0) / (F.col("t_c") + KL_BUCKETS)
+    return (
+        enriched.groupBy("source")
+        .agg(
+            F.sum("c_s").alias("n_tokens"),
+            F.round(F.sum(p_s * (F.log(p_s) - F.log(p_c))), 4).alias("kl_vs_corpus"),
+        )
+    )
+
+
+T_TOKEN_KL_DRIFT_SQL = f"""
+WITH rows_ AS (
+    SELECT source,
+           CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % {KL_BUCKETS} AS bucket
+    FROM (
+        SELECT source,
+               unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
+                                  x -> x <> '')) AS tok
+        FROM documents
+    )
+),
+src_b AS (
+    SELECT source, bucket, COUNT(*) AS c_s FROM rows_ GROUP BY source, bucket
+),
+cor_b AS (
+    SELECT bucket, COUNT(*) AS c_c FROM rows_ GROUP BY bucket
+),
+src_tot AS (
+    SELECT source, CAST(SUM(c_s) AS DOUBLE) AS t_s FROM src_b GROUP BY source
+),
+cor_tot AS (
+    SELECT CAST(SUM(c_c) AS DOUBLE) AS t_c FROM cor_b
+)
+SELECT s.source,
+       CAST(SUM(s.c_s) AS BIGINT) AS n_tokens,
+       ROUND(SUM(((s.c_s + 1.0) / (st.t_s + {KL_BUCKETS}))
+                 * (ln((s.c_s + 1.0) / (st.t_s + {KL_BUCKETS}))
+                    - ln((c.c_c + 1.0) / (ct.t_c + {KL_BUCKETS})))), 4) AS kl_vs_corpus
+FROM src_b s
+JOIN cor_b c USING (bucket)
+JOIN src_tot st USING (source)
+CROSS JOIN cor_tot ct
+GROUP BY s.source
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# t_source_caps — per-source document capping (host/domain balancing)
+# ---------------------------------------------------------------------------
+
+SOURCE_CAP = 15  # max documents any one source may contribute
+
+
+def t_source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministically cap each source's contribution at ``SOURCE_CAP``
+    docs: rank within source by md5(doc_id) (a uniform, seedless,
+    engine-agnostic shuffle), keep the first CAP.
+
+    Scale shape: ONE window partitioned by source — partition count =
+    domain count (millions at web scale, so parallelism is wide), and a
+    hot domain's partition holds only that domain's rows. For a domain
+    too big for one task, the rank-free equivalent ("keep iff
+    md5 < per-source threshold") computes the threshold from a
+    per-source count + a quantile of the hash — but the plain window is
+    the right default. Output keeps every doc with its rank so the
+    downstream filter (keep=true) is a free predicate.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
+    )
+    return docs.select(
+        "doc_id",
+        "source",
+        F.row_number().over(w).cast("int").alias("rk"),
+    ).withColumn("keep", F.col("rk") <= SOURCE_CAP)
+
+
+T_SOURCE_CAPS_SQL = f"""
+SELECT doc_id, source,
+       CAST(ROW_NUMBER() OVER (
+           PARTITION BY source
+           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+       ) AS INTEGER) AS rk,
+       ROW_NUMBER() OVER (
+           PARTITION BY source
+           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+       ) <= {SOURCE_CAP} AS keep
+FROM documents
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# t_temperature_mix — temperature-scaled source sampling weights (α = 0.5)
+# ---------------------------------------------------------------------------
+
+
+def t_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source token share p_s and temperature-scaled sampling weight
+    w_s = √n_s / Σ√n (α = 0.5), plus boost = w_s / p_s (the up/down-
+    sampling factor a data loader applies).
+
+    The fact-table touch is one tokenize+hash-agg; everything after
+    runs on the source dimension. The only order-sensitive float
+    reduction (Σ√n_s) folds over sources sorted by name — both engines
+    execute the identical IEEE addition sequence.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    counts = (
+        docs.withColumn("__n", F.size(tokenize(F.col("text"))))
+        .groupBy("source")
+        .agg(F.sum("__n").cast("long").alias("n_tokens"))
+    )
+    totals = counts.agg(
+        F.sum("n_tokens").cast("long").alias("t_tok"),
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct("source", "n_tokens"))),
+            F.lit(0.0),
+            lambda acc, x: acc + F.sqrt(x["n_tokens"].cast("double")),
+        ).alias("t_sqrt"),
+    )
+    return (
+        counts.crossJoin(F.broadcast(totals))  # 1-row totals side
+        .select(
+            "source",
+            "n_tokens",
+            (F.col("n_tokens").cast("double") / F.col("t_tok").cast("double")).alias(
+                "share"
+            ),
+            (F.sqrt(F.col("n_tokens").cast("double")) / F.col("t_sqrt")).alias(
+                "weight"
+            ),
+        )
+        .withColumn("boost", F.col("weight") / F.col("share"))
+    )
+
+
+T_TEMPERATURE_MIX_SQL = f"""
+WITH counts AS (
+    SELECT source, CAST(SUM(len({TOKS_SQL})) AS BIGINT) AS n_tokens
+    FROM documents GROUP BY source
+),
+totals AS (
+    SELECT CAST(SUM(n_tokens) AS BIGINT) AS t_tok,
+           list_reduce(
+               list_transform(list(n_tokens ORDER BY source, n_tokens),
+                              x -> sqrt(CAST(x AS DOUBLE))),
+               (a, b) -> a + b
+           ) AS t_sqrt
+    FROM counts
+)
+SELECT source, n_tokens,
+       CAST(n_tokens AS DOUBLE) / CAST(t_tok AS DOUBLE) AS share,
+       sqrt(CAST(n_tokens AS DOUBLE)) / t_sqrt AS weight,
+       (sqrt(CAST(n_tokens AS DOUBLE)) / t_sqrt)
+         / (CAST(n_tokens AS DOUBLE) / CAST(t_tok AS DOUBLE)) AS boost
+FROM counts CROSS JOIN totals
 """.strip()

@@ -1,4 +1,7 @@
-"""Multi-way-join warehouse analytics (TPC-H-shaped) + event attribution.
+"""Multi-way-join warehouse analytics (TPC-H-shaped), event attribution
+and Markov transitions, and distribution statistics (``a_gini``,
+``a_benford``, ``a_ks_test``, ``a_ks_test_binned``, ``a_chi_square``,
+``a_source_lang_entropy``).
 
 The reference's reports are 2-3-way star joins over its own fact
 (SAMPLE-REPORTS.md); these queries exercise the relational core the way a
@@ -23,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.order import global_cumsum_multi, pin_with_range_bucket
+from .common import file_size_row_bound
 from .testdata import load_table
 
 # ---------------------------------------------------------------------------
@@ -33,7 +38,10 @@ Q3_SEGMENT_MOD = 3  # stand-in for c_mktsegment: customers with key%5==3
 Q3_CUTOFF = "1996-01-01"
 
 
-def q_shipping_priority(spark: SparkSession, sf_dir: str, top_k: int = 10) -> DataFrame:
+Q3_TOP_K = 10
+
+
+def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unshipped-revenue priority list: for a customer segment and a date
     cutoff, the top orders by discounted revenue of their pre-cutoff
     lineitems. The classic selective-dimension → fact pattern.
@@ -62,7 +70,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str, top_k: int = 10) -> Da
         .groupBy("l_orderkey", "o_orderdate")
         .agg(rev_cents.alias("revenue_cents"))
         .orderBy(F.desc("revenue_cents"), F.asc("l_orderkey"))
-        .limit(top_k)
+        .limit(Q3_TOP_K)
     )
 
 
@@ -78,7 +86,7 @@ WHERE c.c_custkey % 5 = {Q3_SEGMENT_MOD}
   AND o.o_orderdate < TIMESTAMP '{Q3_CUTOFF}'
 GROUP BY l.l_orderkey, o.o_orderdate
 ORDER BY revenue_cents DESC, l.l_orderkey ASC
-LIMIT 10
+LIMIT {Q3_TOP_K}
 """.strip()
 
 
@@ -322,9 +330,9 @@ def a_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feed back through the SAME final Spark expressions (all casts,
     # divisions and the ROUND happen JVM-side — bit-identical to the
     # distributed tier, pytest-pinned). 3 jobs → 1.
-    from .round5d import _file_size_row_bound
+    from .common import file_size_row_bound
 
-    cust_rows = _file_size_row_bound(sf_dir, table="customer")
+    cust_rows = file_size_row_bound(sf_dir, table="customer")
     if cust_rows is not None and cust_rows <= _GINI_DRIVER_MAX_ROWS:
         from decimal import Decimal
 
@@ -562,4 +570,498 @@ SELECT digit, n,
            - CASE digit {_BENFORD_CASE} END) AS abs_dev
 FROM counts
 ORDER BY digit
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# a_ks_test — exact two-sample Kolmogorov–Smirnov drift statistic
+# ---------------------------------------------------------------------------
+
+KS_TYPE_A = "view"
+
+KS_TYPE_B = "click"
+
+KS_ALPHA_C = 1.358  # c(α) for α = 0.05 in the large-sample KS rejection rule
+
+
+_KS_EXACT_DISTINCT_MAX = 2_000_000
+
+
+def a_ks_test(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    max_distinct: int = _KS_EXACT_DISTINCT_MAX,
+    on_exceed: str = "error",
+) -> DataFrame:
+    """D = sup_x |F_a(x) − F_b(x)| between the `value` distributions of
+    two event types, plus the α=0.05 large-sample significance verdict
+    (reject iff D > c(α)·√((n1+n2)/(n1·n2))).
+
+    Exactness: D is maximized as the INTEGER |c1·n2 − c2·n1| (DECIMAL(38)
+    products — a trillion-row sample cannot overflow), divided by n1·n2
+    once at the end; ECDF steps only move at distinct values, so the
+    input first compresses to one row per distinct value (groupBy — at
+    unbounded value cardinality you'd bin first, trading exactness for a
+    bounded grid).
+
+    Cardinality guard (sf10 probe: the distinct-value histogram
+    GROWS with a near-continuous `value` column — 13.6 s at 100× facts
+    and worsening with cardinality): a one-pass ``approx_count_distinct``
+    probe runs first, and above ``max_distinct`` the unbounded plan does
+    not silently ship — ``on_exceed="error"`` (default) raises with a
+    pointer at `a_ks_test_binned` (the bounded-grid PRODUCTION mode;
+    binned D lower-bounds exact D), ``on_exceed="delegate"`` returns the
+    binned result outright. Same measured-cost-switch discipline as
+    `shingle_pairs_jaccard`'s Σdf² probe.
+
+    Scale shape: the cumulative counts come from ONE bucketed
+    global-cumsum pass (`operators/order.py` — range-partitioned
+    windows + broadcast bucket offsets, never a single-partition
+    window), carrying both samples' sums in the same pass.
+    """
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull() & F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B)
+    )
+    # metadata short-circuit before the probe JOB: distinct ≤ rows, and
+    # the parquet footers carry the EXACT row count for free (no job, no
+    # compression assumptions). The approx_count_distinct job only runs
+    # when the footers cannot rule scale out.
+    bound = file_size_row_bound(sf_dir)
+    if bound is not None and bound <= max_distinct:
+        approx = 0
+    else:
+        approx = ev.agg(F.approx_count_distinct("value").alias("d")).collect()[0][
+            "d"
+        ]
+    if approx > max_distinct:
+        if on_exceed == "delegate":
+            return a_ks_test_binned(spark, sf_dir)
+        raise ValueError(
+            f"a_ks_test: ~{approx:,} distinct values exceeds the exact-mode "
+            f"bound ({max_distinct:,}); the distinct-value histogram would "
+            "grow unboundedly with cardinality. Use a_ks_test_binned (fixed "
+            f"{KS_BINS}-bin grid, conservative lower-bound D) or pass "
+            "on_exceed='delegate' / a larger max_distinct explicitly."
+        )
+    g = ev.groupBy("value").agg(
+        F.sum(F.when(F.col("event_type") == KS_TYPE_A, 1).otherwise(0)).alias("d1"),
+        F.sum(F.when(F.col("event_type") == KS_TYPE_B, 1).otherwise(0)).alias("d2"),
+    )
+    # DRIVER tier (the a_mad_outliers discipline): when the
+    # histogram is PROVABLY small — footer rows or the approx probe
+    # (with 2× headroom for its error band) under the cap — ONE job
+    # collects it and the cumulative sweep runs in exact Python integers;
+    # the statistic then feeds back through the SAME Spark expressions
+    # as literals, so every cast/divide happens JVM-side, bit-identical
+    # to the distributed tier (pytest-pinned). 4 jobs → 1.
+    small = (bound is not None and bound <= _KS_DRIVER_MAX_ROWS) or (
+        0 < approx <= _KS_DRIVER_MAX_ROWS // 2
+    )
+    if small:
+        hist = sorted(
+            (float(r["value"]), int(r["d1"]), int(r["d2"])) for r in g.collect()
+        )
+        n1 = sum(d1 for _, d1, _ in hist)
+        n2 = sum(d2 for _, _, d2 in hist)
+        if n1 and n2:
+            max_diff = 0
+            c1 = c2 = 0
+            for _, d1, d2 in hist:
+                c1 += d1
+                c2 += d2
+                diff_i = abs(c1 * n2 - c2 * n1)
+                if diff_i > max_diff:
+                    max_diff = diff_i
+            return _ks_finalize(spark, n1, n2, max_diff)
+    # pin the DISTINCT-VALUE histogram once — the bucket-bounds agg
+    # doubles as the materializing action (pin_with_range_bucket), so
+    # the remaining consumers (totals collect, main cumsum pass) read
+    # cached blocks instead of re-running the events scan + groupBy.
+    # The pinned table is the compressed histogram (distinct values),
+    # never the fact — bounded by value cardinality at any corpus size
+    # (bin first when unbounded, per the exactness note above).
+    g, bucket = pin_with_range_bucket(g, F.col("value"))
+    # the cumsum's driver-side prefix pass already ends on the grand
+    # totals — embed n1/n2 as literals instead of a second aggregation
+    # job + broadcast join over g
+    gt: dict = {}
+    cum = global_cumsum_multi(
+        g,
+        F.col("value"),
+        {"c1": F.col("d1"), "c2": F.col("d2")},
+        bucket,
+        grand_totals=gt,
+    )
+    n1, n2 = int(gt["c1"]), int(gt["c2"])
+    dec = "decimal(38,0)"
+    diff = F.abs(
+        F.col("c1").cast(dec) * F.lit(n2) - F.col("c2").cast(dec) * F.lit(n1)
+    )
+    res = (
+        cum.agg(F.max(diff).alias("max_diff"))
+        .select(
+            F.lit(n1).cast("long").alias("n1"),
+            F.lit(n2).cast("long").alias("n2"),
+            (
+                F.col("max_diff").cast("double")
+                / (F.lit(n1).cast("double") * F.lit(n2).cast("double"))
+            ).alias("ks_stat"),
+        )
+    )
+    return res.withColumn("significant", F.col("ks_stat") > _ks_crit())
+
+
+def _ks_crit() -> F.Column:
+    """α=0.05 rejection threshold expression over n1/n2 columns."""
+    return F.lit(KS_ALPHA_C) * F.sqrt(
+        (F.col("n1") + F.col("n2")).cast("double")
+        / (F.col("n1").cast("double") * F.col("n2").cast("double"))
+    )
+
+
+# Collect the exact distinct-value histogram when it provably fits the
+# driver (~262k (double, long, long) rows ≈ 6 MB) — bounded by footer
+# rows or the approx-distinct probe with 2× headroom, never a guess.
+_KS_DRIVER_MAX_ROWS = 262_144
+
+
+def _ks_finalize(spark: SparkSession, n1: int, n2: int, max_diff: int) -> DataFrame:
+    """The exact integers feed the SAME final expressions the
+    distributed tier uses (JVM-side casts/divides — bit-identical)."""
+    from decimal import Decimal
+
+    res = spark.range(1).select(
+        F.lit(n1).cast("long").alias("n1"),
+        F.lit(n2).cast("long").alias("n2"),
+        (
+            F.lit(Decimal(max_diff)).cast("decimal(38,0)").cast("double")
+            / (F.lit(n1).cast("double") * F.lit(n2).cast("double"))
+        ).alias("ks_stat"),
+    )
+    return res.withColumn("significant", F.col("ks_stat") > _ks_crit())
+
+
+A_KS_TEST_SQL = f"""
+WITH ev AS (
+    SELECT value, event_type FROM events
+    WHERE value IS NOT NULL AND event_type IN ('{KS_TYPE_A}', '{KS_TYPE_B}')
+),
+g AS (
+    SELECT value,
+           SUM(CASE WHEN event_type = '{KS_TYPE_A}' THEN 1 ELSE 0 END) AS d1,
+           SUM(CASE WHEN event_type = '{KS_TYPE_B}' THEN 1 ELSE 0 END) AS d2
+    FROM ev GROUP BY value
+),
+cum AS (
+    SELECT value,
+           CAST(SUM(d1) OVER (ORDER BY value) AS BIGINT) AS c1,
+           CAST(SUM(d2) OVER (ORDER BY value) AS BIGINT) AS c2
+    FROM g
+),
+tot AS (SELECT CAST(SUM(d1) AS BIGINT) AS n1, CAST(SUM(d2) AS BIGINT) AS n2 FROM g),
+m AS (
+    SELECT MIN(n1) AS n1, MIN(n2) AS n2,
+           MAX(ABS(CAST(c1 AS DECIMAL(38,0)) * n2
+                   - CAST(c2 AS DECIMAL(38,0)) * n1)) AS max_diff
+    FROM cum CROSS JOIN tot
+),
+r AS (
+    SELECT n1, n2,
+           CAST(max_diff AS DOUBLE)
+             / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) AS ks_stat
+    FROM m
+)
+SELECT n1, n2, ks_stat,
+       ks_stat > {KS_ALPHA_C} * SQRT(CAST(n1 + n2 AS DOUBLE)
+             / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))) AS significant
+FROM r
+""".strip()
+
+
+KS_BINS = 256
+
+
+def a_ks_test_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binned two-sample KS — the PRODUCTION-SCALE mode of `a_ks_test`.
+
+    The exact test compresses the input to one row per DISTINCT value;
+    an sf10 probe measured that histogram growing with the
+    near-continuous `value` cardinality (13.6 s at 100× facts), exactly
+    the unbounded-cardinality case the exact twin's docstring defers to
+    binning. Here the ECDFs live on a fixed ``KS_BINS`` grid over
+    [min, max]: ONE hash aggregation reduces any corpus to ≤256 rows,
+    and every later step (cumsum window, totals, sup) runs on that
+    bounded table — the global window is scale-safe BECAUSE its input
+    is bounded by construction, never by the data. Binned D is a lower
+    bound of exact D (sup restricted to bin boundaries), so
+    `significant` is conservative. min/max come from an exact
+    aggregation (IEEE-identical across engines); bin arithmetic is
+    pure double ops + floor, bit-identical in DuckDB."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull() & F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B)
+    )
+    mm = ev.agg(F.min("value").alias("vmin"), F.max("value").alias("vmax"))
+    width = F.col("vmax") - F.col("vmin")
+    bin_col = F.when(width == 0, F.lit(0)).otherwise(
+        F.least(
+            F.lit(KS_BINS - 1),
+            F.floor((F.col("value") - F.col("vmin")) / width * KS_BINS).cast("int"),
+        )
+    )
+    g = (
+        ev.crossJoin(F.broadcast(mm))
+        .select(bin_col.alias("bin"), "event_type")
+        .groupBy("bin")
+        .agg(
+            F.sum(F.when(F.col("event_type") == KS_TYPE_A, 1).otherwise(0)).alias("d1"),
+            F.sum(F.when(F.col("event_type") == KS_TYPE_B, 1).otherwise(0)).alias("d2"),
+        )
+    )
+    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
+    cum = g.select(
+        F.sum("d1").over(w).alias("c1"), F.sum("d2").over(w).alias("c2")
+    )
+    tot = g.agg(
+        F.sum("d1").cast("long").alias("n1"), F.sum("d2").cast("long").alias("n2")
+    )
+    dec = "decimal(38,0)"
+    m = (
+        cum.crossJoin(F.broadcast(tot))
+        .agg(
+            F.min("n1").alias("n1"),
+            F.min("n2").alias("n2"),
+            F.max(
+                F.abs(
+                    F.col("c1").cast(dec) * F.col("n2")
+                    - F.col("c2").cast(dec) * F.col("n1")
+                )
+            ).alias("max_diff"),
+        )
+    )
+    res = m.select(
+        "n1",
+        "n2",
+        (
+            F.col("max_diff").cast("double")
+            / (F.col("n1").cast("double") * F.col("n2").cast("double"))
+        ).alias("ks_stat"),
+    )
+    crit = F.lit(KS_ALPHA_C) * F.sqrt(
+        (F.col("n1") + F.col("n2")).cast("double")
+        / (F.col("n1").cast("double") * F.col("n2").cast("double"))
+    )
+    return res.withColumn("significant", F.col("ks_stat") > crit)
+
+
+A_KS_TEST_BINNED_SQL = f"""
+WITH ev AS (
+    SELECT value, event_type FROM events
+    WHERE value IS NOT NULL AND event_type IN ('{KS_TYPE_A}', '{KS_TYPE_B}')
+),
+mm AS (SELECT MIN(value) AS vmin, MAX(value) AS vmax FROM ev),
+g AS (
+    SELECT CASE WHEN vmax = vmin THEN 0
+           ELSE LEAST({KS_BINS - 1},
+                CAST(FLOOR((value - vmin) / (vmax - vmin) * {KS_BINS}) AS INTEGER))
+           END AS bin,
+           SUM(CASE WHEN event_type = '{KS_TYPE_A}' THEN 1 ELSE 0 END) AS d1,
+           SUM(CASE WHEN event_type = '{KS_TYPE_B}' THEN 1 ELSE 0 END) AS d2
+    FROM ev CROSS JOIN mm GROUP BY 1
+),
+cum AS (
+    SELECT CAST(SUM(d1) OVER (ORDER BY bin) AS BIGINT) AS c1,
+           CAST(SUM(d2) OVER (ORDER BY bin) AS BIGINT) AS c2
+    FROM g
+),
+tot AS (SELECT CAST(SUM(d1) AS BIGINT) AS n1, CAST(SUM(d2) AS BIGINT) AS n2 FROM g),
+m AS (
+    SELECT MIN(n1) AS n1, MIN(n2) AS n2,
+           MAX(ABS(CAST(c1 AS DECIMAL(38,0)) * n2
+                   - CAST(c2 AS DECIMAL(38,0)) * n1)) AS max_diff
+    FROM cum CROSS JOIN tot
+),
+r AS (
+    SELECT n1, n2,
+           CAST(max_diff AS DOUBLE)
+             / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) AS ks_stat
+    FROM m
+)
+SELECT n1, n2, ks_stat,
+       ks_stat > {KS_ALPHA_C} * SQRT(CAST(n1 + n2 AS DOUBLE)
+             / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))) AS significant
+FROM r
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# a_chi_square — Pearson χ² independence: event type × weekend
+# ---------------------------------------------------------------------------
+
+
+def a_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-row χ² independence test between event_type and
+    weekend/weekday — "does the event mix shift on weekends" as a
+    statistic instead of an eyeball.
+
+    The cell difference o·N − r·c stays in exact 128-bit integers
+    (Spark DECIMAL(38,0) / DuckDB HUGEINT — room for a trillion-row
+    table); squaring and dividing run in correctly-rounded double, so
+    both engines emit the same bits. The ≤ (types × 2)-term sum folds
+    in (event_type, wk) order.
+
+    Plan shape: the fact is scanned ONCE into the partial/final
+    contingency hash-agg, then the whole enum-sized table collects into
+    one sorted array row and margins/N/dof/χ² are nested higher-order
+    folds over that array — zero joins, zero fact re-scans (the naive
+    cells→margins→totals join formulation re-scanned the fact 5×:
+    derived aggregates over an unmaterialized frame don't hit
+    ReuseExchange because each consumer's partial-agg differs).
+    """
+    ev = load_table(spark, sf_dir, "events")
+    cells = (
+        ev.select(
+            "event_type",
+            F.when(F.dayofweek("ts").isin(1, 7), 1).otherwise(0).alias("wk"),
+        )
+        .groupBy("event_type", "wk")
+        .agg(F.count("*").cast("long").alias("o"))
+    )
+    one = cells.agg(
+        F.array_sort(F.collect_list(F.struct("event_type", "wk", "o"))).alias("arr")
+    )
+    arr = F.col("arr")
+    long0 = F.lit(0).cast("long")
+    n_expr = F.aggregate(arr, long0, lambda a, x: a + x["o"])
+    dec = "decimal(38,0)"
+
+    def margin(x, field):
+        # row/column total for x's category: an inner fold over the same
+        # tiny array (nested lambda — x is captured from the outer scope)
+        return F.aggregate(
+            arr,
+            long0,
+            lambda a, y: a
+            + F.when(y[field] == x[field], y["o"]).otherwise(long0),
+        )
+
+    def term(x):
+        num = (
+            x["o"].cast(dec) * F.col("n")
+            - margin(x, "event_type").cast(dec) * margin(x, "wk")
+        ).cast("double")
+        return (num * num) / (
+            F.col("n").cast("double")
+            * margin(x, "event_type").cast("double")
+            * margin(x, "wk").cast("double")
+        )
+
+    return (
+        one.withColumn("n", n_expr)
+        .withColumn(
+            "dof",
+            (
+                (F.size(F.array_distinct(F.transform(arr, lambda x: x["event_type"]))) - 1)
+                * (F.size(F.array_distinct(F.transform(arr, lambda x: x["wk"]))) - 1)
+            ).cast("int"),
+        )
+        .withColumn("chi2", F.aggregate(arr, F.lit(0.0), lambda a, x: a + term(x)))
+        .select("n", "dof", "chi2")
+    )
+
+
+A_CHI_SQUARE_SQL = """
+WITH cells AS (
+    SELECT event_type,
+           CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END AS wk,
+           CAST(COUNT(*) AS BIGINT) AS o
+    FROM events GROUP BY 1, 2
+),
+rows_ AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS r FROM cells GROUP BY 1),
+cols_ AS (SELECT wk, CAST(SUM(o) AS BIGINT) AS c FROM cells GROUP BY 1),
+tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
+terms AS (
+    SELECT cells.event_type, cells.wk,
+           (CAST(CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c AS DOUBLE)
+            * CAST(CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c AS DOUBLE))
+             / (CAST(n AS DOUBLE) * CAST(r AS DOUBLE) * CAST(c AS DOUBLE)) AS term
+    FROM cells
+    JOIN rows_ USING (event_type)
+    JOIN cols_ USING (wk)
+    CROSS JOIN tot
+)
+SELECT MIN(n) AS n,
+       CAST((COUNT(DISTINCT event_type) - 1) * (COUNT(DISTINCT wk) - 1)
+            AS INTEGER) AS dof,
+       list_reduce(
+           list_transform(list(term ORDER BY event_type, wk), x -> x),
+           (a, b) -> a + b
+       ) AS chi2
+FROM terms CROSS JOIN tot
+""".strip()
+
+
+# ---------------------------------------------------------------------------
+# a_source_lang_entropy — language-mix diversity per source
+# ---------------------------------------------------------------------------
+
+
+def a_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source language-mix entropy in nats:
+    H = ln(n) − (Σ_l c_l·ln c_l)/n over the source's language counts.
+
+    The fact-table touch is one (source, lang) hash-agg; everything
+    after runs on the (source × lang) dimension. The Σ c·ln c fold is
+    ordered by language so both engines fold identically — but ln()
+    itself is NOT correctly rounded (JVM Math.log and libm disagree by
+    1 ulp on some inputs, observed at src0/sf0.01), so the final
+    statistic rounds to 4 decimals, the t_token_kl_drift convention.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    cells = docs.groupBy("source", "lang").agg(F.count("*").cast("long").alias("c"))
+    return (
+        cells.groupBy("source")
+        .agg(
+            F.sum("c").cast("long").alias("n_docs"),
+            F.count("*").cast("int").alias("n_langs"),
+            F.aggregate(
+                F.array_sort(F.collect_list(F.struct("lang", "c"))),
+                F.lit(0.0),
+                lambda acc, x: acc
+                + x["c"].cast("double") * F.log(x["c"].cast("double")),
+            ).alias("_fold"),
+        )
+        .select(
+            "source",
+            "n_docs",
+            "n_langs",
+            F.round(
+                F.log(F.col("n_docs").cast("double"))
+                - F.col("_fold") / F.col("n_docs").cast("double"),
+                4,
+            ).alias("entropy"),
+        )
+    )
+
+
+A_SOURCE_LANG_ENTROPY_SQL = """
+WITH cells AS (
+    SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c
+    FROM documents GROUP BY 1, 2
+),
+g AS (
+    SELECT source,
+           CAST(SUM(c) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) AS INTEGER) AS n_langs,
+           list_reduce(
+               list_transform(list(c ORDER BY lang, c),
+                              x -> CAST(x AS DOUBLE) * ln(CAST(x AS DOUBLE))),
+               (a, b) -> a + b
+           ) AS fold
+    FROM cells GROUP BY source
+)
+SELECT source, n_docs, n_langs,
+       ROUND(ln(CAST(n_docs AS DOUBLE)) - fold / CAST(n_docs AS DOUBLE), 4)
+         AS entropy
+FROM g
 """.strip()

@@ -45,7 +45,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# cores of a local session: $SPARK_GRAFT_CPUS, else the cores this process
+# may run on
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 # HotSpot flags of a local session's driver JVM (module docstring):
 # one C1 and one C2 thread, tier-4 thresholds x4 (JDK 17 defaults 5000, 600,
@@ -59,15 +61,15 @@ LOCAL_JVM_PROFILE = " ".join((
 ))
 
 
-def tiny_partitions(cpus: int | None = None) -> int:
+def tiny_partitions() -> int:
     """Shuffle-partition count for the sub-2-GiB tier, proportional to
-    the core count (cores / 4, floor 2). 8 at the default 32 cores — the
-    value every r8-r15 A/B measured optimal there — and scaled down with
-    fewer cores so per-task launch overhead stays amortized the same way
-    AND the driver's low-core scaling probe actually sees fewer-way
-    parallelism (r15 VERDICT item 1: a literal 8 made the 8-vs-32-core
-    comparison degenerate to ≈1 everywhere)."""
-    return max(2, (cpus if cpus is not None else DEFAULT_CPUS) // 4)
+    the core count (cores / 4, floor 2). 8 on 32 cores — the value every
+    A/B there measured optimal — and scaled down with fewer cores so
+    per-task launch overhead stays amortized the same way AND the
+    driver's low-core scaling probe actually sees fewer-way parallelism
+    (a literal 8 made the 8-vs-32-core comparison degenerate to ≈1
+    everywhere)."""
+    return max(2, DEFAULT_CPUS // 4)
 
 
 def tuned_conf_for(sf_dir: str) -> dict[str, str]:
@@ -78,17 +80,16 @@ def tuned_conf_for(sf_dir: str) -> dict[str, str]:
     that scale instead of one fixed local default:
 
     - **< 2 GiB input** (the local testdata SFs): ``cores / 4`` shuffle
-      partitions (8 on the default 32-core session — the r8-r15 measured
-      optimum) and AQE off. Sub-GiB shuffles fit one task; with 32
-      partitions the per-task launch overhead dominates, and AQE's
-      per-stage barrier + re-plan round-trip (~60-80 ms/stage measured
-      at sf0.1, see tools/profile_constant.py) buys nothing when the
-      static plan is already the right one. Every AQE benefit
-      (coalescing, skew splits) targets shuffles orders of magnitude
-      bigger than the whole input. The partition count DERIVES from
-      ``$SPARK_GRAFT_CPUS`` rather than pinning the literal 8 (r15
-      VERDICT item 1): the per-task-overhead argument that sizes 8
-      partitions for 32 cores sizes 2 for 8 cores, and a count
+      partitions (8 on 32 cores — the measured optimum there) and AQE
+      off. Sub-GiB shuffles fit one task; with 32 partitions the
+      per-task launch overhead dominates, and AQE's per-stage barrier +
+      re-plan round-trip (~60-80 ms/stage measured at sf0.1) buys
+      nothing when the static plan is already the right one. Every AQE
+      benefit (coalescing, skew splits) targets shuffles orders of
+      magnitude bigger than the whole input. The partition count DERIVES
+      from the session's core count rather than pinning the literal 8:
+      the per-task-overhead argument that sizes 8 partitions for 32
+      cores sizes 2 for 8 cores, and a count
       proportional to cores is what makes the driver's low-vs-high-core
       scaling probe measure parallelism instead of reading ≈1 on every
       query (both core counts executing the same 8-task schedule).

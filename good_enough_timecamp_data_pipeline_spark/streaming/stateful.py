@@ -145,7 +145,7 @@ SHARED_CHUNKS = 3
 
 
 @shared.artifact("stream_chunk_staging")
-def _chunked_events_dir(spark: SparkSession, sf_dir: str) -> str:
+def chunked_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Land events as time-ordered parquet chunks for multi-batch streaming.
 
     FileStreamSource replays files in *modification-time* order, and a
@@ -187,10 +187,10 @@ def _chunked_events_dir(spark: SparkSession, sf_dir: str) -> str:
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run stateful sessionization over events as a multi-batch stream;
     returns the closed sessions as a batch DataFrame."""
-    src = _chunked_events_dir(spark, sf_dir)
+    src = chunked_events_dir(spark, sf_dir)
     stream = (
         # schema from a batch read of the chunks we just wrote (they carry
-        # the normalized timestamp ts — see _chunked_events_dir)
+        # the normalized timestamp ts — see chunked_events_dir)
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
@@ -238,7 +238,7 @@ def _ewma_user(
     """Per-user λ=½ EWMA carried ACROSS micro-batches: the monitoring
     twin of `_sessionize_user` — state is two numbers per key, each
     event is scored against the smoothed history (ratio rule, matching
-    plans/round5e.py::e_ewma_anomaly) and emitted with its running
+    plans/advanced.py::e_ewma_anomaly) and emitted with its running
     mean. Arithmetic is `0.5*x + 0.5*prev` in IEEE doubles — the exact
     sequence the batch twin `batch_ewma_final` folds, so streaming and
     batch agree BIT-exactly per user."""
@@ -339,7 +339,7 @@ def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event EWMA scores over events as a multi-batch stream; the
     state handoff between micro-batches is the point (one big batch
     would make the carry trivially correct)."""
-    src = _chunked_events_dir(spark, sf_dir)
+    src = chunked_events_dir(spark, sf_dir)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)

@@ -42,11 +42,10 @@ from pyspark.sql import types as T
 
 
 def stream_shards() -> str:
-    # default = cores/4 (≡ the measured-optimal 8 on the default 32-core
-    # session), so the driver's low-core scaling probe sees fewer-way
-    # state-op parallelism instead of the same 8-task schedule at every
-    # core count (r15 VERDICT item 1 — same derivation as
-    # session.tiny_partitions)
+    # default = cores/4 (≡ the measured-optimal 8 on 32 cores), so the
+    # driver's low-core scaling probe sees fewer-way state-op parallelism
+    # instead of the same 8-task schedule at every core count (same
+    # derivation as session.tiny_partitions)
     from ..session import tiny_partitions
 
     return os.environ.get("SPARK_GRAFT_STREAM_SHARDS", str(tiny_partitions()))
@@ -459,11 +458,11 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator, which emits only closed sessions). Sessions spanning
     micro-batches are merged by the state store; equality with the batch
     plan is asserted in tests. The chunks are the session-shared staging
-    (see _chunked_events_dir), so the three chunk-replay entries share
+    (see chunked_events_dir), so the three chunk-replay entries share
     one events scan."""
-    from .stateful import _chunked_events_dir
+    from .stateful import chunked_events_dir
 
-    src = _chunked_events_dir(spark, sf_dir)
+    src = chunked_events_dir(spark, sf_dir)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
@@ -544,7 +543,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The production shape for continuous corpus ingestion: the corpus'
     (doc, band, bucket) rows and shingle rows are the WRITE-ONCE parquet
-    artifact (`plans.northstar._corpus_lsh_index` →
+    artifact (`plans.common.corpus_lsh_index` →
     `dedup.build_lsh_index_cached`, the same artifact
     `d_incremental_dedup` probes and the harnesses prewarm); the stream
     then feeds document batches, and each micro-batch runs
@@ -566,12 +565,12 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators import dedup
-    from ..plans.northstar import _corpus_lsh_index
+    from ..plans.common import corpus_lsh_index
 
     # land (or reuse) the write-once corpus index BEFORE the stream
     # starts — the artifact the probes address; a no-op when the harness
     # prewarmed it
-    _corpus_lsh_index(spark, sf_dir)
+    corpus_lsh_index(spark, sf_dir)
 
     stream_dir = _lsh_feed_dir(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="stream_lsh_out_")
@@ -588,7 +587,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # re-resolve through the session memo (artifact-backed parquet
         # reads) rather than capturing outer frames — same defensive
         # pattern as before, now against the shared write-once artifact
-        index = _corpus_lsh_index(batch.sparkSession, sf_dir)
+        index = corpus_lsh_index(batch.sparkSession, sf_dir)
         dedup.incremental_lsh_pairs(
             batch, index=index, n=5, num_hashes=64, bands=32, threshold=0.5
         ).write.mode("append").parquet(out_dir)
@@ -620,7 +619,7 @@ KNOWN_EVENT_TYPES = ("view", "click", "purchase", "signup", "error")
 def validation_reasons() -> "F.Column":
     """Ordered array of failed validation rules for an events row —
     empty array = valid. Single codegen projection (same shape as
-    round5.t_quality_gate's reason codes); extend by appending rules.
+    curation.t_quality_gate's reason codes); extend by appending rules.
     """
     rules = [
         ("null_ts", F.col("ts").isNull()),

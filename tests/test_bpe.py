@@ -191,7 +191,7 @@ def test_bpe_encode_round_trip(spark):
 def test_bpe_catalog_entry_matches_reference_on_testdata(spark, sf_dir):
     """t_bpe_train (the catalog entry: 1-in-11 doc sample, 6 merges) against
     the pure-Python fold over the same sampled documents."""
-    from good_enough_timecamp_data_pipeline_spark.plans.round6 import t_bpe_train
+    from good_enough_timecamp_data_pipeline_spark.plans.advanced import t_bpe_train
 
     texts = [
         r["text"]

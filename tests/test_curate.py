@@ -2,11 +2,19 @@
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from good_enough_timecamp_data_pipeline_spark import curate as cur
+
+
+def _fresh_key(prefix: str) -> str:
+    """An index cache key no earlier run used. The write-once LSH index
+    cache outlives pytest's numbered temp dirs, so a key built from
+    ``tmp_path`` alone can name an artifact an earlier session left."""
+    return f"{prefix}_{uuid.uuid4().hex}"
 
 
 @pytest.fixture()
@@ -393,7 +401,7 @@ def test_compact_index_closes_cross_arrival_blind_spot(spark, tmp_path):
     # key is unique per test invocation: compact_index builds with
     # expect_fresh=True, so a key recycled across pytest sessions would
     # (correctly) be rejected as a stale-index hazard
-    gen2_key = f"test_compact_gen2_{tmp_path}"
+    gen2_key = _fresh_key("test_compact_gen2")
     compacted = cur.compact_index(
         spark, corpus_path, accepted_path, str(tmp_path / "gen2"),
         lsh_cache_key=gen2_key,
@@ -514,7 +522,7 @@ def test_compact_index_rejects_reused_key(spark, tmp_path):
     spark.createDataFrame([(2, acc)], "doc_id long, text string").write.parquet(
         accepted_path
     )
-    key = f"test_reused_key_{tmp_path}"
+    key = _fresh_key("test_reused_key")
     cur.compact_index(
         spark, corpus_path, accepted_path, str(tmp_path / "gen2"),
         lsh_cache_key=key,
@@ -586,7 +594,7 @@ def test_curate_cli_compact(spark, tmp_path):
         "--compact",
         "--input", accepted_path,
         "--corpus", corpus_path,
-        "--corpus-key", f"test_cli_compact_{tmp_path}",
+        "--corpus-key", _fresh_key("test_cli_compact"),
         "--output", out,
     ])
     assert rc == 0

@@ -204,9 +204,9 @@ def test_peak_concurrency_partitioned_sweep(spark, sf_dir):
     never an unpartitioned (single-partition) global sort — and the plan
     must contain no join at all: concurrency comes from explode + window,
     not a time-range self-join."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round5
+    from good_enough_timecamp_data_pipeline_spark.plans import advanced
 
-    plan = plan_of(round5.e_peak_concurrency(spark, sf_dir))
+    plan = plan_of(advanced.e_peak_concurrency(spark, sf_dir))
     assert "Window" in plan
     m = re.search(r"Window \[[^\]]*\], \[([^\]]*)\]", plan)
     assert m and "event_type" in m.group(1) and "day" in m.group(1)
@@ -220,9 +220,9 @@ def test_cooccurrence_vocab_join_broadcasts(spark, sf_dir):
     broadcast of that 1-row side — no corpus-keyed equi-join at all, so
     the only corpus shuffle left is the map-side-combined ≤C(V,2)-key
     pair aggregation."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round5
+    from good_enough_timecamp_data_pipeline_spark.plans import extensions
 
-    df = round5.t_cooccurrence_lift(spark, sf_dir)
+    df = extensions.t_cooccurrence_lift(spark, sf_dir)
     df.collect()  # AQE finalizes join strategies at runtime
     plan = plan_of(df)
     assert "TakeOrderedAndProject" in plan
@@ -236,9 +236,9 @@ def test_cooccurrence_vocab_join_broadcasts(spark, sf_dir):
 
 def test_quality_gate_is_single_stage_projection(spark, sf_dir):
     """Five rules, one scan: no shuffle, no join, codegen'd end to end."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round5
+    from good_enough_timecamp_data_pipeline_spark.plans import curation
 
-    plan = plan_of(round5.t_quality_gate(spark, sf_dir))
+    plan = plan_of(curation.t_quality_gate(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert plan.lstrip().startswith("*(1) Project")  # codegen'd single stage
@@ -285,9 +285,9 @@ def test_attribution_single_user_shuffle(spark, sf_dir):
 def test_source_caps_single_window_pruned_scan(spark, sf_dir):
     """Host balancing: one window partitioned by source, scan pruned to
     (doc_id, source), no joins anywhere."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round5e
+    from good_enough_timecamp_data_pipeline_spark.plans import training
 
-    plan = plan_of(round5e.t_source_caps(spark, sf_dir))
+    plan = plan_of(training.t_source_caps(spark, sf_dir))
     doc_scans = [s for s in scans(plan) if "documents.parquet" in s]
     m = re.search(r"ReadSchema: struct<([^>]*)", doc_scans[0])
     assert m.group(1).split(",") == ["doc_id:bigint", "source:string"]
@@ -301,9 +301,9 @@ def test_chi_square_single_scan_no_joins(spark, sf_dir):
     """The contingency test must scan the fact ONCE (pruned to ts +
     event_type) and compute margins as array folds — the naive
     cells→margins→totals join formulation re-scanned the fact 5×."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round5e
+    from good_enough_timecamp_data_pipeline_spark.plans import warehouse
 
-    df = round5e.a_chi_square(spark, sf_dir)
+    df = warehouse.a_chi_square(spark, sf_dir)
     df.collect()
     # the AQE final-plan string appends an "== Initial Plan ==" section
     # that repeats the whole subtree — count scans in the final part only
@@ -318,9 +318,9 @@ def test_chi_square_single_scan_no_joins(spark, sf_dir):
 def test_ngram_novelty_no_pairwise_join(spark, sf_dir):
     """Novelty is join-shaped (shingles x first-seen dim) — never a
     shingle SELF-join pair enumeration and never a window."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round5f
+    from good_enough_timecamp_data_pipeline_spark.plans import northstar
 
-    plan = plan_of(round5f.t_ngram_novelty(spark, sf_dir))
+    plan = plan_of(northstar.t_ngram_novelty(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
     # exactly one join: doc-shingles against the first-seen aggregate
@@ -410,9 +410,9 @@ def test_lateral_topn_decorrelates_to_one_window(spark, sf_dir):
     """x_lateral_topn's correlated LATERAL LIMIT must decorrelate into a
     per-key ranked window — ONE shuffle on the correlation key, never a
     per-outer-row re-scan (nested loop / cartesian)."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round6
+    from good_enough_timecamp_data_pipeline_spark.plans import relational
 
-    plan = plan_of(round6.x_lateral_topn(spark, sf_dir))
+    plan = plan_of(relational.x_lateral_topn(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "Window" in plan  # the decorrelated rank
     # customer is scanned once, nation once
@@ -438,9 +438,9 @@ def test_lm_perplexity_is_two_corpus_passes(spark, sf_dir):
 def test_variant_shred_single_scan_partial_agg(spark, sf_dir):
     """f_variant_shred is one scan + one partially-aggregated hash agg —
     the shape that scales to any event volume."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round6
+    from good_enough_timecamp_data_pipeline_spark.plans import relational
 
-    plan = plan_of(round6.f_variant_shred(spark, sf_dir))
+    plan = plan_of(relational.f_variant_shred(spark, sf_dir))
     assert len(scans(plan)) == 1
     assert plan.count("HashAggregate") >= 2  # partial + final
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan

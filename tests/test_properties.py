@@ -140,7 +140,7 @@ def test_sweepline_concurrency_matches_bruteforce(spark, sessions):
     import math
     import tempfile
 
-    from good_enough_timecamp_data_pipeline_spark.plans import round5
+    from good_enough_timecamp_data_pipeline_spark.plans import advanced
 
     anchor = datetime.datetime(2024, 3, 1, 23, 0, 0)  # near midnight on purpose
     rows = [
@@ -164,7 +164,7 @@ def test_sweepline_concurrency_matches_bruteforce(spark, sessions):
         )
         got = {
             r["day"].toordinal(): r["peak_concurrency"]
-            for r in round5.e_peak_concurrency(spark, d).collect()
+            for r in advanced.e_peak_concurrency(spark, d).collect()
         }
 
     US_DAY = 86_400_000_000

@@ -1,5 +1,5 @@
-"""Property-based invariants for the round-5e statistical operators:
-random inputs checked against brute-force Python references (SURVEY §5
+"""Property-based invariants for the chi-square, EWMA and temperature-mix
+operators: random inputs checked against brute-force Python references (SURVEY §5
 strategy — the Spark plan must agree with the obvious sequential
 program, bit-exactly where the design promises it)."""
 
@@ -12,7 +12,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-import good_enough_timecamp_data_pipeline_spark.plans.round5e as r5e
+from good_enough_timecamp_data_pipeline_spark.plans import advanced, training, warehouse
 from good_enough_timecamp_data_pipeline_spark.operators.graph import kcore
 
 
@@ -45,7 +45,7 @@ def test_chi_square_matches_reference_on_random_tables(spark, rows):
         F.col("ts_s").cast("timestamp").alias("ts"), "event_type"
     )
     (r,) = _with_tables(
-        r5e, {"events": df}, lambda: r5e.a_chi_square(spark, "unused").collect()
+        warehouse, {"events": df}, lambda: warehouse.a_chi_square(spark, "unused").collect()
     )
     cells = collections.Counter(rows)
     n = len(rows)
@@ -80,9 +80,9 @@ def test_ewma_closed_form_equals_recurrence_on_random_series(spark, counts):
         "event_id", F.col("ts_s").cast("timestamp").alias("ts")
     )
     out = _with_tables(
-        r5e,
+        advanced,
         {"events": df},
-        lambda: r5e.e_ewma_anomaly(spark, "unused").orderBy("d").collect(),
+        lambda: advanced.e_ewma_anomaly(spark, "unused").orderBy("d").collect(),
     )
     assert len(out) == len(counts)
     s = None
@@ -109,9 +109,9 @@ def test_temperature_mix_random_sources(spark, sizes):
         doc_id += 1
     df = spark.createDataFrame(docs, "doc_id long, text string, source string")
     rows = _with_tables(
-        r5e,
+        training,
         {"documents": df},
-        lambda: r5e.t_temperature_mix(spark, "unused").collect(),
+        lambda: training.t_temperature_mix(spark, "unused").collect(),
     )
     t_sqrt = 0.0
     for i, n in sorted(enumerate(sizes), key=lambda kv: f"s{kv[0]}"):

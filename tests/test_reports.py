@@ -341,3 +341,48 @@ def test_oracle_crumb_matches_spark_on_null_names_cycles_and_deep_chains(spark):
     assert crumbs["mid"] == "Root"
     assert (crumbs["x"], crumbs["y"]) == ("Y / X", "X / Y")
     assert crumbs["k12"] == " / ".join(f"K{i}" for i in range(4, 13))
+
+
+def test_task_report_matches_duckdb_with_entries_on_a_cycle(spark):
+    """A parent cycle X↔Y with a 60 s entry on X: each member counts the
+    other once, so both engines give X and Y 60 s each; the oracle's
+    closure also runs unchanged on Spark and gives DuckDB's pairs."""
+    import duckdb
+
+    from good_enough_timecamp_data_pipeline_spark.operators.hierarchy import closure_sql
+
+    tasks = [("x", "y", "X", 1), ("y", "x", "Y", 1), ("r", None, "R", 1), ("c", "r", "C", 1)]
+    entries = [("x", 60), ("c", 30)]
+    ours = reports.task_budget_report(
+        spark.createDataFrame(
+            tasks, "task_id string, parent_id string, name string, budgeted long"
+        ),
+        spark.createDataFrame(entries, "task_id string, duration long"),
+    ).collect()
+
+    def values(rows):
+        return ", ".join(
+            "(" + ", ".join("NULL" if v is None else repr(v) for v in row) + ")"
+            for row in rows
+        )
+
+    tasks_sql = (
+        "SELECT task_id, parent_id, name, CAST(budgeted AS BIGINT) AS budgeted "
+        "FROM (VALUES " + values(tasks) + ") v(task_id, parent_id, name, budgeted)"
+    )
+    want = duckdb.sql(reports.oracle_task_budget_sql(
+        tasks_sql,
+        "SELECT task_id, CAST(duration AS BIGINT) AS duration FROM (VALUES "
+        + values(entries) + ") v(task_id, duration)",
+    )).fetchall()
+    assert [tuple(r) for r in ours] == want
+    seconds = {r.task_id: r.cumulative_seconds for r in ours}
+    assert (seconds["x"], seconds["y"], seconds["r"]) == (60, 60, 30)
+
+    pairs_sql = (
+        "WITH RECURSIVE " + closure_sql(tasks_sql)
+        + " SELECT descendant_id, ancestor_id, depth FROM task_hierarchy"
+    )
+    on_spark = sorted(tuple(r) for r in spark.sql(pairs_sql).collect())
+    assert on_spark == sorted(duckdb.sql(pairs_sql).fetchall())
+    assert [p for p in on_spark if p[0] == "x"] == [("x", "x", 0), ("x", "y", 1)]

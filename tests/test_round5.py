@@ -1,5 +1,6 @@
-"""Round-5 operator tests: sweep-line concurrency, quality gate,
-co-occurrence lift, PageRank."""
+"""Operator tests: sweep-line concurrency, quality gate, co-occurrence
+lift, bucketed range join, ordered paths, salted skew join, CDC apply,
+SemDeDup, DSIR and KL drift, PageRank."""
 
 from __future__ import annotations
 
@@ -9,7 +10,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from good_enough_timecamp_data_pipeline_spark.operators.graph import pagerank
-from good_enough_timecamp_data_pipeline_spark.plans import round5, testdata
+from good_enough_timecamp_data_pipeline_spark.plans import (
+    advanced,
+    analytics,
+    curation,
+    extensions,
+    northstar,
+    relational,
+    testdata,
+    training,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -21,7 +31,7 @@ def test_peak_concurrency_matches_bruteforce(spark, sf_dir):
     (evaluate concurrency at every session start, clipped per day)."""
     out = {
         (r["event_type"], r["day"].toordinal()): r["peak_concurrency"]
-        for r in round5.e_peak_concurrency(spark, sf_dir).collect()
+        for r in advanced.e_peak_concurrency(spark, sf_dir).collect()
     }
     ev = testdata.load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
     rows = ev.collect()
@@ -60,7 +70,7 @@ def test_peak_concurrency_matches_bruteforce(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def test_quality_gate_reasons_consistent(spark, sf_dir):
-    rows = round5.t_quality_gate(spark, sf_dir).collect()
+    rows = curation.t_quality_gate(spark, sf_dir).collect()
     assert rows
     for r in rows:
         if r["keep"]:
@@ -82,7 +92,7 @@ def test_quality_gate_rules_recomputed_in_python(spark, sf_dir):
         r["doc_id"]: r["text"]
         for r in testdata.load_table(spark, sf_dir, "documents").collect()
     }
-    for r in round5.t_quality_gate(spark, sf_dir).collect():
+    for r in curation.t_quality_gate(spark, sf_dir).collect():
         text = docs[r["doc_id"]]
         toks = re.split(r"\s+", text.strip())
         n = len(toks)
@@ -108,7 +118,7 @@ def test_quality_gate_rules_recomputed_in_python(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def test_cooccurrence_lift_bounds_and_bruteforce(spark, sf_dir):
-    res = round5.t_cooccurrence_lift(spark, sf_dir).collect()
+    res = extensions.t_cooccurrence_lift(spark, sf_dir).collect()
     assert res
     vocab = {r["tok_a"] for r in res} | {r["tok_b"] for r in res}
     assert len(vocab) <= 40
@@ -192,7 +202,7 @@ def test_range_join_bucketed_matches_bruteforce(spark, sf_dir):
 
     out = {
         r["anchor_id"]: r["n_within"]
-        for r in round5.x_range_join_bucketed(spark, sf_dir).collect()
+        for r in advanced.x_range_join_bucketed(spark, sf_dir).collect()
     }
     rows = (
         testdata.load_table(spark, sf_dir, "events")
@@ -218,7 +228,7 @@ def test_range_join_bucketed_no_cartesian(spark, sf_dir):
     """The plan must be an equi-join on (user_id, bucket) — no broadcast
     nested loop, no cartesian product."""
     plan = (
-        round5.x_range_join_bucketed(spark, sf_dir)
+        advanced.x_range_join_bucketed(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -278,7 +288,7 @@ def test_ordered_paths_matches_python(spark, sf_dir):
 
     got = [
         (r["path"], r["n_journeys"])
-        for r in round5.x_ordered_paths(spark, sf_dir).collect()
+        for r in analytics.x_ordered_paths(spark, sf_dir).collect()
     ]
     rows = (
         testdata.load_table(spark, sf_dir, "events")
@@ -312,7 +322,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
 
     got = {
         r["user_id"]: (r["n_events"], r["n_anomalous"])
-        for r in round5.j_salted_skew_join(spark, sf_dir).collect()
+        for r in relational.j_salted_skew_join(spark, sf_dir).collect()
     }
     rows = (
         testdata.load_table(spark, sf_dir, "events")
@@ -337,7 +347,7 @@ def test_salted_join_spreads_hot_key(spark):
     plan's (key, salt) join condition)."""
     from pyspark.sql import functions as SF
 
-    from good_enough_timecamp_data_pipeline_spark.plans.round5 import (
+    from good_enough_timecamp_data_pipeline_spark.plans.relational import (
         J_SALTED_SKEW_JOIN_SQL,  # noqa: F401 - imported for parity visibility
     )
 
@@ -359,7 +369,7 @@ def test_salted_join_spreads_hot_key(spark):
 
     with tempfile.TemporaryDirectory() as d:
         fact.write.mode("overwrite").parquet(f"{d}/events.parquet")
-        res = round5.j_salted_skew_join(spark, d)
+        res = relational.j_salted_skew_join(spark, d)
         hot = {r["user_id"]: r for r in res.collect()}.get(1)
     # hot user: 1800 events incl. all 200 spikes of 500 vs avg ~64 →
     # every spike anomalous
@@ -376,7 +386,7 @@ def test_cdc_apply_matches_python(spark, sf_dir):
 
     got = {
         r["key"]: (r["value"], r["last_event_id"], r["n_changes"])
-        for r in round5.c_cdc_apply(spark, sf_dir).collect()
+        for r in advanced.c_cdc_apply(spark, sf_dir).collect()
     }
     rows = (
         testdata.load_table(spark, sf_dir, "events")
@@ -425,7 +435,7 @@ def test_semdedup_finds_injected_duplicates(spark, sf_dir):
         emb.unionByName(dups).write.mode("overwrite").parquet(
             f"{d}/embeddings.parquet"
         )
-        res = round5.t_semdedup(spark, d, threshold=0.999).collect()
+        res = northstar.t_semdedup(spark, d, threshold=0.999).collect()
     total_pairs = sum(r["n_dup_pairs"] for r in res)
     assert total_pairs >= n_injected  # every injected exact dup detected
     for r in res:
@@ -445,7 +455,7 @@ def test_dsir_weights_favor_target_domain(spark, sf_dir):
 
     w = {
         r["doc_id"]: r["dsir_logw"]
-        for r in round5.t_dsir_weights(spark, sf_dir).collect()
+        for r in training.t_dsir_weights(spark, sf_dir).collect()
     }
     assert w and all(math.isfinite(v) for v in w.values())
     src = {
@@ -462,11 +472,11 @@ def test_dsir_resample_is_weighted_and_deterministic(spark, sf_dir):
     """Gumbel-top-k must (a) be rerun-identical (md5 noise, no rand) and
     (b) actually sample ∝ exp(weight): the selected docs' mean log-weight
     exceeds the corpus mean."""
-    a = [tuple(r) for r in round5.t_dsir_resample(spark, sf_dir).collect()]
-    b = [tuple(r) for r in round5.t_dsir_resample(spark, sf_dir).collect()]
+    a = [tuple(r) for r in training.t_dsir_resample(spark, sf_dir).collect()]
+    b = [tuple(r) for r in training.t_dsir_resample(spark, sf_dir).collect()]
     assert a == b and len(a) == 100
     sel_mean = sum(r[1] for r in a) / len(a)
-    all_w = [r["dsir_logw"] for r in round5.t_dsir_weights(spark, sf_dir).collect()]
+    all_w = [r["dsir_logw"] for r in training.t_dsir_weights(spark, sf_dir).collect()]
     assert sel_mean > sum(all_w) / len(all_w)
 
 
@@ -503,16 +513,16 @@ def test_round5_queries_survive_empty_tables(spark):
         spark.createDataFrame([], events_schema).write.parquet(f"{d}/events.parquet")
         spark.createDataFrame([], docs_schema).write.parquet(f"{d}/documents.parquet")
         for fn in (
-            round5.e_peak_concurrency,
-            round5.t_quality_gate,
-            round5.t_cooccurrence_lift,
-            round5.x_range_join_bucketed,
-            round5.x_ordered_paths,
-            round5.j_salted_skew_join,
-            round5.c_cdc_apply,
-            round5.t_dsir_weights,
-            round5.t_dsir_resample,
-            round5.t_token_kl_drift,
+            advanced.e_peak_concurrency,
+            curation.t_quality_gate,
+            extensions.t_cooccurrence_lift,
+            advanced.x_range_join_bucketed,
+            analytics.x_ordered_paths,
+            relational.j_salted_skew_join,
+            advanced.c_cdc_apply,
+            training.t_dsir_weights,
+            training.t_dsir_resample,
+            training.t_token_kl_drift,
         ):
             assert fn(spark, d).collect() == [], fn.__name__
 
@@ -527,7 +537,7 @@ def test_kl_drift_zero_when_source_is_corpus(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         docs.write.parquet(f"{d}/documents.parquet")
-        rows = round5.t_token_kl_drift(spark, d).collect()
+        rows = training.t_token_kl_drift(spark, d).collect()
     assert len(rows) == 1 and rows[0]["kl_vs_corpus"] == 0.0
 
 
@@ -552,4 +562,4 @@ def test_pagerank_empty_and_semdedup_loud_on_no_vectors(spark):
     with tempfile.TemporaryDirectory() as d:
         spark.createDataFrame([], emb_schema).write.parquet(f"{d}/embeddings.parquet")
         with pytest.raises(ValueError, match="no vectors"):
-            round5.t_semdedup(spark, d).collect()
+            northstar.t_semdedup(spark, d).collect()

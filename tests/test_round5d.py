@@ -1,6 +1,5 @@
-"""Sequential-reference tests for the round-5d batch
-(plans/round5d.py): hashed classifier, containment pairs, KS test,
-interval coverage. Each operator is recomputed in plain Python on tiny
+"""Sequential-reference tests for the hashed classifier, containment
+pairs, KS test and interval coverage. Each operator is recomputed in plain Python on tiny
 hand-built inputs and compared exactly."""
 
 import hashlib
@@ -8,7 +7,8 @@ import hashlib
 from pyspark.sql import functions as F
 
 from good_enough_timecamp_data_pipeline_spark.operators.dedup import containment_pairs
-from good_enough_timecamp_data_pipeline_spark.plans import round5d
+from good_enough_timecamp_data_pipeline_spark.operators import classifier
+from good_enough_timecamp_data_pipeline_spark.plans import advanced, curation, warehouse
 
 
 def _md5int8(s: str) -> int:
@@ -16,14 +16,14 @@ def _md5int8(s: str) -> int:
 
 
 def _py_weight(tok: str) -> int:
-    b = _md5int8(tok) % round5d.HASH_BUCKETS
-    return (_md5int8("w" + str(b)) % round5d.WEIGHT_MOD) - 1000
+    b = _md5int8(tok) % classifier.HASH_BUCKETS
+    return (_md5int8("w" + str(b)) % classifier.WEIGHT_MOD) - 1000
 
 
 def test_hashed_classifier_matches_python_model(spark, sf_dir):
     out = {
         r.doc_id: r
-        for r in round5d.t_hashed_classifier(spark, sf_dir).limit(2000).collect()
+        for r in curation.t_hashed_classifier(spark, sf_dir).limit(2000).collect()
     }
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20).collect()
     assert docs
@@ -78,8 +78,8 @@ def test_ks_test_matches_scipy_style_reference(spark, sf_dir):
         .select("event_type", "value")
         .collect()
     )
-    a = sorted(r.value for r in ev if r.event_type == round5d.KS_TYPE_A)
-    b = sorted(r.value for r in ev if r.event_type == round5d.KS_TYPE_B)
+    a = sorted(r.value for r in ev if r.event_type == warehouse.KS_TYPE_A)
+    b = sorted(r.value for r in ev if r.event_type == warehouse.KS_TYPE_B)
     n1, n2 = len(a), len(b)
     xs = sorted(set(a) | set(b))
     import bisect
@@ -88,7 +88,7 @@ def test_ks_test_matches_scipy_style_reference(spark, sf_dir):
         abs(bisect.bisect_right(a, x) * n2 - bisect.bisect_right(b, x) * n1)
         for x in xs
     )
-    row = round5d.a_ks_test(spark, sf_dir).collect()[0]
+    row = warehouse.a_ks_test(spark, sf_dir).collect()[0]
     assert (row.n1, row.n2) == (n1, n2)
     assert abs(row.ks_stat - d / (n1 * n2)) < 1e-15
 
@@ -102,11 +102,11 @@ def test_ks_test_binned_bounds_exact_and_matches_reference(spark, sf_dir):
         .select("event_type", "value")
         .collect()
     )
-    a = [r.value for r in ev if r.event_type == round5d.KS_TYPE_A]
-    b = [r.value for r in ev if r.event_type == round5d.KS_TYPE_B]
+    a = [r.value for r in ev if r.event_type == warehouse.KS_TYPE_A]
+    b = [r.value for r in ev if r.event_type == warehouse.KS_TYPE_B]
     vals = a + b
     vmin, vmax = min(vals), max(vals)
-    B = round5d.KS_BINS
+    B = warehouse.KS_BINS
 
     def bin_of(x):
         if vmax == vmin:
@@ -126,10 +126,10 @@ def test_ks_test_binned_bounds_exact_and_matches_reference(spark, sf_dir):
         c1 += ha[k]
         c2 += hb[k]
         d = max(d, abs(c1 * n2 - c2 * n1))
-    row = round5d.a_ks_test_binned(spark, sf_dir).collect()[0]
+    row = warehouse.a_ks_test_binned(spark, sf_dir).collect()[0]
     assert (row.n1, row.n2) == (n1, n2)
     assert abs(row.ks_stat - d / (n1 * n2)) < 1e-15
-    exact = round5d.a_ks_test(spark, sf_dir).collect()[0]
+    exact = warehouse.a_ks_test(spark, sf_dir).collect()[0]
     assert row.ks_stat <= exact.ks_stat + 1e-15
 
 
@@ -141,11 +141,11 @@ def test_ks_exact_cardinality_guard(spark, sf_dir):
     import pytest
 
     with pytest.raises(ValueError, match="a_ks_test_binned"):
-        round5d.a_ks_test(spark, sf_dir, max_distinct=0)
-    delegated = round5d.a_ks_test(
+        warehouse.a_ks_test(spark, sf_dir, max_distinct=0)
+    delegated = warehouse.a_ks_test(
         spark, sf_dir, max_distinct=0, on_exceed="delegate"
     ).collect()[0]
-    binned = round5d.a_ks_test_binned(spark, sf_dir).collect()[0]
+    binned = warehouse.a_ks_test_binned(spark, sf_dir).collect()[0]
     assert (delegated.n1, delegated.n2, delegated.ks_stat) == (
         binned.n1,
         binned.n2,
@@ -174,7 +174,7 @@ def test_interval_coverage_merges_overlaps(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
     )
-    start_us, end_us = round5d._session_bounds()
+    start_us, end_us = advanced._session_bounds()
     s = df.select("user_id", start_us.alias("s_us"), end_us.alias("e_us"))
     # islands: [0,15min)+[15,20min) — interval 3 starts at the running max
     # end (15 min) so with half-open semantics it opens a NEW island
@@ -222,10 +222,8 @@ def test_ks_driver_tier_matches_distributed(spark, sf_dir, monkeypatch):
     """a_ks_test's driver-histogram tier (the sf0.01 default — footer
     rows fit the cap) must be value-identical to the distributed cumsum
     tier (forced by zeroing the cap)."""
-    from good_enough_timecamp_data_pipeline_spark.plans import round5d
-
-    fast = round5d.a_ks_test(spark, sf_dir).collect()[0]
-    monkeypatch.setattr(round5d, "_KS_DRIVER_MAX_ROWS", 0)
-    slow = round5d.a_ks_test(spark, sf_dir).collect()[0]
+    fast = warehouse.a_ks_test(spark, sf_dir).collect()[0]
+    monkeypatch.setattr(warehouse, "_KS_DRIVER_MAX_ROWS", 0)
+    slow = warehouse.a_ks_test(spark, sf_dir).collect()[0]
     assert tuple(fast) == tuple(slow)
     assert fast["n1"] > 0 and fast["n2"] > 0

@@ -1,5 +1,4 @@
-"""Sequential-reference tests for the round-5e batch (plans/round5e.py):
-source caps, temperature mixing, chi-square independence, closed-form
+"""Sequential-reference tests for source caps, temperature mixing, chi-square independence, closed-form
 EWMA, and k-core peeling. Each operator is recomputed in plain Python
 (on the sf0.001 tables or hand-built graphs) and compared exactly."""
 
@@ -13,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from good_enough_timecamp_data_pipeline_spark.operators.graph import kcore
-from good_enough_timecamp_data_pipeline_spark.plans import round5e
+from good_enough_timecamp_data_pipeline_spark.plans import advanced, curation, northstar, training, warehouse
 
 
 # ---------------------------------------------------------------------------
@@ -22,7 +21,7 @@ from good_enough_timecamp_data_pipeline_spark.plans import round5e
 
 
 def test_source_caps_matches_python_md5_rank(spark, sf_dir):
-    out = {r.doc_id: r for r in round5e.t_source_caps(spark, sf_dir).collect()}
+    out = {r.doc_id: r for r in training.t_source_caps(spark, sf_dir).collect()}
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "source"])
     by_src = collections.defaultdict(list)
     for doc_id, source in zip(docs.doc_id, docs.source):
@@ -33,18 +32,18 @@ def test_source_caps_matches_python_md5_rank(spark, sf_dir):
             r = out[doc_id]
             assert r.source == source
             assert r.rk == rk0 + 1, (source, doc_id)
-            assert r.keep == (r.rk <= round5e.SOURCE_CAP)
+            assert r.keep == (r.rk <= training.SOURCE_CAP)
 
 
 def test_source_caps_bounds_every_source(spark, sf_dir):
     kept = (
-        round5e.t_source_caps(spark, sf_dir)
+        training.t_source_caps(spark, sf_dir)
         .filter("keep")
         .groupBy("source")
         .count()
         .collect()
     )
-    assert kept and all(r["count"] <= round5e.SOURCE_CAP for r in kept)
+    assert kept and all(r["count"] <= training.SOURCE_CAP for r in kept)
 
 
 # ---------------------------------------------------------------------------
@@ -53,7 +52,7 @@ def test_source_caps_bounds_every_source(spark, sf_dir):
 
 
 def test_temperature_mix_matches_python(spark, sf_dir):
-    out = {r.source: r for r in round5e.t_temperature_mix(spark, sf_dir).collect()}
+    out = {r.source: r for r in training.t_temperature_mix(spark, sf_dir).collect()}
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["source", "text"])
     n_tok = collections.Counter()
     for source, text in zip(docs.source, docs.text):
@@ -72,7 +71,7 @@ def test_temperature_mix_matches_python(spark, sf_dir):
 
 
 def test_temperature_mix_flattens_the_distribution(spark, sf_dir):
-    rows = round5e.t_temperature_mix(spark, sf_dir).collect()
+    rows = training.t_temperature_mix(spark, sf_dir).collect()
     assert abs(sum(r.weight for r in rows) - 1.0) < 1e-9
     assert abs(sum(r.share for r in rows) - 1.0) < 1e-9
     # α<1 temperature scaling: sources below average share get boosted,
@@ -89,7 +88,7 @@ def test_temperature_mix_flattens_the_distribution(spark, sf_dir):
 
 
 def test_chi_square_matches_python(spark, sf_dir):
-    (r,) = round5e.a_chi_square(spark, sf_dir).collect()
+    (r,) = warehouse.a_chi_square(spark, sf_dir).collect()
     ev = pd.read_parquet(f"{sf_dir}/events.parquet", columns=["ts", "event_type"])
     cells = collections.Counter()
     for ts, et in zip(ev.ts, ev.event_type):
@@ -122,14 +121,12 @@ def test_chi_square_zero_on_independent_table(spark):
     df = spark.createDataFrame(rows, "ts_s string, event_type string").select(
         F.col("ts_s").cast("timestamp").alias("ts"), "event_type"
     )
-    import good_enough_timecamp_data_pipeline_spark.plans.round5e as m
-
-    orig = m.load_table
+    orig = warehouse.load_table
     try:
-        m.load_table = lambda spark, sf_dir, name: df
-        (r,) = m.a_chi_square(spark, "unused").collect()
+        warehouse.load_table = lambda spark, sf_dir, name: df
+        (r,) = warehouse.a_chi_square(spark, "unused").collect()
     finally:
-        m.load_table = orig
+        warehouse.load_table = orig
     assert r.chi2 == 0.0 and r.dof == 1 and r.n == 40
 
 
@@ -142,7 +139,7 @@ def test_ewma_matches_sequential_recurrence(spark, sf_dir):
     """The closed-form cumsum must equal the literal per-day recurrence
     s_t = ½x_t + ½s_{t−1} BIT-EXACTLY: every quantity is a dyadic
     rational that double arithmetic represents exactly at this horizon."""
-    out = round5e.e_ewma_anomaly(spark, sf_dir).orderBy("d").collect()
+    out = advanced.e_ewma_anomaly(spark, sf_dir).orderBy("d").collect()
     ev = pd.read_parquet(f"{sf_dir}/events.parquet", columns=["ts"])
     daily = collections.Counter(ts.date() for ts in ev.ts)
     s = None
@@ -187,7 +184,7 @@ def test_ewma_long_horizon_no_bigint_wrap(spark, tmp_path):
     silently wraps at t >= 63 — Spark reduces the shift distance mod 64.
     A 70-day horizon must still match the sequential recurrence exactly."""
     sf = _ewma_events_dir(spark, 70, tmp_path)
-    out = round5e.e_ewma_anomaly(spark, sf).orderBy("d").collect()
+    out = advanced.e_ewma_anomaly(spark, sf).orderBy("d").collect()
     assert len(out) == 70
     s = None
     for t, r in enumerate(out):
@@ -200,9 +197,9 @@ def test_ewma_long_horizon_no_bigint_wrap(spark, tmp_path):
 def test_ewma_past_cap_raises_loudly(spark, tmp_path):
     """Past EWMA_MAX_STEPS the operator must raise, not degrade to
     NULLs via silent decimal overflow."""
-    sf = _ewma_events_dir(spark, round5e.EWMA_MAX_STEPS + 2, tmp_path)
+    sf = _ewma_events_dir(spark, advanced.EWMA_MAX_STEPS + 2, tmp_path)
     with pytest.raises(Exception, match="EWMA_MAX_STEPS"):
-        round5e.e_ewma_anomaly(spark, sf).collect()
+        advanced.e_ewma_anomaly(spark, sf).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -262,11 +259,11 @@ def test_g_kcore_matches_bruteforce_on_testdata(spark, sf_dir):
     the bipartite graph is too thin to hold a 25-core (brute force says
     so too) — the assertion is equality, not non-emptiness; sf0.01 has a
     1370-node core and runs through the same code in the driver gate."""
-    got = {r.node: r.core_degree for r in round5e.g_kcore(spark, sf_dir).collect()}
+    got = {r.node: r.core_degree for r in curation.g_kcore(spark, sf_dir).collect()}
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet", columns=["l_partkey", "l_suppkey"])
     edges = {(int(p), int(s) + 10_000_000) for p, s in zip(li.l_partkey, li.l_suppkey)}
-    assert got == _py_kcore(sorted(edges), round5e.KCORE_K)
-    assert all(d >= round5e.KCORE_K for d in got.values())
+    assert got == _py_kcore(sorted(edges), curation.KCORE_K)
+    assert all(d >= curation.KCORE_K for d in got.values())
 
 
 # ---------------------------------------------------------------------------
@@ -278,8 +275,6 @@ def test_round5ef_queries_survive_empty_tables(spark):
     import tempfile
 
     from pyspark.sql import types as T
-
-    from good_enough_timecamp_data_pipeline_spark.plans import round5f
 
     events_schema = T.StructType(
         [
@@ -313,16 +308,16 @@ def test_round5ef_queries_survive_empty_tables(spark):
         spark.createDataFrame([], li_schema).write.parquet(f"{d}/lineitem.parquet")
         # empty → empty result set, never a crash
         for fn in (
-            round5e.t_source_caps,
-            round5e.e_ewma_anomaly,
-            round5e.g_kcore,
-            round5f.d_threshold_curve,
-            round5f.t_ngram_novelty,
-            round5f.a_source_lang_entropy,
-            round5e.t_temperature_mix,
+            training.t_source_caps,
+            advanced.e_ewma_anomaly,
+            curation.g_kcore,
+            northstar.d_threshold_curve,
+            northstar.t_ngram_novelty,
+            warehouse.a_source_lang_entropy,
+            training.t_temperature_mix,
         ):
             assert fn(spark, d).collect() == [], fn.__name__
         # the chi-square summary row degenerates cleanly: 0 observations,
         # 0-term fold → chi2 exactly 0.0 (and trivially non-significant)
-        (r,) = round5e.a_chi_square(spark, d).collect()
+        (r,) = warehouse.a_chi_square(spark, d).collect()
         assert r.n == 0 and r.chi2 == 0.0

@@ -1,5 +1,4 @@
-"""Sequential-reference tests for the round-5f batch (plans/round5f.py):
-language-mix entropy, dedup threshold curve, n-gram novelty."""
+"""Sequential-reference tests for language-mix entropy, dedup threshold curve, n-gram novelty."""
 
 import collections
 import math
@@ -7,11 +6,11 @@ import math
 import pandas as pd
 from pyspark.sql import functions as F
 
-from good_enough_timecamp_data_pipeline_spark.plans import round5f
+from good_enough_timecamp_data_pipeline_spark.plans import northstar, warehouse
 
 
 def test_lang_entropy_matches_python(spark, sf_dir):
-    out = {r.source: r for r in round5f.a_source_lang_entropy(spark, sf_dir).collect()}
+    out = {r.source: r for r in warehouse.a_source_lang_entropy(spark, sf_dir).collect()}
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["source", "lang"])
     cells = collections.Counter(zip(docs.source, docs.lang))
     by_src = collections.defaultdict(dict)
@@ -33,14 +32,12 @@ def test_lang_entropy_degenerate_is_zero(spark):
     df = spark.createDataFrame(
         [(i, "only", "en") for i in range(7)], "doc_id long, source string, lang string"
     )
-    import good_enough_timecamp_data_pipeline_spark.plans.round5f as m
-
-    orig = m.load_table
+    orig = warehouse.load_table
     try:
-        m.load_table = lambda spark, sf_dir, name: df
-        (r,) = m.a_source_lang_entropy(spark, "unused").collect()
+        warehouse.load_table = lambda spark, sf_dir, name: df
+        (r,) = warehouse.a_source_lang_entropy(spark, "unused").collect()
     finally:
-        m.load_table = orig
+        warehouse.load_table = orig
     assert r.entropy == 0.0 and r.n_langs == 1 and r.n_docs == 7
 
 
@@ -50,17 +47,17 @@ def test_threshold_curve_buckets_partition_the_pairs(spark, sf_dir):
     )
     from good_enough_timecamp_data_pipeline_spark.plans.testdata import load_table
 
-    curve = round5f.d_threshold_curve(spark, sf_dir).collect()
+    curve = northstar.d_threshold_curve(spark, sf_dir).collect()
     pairs = shingle_pairs_jaccard(
         load_table(spark, sf_dir, "documents"),
-        threshold=round5f.CURVE_FLOOR,
+        threshold=northstar.CURVE_FLOOR,
         max_shingle_df=None,
     ).collect()
     # bucket counts must partition the pair set computed independently
     ref = collections.Counter(math.floor(p.jaccard * 10) / 10.0 for p in pairs)
     assert {r.bucket: r.n_pairs for r in curve} == dict(ref)
     assert sum(r.n_pairs for r in curve) == len(pairs)
-    assert all(round5f.CURVE_FLOOR <= r.bucket <= 1.0 for r in curve)
+    assert all(northstar.CURVE_FLOOR <= r.bucket <= 1.0 for r in curve)
 
 
 def test_ngram_novelty_matches_python(spark):
@@ -72,14 +69,12 @@ def test_ngram_novelty_matches_python(spark):
         [(1, base), (2, base), (3, half), (4, "too short text")],
         "doc_id long, text string",
     )
-    import good_enough_timecamp_data_pipeline_spark.plans.round5f as m
-
-    orig = m.load_table
+    orig = northstar.load_table
     try:
-        m.load_table = lambda spark, sf_dir, name: df
-        out = {r.doc_id: r for r in m.t_ngram_novelty(spark, "unused").collect()}
+        northstar.load_table = lambda spark, sf_dir, name: df
+        out = {r.doc_id: r for r in northstar.t_ngram_novelty(spark, "unused").collect()}
     finally:
-        m.load_table = orig
+        northstar.load_table = orig
     assert set(out) == {1, 2, 3}
     assert out[1].novelty == 1.0 and out[1].n_sh == 6
     assert out[2].novelty == 0.0  # every shingle first seen in doc 1
@@ -89,7 +84,7 @@ def test_ngram_novelty_matches_python(spark):
 
 
 def test_ngram_novelty_testdata_bounds(spark, sf_dir):
-    rows = round5f.t_ngram_novelty(spark, sf_dir).collect()
+    rows = northstar.t_ngram_novelty(spark, sf_dir).collect()
     assert rows
     assert all(0.0 <= r.novelty <= 1.0 and r.n_novel <= r.n_sh for r in rows)
     # lowest doc_id with shingles is all-novel by construction
@@ -98,7 +93,7 @@ def test_ngram_novelty_testdata_bounds(spark, sf_dir):
 
 
 def test_lsh_quality_perfect_at_pinned_settings(spark, sf_dir):
-    (r,) = round5f.d_lsh_quality(spark, sf_dir).collect()
+    (r,) = northstar.d_lsh_quality(spark, sf_dir).collect()
     assert r.n_exact > 0  # the injected near-dup corpus guarantees pairs
     assert r.n_exact == r.n_lsh == r.n_common
     assert r.recall == 1.0 and r.precision == 1.0
@@ -304,10 +299,10 @@ def test_lsh_quality_sampled_pairs_are_subset(spark, sf_dir):
         shingle_pairs_jaccard,
     )
     from good_enough_timecamp_data_pipeline_spark.plans.northstar import (
-        _docs_near_dup,
+        docs_near_dup,
     )
 
-    docs = _docs_near_dup(spark, sf_dir)
+    docs = docs_near_dup(spark, sf_dir)
     full = {
         (r.id_a, r.id_b)
         for r in shingle_pairs_jaccard(
@@ -324,5 +319,5 @@ def test_lsh_quality_sampled_pairs_are_subset(spark, sf_dir):
     assert full  # fixture guarantees near-dup pairs
     assert sampled <= full
     # and the audit itself runs end-to-end in sampled mode
-    (r,) = round5f.d_lsh_quality(spark, sf_dir, sample_fraction=0.6).collect()
+    (r,) = northstar.d_lsh_quality(spark, sf_dir, sample_fraction=0.6).collect()
     assert r.precision == 1.0  # candidates are exact-verified by construction

@@ -4,12 +4,12 @@ import hashlib
 
 import pandas as pd
 
-from good_enough_timecamp_data_pipeline_spark.plans import round5g
+from good_enough_timecamp_data_pipeline_spark.plans import advanced, curation, extensions, relational
 
 
 def _coord(key: int, salt: str) -> float:
     h = int(hashlib.md5(f"{key}{salt}".encode()).hexdigest()[:8], 16)
-    return (h % round5g.GEO_SPAN_MM) / 1000.0
+    return (h % advanced.GEO_SPAN_MM) / 1000.0
 
 
 def test_geo_grid_join_matches_bruteforce(spark, sf_dir):
@@ -17,12 +17,12 @@ def test_geo_grid_join_matches_bruteforce(spark, sf_dir):
     same squared distances bit-exactly — and nothing extra."""
     got = {
         (r.id_a, r.id_b): r.dist2
-        for r in round5g.x_geo_grid_join(spark, sf_dir).collect()
+        for r in advanced.x_geo_grid_join(spark, sf_dir).collect()
     }
     cust = pd.read_parquet(f"{sf_dir}/customer.parquet", columns=["c_custkey"])
     pts = [(int(k), _coord(int(k), "x"), _coord(int(k), "y")) for k in cust.c_custkey]
     want = {}
-    r2 = round5g.GEO_RADIUS * round5g.GEO_RADIUS
+    r2 = advanced.GEO_RADIUS * advanced.GEO_RADIUS
     for i in range(len(pts)):
         for j in range(i + 1, len(pts)):
             (ia, xa, ya), (ib, xb, yb) = pts[i], pts[j]
@@ -38,7 +38,6 @@ def test_geo_grid_join_finds_cross_cell_pairs(spark):
     """Points on opposite sides of a cell boundary (and diagonal
     neighbors) must still pair — the 3×3 neighborhood explode is what
     makes blocking complete, not just fast."""
-    import good_enough_timecamp_data_pipeline_spark.plans.round5g as m
     from pyspark.sql import functions as F
 
     # craft custkeys irrelevant — monkeypatch geo_points directly
@@ -52,12 +51,12 @@ def test_geo_grid_join_finds_cross_cell_pairs(spark):
         ],
         "id long, x double, y double",
     )
-    orig = m.geo_points
+    orig = advanced.geo_points
     try:
-        m.geo_points = lambda spark, sf_dir: pts
-        got = {(r.id_a, r.id_b) for r in m.x_geo_grid_join(spark, "unused").collect()}
+        advanced.geo_points = lambda spark, sf_dir: pts
+        got = {(r.id_a, r.id_b) for r in advanced.x_geo_grid_join(spark, "unused").collect()}
     finally:
-        m.geo_points = orig
+        advanced.geo_points = orig
     assert (1, 2) in got and (3, 4) in got
     assert all(5 not in p for p in got)
 
@@ -65,7 +64,7 @@ def test_geo_grid_join_finds_cross_cell_pairs(spark):
 def test_array_ops_set_algebra_identities(spark, sf_dir):
     """|A∪B| = |A| + |B| − |A∩B| and |A\\B| = |A| − |A∩B| must hold
     row-by-row, and first_tok is the sorted head of the first half."""
-    rows = round5g.f_array_ops(spark, sf_dir).collect()
+    rows = extensions.f_array_ops(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.n_union == r.n_a + r.n_b - r.n_inter, r
@@ -87,11 +86,11 @@ def test_geo_knn_matches_ring_bruteforce(spark, sf_dir):
     """kNN must equal the brute-force ranking restricted to the same
     3x3 cell ring — ids, ranks, and squared distances bit-exactly."""
     got = {}
-    for r in round5g.x_geo_knn(spark, sf_dir).collect():
+    for r in advanced.x_geo_knn(spark, sf_dir).collect():
         got.setdefault(r.id, []).append((r.rk, r.neighbor_id, r.dist2))
     cust = pd.read_parquet(f"{sf_dir}/customer.parquet", columns=["c_custkey"])
     pts = {int(k): (_coord(int(k), "x"), _coord(int(k), "y")) for k in cust.c_custkey}
-    R = round5g.GEO_RADIUS
+    R = advanced.GEO_RADIUS
     cells = {}
     for i, (x, y) in pts.items():
         cells.setdefault((int(x // R), int(y // R)), []).append(i)
@@ -108,7 +107,7 @@ def test_geo_knn_matches_ring_bruteforce(spark, sf_dir):
                     cand.append(((x - xj) * (x - xj) + (y - yj) * (y - yj), j))
         cand.sort()
         if cand:
-            want[i] = [(rk + 1, j, d2) for rk, (d2, j) in enumerate(cand[: round5g.KNN_K])]
+            want[i] = [(rk + 1, j, d2) for rk, (d2, j) in enumerate(cand[: advanced.KNN_K])]
     assert got == want
     # ranks are contiguous from 1 and distances non-decreasing
     for lst in got.values():
@@ -147,11 +146,11 @@ def test_round5g_queries_survive_empty_tables(spark):
         spark.createDataFrame([], events_schema).write.parquet(f"{d}/events.parquet")
         spark.createDataFrame([], docs_schema).write.parquet(f"{d}/documents.parquet")
         for fn in (
-            round5g.x_geo_grid_join,
-            round5g.x_geo_knn,
-            round5g.f_array_ops,
-            round5g.x_asof_forward,
-            round5g.x_asof_nearest,
+            advanced.x_geo_grid_join,
+            advanced.x_geo_knn,
+            extensions.f_array_ops,
+            relational.x_asof_forward,
+            relational.x_asof_nearest,
         ):
             assert fn(spark, d).collect() == [], fn.__name__
 
@@ -209,8 +208,8 @@ def test_pca_transform_variance_and_determinism(spark, sf_dir):
 
 
 def test_pca_spectrum_entry_shape(spark, sf_dir):
-    rows = round5g.s_pca_spectrum(spark, sf_dir).collect()
-    assert [r.component for r in rows] == list(range(round5g.PCA_K))
+    rows = curation.s_pca_spectrum(spark, sf_dir).collect()
+    assert [r.component for r in rows] == list(range(curation.PCA_K))
     vals = [r.explained_variance for r in rows]
     assert vals == sorted(vals, reverse=True) and all(v >= 0 for v in vals)
 
@@ -256,7 +255,7 @@ def test_kcenter_greedy_matches_python(spark, sf_dir):
 
 
 def test_diverse_sample_coverage_curve(spark, sf_dir):
-    rows = round5g.s_diverse_sample(spark, sf_dir).collect()
+    rows = curation.s_diverse_sample(spark, sf_dir).collect()
     assert [r.pick_order for r in rows] == list(range(len(rows)))
     assert rows[0].radius is None
     radii = [r.radius for r in rows[1:]]
@@ -295,8 +294,8 @@ def test_pq_recall_perfect_on_codebook_representable_corpus(spark):
 
 
 def test_pq_recall_entry_bounds_and_determinism(spark, sf_dir):
-    a = round5g.s_pq_recall(spark, sf_dir).collect()
-    b = round5g.s_pq_recall(spark, sf_dir).collect()
+    a = curation.s_pq_recall(spark, sf_dir).collect()
+    b = curation.s_pq_recall(spark, sf_dir).collect()
     assert a == b  # deterministic end to end
     (r,) = a
     assert r.n_queries > 0
@@ -331,8 +330,8 @@ def test_pq_rerank_restores_recall_floor(spark, sf_dir):
     must lift recall@10 to >= 0.9 even on the structure-free testdata
     embeddings where plain PQ ranking collapses to ~0.2 — and must beat
     the plain ADC ranking it repairs."""
-    (rerank,) = round5g.s_pq_rerank(spark, sf_dir).collect()
-    (plain,) = round5g.s_pq_recall(spark, sf_dir).collect()
+    (rerank,) = curation.s_pq_rerank(spark, sf_dir).collect()
+    (plain,) = curation.s_pq_recall(spark, sf_dir).collect()
     assert rerank.n_queries == plain.n_queries > 0
     assert rerank.mean_recall >= 0.9, rerank
     assert rerank.mean_recall > plain.mean_recall

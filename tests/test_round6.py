@@ -26,7 +26,7 @@ def test_variant_shred_fixture_contract(spark, sf_dir):
 def test_variant_shred_matches_plain_json_path(spark, sf_dir):
     """The VARIANT extraction agrees with the classic get_json_object path
     on the integer fixture — the two schema-on-read tiers are one surface."""
-    from good_enough_timecamp_data_pipeline_spark.plans.round6 import f_variant_shred
+    from good_enough_timecamp_data_pipeline_spark.plans.relational import f_variant_shred
     from good_enough_timecamp_data_pipeline_spark.plans.testdata import load_table
 
     events = load_table(spark, sf_dir, "events")

@@ -49,7 +49,7 @@ def test_variant_shredded_write_prunes_to_field(spark, sf_dir, tmp_path):
 def test_variant_write_shred_entry_matches_read_path(spark, sf_dir):
     """The catalog entry's write→read→extract rollup equals the direct
     JSON-path rollup over the same events."""
-    from good_enough_timecamp_data_pipeline_spark.plans.round7 import (
+    from good_enough_timecamp_data_pipeline_spark.plans.relational import (
         f_variant_write_shred,
     )
 
@@ -72,7 +72,7 @@ def test_variant_write_shred_entry_matches_read_path(spark, sf_dir):
 
 def test_weighted_quantile_reference(spark, sf_dir):
     """a_weighted_quantile against a pure-Python weighted-quantile fold."""
-    from good_enough_timecamp_data_pipeline_spark.plans.round7 import (
+    from good_enough_timecamp_data_pipeline_spark.plans.extensions import (
         a_weighted_quantile,
     )
 
@@ -105,7 +105,7 @@ def test_weighted_quantile_reference(spark, sf_dir):
 
 def test_calibration_bins_sane(spark, sf_dir):
     """Bins partition the corpus; rates are probabilities; bin ids valid."""
-    from good_enough_timecamp_data_pipeline_spark.plans.round7 import (
+    from good_enough_timecamp_data_pipeline_spark.plans.curation import (
         t_calibration_bins,
     )
 

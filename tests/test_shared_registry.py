@@ -11,7 +11,7 @@ import time
 import pytest
 
 from good_enough_timecamp_data_pipeline_spark.plans import catalog, shared, testdata
-from good_enough_timecamp_data_pipeline_spark.streaming.stateful import _chunked_events_dir
+from good_enough_timecamp_data_pipeline_spark.streaming.stateful import chunked_events_dir
 from good_enough_timecamp_data_pipeline_spark.streaming.windows import (
     _deadletter_feed_dir,
     _lsh_feed_dir,
@@ -29,7 +29,7 @@ PREWARM_TAGS = {
     "pq_8x16_train", "stream_chunk_staging", "task_closure_unroll_d3",
     "tf_doc_tok_ws",
 }
-STAGING = (_chunked_events_dir, _lsh_feed_dir, _deadletter_feed_dir)
+STAGING = (chunked_events_dir, _lsh_feed_dir, _deadletter_feed_dir)
 
 
 @pytest.fixture(scope="module")
@@ -82,11 +82,11 @@ def test_staging_dirs_do_not_survive_exit(sf_dir, tmp_path, spare_jvm_memory):
 import sys
 sys.path.insert(0, {REPO!r})
 from good_enough_timecamp_data_pipeline_spark.session import get_spark
-from good_enough_timecamp_data_pipeline_spark.streaming.stateful import _chunked_events_dir
+from good_enough_timecamp_data_pipeline_spark.streaming.stateful import chunked_events_dir
 from good_enough_timecamp_data_pipeline_spark.streaming.windows import (
     _deadletter_feed_dir, _lsh_feed_dir)
 spark = get_spark("registry_exit", shuffle_partitions=2)
-for build in (_chunked_events_dir, _lsh_feed_dir, _deadletter_feed_dir):
+for build in (chunked_events_dir, _lsh_feed_dir, _deadletter_feed_dir):
     print(build(spark, {sf_dir!r}))
 """
     env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")

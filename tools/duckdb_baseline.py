@@ -167,8 +167,8 @@ def main() -> int:
     # artifact additionally publishes its ratio against the SAME-SESSION
     # warm artifact's DuckDB total, so the cold trend can never move
     # with the competitor's page-cache state between measurement days —
-    # tools/baseline_pair.py runs warm-then-cold back-to-back to make
-    # the pairing airtight. The warm artifact is the canonical bar
+    # run the warm protocol, then the cold one, back-to-back to make the
+    # pairing airtight. The warm artifact is the canonical bar
     # number (BASELINE.md); cold is a published diagnostic.
     if os.environ.get("SPARK_GRAFT_SHAPE_WARMUP", "1") == "0":
         warm_path = os.path.join(
