@@ -49,7 +49,7 @@ into the scan; stage 2 is one hash groupBy + semi-join; stage 3 is the
 banded-LSH pipeline (never all-pairs) plus a node-sized label
 propagation. Per-stage row counts are collected with ``df.observe`` so
 the single output write materializes every counter — no second pass
-over the corpus (the round-7 "observe on the write job" discipline).
+over the corpus (observe on the write job).
 
 Reference parity note: the reference pipeline has no curation surface —
 this is part of the SURVEY §2.11 north-star extension (LLM-training
@@ -400,7 +400,7 @@ def _curate_one_batch(
     batch's own ``batch=<id>`` partition is excluded — on replay of an
     uncommitted micro-batch it already holds this batch's landed copy,
     and an unfiltered anti-join would match every doc against itself
-    and re-emit the partition empty, round-8 ADVICE item 1), then land
+    and re-emit the partition empty), then land
     at ``docs/batch=<id>`` with overwrite (idempotent under replay).
 
     With ``drift=True`` the per-batch stats gain a ``drift`` section:
@@ -419,7 +419,7 @@ def _curate_one_batch(
         # key the reference cache by the corpus FINGERPRINT (path +
         # listing digest), matching the LSH index cache's lifetime — a
         # raw-path key would silently serve stale reference stats after
-        # an in-process corpus compaction (round-10 ADVICE item 3)
+        # an in-process corpus compaction
         drift_stats = drift_report(
             batch, corp, ref_cache_key=_corpus_fingerprint(corpus_path)
         )
@@ -443,7 +443,7 @@ def _curate_one_batch(
         )
     # 'landed' = rows actually written after the cross-batch anti-join;
     # curate()'s own 'output' counter is pre-anti-join, so a batch of
-    # all-dups reports output>0 but landed=0 (round-8 ADVICE item 4).
+    # all-dups reports output>0 but landed=0.
     # The observation fills on the write.
     landed = _StageCounter(out, f"landed_{batch_id}_{next(_RUN_SEQ)}")
     landed.df.write.mode("overwrite").parquet(
@@ -571,7 +571,7 @@ def compact_index(
     # build from the LANDED generation (not the in-memory union) so the
     # artifact provably matches what the next stream run reads;
     # expect_fresh makes a reused --corpus-key an error instead of a
-    # silent stale-index read (round-8 ADVICE item 2)
+    # silent stale-index read
     landed = spark.read.parquet(compacted_path)
     build_lsh_index_cached(spark, landed, lsh_cache_key, expect_fresh=True)
     return compacted_path
@@ -603,7 +603,7 @@ def _corpus_fingerprint(path: str) -> str:
     names, sizes, mtime_ns). A corpus rewritten in-place changes file
     names/sizes/nanosecond mtimes even within the same wall-clock
     second, so the stale-index hazard of the old ``int(mtime)`` key
-    (round-8 ADVICE item 3) is gone, while re-probes of the same landed
+    is gone, while re-probes of the same landed
     generation still hit the cache."""
     import hashlib
 

@@ -200,6 +200,37 @@ def _fused_epochs(n_features: int, n_iter: int, lr: float, l2: float):
     return run
 
 
+def _files_fit_one_partition(df: DataFrame) -> bool:
+    """False when ``df``'s input files cannot share one scan partition.
+
+    Spark packs small files into partitions (``FilePartition``): a file
+    joins the open partition while the partition's bytes, each earlier
+    file counted with ``spark.sql.files.openCostInBytes``, plus its own
+    length stay within the split size, which is at most
+    ``spark.sql.files.maxPartitionBytes``. So the files can share one
+    partition only if Σ(length + openCost) − openCost ≤ maxPartitionBytes.
+    A necessary test, not a sufficient one (the split size may be
+    smaller); True for a non-file source and on any surprise."""
+    try:
+        files = df.inputFiles()
+        if not files:
+            return True
+        jvm, jspark = df.sparkSession._jvm, df.sparkSession._jsparkSession
+        conf = jspark.sessionState().conf()
+        budget = conf.filesMaxPartitionBytes() + conf.filesOpenCostInBytes()
+        hadoop_conf = jspark.sessionState().newHadoopConf()
+        total = 0
+        for f in files:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            total += path.getFileSystem(hadoop_conf).getFileStatus(path).getLen()
+            total += conf.filesOpenCostInBytes()
+            if total > budget:
+                return False
+        return True
+    except Exception:
+        return True
+
+
 def train_logreg_hashed(
     df: DataFrame,
     text_col: str = "text",
@@ -226,12 +257,11 @@ def train_logreg_hashed(
     traffic (guide §8). ``fuse_single_partition=False`` forces the
     per-iteration path (the parity test's reference)."""
     if n_iter <= 0:
-        # degenerate config: both paths must agree (r15 ADVICE item 1 —
-        # the fused pass only learned n inside the epoch loop, so it
-        # raised "empty training input" on NON-empty input while the
-        # per-iteration path returned the zero model). Short-circuit to
-        # the zero model the per-iteration loop would produce, with no
-        # Spark work at all.
+        # degenerate config: both paths must agree (the fused pass only
+        # learned n inside the epoch loop, so it raised "empty training
+        # input" on NON-empty input while the per-iteration path returned
+        # the zero model). Short-circuit to the zero model the
+        # per-iteration loop would produce, with no Spark work at all.
         return TrainedModel(
             weights=np.zeros(n_features, dtype=np.float64),
             bias=0.0,
@@ -242,25 +272,19 @@ def train_logreg_hashed(
         hashed_indices(F.col(text_col), n_features).alias("idx"),
         F.col(label_col).cast("double").alias("label"),
     )
-    # Fusion eligibility in two tiers (r15 ADVICE item 2): the `.rdd`
-    # partition-count probe forces plan analysis + RDD translation
-    # (~1.3 s of driver time per fresh plan — the cost layout.py's
-    # fan_out_scan documents and avoids), so first consult the cheap
-    # file count. >1 input file ⇒ the scan yields >1 partition, the
-    # fused path can't apply, and the probe would be pure overhead on
-    # exactly the large sharded inputs where plans are biggest. ≤1 file
-    # (or a non-file source, where inputFiles() is empty) still needs
-    # the authoritative partition count — a single file larger than
-    # maxPartitionBytes splits, and fusing a multi-partition input
-    # would train on one shard only.
-    if fuse_single_partition:
-        try:
-            single_file_plausible = len(feats.inputFiles()) <= 1
-        except Exception:
-            single_file_plausible = True
-    else:
-        single_file_plausible = False
-    if single_file_plausible and feats.rdd.getNumPartitions() == 1:
+    # Fusion eligibility in two tiers: the `.rdd` partition-count probe
+    # forces plan analysis + RDD translation (~1.3 s of driver time per
+    # fresh plan — the cost layout.py's fan_out_scan documents and
+    # avoids), so first rule out inputs whose files cannot fit one
+    # partition (`_files_fit_one_partition`): there the fused path
+    # can't apply, and the probe would be pure overhead on exactly the
+    # large sharded inputs where plans are biggest. Inputs that may fit
+    # (or a non-file source) still need the authoritative partition
+    # count — fusing a multi-partition input would train on one shard
+    # only.
+    if fuse_single_partition and _files_fit_one_partition(feats) and (
+        feats.rdd.getNumPartitions() == 1
+    ):
         rows = feats.mapInPandas(
             _fused_epochs(n_features, n_iter, lr, l2),
             schema="losses array<double>, accs array<double>, "

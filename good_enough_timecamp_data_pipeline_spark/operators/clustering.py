@@ -29,6 +29,13 @@ The Arrow/numpy kernel does the same flops vectorized in C with zero
 shuffle, and is the layout every large-scale implementation (MLlib
 included) uses.
 
+A corpus of at most ``local.MAX_ROWS`` vectors finishes on the driver
+(operators/local.py): one bounded probe collects it as Arrow, and
+`_kmeans_rows` runs the same Lloyd rounds (same init, same per-cluster
+sums, same stop rule) in numpy; the assignments come back as an
+Arrow-backed local relation instead of a per-round broadcast and
+``mapInPandas`` job.
+
 Floating-point means are order-sensitive, so the operator is rows-only
 (no DuckDB oracle); tests assert the Lloyd invariants instead: inertia
 monotonically non-increasing, every vector on its nearest centroid.
@@ -36,14 +43,18 @@ monotonically non-increasing, every vector on its nearest centroid.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from . import local
 
 
 def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -52,6 +63,68 @@ def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
     a = d2.argmin(axis=1)
     return a, d2[np.arange(len(X)), a]
+
+
+# Rows per block on the driver path: the default
+# spark.sql.execution.arrow.maxRecordsPerBatch, the block the Spark loop's
+# kernel sees, so one partition gives the same sums on both paths and the
+# (rows × k × dim) distance temporary stays bounded.
+BLOCK_ROWS = 10_000
+
+
+def _lloyd_partials(
+    blocks: Iterable[np.ndarray], C: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-cluster (Σx, count, Σ sq_dist) of row blocks of vectors against
+    centroids ``C``, accumulated block by block."""
+    S = np.zeros_like(C)
+    cnt = np.zeros(len(C), dtype=np.int64)
+    sd = np.zeros(len(C))
+    for X in blocks:
+        a, sq = _nearest(X, C)
+        for j in range(len(C)):
+            m = a == j
+            if m.any():
+                S[j] += X[m].sum(axis=0)
+                cnt[j] += int(m.sum())
+                sd[j] += float(sq[m].sum())
+    return S, cnt, sd
+
+
+def _blocks(X: np.ndarray) -> list[np.ndarray]:
+    return [X[i : i + BLOCK_ROWS] for i in range(0, len(X), BLOCK_ROWS)]
+
+
+def _kmeans_rows(
+    table: pa.Table, k: int, max_iter: int
+) -> tuple[pa.Table, list[float]]:
+    """`kmeans` over (vec_id, v) rows the driver holds, as one partition:
+    the same first-k-by-id init, per-cluster sums and stop rule."""
+    if not table.num_rows:
+        raise ValueError("kmeans: input has no vectors")
+    X = np.stack(table.column("v").to_numpy(zero_copy_only=False))
+    first = pc.sort_indices(
+        table, sort_keys=[("vec_id", "ascending")], null_placement="at_start"
+    )
+    centroids = X[first.to_numpy()[:k]]
+    inertia_history: list[float] = []
+    for _ in range(max_iter):
+        sums, counts, sd = _lloyd_partials(_blocks(X), centroids)
+        inertia = 0.0
+        for j in range(len(centroids)):
+            inertia += sd[j]
+        if inertia_history and inertia >= inertia_history[-1]:
+            inertia_history.append(inertia)
+            break
+        inertia_history.append(inertia)
+        moved = counts > 0
+        centroids = centroids.copy()
+        centroids[moved] = sums[moved] / counts[moved, None]
+    a, sq = (np.concatenate(parts) for parts in zip(*(_nearest(b, centroids) for b in _blocks(X))))
+    assign = pa.table(
+        {"vec_id": table.column("vec_id"), "cluster": a.astype(np.int32), "sq_dist": sq}
+    )
+    return assign, inertia_history
 
 
 def kmeans(
@@ -66,14 +139,20 @@ def kmeans(
     assignments: (vec_id, cluster, sq_dist), lazily computed against the
     final centroids. Initial centroids are the first k vectors by id —
     deterministic and cheap; k-means++ would be a k-round
-    weighted-sampling prologue over the same machinery.
+    weighted-sampling prologue over the same machinery. A small input
+    finishes on the driver (see the module docstring).
     """
     spark = vecs.sparkSession
     id_type = dict(vecs.dtypes)[id_col]
     data = vecs.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    small = local.collect_small(data)
+    if small is not None:
+        assign_rows, inertia_history = _kmeans_rows(small, k, max_iter)
+        return spark.createDataFrame(assign_rows), inertia_history
+    data = data.persist(StorageLevel.MEMORY_AND_DISK)
 
     init = [list(r["v"]) for r in data.orderBy("vec_id").limit(k).collect()]
     if not init:
@@ -91,20 +170,9 @@ def kmeans(
 
         def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             C = bc.value
-            S = np.zeros_like(C)
-            cnt = np.zeros(len(C), dtype=np.int64)
-            sd = np.zeros(len(C))
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["v"].to_numpy())
-                a, sq = _nearest(X, C)
-                for j in range(len(C)):
-                    m = a == j
-                    if m.any():
-                        S[j] += X[m].sum(axis=0)
-                        cnt[j] += int(m.sum())
-                        sd[j] += float(sq[m].sum())
+            S, cnt, sd = _lloyd_partials(
+                (np.stack(pdf["v"].to_numpy()) for pdf in batches if len(pdf)), C
+            )
             yield pd.DataFrame(
                 {
                     "cluster": np.arange(len(C), dtype=np.int32),

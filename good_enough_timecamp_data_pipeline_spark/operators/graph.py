@@ -27,15 +27,32 @@ cluster, swap ``localCheckpoint`` (executor-local blocks — lost blocks
 kill the job on executor failure) for reliable ``checkpoint`` to the
 cluster FS if the loop must survive preemption.  Convergence is detected
 from ``sum(label)`` — labels only ever decrease, so an unchanged sum IS
-the fixpoint; the driver sees one aggregated number per round, never row
-data.
+the fixpoint; in the distributed loop the driver sees one aggregated
+number per round, never row data.
+
+Small graphs finish on the driver (operators/local.py): every operator
+here already counts its pinned edge set to size its loop, and when that
+count is at most ``local.MAX_ROWS`` it collects the edges once as Arrow,
+runs the same rounds with the same rule in numpy (the ``_*_local``
+functions) and returns an Arrow-backed local relation. Node ids become
+dense slots in ascending id order, so a min over slots is a min over ids,
+and NULL takes the last slot: it joins nothing, exactly as a NULL key
+joins nothing in the Spark loop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import warnings
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
+
+from . import local
 
 
 def unpersist_checkpoint_blocks(df: DataFrame) -> None:
@@ -67,8 +84,11 @@ def unpersist_checkpoint_blocks(df: DataFrame) -> None:
         pass
 
 
-def _sized_for_loop(df: DataFrame, rows_per_partition: int = 75_000) -> DataFrame:
-    """Coalesce an iterative loop's edge set to its measured size.
+def _sized_for_loop(
+    df: DataFrame, rows_per_partition: int = 75_000
+) -> tuple[DataFrame, int]:
+    """Coalesce an iterative loop's edge set to its measured size; returns
+    it with its row count (the driver-path size check reuses the count).
 
     A 32-partition shuffle per round over a few thousand edges is pure
     task-scheduling overhead (measured ~2× the whole CC loop on
@@ -89,8 +109,75 @@ def _sized_for_loop(df: DataFrame, rows_per_partition: int = 75_000) -> DataFram
     n = df.count()
     target = max(1, min(df.rdd.getNumPartitions(), n // rows_per_partition))
     if target < df.rdd.getNumPartitions():
-        return df.coalesce(target)
-    return df
+        return df.coalesce(target), n
+    return df, n
+
+
+def _small_edges(pinned: DataFrame, n: int, numeric_ids: bool = False) -> pa.Table | None:
+    """The pinned edge set as Arrow when it is small enough to finish on
+    the driver (its cache is then released), else None. ``numeric_ids``:
+    the Spark loop does arithmetic on the ids (a sum, a negation), which
+    fails on non-numeric ids, so such input keeps that loop and its error."""
+    if numeric_ids and not isinstance(pinned.schema["u"].dataType, T.NumericType):
+        return None
+    table = local.collect_small(pinned, n)
+    if table is not None:
+        pinned.unpersist()
+    return table
+
+
+def _slots(u: pa.ChunkedArray, v: pa.ChunkedArray) -> tuple[pa.Array, np.ndarray, np.ndarray]:
+    """Node ids → dense slots in ascending id order; NULL is the last slot.
+    Returns (the ids by slot, NULL last; u's slots; v's slots)."""
+    u, v = u.combine_chunks(), v.combine_chunks()
+    ids = pc.unique(pa.concat_arrays([u, v]).drop_null())
+    ids = ids.take(pc.sort_indices(ids))
+    null = len(ids)
+
+    def slots(a: pa.Array) -> np.ndarray:
+        return pc.fill_null(pc.index_in(a, value_set=ids), null).to_numpy().astype(np.int64)
+
+    return pa.concat_arrays([ids, pa.nulls(1, ids.type)]), slots(u), slots(v)
+
+
+def _nonconverged(max_iter: int, on_nonconverged: str) -> None:
+    msg = (
+        f"connected_components: no fixpoint after max_iter={max_iter} rounds; "
+        "labels are over-segmented (components wider than the cap exist). "
+        "Raise max_iter (rounds = component diameter) or switch to "
+        "large-star/small-star contraction for long-chain graphs."
+    )
+    if on_nonconverged == "warn":
+        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    else:
+        raise RuntimeError(msg)
+
+
+def _cc_local(spark: SparkSession, und: pa.Table, max_iter: int) -> tuple[DataFrame, bool]:
+    """`connected_components`' rounds on the driver: every node takes the
+    min of its own label and its in-neighbors' labels, synchronously.
+    Returns the labels and whether they reached the fixpoint."""
+    ids, u, v = _slots(und["u"], und["v"])
+    null = len(ids) - 1
+    nodes = np.unique(u)
+    label = np.arange(len(ids))  # own id; the NULL node's label is NULL
+    src, dst = u[u != null], v[u != null]  # a NULL u joins no label
+    prev = None
+    converged = False
+    for _ in range(max_iter):
+        nxt = label.copy()
+        np.minimum.at(nxt, dst, label[src])  # min() skips the NULL slot's label
+        label = nxt
+        cur = label[nodes]
+        # the Spark loop stops when sum(cluster_id) repeats: labels only
+        # fall, so when none changed — or at once when all are NULL (an
+        # empty graph), since the first round compares with a NULL sum
+        if (cur == null).all() or (prev is not None and np.array_equal(cur, prev)):
+            converged = True
+            break
+        prev = cur
+    labels = pa.table({"node": ids.take(nodes), "cluster_id": ids.take(label[nodes])})
+    return spark.createDataFrame(labels), converged
 
 
 def connected_components(
@@ -124,7 +211,13 @@ def connected_components(
     # size the loop's parallelism to the measured graph, not the session
     # default (see _sized_for_loop); unpersist targets und_pinned — the
     # coalesce wrapper would not match the cache entry.
-    und = _sized_for_loop(und_pinned)
+    und, n_und = _sized_for_loop(und_pinned)
+    small = _small_edges(und_pinned, n_und, numeric_ids=True)
+    if small is not None:
+        labels, converged = _cc_local(edges.sparkSession, small, max_iter)
+        if not converged:
+            _nonconverged(max_iter, on_nonconverged)
+        return labels
     labels = (
         und.select(F.col("u").alias("node"))
         .distinct()
@@ -163,18 +256,7 @@ def connected_components(
 
     und_pinned.unpersist()
     if not converged:
-        msg = (
-            f"connected_components: no fixpoint after max_iter={max_iter} rounds; "
-            "labels are over-segmented (components wider than the cap exist). "
-            "Raise max_iter (rounds = component diameter) or switch to "
-            "large-star/small-star contraction for long-chain graphs."
-        )
-        if on_nonconverged == "warn":
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        else:
-            raise RuntimeError(msg)
+        _nonconverged(max_iter, on_nonconverged)
     return labels
 
 
@@ -223,7 +305,19 @@ def pagerank(
     )
     # loop parallelism sized to the measured graph (see _sized_for_loop);
     # unpersist below targets e_pinned, not the coalesce wrapper.
-    e = _sized_for_loop(e_pinned)
+    e, n_edges = _sized_for_loop(e_pinned)
+    # the edge count sizes the driver path too: it bounds the node count
+    node_type = nodes.schema["node"].dataType
+    small = local.collect_small(
+        e_pinned.select(
+            F.col("u").cast(node_type).alias("u"), F.col("v").cast(node_type).alias("v")
+        ),
+        n_edges,
+    )
+    if small is not None:
+        nodes.unpersist()
+        e_pinned.unpersist()
+        return _pagerank_local(edges.sparkSession, small, n, num_iter, damping)
     out_deg = e.groupBy("u").agg(F.count("*").alias("out_deg"))
     # ranks live joined with out_deg once, so the loop never re-derives it
     ranked_nodes = nodes.join(out_deg, nodes["node"] == out_deg["u"], "left").select(
@@ -273,6 +367,36 @@ def pagerank(
     return ranks.select("node", "rank")
 
 
+def _pagerank_local(
+    spark: SparkSession, e: pa.Table, n: int, num_iter: int, damping: float
+) -> DataFrame:
+    """`pagerank`'s rounds on the driver, NULLs included as the Spark loop
+    treats them: a NULL node is a node (dangling, it joins no out-degree),
+    it never receives a contribution, and an edge into NULL still counts
+    in its source's out-degree, so that share of rank is lost."""
+    ids, u, v = _slots(e["u"], e["v"])
+    null = len(ids) - 1
+    present = np.zeros(len(ids), dtype=bool)
+    present[u] = present[v] = True
+    out_deg = np.bincount(u[u != null], minlength=len(ids))
+    dangling_nodes = present & (out_deg == 0)
+    live = (u != null) & (v != null)
+    src, dst = u[live], v[live]
+    rank = np.where(present, 1.0 / n, 0.0)
+    for _ in range(num_iter):
+        dangling = rank[dangling_nodes].sum()
+        base = (1.0 - damping) / n + damping * dangling / n
+        contrib = np.bincount(dst, weights=rank[src] / out_deg[src], minlength=len(ids))
+        rank = np.where(present, base + damping * contrib, 0.0)
+    nodes = np.flatnonzero(present)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [ids.take(nodes), pa.array(rank[nodes])],
+            schema=pa.schema([("node", ids.type), pa.field("rank", pa.float64(), False)]),
+        ),
+    )
+
+
 def cluster_sizes(labels: DataFrame) -> DataFrame:
     """(node, cluster_id, cluster_size) — one extra keyed agg joined back.
 
@@ -318,7 +442,10 @@ def label_propagation(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    e = _sized_for_loop(und)
+    e, n_und = _sized_for_loop(und)
+    small = _small_edges(und, n_und, numeric_ids=True)
+    if small is not None:
+        return _lpa_local(edges.sparkSession, small, max_iter)
     labels = (
         e.select(F.col("u").alias("node"))
         .distinct()
@@ -352,6 +479,66 @@ def label_propagation(
         unpersist_checkpoint_blocks(freeable)
     und.unpersist()
     return labels
+
+
+def _lpa_local(spark: SparkSession, und: pa.Table, max_iter: int) -> DataFrame:
+    """`label_propagation`'s rounds on the driver: each node that receives
+    a label takes the most frequent one, ties to the smallest; a node that
+    receives none drops out of the labels, as in the Spark loop's join."""
+    ids, u, v = _slots(und["u"], und["v"])
+    null = len(ids) - 1
+    label = np.arange(len(ids))
+    present = np.zeros(len(ids), dtype=bool)
+    present[u] = True
+    for _ in range(max_iter):
+        live = (u != null) & present[u]
+        pairs, cnt = np.unique(
+            np.stack([v[live], label[u[live]]], axis=1), axis=0, return_counts=True
+        )
+        # per node: count desc, then label asc (slots are in id order)
+        pairs = pairs[np.lexsort((pairs[:, 1], -cnt, pairs[:, 0]))]
+        first = np.ones(len(pairs), dtype=bool)
+        first[1:] = pairs[1:, 0] != pairs[:-1, 0]
+        won = pairs[first]
+        present[:] = False
+        present[won[:, 0]] = True
+        label[won[:, 0]] = won[:, 1]
+    nodes = np.flatnonzero(present)
+    return spark.createDataFrame(
+        pa.table({"node": ids.take(nodes), "community": ids.take(label[nodes])})
+    )
+
+
+def _kcore_local(spark: SparkSession, und: pa.Table, k: int, max_iter: int) -> DataFrame:
+    """`kcore`'s peeling rounds on the driver: each round drops every edge
+    with an endpoint of degree < k, until a round drops none."""
+    ids, u, v = _slots(und["u"], und["v"])
+    n_prev = len(u)
+    converged = n_prev == 0
+    for _ in range(max_iter):
+        if converged:
+            break
+        keep = np.bincount(u, minlength=len(ids)) >= k
+        m = keep[u] & keep[v]
+        u, v = u[m], v[m]
+        converged = len(u) == n_prev
+        n_prev = len(u)
+    if not converged:
+        raise RuntimeError(_kcore_nonconverged(max_iter))
+    nodes, deg = np.unique(u, return_counts=True)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [ids.take(nodes), pa.array(deg.astype(np.int64))],
+            schema=pa.schema([("node", ids.type), pa.field("core_degree", pa.int64(), False)]),
+        ),
+    )
+
+
+def _kcore_nonconverged(max_iter: int) -> str:
+    return (
+        f"kcore did not reach a fixpoint within max_iter={max_iter} rounds; "
+        "the surviving edge set is a superset of the true k-core"
+    )
 
 
 def kcore(
@@ -389,7 +576,10 @@ def kcore(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    und = _sized_for_loop(und_pinned)
+    und, n_und = _sized_for_loop(und_pinned)
+    small = _small_edges(und_pinned, n_und)
+    if small is not None:
+        return _kcore_local(edges.sparkSession, small, k, max_iter)
     cur = und.localCheckpoint(eager=False)
     n_prev = cur.count()
     freeable: DataFrame | None = None
@@ -417,10 +607,7 @@ def kcore(
             converged = n_next == n_prev
             n_prev = n_next
         if not converged:
-            raise RuntimeError(
-                f"kcore did not reach a fixpoint within max_iter={max_iter} rounds; "
-                "the surviving edge set is a superset of the true k-core"
-            )
+            raise RuntimeError(_kcore_nonconverged(max_iter))
     except BaseException:
         # nothing will consume `cur` after a failure — free every cached
         # artifact so the non-convergence path doesn't leak storage in a

@@ -24,7 +24,7 @@ broadcast self-joins:
   (node → parent) edge list: zero shuffles, and the unroll runs
   ``max_depth`` (reference caps at 8) rounds.
 - The unroll is fully lazy: no ``localCheckpoint``/``isEmpty`` inside the
-  loop, so building the closure schedules ZERO jobs and the whole consumer
+  loop, so the closure itself schedules no job and the whole consumer
   query (closure + fact join + agg) plans as one query. Native
   ``WITH RECURSIVE`` is not one job: Spark plans and runs every level as
   separate queries (a repartition, a count, a collect into a local
@@ -32,6 +32,11 @@ broadcast self-joins:
 - Cycle safety: the walk carries a ``_visited`` id array and stops a branch
   when the next ancestor is already in it — same semantics as the
   reference's ``visited`` set — plus the hard depth bound.
+- A hierarchy of at most ``local.MAX_ROWS`` rows finishes on the driver
+  (operators/local.py): one bounded probe collects its (id, parent)
+  pairs, `_closure_rows` walks the same levels in Python and the closure
+  comes back as an Arrow-backed local relation. That probe is the one
+  job building a closure now costs, on either side of the threshold.
 - Rows the driver already holds (ingest's API payloads) skip Spark:
   `breadcrumb_rows` walks them as dicts with the rules of `breadcrumbs`.
 
@@ -43,8 +48,11 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import local
 
 DEFAULT_MAX_DEPTH = 8
 
@@ -57,12 +65,11 @@ def _as_view(df: DataFrame, tag: str) -> str:
     the same name cannot retroactively change an earlier closure. The
     semantic hash keeps the name (hence the generated SQL text, hence
     the codegen/JIT classes) stable across repeated calls on the same
-    input — the point of the round-7 stable-name change — while two
-    concurrent calls on DIFFERENT inputs get different names instead of
-    interleaving createOrReplaceTempView/spark.sql on one shared name
-    and binding one query to the other's edge table (round-7 ADVICE
-    item 4; same-input concurrent registration stays a benign race —
-    both register the identical definition)."""
+    input, while two concurrent calls on DIFFERENT inputs get different
+    names instead of interleaving createOrReplaceTempView/spark.sql on
+    one shared name and binding one query to the other's edge table
+    (same-input concurrent registration stays a benign race — both
+    register the identical definition)."""
     name = f"__hier_{tag}_{df.semanticHash() & 0x7FFFFFFF:x}"
     df.createOrReplaceTempView(name)
     return name
@@ -80,6 +87,45 @@ def _native_recursive_cte(df: DataFrame) -> bool:
             return True
         except Exception:
             return False
+
+
+def _closure_rows(edges: pa.Table, max_depth: int, depth_nullable: bool) -> pa.Table:
+    """`transitive_closure` over (id, parent) rows the driver holds: the
+    levels both Spark strategies build. One base row per input row (a NULL
+    id included); then, per level up to ``max_depth``, one row per pair of
+    a frontier row and an input row whose id is the frontier's ancestor,
+    whose parent is not NULL and not yet on that frontier row's visited
+    path — a duplicated (id, parent) row repeats the step, as the join
+    does. ``depth_nullable``: the recursive CTE types depth nullable, the
+    unroll's literals do not."""
+    ids, parents = edges.column(0).to_pylist(), edges.column(1).to_pylist()
+    up: dict = {}
+    for node, parent in zip(ids, parents):
+        if node is not None and parent is not None:
+            up.setdefault(node, []).append(parent)
+    desc, anc, depth = list(ids), list(ids), [0] * len(ids)
+    frontier = [(d, (d,)) for d in ids]  # (descendant, visited path)
+    for level in range(1, max_depth + 1):
+        frontier = [
+            (d, (*path, p)) for d, path in frontier for p in up.get(path[-1], ()) if p not in path
+        ]
+        if not frontier:
+            break
+        for d, path in frontier:
+            desc.append(d)
+            anc.append(path[-1])
+            depth.append(level)
+    typ = edges.schema.field(0).type
+    return pa.Table.from_arrays(
+        [pa.array(desc, typ), pa.array(anc, typ), pa.array(depth, pa.int32())],
+        schema=pa.schema(
+            [
+                ("descendant_id", typ),
+                ("ancestor_id", typ),
+                pa.field("depth", pa.int32(), depth_nullable),
+            ]
+        ),
+    )
 
 
 def transitive_closure(
@@ -111,10 +157,22 @@ def transitive_closure(
     - ``unroll``: a lazy chain of ``max_depth`` broadcast self-joins —
       portable to any Spark, and the broadcast edge exchange is reused
       across rounds; costs O(max_depth) plan nodes even for shallow trees.
+
+    Either strategy finishes on the driver (`_closure_rows`) when the
+    hierarchy has at most ``local.MAX_ROWS`` rows and its id and parent
+    columns share one type (a mixed pair keeps Spark's own coercion or
+    analysis error).
     """
     if strategy not in ("auto", "recursive_cte", "unroll"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy in ("auto", "recursive_cte") and _native_recursive_cte(tasks):
+    cte = strategy in ("auto", "recursive_cte") and _native_recursive_cte(tasks)
+    pairs = tasks.select(F.col(id_col), F.col(parent_col))
+    if pairs.schema[0].dataType == pairs.schema[1].dataType:
+        small = local.collect_small(pairs)
+        if small is not None:
+            closure = _closure_rows(small, max_depth, depth_nullable=cte)
+            return tasks.sparkSession.createDataFrame(closure)
+    if cte:
         v = _as_view(
             tasks.select(
                 F.col(id_col).alias("_node"), F.col(parent_col).alias("_parent")

@@ -423,7 +423,8 @@ def _kernel_family_warmups(spark: SparkSession) -> None:
         F.col("id").alias("by"), (F.col("id") + 1).alias("ts"), F.lit(1).alias("x")
     )
     _noop(asof_join(left, right, on="ts", by="by", value_cols=["x"]))
-    # iterative closure unroll (per-level union + checkpoint paths)
+    # iterative closure: 16 rows take the driver walk (probe + local
+    # relation), as every hierarchy of at most local.MAX_ROWS rows does
     edges = spark.range(16).select(
         F.col("id").alias("task_id"),
         F.when(F.col("id") > 0, F.col("id") - 1).alias("parent_id"),
@@ -504,7 +505,7 @@ def warmup(spark: SparkSession, sf_dir: str, shapes: bool = True) -> None:
     # Further kernel FAMILIES, warmed on 64-row synthetics (the pandas
     # no-op precedent): bucketed global-cumsum (pin + per-bucket window
     # + broadcast offsets — w_pareto_share/a_gini/a_mad machinery),
-    # as-of carry windows, iterative closure unroll, and the embedding
+    # as-of carry windows, the iterative closure, and the embedding
     # dot-product fold. These JIT the shared executor/catalyst paths a
     # first execution otherwise pays inside its timed run; each entry's
     # own generated class still compiles per its own plan (the stated

@@ -490,29 +490,27 @@ DSIR_SAMPLE = 100  # documents t_dsir_resample draws
 @shared.prewarmed
 def _dsir_doc_sb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (doc, source, bucket) hashed-bigram count table — the one
-    corpus pass both DSIR entries reduce over (see t_dsir_weights)."""
+    corpus pass both DSIR entries reduce over (see t_dsir_weights). The
+    hashing plan is built inside the builder, so only a memo miss pays
+    for it."""
     from .extensions import bigram_rows_from_toks, docs_alpha_toks_shared
 
-    pairs = bigram_rows_from_toks(
-        docs_alpha_toks_shared(spark, sf_dir), extra_cols=("source",)
-    ).select(
-        "doc_id",
-        "source",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat_ws(" ", "w1", "w2")), 1, 8), 16, 10
-            ).cast("long")
-            % DSIR_BUCKETS
-        ).alias("bucket"),
-    )
-    return shared.shared_checkpoint(
-        spark,
-        sf_dir,
-        f"dsir_doc_sb_{DSIR_BUCKETS}",
-        lambda: pairs.groupBy("doc_id", "source", "bucket").agg(
-            F.count("*").alias("n")
-        ),
-    )
+    def build() -> DataFrame:
+        pairs = bigram_rows_from_toks(
+            docs_alpha_toks_shared(spark, sf_dir), extra_cols=("source",)
+        ).select(
+            "doc_id",
+            "source",
+            (
+                F.conv(
+                    F.substring(F.md5(F.concat_ws(" ", "w1", "w2")), 1, 8), 16, 10
+                ).cast("long")
+                % DSIR_BUCKETS
+            ).alias("bucket"),
+        )
+        return pairs.groupBy("doc_id", "source", "bucket").agg(F.count("*").alias("n"))
+
+    return shared.shared_checkpoint(spark, sf_dir, f"dsir_doc_sb_{DSIR_BUCKETS}", build)
 
 
 def t_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,8 +13,9 @@ enrichment of the reference is re-expressed relationally:
 - per-row formatting (F4–F7)  → native Column expressions
 
 The fetch itself stays driver-side (payloads here are metadata-sized), and
-each coerced payload becomes an Arrow-backed frame (``_rows_df``): a local
-relation (``LocalTableScan``) up to
+each coerced payload becomes an Arrow-backed frame (``_rows_df``, which is
+`operators.local.rows_relation`, where small iterative operators land their
+results too): a local relation (``LocalTableScan``) up to
 ``spark.sql.execution.arrow.localRelationThreshold``, a JVM scan of Arrow
 batches above it. Neither starts a Python worker on a re-read. A row-list ``createDataFrame`` would
 build a ``parallelize`` RDD that PySpark wraps in a Python ``map``, so every
@@ -33,17 +34,16 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.formatting import string_fallback
 from ..functions.json_utils import map_lookup, tags_to_json
 from ..functions.ids import strip_prefix_value
 from ..operators.canonicalize import id_string, measure_long, null_canonical_value
 from ..operators.hierarchy import breadcrumb_rows
+from ..operators.local import rows_relation as _rows_df
 from . import schemas
 from .client import TimeCampClient
 
@@ -76,12 +76,6 @@ CATEGORY_NAMES: dict[str, str] = {
 def _project(rows: list[dict[str, Any]], schema: T.StructType) -> list[dict[str, Any]]:
     """Raw dict rows → the schema's fields, tolerating missing/stringly values."""
     return [{f.name: _coerce(r.get(f.name), f.dataType) for f in schema.fields} for r in rows]
-
-
-def _rows_df(spark: SparkSession, rows: list[dict[str, Any]], schema: T.StructType) -> DataFrame:
-    """Projected rows → typed DataFrame over an Arrow-backed relation (see
-    the module docstring)."""
-    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)))
 
 
 def _coerce(v: Any, dt: T.DataType) -> Any:

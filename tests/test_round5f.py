@@ -258,6 +258,42 @@ def test_train_classifier_fused_matches_periter(spark, sf_dir):
     assert fused.n_rows == ref.n_rows
 
 
+def test_train_classifier_two_small_files_take_fused_path(spark, sf_dir, tmp_path, monkeypatch):
+    """Spark packs small files into one scan partition, so a two-file
+    input whose bytes fit one partition must train on the fused path, and
+    give the same model as the per-iteration loop."""
+    from pyspark.sql import functions as F
+
+    from good_enough_timecamp_data_pipeline_spark.operators import classifier
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
+    docs.repartition(2).write.parquet(str(tmp_path / "docs"))
+    two_files = spark.read.parquet(str(tmp_path / "docs"))
+    assert len(two_files.inputFiles()) == 2
+    labeled = two_files.select("text", (F.col("doc_id") % 2).cast("int").alias("label"))
+
+    fused_calls = []
+    real = classifier._fused_epochs
+    monkeypatch.setattr(
+        classifier, "_fused_epochs", lambda *a: fused_calls.append(a) or real(*a)
+    )
+    prev = spark.conf.get("spark.sql.files.minPartitionNum", None)
+    # one split per core otherwise: the packing budget is what this pins
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        assert labeled.rdd.getNumPartitions() == 1
+        fused = classifier.train_logreg_hashed(labeled, n_iter=3)
+        ref = classifier.train_logreg_hashed(labeled, n_iter=3, fuse_single_partition=False)
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.files.minPartitionNum")
+        else:
+            spark.conf.set("spark.sql.files.minPartitionNum", prev)
+    assert len(fused_calls) == 1
+    assert fused.history == ref.history
+    assert (fused.weights == ref.weights).all() and fused.bias == ref.bias
+
+
 def test_train_classifier_niter0_zero_model(spark, sf_dir):
     """n_iter=0 must return the zero model with empty history on BOTH
     paths (r15 ADVICE item 1: the fused pass raised 'empty training
