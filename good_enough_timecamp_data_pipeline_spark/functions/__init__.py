@@ -11,4 +11,4 @@ from .dates import (  # noqa: F401
     month_batch_key,
 )
 from .ids import strip_prefix, add_prefix  # noqa: F401
-from .json_utils import tags_to_json, map_lookup, array_level  # noqa: F401
+from .json_utils import array_level  # noqa: F401

@@ -1,9 +1,10 @@
-"""JSON / map / array helpers (SURVEY.md §2.8 F7, F12, F13).
+"""Array helpers (SURVEY.md §2.8 F13).
 
 Reference parity:
-- tags list → JSON string or NULL (``/root/reference/dlt_fetch_timecamp.py:494-499``)
-- dict lookup with default (``/root/reference/dlt_fetch_timecamp.py:632-633``)
 - path[i] with '' default (``/root/reference/dlt_fetch_timecamp.py:400-404,563-567``)
+
+The tags → JSON text (F7) and category lookup (F12) rules are Python row
+rules in ``sources.ingest``, applied where the payload is held.
 """
 
 from __future__ import annotations
@@ -14,22 +15,6 @@ from pyspark.sql import functions as F
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-def tags_to_json(tags: Column | str) -> Column:
-    """Non-empty array → JSON text; empty/NULL → NULL (prevents the child-
-    table explosion the reference worked around in dlt)."""
-    t = _c(tags)
-    return F.when(t.isNotNull() & (F.size(t) > 0), F.to_json(t))
-
-
-def map_lookup(mapping: dict[str, str], key: Column | str, default: str) -> Column:
-    """Static-dict lookup as a literal map expression (small maps only —
-    larger dims should be broadcast-joined instead, see J3)."""
-    pairs: list[Column] = []
-    for k, v in mapping.items():
-        pairs.extend([F.lit(k), F.lit(v)])
-    return F.coalesce(F.element_at(F.create_map(*pairs), _c(key)), F.lit(default))
 
 
 def array_level(arr: Column | str, i: int, default: str = "") -> Column:

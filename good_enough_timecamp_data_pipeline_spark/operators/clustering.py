@@ -136,10 +136,10 @@ def kmeans(
 ) -> tuple[DataFrame, list[float]]:
     """Lloyd iterations; returns (assignments, inertia_history).
 
-    assignments: (vec_id, cluster, sq_dist), lazily computed against the
-    final centroids. Initial centroids are the first k vectors by id —
-    deterministic and cheap; k-means++ would be a k-round
-    weighted-sampling prologue over the same machinery. A small input
+    assignments: (vec_id, cluster, sq_dist) against the final centroids,
+    ``localCheckpoint``-ed on the Spark loop. Initial centroids are the
+    first k vectors by id — deterministic and cheap; k-means++ would be a
+    k-round weighted-sampling prologue over the same machinery. A small input
     finishes on the driver (see the module docstring).
     """
     spark = vecs.sparkSession
@@ -214,9 +214,11 @@ def kmeans(
                 {"vec_id": pdf["vec_id"], "cluster": a.astype(np.int32), "sq_dist": sq}
             )
 
+    # materialized once, so the cached input can be released before return
     assign = data.mapInPandas(
         assign_fn, f"vec_id {id_type}, cluster int, sq_dist double"
-    )
+    ).localCheckpoint()
+    data.unpersist()
     return assign, inertia_history
 
 

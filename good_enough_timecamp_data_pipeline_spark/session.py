@@ -146,11 +146,8 @@ def tuned_conf_for(sf_dir: str) -> dict[str, str]:
 
 def apply_tuned_conf(spark: SparkSession, sf_dir: str) -> None:
     """Apply ``tuned_conf_for`` to a live session (all keys are
-    runtime-settable). Respects an explicit $SPARK_GRAFT_AQE override."""
-    conf = tuned_conf_for(sf_dir)
-    if os.environ.get("SPARK_GRAFT_AQE"):
-        conf.pop("spark.sql.adaptive.enabled", None)
-    for k, v in conf.items():
+    runtime-settable)."""
+    for k, v in tuned_conf_for(sf_dir).items():
         spark.conf.set(k, v)
 
 
@@ -175,7 +172,7 @@ def session_conf(
     conf = {
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.shuffle.partitions": str(n_shuffle),
-        "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "true"),
+        "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",

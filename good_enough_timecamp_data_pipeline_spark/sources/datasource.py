@@ -15,13 +15,16 @@ This is the architecturally-right shape for the extract layer at scale:
 each EXECUTOR fetches its own window** (the reference's sequential
 date-chunk loop, ``/root/reference/dlt_fetch_timecamp.py:214-258``, made
 parallel), so ingest throughput scales with the cluster instead of the
-driver's socket. Rows come back already coerced to the landed schemas.
+driver's socket. Each reader applies the table's row rule from `ingest`
+(``entry_rows``, ``task_rows``, ...), the same function the driver-side
+builders apply, so its rows are the builder's rows by construction.
 
 Scope: this source serves the RAW extract tier —
 
-- ``dataset=entries``: the time-entries FACT, partitioned by date chunk;
-  rows match ``ingest.build_entries`` exactly (same coercions, same
-  tags→JSON-text rule; parity is pinned by a test).
+- ``dataset=entries``: the time-entries FACT, partitioned by date chunk.
+- ``dataset=computer_activities``: the activity fact, partitioned by
+  user × date chunk; ``dataset=application_names``: the application
+  dimension, partitioned by id batch.
 - ``dataset=tasks`` / ``dataset=users``: the raw dimension payloads
   (single partition — dimension endpoints return the whole set).
   Hierarchy breadcrumbs / group enrichment stay downstream: `ingest`
@@ -38,7 +41,6 @@ otherwise ``api_key`` builds the real HTTP transport.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -47,17 +49,8 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import StructType
 
-from . import schemas
-
-RAW_TASKS_SCHEMA = (
-    "task_id string, parent_id string, name string, budgeted bigint, "
-    "public_hash string, task_key string"
-)
-RAW_USERS_SCHEMA = (
-    "user_id string, email string, display_name string, is_enabled boolean"
-)
+from . import ingest, schemas
 
 
 class _DateChunk(InputPartition):
@@ -98,53 +91,32 @@ def _chunks(from_date: str, to_date: str, chunk_days: int) -> list[_DateChunk]:
     return out
 
 
-def _entry_row(r: dict) -> tuple:
-    """Pure-Python twin of build_entries' coercion (parity-tested)."""
+def _dates(from_date: str, to_date: str) -> list[str]:
+    d0 = _dt.date.fromisoformat(from_date)
+    d1 = _dt.date.fromisoformat(to_date)
+    return [str(d0 + _dt.timedelta(days=k)) for k in range((d1 - d0).days + 1)]
 
-    def s(v):
-        return None if v is None else str(v)
 
-    def i(v):
-        try:
-            return None if v is None else int(float(v))
-        except (TypeError, ValueError):
-            return None
+def _user_ids(opts: dict) -> list[int] | None:
+    uid_opt = opts.get("user_ids")
+    return [int(u) for u in str(uid_opt).split(",") if u] if uid_opt else None
 
-    def f(v):
-        try:
-            return None if v is None else float(v)
-        except (TypeError, ValueError):
-            return None
 
-    def d(v):
-        if v is None:
-            return None
-        try:
-            return _dt.date.fromisoformat(str(v)[:10])
-        except ValueError:
-            return None
+def _tuples(rows: list[dict]) -> Iterator[tuple]:
+    """Rule-shaped dict rows as the tuples a reader yields (a list
+    iterator: the streaming wrapper copies a cached batch's iterator)."""
+    return iter([tuple(r.values()) for r in rows])
 
-    tags = r.get("tags")
-    if isinstance(tags, list) and tags:
-        # same text F.to_json emits for array<map<string,string>>
-        tags_json = json.dumps(
-            [{str(k): str(v) for k, v in t.items()} for t in tags],
-            separators=(",", ":"),
-            ensure_ascii=False,
-        )
-    else:
-        tags_json = None
-    return (
-        s(r.get("id")),
-        s(r.get("task_id")),
-        s(r.get("user_id")),
-        d(r.get("date")),
-        i(r.get("duration")),
-        s(r.get("description")),
-        tags_json,
-        s(r.get("project_name")),
-        f(r.get("rate")),
-    )
+
+def _entries(opts: dict, from_date: str, to_date: str) -> Iterator[tuple]:
+    return _tuples(ingest.fetch_entries(_make_client(opts), from_date, to_date))
+
+
+def _activities(
+    opts: dict, dates: list[str], user_ids: list[int] | None, dates_per_request: int
+) -> Iterator[tuple]:
+    client = _make_client(opts)
+    return _tuples(ingest.fetch_activities(client, dates, user_ids, dates_per_request))
 
 
 class _EntriesReader(DataSourceReader):
@@ -160,14 +132,7 @@ class _EntriesReader(DataSourceReader):
         return _chunks(self.from_date, self.to_date, self.chunk_days)
 
     def read(self, partition: _DateChunk) -> Iterator[tuple]:
-        client = _make_client(self.opts)
-        raw = client.get_time_entries(
-            partition.from_date,
-            partition.to_date,
-            opt_fields="tags,breadcrumps",
-        )
-        for r in raw:
-            yield _entry_row(r)
+        return _entries(self.opts, partition.from_date, partition.to_date)
 
 
 class _TasksReader(DataSourceReader):
@@ -175,21 +140,7 @@ class _TasksReader(DataSourceReader):
         self.opts = opts
 
     def read(self, partition) -> Iterator[tuple]:
-        client = _make_client(self.opts)
-        for r in client.get_tasks():
-            budget = r.get("budgeted")
-            try:
-                budget = None if budget is None else int(float(budget))
-            except (TypeError, ValueError):
-                budget = None
-            yield (
-                None if r.get("task_id") is None else str(r.get("task_id")),
-                None if r.get("parent_id") is None else str(r.get("parent_id")),
-                None if r.get("name") is None else str(r.get("name")),
-                budget,
-                None if r.get("public_hash") is None else str(r.get("public_hash")),
-                None if r.get("task_key") is None else str(r.get("task_key")),
-            )
+        return _tuples(ingest.task_rows(_make_client(self.opts).get_tasks()))
 
 
 class _UsersReader(DataSourceReader):
@@ -197,52 +148,13 @@ class _UsersReader(DataSourceReader):
         self.opts = opts
 
     def read(self, partition) -> Iterator[tuple]:
-        client = _make_client(self.opts)
-        for r in client.get_users():
-            yield (
-                None if r.get("user_id") is None else str(r.get("user_id")),
-                None if r.get("email") is None else str(r.get("email")),
-                None if r.get("display_name") is None else str(r.get("display_name")),
-                bool(r.get("is_enabled", True)),
-            )
+        return _tuples(ingest.user_rows(_make_client(self.opts).get_users()))
 
 
 class _UserDatesChunk(InputPartition):
     def __init__(self, dates: list[str], user_id: int | None):
         self.dates = dates
         self.user_id = user_id
-
-
-def _activity_row(r: dict) -> tuple:
-    """Pure-Python twin of build_computer_activities' coercion
-    (schemas.COMPUTER_ACTIVITIES; parity-tested)."""
-
-    def s(v):
-        return None if v is None else str(v)
-
-    def i(v):
-        try:
-            return None if v is None else int(float(v))
-        except (TypeError, ValueError):
-            return None
-
-    def d(v):
-        if v is None:
-            return None
-        try:
-            return _dt.date.fromisoformat(str(v)[:10])
-        except ValueError:
-            return None
-
-    return (
-        s(r.get("user_id")),
-        s(r.get("application_id")),
-        s(r.get("window_title")),
-        s(r.get("start_time")),
-        s(r.get("end_time")),
-        d(r.get("end_date")),
-        i(r.get("duration")),
-    )
 
 
 class _ActivitiesReader(DataSourceReader):
@@ -264,17 +176,10 @@ class _ActivitiesReader(DataSourceReader):
             raise ValueError(
                 "dataset=computer_activities needs .option('from'/'to', ...)"
             )
-        d0 = _dt.date.fromisoformat(from_date)
-        d1 = _dt.date.fromisoformat(to_date)
-        if d1 < d0:
+        self.dates = _dates(from_date, to_date)
+        if not self.dates:
             raise ValueError(f"empty window {from_date}..{to_date}")
-        self.dates = [
-            str(d0 + _dt.timedelta(days=k)) for k in range((d1 - d0).days + 1)
-        ]
-        uid_opt = opts.get("user_ids")
-        self.user_ids: list[int | None] = (
-            [int(u) for u in str(uid_opt).split(",") if u] if uid_opt else [None]
-        )
+        self.user_ids: list[int | None] = _user_ids(opts) or [None]
 
     def partitions(self) -> Sequence[InputPartition]:
         step = self.dates_per_request
@@ -285,50 +190,13 @@ class _ActivitiesReader(DataSourceReader):
         ]
 
     def read(self, partition: _UserDatesChunk) -> Iterator[tuple]:
-        client = _make_client(self.opts)
-        raw = client.get_computer_activities(
-            partition.dates,
-            include="application,window_title",
-            user_ids=None if partition.user_id is None else [partition.user_id],
-            dates_per_request=self.dates_per_request,
-        )
-        for r in raw:
-            yield _activity_row(r)
+        user_ids = None if partition.user_id is None else [partition.user_id]
+        return _activities(self.opts, partition.dates, user_ids, self.dates_per_request)
 
 
 class _IdBatch(InputPartition):
     def __init__(self, ids: list[str]):
         self.ids = ids
-
-
-def _application_row(d: dict) -> tuple:
-    """Pure-Python twin of build_application_names' landed projection
-    (P2 rename, F4 fallback chain, J3 category lookup; parity-tested
-    against schemas.APPLICATION_NAMES)."""
-    from .ingest import CATEGORY_NAMES
-
-    def nz(v):
-        return "" if v is None else str(v)
-
-    def fallback(*vals):
-        for v in vals:
-            if v is not None and str(v).strip() != "":
-                return str(v).strip()
-        return ""
-
-    app_id = d.get("application_id")
-    cat = "0" if d.get("category_id") is None else str(d.get("category_id"))
-    return (
-        None if app_id is None else str(app_id),
-        fallback(d.get("full_name"), d.get("aditional_info"), d.get("app_name")),
-        nz(d.get("app_name")),
-        nz(d.get("full_name")),
-        nz(d.get("aditional_info")),
-        cat,
-        CATEGORY_NAMES.get(cat, "No category"),
-        nz(d.get("type")),
-        nz(d.get("icon_url")),
-    )
 
 
 class _ApplicationsReader(DataSourceReader):
@@ -359,8 +227,7 @@ class _ApplicationsReader(DataSourceReader):
     def read(self, partition: _IdBatch) -> Iterator[tuple]:
         client = _make_client(self.opts)
         details = client.get_applications(partition.ids, batch_size=self.batch_size)
-        for d in details.values():
-            yield _application_row(d)
+        return _tuples(ingest.application_rows(details.values()))
 
 
 class _DateWindowStreamReader(SimpleDataSourceStreamReader):
@@ -436,11 +303,7 @@ class _EntriesStreamReader(_DateWindowStreamReader):
     per micro-batch."""
 
     def _fetch(self, from_date: str, to_date: str) -> Iterator[tuple]:
-        client = _make_client(self.opts)
-        raw = client.get_time_entries(
-            from_date, to_date, opt_fields="tags,breadcrumps"
-        )
-        return iter([_entry_row(r) for r in raw])
+        return _entries(self.opts, from_date, to_date)
 
 
 class _ActivitiesStreamReader(_DateWindowStreamReader):
@@ -457,23 +320,20 @@ class _ActivitiesStreamReader(_DateWindowStreamReader):
     def __init__(self, opts: dict):
         super().__init__(opts)
         self.dates_per_request = int(opts.get("dates_per_request", "20"))
-        uid_opt = opts.get("user_ids")
-        self.user_ids: list[int] | None = (
-            [int(u) for u in str(uid_opt).split(",") if u] if uid_opt else None
-        )
+        self.user_ids = _user_ids(opts)
 
     def _fetch(self, from_date: str, to_date: str) -> Iterator[tuple]:
-        client = _make_client(self.opts)
-        d0 = _dt.date.fromisoformat(from_date)
-        d1 = _dt.date.fromisoformat(to_date)
-        dates = [str(d0 + _dt.timedelta(days=k)) for k in range((d1 - d0).days + 1)]
-        raw = client.get_computer_activities(
-            dates,
-            include="application,window_title",
-            user_ids=self.user_ids,
-            dates_per_request=self.dates_per_request,
-        )
-        return iter([_activity_row(r) for r in raw])
+        dates = _dates(from_date, to_date)
+        return _activities(self.opts, dates, self.user_ids, self.dates_per_request)
+
+
+_SCHEMAS = {
+    "entries": schemas.ENTRIES,
+    "tasks": schemas.RAW_TASKS,
+    "users": schemas.RAW_USERS,
+    "computer_activities": schemas.COMPUTER_ACTIVITIES,
+    "application_names": schemas.APPLICATION_NAMES,
+}
 
 
 class TimecampDataSource(DataSource):
@@ -485,20 +345,9 @@ class TimecampDataSource(DataSource):
 
     def schema(self):
         ds = self.options.get("dataset", "entries")
-        if ds == "entries":
-            return StructType(schemas.ENTRIES.fields)
-        if ds == "tasks":
-            return RAW_TASKS_SCHEMA
-        if ds == "users":
-            return RAW_USERS_SCHEMA
-        if ds == "computer_activities":
-            return StructType(schemas.COMPUTER_ACTIVITIES.fields)
-        if ds == "application_names":
-            return StructType(schemas.APPLICATION_NAMES.fields)
-        raise ValueError(
-            f"unknown dataset {ds!r} "
-            "(entries|tasks|users|computer_activities|application_names)"
-        )
+        if ds not in _SCHEMAS:
+            raise ValueError(f"unknown dataset {ds!r} ({'|'.join(_SCHEMAS)})")
+        return _SCHEMAS[ds]
 
     def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
         ds = self.options.get("dataset", "entries")

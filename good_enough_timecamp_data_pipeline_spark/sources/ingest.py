@@ -1,47 +1,51 @@
 """Extract→enrich builders: raw API payloads → canonical DataFrames.
 
 Each reference dlt resource (``/root/reference/dlt_fetch_timecamp.py:409-653``)
-becomes a ``build_<table>(spark, ...) -> DataFrame``. The per-row Python
-enrichment of the reference is re-expressed relationally:
+becomes a ``build_<table>(spark, ...) -> DataFrame``.
 
-- dict lookup joins (J1–J4)   → broadcast left joins
+Every extracted table has ONE row rule, a pure-Python function from the
+API payload to rows of the table's schema: `task_rows`, `user_rows`,
+`entry_rows`, `activity_rows` and `application_rows`. Each is `_coerce`
+per field (``''``/number-like/invalid values, lone surrogates) plus the
+table's own rules: tags → JSON text (F7), budget default 0 (P9), the
+application-name fallback chain (F4) and category lookup (J3). The
+builders apply the rule on the driver to the payload they fetched; the
+``timecamp`` DataSource (`datasource`) applies the same function on
+executors, one input partition per fetch window, which is the fan-out
+for fetches that must scale with a date × user grid (S4).
+
+The rest of the reference's per-row Python enrichment:
+
+- dict lookup joins (J1, J2) → broadcast left joins (users' groups)
 - breadcrumb parent-walks (H2/H3) → operators.hierarchy.breadcrumb_rows
-  over the payload the driver holds: the crumbs land with the row
+  over the rows the driver holds: the crumbs land with the row
 - "first group per user" (W1) → row_number over a *documented* deterministic
   order (min numeric group id) — the reference's choice is dict insertion
   order, i.e. unspecified; we pin it
-- per-row formatting (F4–F7)  → native Column expressions
 
-The fetch itself stays driver-side (payloads here are metadata-sized), and
-each coerced payload becomes an Arrow-backed frame (``_rows_df``, which is
+Each ruled payload becomes an Arrow-backed frame (``_rows_df``, which is
 `operators.local.rows_relation`, where small iterative operators land their
 results too): a local relation (``LocalTableScan``) up to
 ``spark.sql.execution.arrow.localRelationThreshold``, a JVM scan of Arrow
-batches above it. Neither starts a Python worker on a re-read. A row-list ``createDataFrame`` would
-build a ``parallelize`` RDD that PySpark wraps in a Python ``map``, so every
-job re-reading it starts a Python-worker pass. The ids the tree walks and
-the users lookups key on are canonicalized in that projection, once.
-`parallel_fetch` gives the ``mapInPandas`` pattern for fan-out fetches that
-must scale with a date × user grid (S4 at 100 TB: the grid is a DataFrame,
-each partition holds its own HTTP session, failures yield zero rows exactly
-like the reference's per-batch tolerance).
+batches above it. Neither starts a Python worker on a re-read. A row-list
+``createDataFrame`` would build a ``parallelize`` RDD that PySpark wraps in
+a Python ``map``, so every job re-reading it starts a Python-worker pass.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Callable, Iterator
+import datetime
+import re
+from collections.abc import Iterable
+from functools import partial
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.formatting import string_fallback
-from ..functions.json_utils import map_lookup, tags_to_json
 from ..functions.ids import strip_prefix_value
-from ..operators.canonicalize import id_string, measure_long, null_canonical_value
+from ..operators.canonicalize import null_canonical_value
 from ..operators.hierarchy import breadcrumb_rows
 from ..operators.local import rows_relation as _rows_df
 from . import schemas
@@ -73,16 +77,42 @@ CATEGORY_NAMES: dict[str, str] = {
 }
 
 
-def _project(rows: list[dict[str, Any]], schema: T.StructType) -> list[dict[str, Any]]:
-    """Raw dict rows → the schema's fields, tolerating missing/stringly values."""
-    return [{f.name: _coerce(r.get(f.name), f.dataType) for f in schema.fields} for r in rows]
+# a lone UTF-16 surrogate: a payload string cut mid-emoji ("\ud83d")
+_LONE_SURROGATE = re.compile("[\ud800-\udfff]")
+
+# Jackson's string escapes, i.e. the JSON text Spark's ``to_json`` writes:
+# short forms for \b \t \n \f \r, uppercase ``\u00XX`` for the other
+# control characters, nothing else escaped (``json.dumps`` writes lowercase)
+_JSON_ESCAPES = str.maketrans({chr(c): f"\\u{c:04X}" for c in range(0x20)} | {
+    '"': '\\"', "\\": "\\\\", "\b": "\\b", "\t": "\\t", "\n": "\\n", "\f": "\\f", "\r": "\\r",
+})
+
+
+def _text(v: Any) -> str:
+    """``str(v)`` with each lone surrogate replaced by U+FFFD, the text
+    Spark's own encoder writes: Arrow cannot encode a surrogate."""
+    s = str(v)
+    return s if s.isascii() else _LONE_SURROGATE.sub("\ufffd", s)
+
+
+def _json_text(v: Any) -> str:
+    return '"' + _text(v).translate(_JSON_ESCAPES) + '"'
+
+
+def _project(
+    rows: Iterable[dict[str, Any]], schema: T.StructType, **rules: Any
+) -> list[dict[str, Any]]:
+    """Raw dict rows → the schema's fields, tolerating missing/stringly
+    values; a field named in ``rules`` is converted by its rule instead."""
+    conv = [(f.name, rules.get(f.name) or partial(_coerce, dt=f.dataType)) for f in schema.fields]
+    return [{name: c(r.get(name)) for name, c in conv} for r in rows]
 
 
 def _coerce(v: Any, dt: T.DataType) -> Any:
     if v is None:
         return None
     if isinstance(dt, T.StringType):
-        return str(v)
+        return _text(v)
     if isinstance(dt, T.LongType):
         try:
             return int(float(v))
@@ -94,8 +124,6 @@ def _coerce(v: Any, dt: T.DataType) -> Any:
         except (TypeError, ValueError):
             return None
     if isinstance(dt, T.DateType):
-        import datetime
-
         if isinstance(v, datetime.date):
             return v
         try:
@@ -108,28 +136,83 @@ def _coerce(v: Any, dt: T.DataType) -> Any:
 
 
 # ---------------------------------------------------------------------------
+# row rules: API payload → rows of the table's schema
+# ---------------------------------------------------------------------------
+
+def _budget(v: Any) -> int:
+    """P9: a missing or invalid budget is 0."""
+    n = _coerce(v, T.LongType())
+    return 0 if n is None else n
+
+
+def _tags_json(tags: Any) -> str | None:
+    """F7: a non-empty list → the JSON text of json.dumps at :494-499 as
+    Spark's ``to_json`` spells it (each map's keys and values stringified,
+    API key order kept); else NULL."""
+    if not isinstance(tags, list) or not tags:
+        return None
+    maps = ({str(k): str(v) for k, v in t.items()} for t in tags)
+    return "[" + ",".join(
+        "{" + ",".join(f"{_json_text(k)}:{_json_text(v)}" for k, v in m.items()) + "}"
+        for m in maps
+    ) + "]"
+
+
+def _first_nonblank(*vals: str | None) -> str:
+    """F4: the first value that is not blank after trimming spaces, trimmed;
+    '' if none (Spark's ``trim`` strips U+0020 only)."""
+    return next((v.strip(" ") for v in vals if v is not None and v.strip(" ")), "")
+
+
+def task_rows(raw: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    """P1: `users`/`perms` never reach the rows (dropped at :551-552)."""
+    return _project(raw, schemas.RAW_TASKS, budgeted=_budget)
+
+
+def user_rows(raw: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    return _project(raw, schemas.RAW_USERS)
+
+
+def entry_rows(raw: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    return _project(raw, schemas.ENTRIES, tags=_tags_json)
+
+
+def activity_rows(raw: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    return _project(raw, schemas.COMPUTER_ACTIVITIES)
+
+
+def application_rows(details: Iterable[dict[str, Any]]) -> list[dict[str, Any]]:
+    """P2 projection and rename, F4 name fallback chain, J3 category
+    lookup with its "No category" default (:632-633)."""
+    out = []
+    for r in _project(details, schemas.RAW_APPLICATIONS):
+        category = "0" if r["category_id"] is None else r["category_id"]
+        out.append({
+            "application_id": r["application_id"],
+            "application_name": _first_nonblank(
+                r["full_name"], r["aditional_info"], r["app_name"]
+            ),
+            "app_name": r["app_name"] or "",
+            "full_name": r["full_name"] or "",
+            "additional_info": r["aditional_info"] or "",
+            "category_id": category,
+            "category_name": CATEGORY_NAMES.get(category, "No category"),
+            "type": r["type"] or "",
+            "icon_url": r["icon_url"] or "",
+        })
+    return out
+
+
+# ---------------------------------------------------------------------------
 # tasks (dlt resource at dlt_fetch_timecamp.py:509-570)
 # ---------------------------------------------------------------------------
 
 def build_tasks(spark: SparkSession, client: TimeCampClient) -> DataFrame:
-    raw = client.get_tasks()
-    base_schema = T.StructType(
-        [
-            T.StructField("task_id", T.StringType()),
-            T.StructField("parent_id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("budgeted", T.LongType()),
-            T.StructField("public_hash", T.StringType()),
-            T.StructField("task_key", T.StringType()),
-        ]
-    )
-    # P1: `users`/`perms` never reach the DataFrame (dropped at :551-552)
-    rows = _project(raw, base_schema)
+    rows = task_rows(client.get_tasks())
     for r in rows:
         r["parent_id"] = null_canonical_value(r["parent_id"])
     # H2/H3: breadcrumb + 8 fixed level columns
-    rows = breadcrumb_rows(rows, n_levels=8, prefix="task")
-    return _rows_df(spark, rows, schemas.TASKS).withColumn("budgeted", measure_long("budgeted"))
+    return _rows_df(spark, breadcrumb_rows(rows, n_levels=8, prefix="task"), schemas.TASKS)
 
 
 # ---------------------------------------------------------------------------
@@ -143,7 +226,7 @@ def group_rows(groups: list[dict[str, Any]]) -> list[dict[str, Any]]:
     gets NULL crumbs."""
 
     def text(v: Any) -> str | None:
-        return None if v is None else str(v)
+        return None if v is None else _text(v)
 
     rows = [
         {
@@ -165,15 +248,7 @@ def build_users(
     picker = client.get_user_details()
     groups = picker.get("groups", []) if isinstance(picker, dict) else []
 
-    users_schema = T.StructType(
-        [
-            T.StructField("user_id", T.StringType()),
-            T.StructField("email", T.StringType()),
-            T.StructField("display_name", T.StringType()),
-            T.StructField("is_enabled", T.BooleanType()),
-        ]
-    )
-    udf_ = _rows_df(spark, _project(raw_users, users_schema), users_schema)
+    udf_ = _rows_df(spark, user_rows(raw_users), schemas.RAW_USERS)
 
     # group_id, name + USERS' group_breadcrumb, group_level_1..5
     crumbs = [
@@ -191,9 +266,7 @@ def build_users(
         for g in groups
         for uid in (g.get("users") or {})
     ]
-    mem_schema = T.StructType(
-        [T.StructField("user_id", T.StringType()), T.StructField("group_id", T.StringType())]
-    )
+    mem_schema = T.StructType([schemas.USERS["user_id"], schemas.USERS["group_id"]])
     mem = _rows_df(spark, mem_rows, mem_schema)
 
     # W1: deterministic "primary group" = smallest numeric group id
@@ -225,6 +298,14 @@ def build_users(
 # entries (dlt_fetch_timecamp.py:456-506)
 # ---------------------------------------------------------------------------
 
+def fetch_entries(
+    client: TimeCampClient, from_date: str, to_date: str, user_ids: list[int] | None = None
+) -> list[dict[str, Any]]:
+    return entry_rows(client.get_time_entries(
+        from_date, to_date, user_ids=user_ids, opt_fields="tags,breadcrumps"
+    ))
+
+
 def build_entries(
     spark: SparkSession,
     client: TimeCampClient,
@@ -232,42 +313,24 @@ def build_entries(
     to_date: str,
     user_ids: list[int] | None = None,
 ) -> DataFrame:
-    raw = client.get_time_entries(
-        from_date, to_date, user_ids=user_ids, opt_fields="tags,breadcrumps"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("task_id", T.StringType()),
-            T.StructField("user_id", T.StringType()),
-            T.StructField("date", T.DateType()),
-            T.StructField("duration", T.LongType()),
-            T.StructField("description", T.StringType()),
-            T.StructField("tags", T.ArrayType(T.MapType(T.StringType(), T.StringType()))),
-            T.StructField("project_name", T.StringType()),
-            T.StructField("rate", T.DoubleType()),
-        ]
-    )
-    # tags: each map stringified; a non-list is NULL (_coerce passes arrays)
-    rows = [
-        {
-            **r,
-            "tags": [{str(k): str(v) for k, v in t.items()} for t in r["tags"]]
-            if isinstance(r.get("tags"), list)
-            else None,
-        }
-        for r in raw
-    ]
-    df = _rows_df(spark, _project(rows, schema), schema)
-    # F7: list → JSON text (or NULL) exactly like json.dumps at :494-499
-    return df.withColumn("tags", tags_to_json("tags")).select(
-        [f.name for f in schemas.ENTRIES.fields]
-    )
+    return _rows_df(spark, fetch_entries(client, from_date, to_date, user_ids), schemas.ENTRIES)
 
 
 # ---------------------------------------------------------------------------
 # computer activities + application names (dlt_fetch_timecamp.py:240-302, :606-653)
 # ---------------------------------------------------------------------------
+
+def fetch_activities(
+    client: TimeCampClient,
+    dates: list[str],
+    user_ids: list[int] | None = None,
+    dates_per_request: int = 20,
+) -> list[dict[str, Any]]:
+    return activity_rows(client.get_computer_activities(
+        dates, include="application,window_title", user_ids=user_ids,
+        dates_per_request=dates_per_request,
+    ))
+
 
 def build_computer_activities(
     spark: SparkSession,
@@ -275,13 +338,7 @@ def build_computer_activities(
     dates: list[str],
     user_ids: list[int] | None = None,
 ) -> DataFrame:
-    raw = client.get_computer_activities(
-        dates, include="application,window_title", user_ids=user_ids
-    )
-    df = _rows_df(spark, _project(raw, schemas.COMPUTER_ACTIVITIES), schemas.COMPUTER_ACTIVITIES)
-    return df.withColumn("user_id", id_string("user_id")).withColumn(
-        "application_id", id_string("application_id")
-    )
+    return _rows_df(spark, fetch_activities(client, dates, user_ids), schemas.COMPUTER_ACTIVITIES)
 
 
 def distinct_application_ids(activities: DataFrame) -> DataFrame:
@@ -300,70 +357,4 @@ def build_application_names(
 ) -> DataFrame:
     ids = [r.application_id for r in distinct_application_ids(activities).collect()]
     details = client.get_applications(sorted(ids))
-
-    raw_schema = T.StructType(
-        [
-            T.StructField("application_id", T.StringType()),
-            T.StructField("app_name", T.StringType()),
-            T.StructField("full_name", T.StringType()),
-            # the API really spells it this way (dlt_fetch_timecamp.py:640-642)
-            T.StructField("aditional_info", T.StringType()),
-            T.StructField("category_id", T.StringType()),
-            T.StructField("type", T.StringType()),
-            T.StructField("icon_url", T.StringType()),
-        ]
-    )
-    df = _rows_df(spark, _project(list(details.values()), raw_schema), raw_schema)
-    # P2 projection+rename; F4 fallback chain; J3 category lookup
-    return df.select(
-        id_string("application_id").alias("application_id"),
-        string_fallback("full_name", "aditional_info", "app_name").alias(
-            "application_name"
-        ),
-        F.coalesce(F.col("app_name"), F.lit("")).alias("app_name"),
-        F.coalesce(F.col("full_name"), F.lit("")).alias("full_name"),
-        F.coalesce(F.col("aditional_info"), F.lit("")).alias("additional_info"),
-        F.coalesce(F.col("category_id"), F.lit("0")).alias("category_id"),
-        map_lookup(
-            CATEGORY_NAMES, F.coalesce(F.col("category_id"), F.lit("0")), "No category"
-        ).alias("category_name"),
-        F.coalesce(F.col("type"), F.lit("")).alias("type"),
-        F.coalesce(F.col("icon_url"), F.lit("")).alias("icon_url"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# parallel fetch pattern (S4 at scale)
-# ---------------------------------------------------------------------------
-
-def parallel_fetch(
-    work: DataFrame,
-    fetch_batch: Callable[[pd.DataFrame], list[dict[str, Any]]],
-    out_schema: T.StructType,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distribute a fetch grid (e.g. date × user) across executors.
-
-    ``fetch_batch`` receives one pandas batch of work rows and returns raw
-    result dicts; it runs inside ``mapInPandas`` so each executor holds its
-    own connection, and a raising batch is converted to zero rows (the
-    reference's per-batch failure tolerance, common/api.py:281-298).
-    Results are JSON-round-tripped through a single string column then
-    projected, so arbitrary payload shapes survive Arrow.
-    """
-    if partitions:
-        work = work.repartition(partitions)
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            try:
-                rows = fetch_batch(batch)
-            except Exception:
-                rows = []  # per-batch tolerance
-            yield pd.DataFrame({"payload": [json.dumps(r) for r in rows]})
-
-    raw = work.mapInPandas(_run, "payload string")
-    parsed = raw.select(
-        F.from_json("payload", out_schema).alias("r")
-    ).select("r.*")
-    return parsed
+    return _rows_df(spark, application_rows(details.values()), schemas.APPLICATION_NAMES)

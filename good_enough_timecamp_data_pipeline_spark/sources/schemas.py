@@ -94,6 +94,23 @@ APPLICATION_NAMES = T.StructType(
     ]
 )
 
+# raw API tiers, the payload fields before enrichment: `ingest`'s row rules
+# project payloads onto them, and the `timecamp` DataSource serves them
+RAW_TASKS = T.StructType(TASKS.fields[:6])
+RAW_USERS = T.StructType(USERS.fields[:4])
+RAW_APPLICATIONS = T.StructType(
+    [
+        _s("application_id"),
+        _s("app_name"),
+        _s("full_name"),
+        # the API really spells it this way (dlt_fetch_timecamp.py:640-642)
+        _s("aditional_info"),
+        _s("category_id"),
+        _s("type"),
+        _s("icon_url"),
+    ]
+)
+
 TABLE_SCHEMAS: dict[str, T.StructType] = {
     "entries": ENTRIES,
     "tasks": TASKS,

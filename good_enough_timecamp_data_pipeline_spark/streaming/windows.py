@@ -35,10 +35,7 @@ from pyspark.sql import types as T
 # round (8: 27.7/24.3/27.5 s vs 2: 27.7/31.6/33.1 s, moderate load):
 # at sf0.1 the per-batch state-op compute needs the parallelism more
 # than it needs fewer commit files. 8 stays the measured default; on a
-# cluster the shard count is sized to key cardinality instead. Read at
-# USE time so setting SPARK_GRAFT_STREAM_SHARDS mid-session (e.g. an A/B
-# harness) takes effect — a module-level constant silently ignored
-# post-import overrides (round-12 ADVICE).
+# cluster the shard count is sized to key cardinality instead.
 
 
 def stream_shards() -> str:
@@ -48,7 +45,7 @@ def stream_shards() -> str:
     # derivation as session.tiny_partitions)
     from ..session import tiny_partitions
 
-    return os.environ.get("SPARK_GRAFT_STREAM_SHARDS", str(tiny_partitions()))
+    return str(tiny_partitions())
 
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"

@@ -204,6 +204,27 @@ def test_kmeans_matches_spark_loop(spark, monkeypatch, name):
         assert dict(r[:2] for r in got)[3] == 0
 
 
+def test_kmeans_spark_loop_releases_its_input_cache(spark, monkeypatch):
+    """The Spark loop caches its input for the rounds and drops it before
+    returning, so a later plan over the same projection reads no
+    ``InMemoryRelation``; the only RDD left persisted is the assignments'
+    own checkpoint, freed with them."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(local, "MAX_ROWS", SPARK_LOOP)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    vecs = _vectors(spark, VECTORS["blobs"])
+    assign, _ = clustering.kmeans(vecs, k=3, max_iter=2)
+    assert assign.count() == len(VECTORS["blobs"])
+    again = vecs.select(
+        F.col("vec_id").alias("vec_id"), F.col("embedding").cast("array<double>").alias("v")
+    )
+    assert "InMemoryRelation" not in _plan(again)
+    graph.unpersist_checkpoint_blocks(assign)
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
+
+
 def test_kmeans_empty_raises_on_both_paths(spark, monkeypatch):
     empty = _vectors(spark, [])
     for max_rows in (local.MAX_ROWS, SPARK_LOOP):
@@ -272,10 +293,7 @@ SPARK_LOOP_PLANS = {
         "            +- LogicalRDD [task_id#L, parent_id#L], false\n"
     ),
     "kmeans": (
-        "MapInPandas assign_fn(vec_id#L, v#)#, [vec_id#L, cluster#, sq_dist#], false\n"
-        "+- InMemoryRelation [vec_id#L, v#], StorageLevel(disk, memory, 1 replicas)\n"
-        "      +- *(1) Project [vec_id#L, embedding# AS v#]\n"
-        "         +- *(1) Scan ExistingRDD[vec_id#L,embedding#]\n"
+        "LogicalRDD [vec_id#L, cluster#, sq_dist#], false\n"
     ),
 }
 

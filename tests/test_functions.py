@@ -10,7 +10,6 @@ from good_enough_timecamp_data_pipeline_spark.functions import (
     parse_date_multi,
     string_fallback,
     strip_prefix,
-    tags_to_json,
 )
 from good_enough_timecamp_data_pipeline_spark.operators.canonicalize import (
     null_canonical,
@@ -76,9 +75,3 @@ def test_null_canonical(spark):
     df = spark.createDataFrame([("",), ("0",), ("5",), (None,)], "v string")
     got = [r.r for r in df.select(null_canonical("v").alias("r")).collect()]
     assert got == [None, None, "5", None]
-
-
-def test_tags_to_json(spark):
-    df = spark.createDataFrame([(["a", "b"],), ([],), (None,)], "v array<string>")
-    got = [r.r for r in df.select(tags_to_json("v").alias("r")).collect()]
-    assert got == ['["a","b"]', None, None]

@@ -129,16 +129,81 @@ def test_builders_match_rowlist_path(spark, monkeypatch, payloads):
 def test_multi_key_tag_keeps_api_key_order(spark):
     """The one value the row-list path did not keep: it shipped each tag
     dict as a JVM HashMap, so a multi-key tag's JSON text came out in hash
-    order. The Arrow map keeps the API's order, like the reference's
-    ``json.dumps`` and the DataSource twin ``_entry_row``, and non-ASCII
-    text stays unescaped in both."""
-    from good_enough_timecamp_data_pipeline_spark.sources import datasource
-
+    order. The row rule keeps the API's order, like the reference's
+    ``json.dumps``, and non-ASCII text stays unescaped."""
     raw = {"id": 1, "tags": [{"zeta": 1, "tagId": 7, "alpha": "a", "name": "🏷"}]}
     client = _client({"entries": [raw]})
     (row,) = ingest.build_entries(spark, client, "2025-01-01", "2026-02-01").collect()
     assert row.tags == '[{"zeta":"1","tagId":"7","alpha":"a","name":"🏷"}]'
-    assert row.tags == datasource._entry_row(raw)[6]
+
+
+# every ASCII character, C1 controls, non-BMP and line/paragraph separators
+_JSON_CHARS = [chr(c) for c in range(0xA0)] + ["😀", "\u2028", "\u2029", "\ufffd", "é"]
+
+
+def test_tags_json_text_matches_spark_to_json(spark):
+    """The tags rule writes the text Spark's ``to_json`` writes for the
+    same ``array<map<string,string>>``, byte for byte: Jackson's escapes
+    (uppercase ``\\u00XX``), not ``json.dumps``' lowercase ones."""
+    from pyspark.sql import functions as F
+
+    from good_enough_timecamp_data_pipeline_spark.operators.local import rows_relation
+
+    tags = [{c: c} for c in _JSON_CHARS] + [{"k": "a" + "".join(_JSON_CHARS), "n": None}]
+    schema = T.StructType([T.StructField("t", T.ArrayType(T.MapType(T.StringType(), T.StringType())))])
+    maps = [{str(k): str(v) for k, v in t.items()} for t in tags]
+    want = rows_relation(spark, [{"t": maps}], schema).select(F.to_json("t")).head()[0]
+    assert ingest.entry_rows([{"tags": tags}])[0]["tags"] == want
+
+
+def test_lone_surrogate_lands_as_replacement_char(spark):
+    """A payload string cut mid-emoji (JSON ``"\\ud83d"``) lands with
+    U+FFFD, in a description and in a tag, through the builder and
+    through the row rule the ``timecamp`` DataSource applies."""
+    import json
+
+    raw = json.loads('{"id": 1, "description": "cut \\ud83d", "tags": [{"name": "x\\ud83d"}]}')
+    client = _client({"entries": [raw]})
+    (row,) = ingest.build_entries(spark, client, "2025-01-01", "2026-02-01").collect()
+    (rule,) = ingest.entry_rows([raw])
+    for got in (row.asDict(), rule):
+        assert got["description"] == "cut \ufffd"
+        assert got["tags"] == '[{"name":"x\ufffd"}]'
+
+
+def test_application_rule_matches_spark_expressions(spark):
+    """The application rule against the Column expressions it replaced:
+    the F4 fallback trims spaces only (Spark's ``trim``), so a tab or a
+    no-break space is not blank; the J3 lookup defaults an unknown or
+    missing category."""
+    from pyspark.sql import functions as F
+
+    from good_enough_timecamp_data_pipeline_spark.functions import string_fallback
+
+    details = [
+        {"application_id": 1, "app_name": " a ", "full_name": "  ", "aditional_info": None,
+         "category_id": 99},
+        {"application_id": "2", "app_name": None, "full_name": "\t", "category_id": ""},
+        {"application_id": None, "app_name": "b", "full_name": "\xa0x\xa0", "category_id": 3},
+        {},
+    ]
+    rows = ingest.application_rows(details)
+    raw = spark.createDataFrame(
+        ingest._project(details, schemas.RAW_APPLICATIONS), schemas.RAW_APPLICATIONS
+    )
+    names = F.create_map(*[F.lit(x) for kv in ingest.CATEGORY_NAMES.items() for x in kv])
+    category = F.coalesce(F.col("category_id"), F.lit("0"))
+    want = raw.select(
+        F.col("application_id"),
+        string_fallback("full_name", "aditional_info", "app_name").alias("application_name"),
+        *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in ("app_name", "full_name")],
+        F.coalesce(F.col("aditional_info"), F.lit("")).alias("additional_info"),
+        category.alias("category_id"),
+        F.coalesce(F.element_at(names, category), F.lit("No category")).alias("category_name"),
+        *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in ("type", "icon_url")],
+    )
+    assert [tuple(r.values()) for r in rows] == [tuple(r) for r in want.collect()]
+    assert [r["application_name"] for r in rows] == ["a", "\t", "\xa0x\xa0", ""]
 
 
 @pytest.mark.parametrize("threshold", [None, "0"], ids=["local-relation", "arrow-rdd"])
@@ -185,7 +250,7 @@ def test_crumb_builders_plan_no_recursion_or_join(spark):
 def _spark_tasks(spark, raw):
     """`build_tasks` with its ids canonicalized by Column expressions and
     the tree walked by `hierarchy.breadcrumbs`."""
-    base = T.StructType(schemas.TASKS.fields[:6])
+    base = schemas.RAW_TASKS
     df = spark.createDataFrame(ingest._project(raw, base), base)
     df = canonicalize_hierarchy(df).withColumn("budgeted", measure_long("budgeted"))
     return breadcrumbs(df, n_levels=8)
@@ -197,7 +262,10 @@ def test_build_tasks_matches_spark_walk(spark, payloads):
               if payloads == "demo" else _client(payloads))
     got = ingest.build_tasks(spark, client)
     want = _spark_tasks(spark, client.get_tasks())
-    assert got.schema == want.schema
+    # the budget default is a row rule now, so `budgeted` keeps the landed
+    # schema's nullability where `measure_long`'s coalesce made it non-null
+    assert got.schema == schemas.TASKS
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
     assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
 
 

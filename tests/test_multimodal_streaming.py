@@ -728,7 +728,7 @@ def test_concurrent_stream_entries_restore_shuffle_partitions(spark, monkeypatch
 
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHARDS", "3")
+    monkeypatch.setattr(W, "stream_shards", lambda: "3")
     spark.conf.set(key, "7")
     entered = [threading.Event(), threading.Event()]
     leave = [threading.Event(), threading.Event()]

@@ -378,37 +378,6 @@ def test_write_duckdb_roundtrip(spark, tmp_path):
     con.close()
 
 
-def test_parallel_fetch_distributes_and_tolerates_failure(spark):
-    from pyspark.sql import types as T
-
-    work = spark.createDataFrame(
-        [(d,) for d in ["2026-01-01", "2026-01-02", "2026-01-03", "2026-01-04"]],
-        "date string",
-    )
-    out_schema = T.StructType(
-        [T.StructField("date", T.StringType()), T.StructField("n", T.LongType())]
-    )
-
-    def fetch(batch):
-        rows = []
-        for d in batch["date"]:
-            if d == "2026-01-03":
-                raise RuntimeError("boom")  # whole batch tolerated away
-            rows.append({"date": d, "n": len(d)})
-        return rows
-
-    # one row per Arrow batch → per-batch tolerance is per-row, deterministic
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-    try:
-        got = ingest.parallel_fetch(work, fetch, out_schema, partitions=4)
-        dates = {r.date for r in got.collect()}
-    finally:
-        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    # the failing date's batch contributed nothing; others all arrived
-    assert "2026-01-03" not in dates
-    assert dates == {"2026-01-01", "2026-01-02", "2026-01-04"}
-
-
 def test_cli_offline_demo_end_to_end(spark, tmp_path, capsys):
     """The CLI surface (reference parity: --from/--to/--datasets/--format/
     --output) runs the whole offline-demo pipeline and lands files."""

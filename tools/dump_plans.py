@@ -16,19 +16,24 @@ bench actually executes. Queries that build driver-side state (shared
 artifacts, probes) run those builds as usual; only the plan text is
 written.
 
-Two dumps of the same entries give the same files apart from temp-dir
-paths, whatever ``PYTHONHASHSEED`` is: each dump runs under a private temp
-root that it deletes, so the on-disk artifact caches under the temp dir
-(the write-once LSH index of ``dedup.build_lsh_index_cached``) start cold
+Two dumps of the same entries give the same files, whatever
+``PYTHONHASHSEED`` is: each dump runs under a private temp root that it
+deletes, so the on-disk artifact caches under the temp dir (the
+write-once LSH index of ``dedup.build_lsh_index_cached``) start cold
 every time. A process that found the index warm ran fewer Spark jobs than
 one that built it, which shifted the JVM's expression and RDD ids of every
-later entry, and with them the order of ``Expand`` projections.
+later entry, and with them the order of ``Expand`` projections. `mask`
+replaces the two labels that still vary between processes: the private
+temp root's name, and the JVM call site a ``localCheckpoint`` scan prints
+(``<unknown>:0`` in one process, ``NativeMethodAccessorImpl.java:0`` in
+another).
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -47,6 +52,12 @@ def plan_text(df) -> str:
         with redirect_stdout(buf):
             df.explain("formatted")
         return buf.getvalue()
+
+
+def mask(text: str) -> str:
+    """Plan text with the per-process labels replaced by fixed ones."""
+    text = re.sub(r"dump_plans_[^/\]\s]+", "dump_plans_X", text)
+    return re.sub(r"(localCheckpoint at )\S+:\d+", r"\1<callsite>", text)
 
 
 def main() -> int:
@@ -75,7 +86,7 @@ def dump(out_dir: str, suffix: str, names: list[str]) -> int:
         restore = catalog.apply_query_conf(spark, name)
         try:
             df = qs[name](spark, sf_dir)
-            text = plan_text(df)
+            text = mask(plan_text(df))
         except Exception as exc:
             print(f"FAIL {name}: {exc!r}", file=sys.stderr)
             rc = 1
